@@ -98,6 +98,8 @@ object Queries {
     // exchange), it just moves it below the heavy per-group work.
     val sets = t(s, d, "lineitem")
       .select("l_orderkey", "l_suppkey")
+      // the self-join this replaced never matched a null order key
+      .where(col("l_orderkey").isNotNull)
       // explicit partition count (sized from the session conf, not a
       // literal): a bare repartition(col) is AQE-coalescible right back
       // to the single-task regime the repartition exists to break

@@ -326,9 +326,9 @@ object GraphBuilder {
           if (ordered.length > maxDegree) dropped += ordered.length - maxDegree
           v -> ordered.take(maxDegree)
         }
-        if (dropped > 0)
-          graft.runtime.Observed.record("clustering_deg_cap",
-            Map("dropped" -> dropped))
+        // recorded even at 0, as the distributed observe reports it
+        graft.runtime.Observed.record("clustering_deg_cap",
+          Map("dropped" -> dropped))
         val nodeCount = g.nodes.count()
         if (nodeCount == 0) return 0.0
         // coefficient sum in sorted-center order (distributed partial-sum

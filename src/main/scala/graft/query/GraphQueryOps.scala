@@ -138,15 +138,19 @@ object GraphQueryOps {
                 if (!visited.contains(toId)) {
                   val cand = (fromId, relId, relType, dir2)
                   val cur = best.get(toId)
+                  // a null field sorts first, as in min(struct(...))
+                  def cmp(x: String, y: String): Int =
+                    if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
+                    else graft.runtime.Utf8Order.compare(x, y)
                   def lt(a: (String, String, String, String),
                          b: (String, String, String, String)): Boolean = {
-                    val c1 = graft.runtime.Utf8Order.compare(a._1, b._1)
+                    val c1 = cmp(a._1, b._1)
                     if (c1 != 0) return c1 < 0
-                    val c2 = graft.runtime.Utf8Order.compare(a._2, b._2)
+                    val c2 = cmp(a._2, b._2)
                     if (c2 != 0) return c2 < 0
-                    val c3 = graft.runtime.Utf8Order.compare(a._3, b._3)
+                    val c3 = cmp(a._3, b._3)
                     if (c3 != 0) return c3 < 0
-                    graft.runtime.Utf8Order.compare(a._4, b._4) < 0
+                    cmp(a._4, b._4) < 0
                   }
                   if (cur.isEmpty || lt(cand, cur.get)) best(toId) = cand
                 }

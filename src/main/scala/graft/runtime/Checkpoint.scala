@@ -1,7 +1,13 @@
 package graft.runtime
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import Checkpoint.{jsonEscape, jsonLong, jsonString, writeAtomic}
 
 /**
  * Per-stage checkpoint commits with lineage + counters (the north rule's
@@ -11,12 +17,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * directories with an atomically-written `_MANIFEST.json`:
  *
  *   <root>/<stage>/data/      parquet (the committed stage output)
- *   <root>/<stage>/_MANIFEST.json   {stage, rows, inputs, wallSec, ts}
+ *   <root>/<stage>/_MANIFEST.json   {stage, rows, inputs, wallSec, observed, ts}
  *
  * A stage whose manifest exists is NOT recomputed — `runStage` returns the
  * committed parquet instead (resume-from-checkpoint). Parquet's _SUCCESS
  * marker + manifest-after-write gives commit atomicity at the stage level;
  * Iceberg would give it per-partition.
+ *
+ * Cost model: a commit is ONE write job. The manifest's `rows` comes from
+ * an `observe` count riding that job, and the committed output is read
+ * back with the known schema, so neither costs a job of its own.
  */
 final class Checkpoint(spark: SparkSession, root: String) {
 
@@ -30,67 +40,70 @@ final class Checkpoint(spark: SparkSession, root: String) {
   /** Run `compute` unless the stage is already committed; write parquet +
     * manifest (rows counter + lineage inputs + wall-clock).
     */
-  def runStage(stage: String, inputs: Seq[String], partitionBy: Seq[String] = Nil)(
-      compute: => DataFrame): DataFrame = {
+  def runStage(stage: String, inputs: Seq[String])(compute: => DataFrame): DataFrame = {
     if (isCommitted(stage)) return read(stage)
     val t0 = System.nanoTime()
     val before = Observed.snapshot()
     val df = compute
-    val writer = df.write.mode("overwrite")
-    val w = if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer
-    w.parquet(s"${stageDir(stage)}/data")
-    val out = read(stage)
-    val rows = out.count()
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    // observed cap/drop counters harvested during THIS stage's jobs: the
-    // registry is process-cumulative, so the manifest records the
-    // before/after DELTA — a stage that dropped nothing shows no counters
-    // even when an earlier stage (or run) did (round-2 advice)
-    val observed = observedDelta(before)
-    val manifest =
-      s"""{"stage":"$stage","rows":$rows,"inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],
-         |"wallSec":$wallSec,"observed":$observed,"ts":"${java.time.Instant.now()}"}""".stripMargin.replace("\n", "")
-    Files.createDirectories(manifestPath(stage).getParent)
-    val tmp = Paths.get(manifestPath(stage).toString + ".tmp")
-    Files.writeString(tmp, manifest, StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, manifestPath(stage), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    out
+    val rows = observedWrite(df, count(lit(1))) {
+      _.write.mode("overwrite").parquet(s"${stageDir(stage)}/data")
+    }.getLong(0)
+    writeManifest(stage, s""""rows":$rows""", inputs, t0, before)
+    spark.read.schema(df.schema).parquet(s"${stageDir(stage)}/data")
   }
 
   private def bucketManifestPath(stage: String, b: Int) =
     Paths.get(s"$root/$stage/_BUCKET_$b.json")
 
-  private def writeAtomic(path: java.nio.file.Path, content: String): Unit =
-    Checkpoint.writeAtomic(path, content)
+  /** Write `df` with `metrics` observed on the write job itself; returns
+    * the observed row, which arrives on the listener bus after the job.
+    * The observation is not registry-minted, so [[Observed]] does not
+    * harvest it as a drop counter.
+    */
+  private def observedWrite(df: DataFrame, metrics: Column*)(write: DataFrame => Unit): Row = {
+    val obs = Observation()
+    write(df.observe(obs, metrics.head, metrics.tail: _*))
+    scala.concurrent.Await.result(obs.future, 10.minutes)
+  }
+
+  /** Commit the stage manifest: `fields` (rows + layout), lineage inputs,
+    * wall-clock since `t0` and the observed drop-counter delta since
+    * `before` — the registry is process-cumulative, so a stage that
+    * dropped nothing shows no counters even when an earlier stage did.
+    */
+  private def writeManifest(stage: String, fields: String, inputs: Seq[String], t0: Long,
+                            before: Map[String, Map[String, Long]]): Unit =
+    writeAtomic(manifestPath(stage),
+      s"""{"stage":"$stage",$fields,"inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],""" +
+        s""""wallSec":${(System.nanoTime() - t0) / 1e9},"observed":${observedDelta(before)},""" +
+        s""""ts":"${java.time.Instant.now()}"}""")
 
   /** Per-PARTITION commit granularity (the north rule's resumability unit;
     * Iceberg snapshots would give this natively — this is the parquet
     * stand-in): the stage output is hash-bucketed on `bucketCol` into
-    * `nBuckets` buckets, each written AND manifested independently, so a
-    * kill mid-stage resumes by recomputing ONLY the buckets whose
-    * manifests are missing. The hash bucketing is deterministic
-    * (xxhash64), so a resumed compute produces identical bucket contents.
+    * `nBuckets` buckets, each manifested independently, so a resume
+    * recomputes ONLY the buckets whose manifests are missing. The hash
+    * bucketing is deterministic (xxhash64), so a resumed compute produces
+    * identical bucket contents.
     *
     * Layout: <root>/<stage>/data/bucket=<i>/  + _BUCKET_<i>.json each,
-    * then the usual _MANIFEST.json once every bucket is committed.
-    * Cost model: one filtered write job per missing bucket over the
-    * persisted stage plan — the price of partition-granular atomicity;
-    * a committed bucket costs zero compute on resume.
+    * then the usual _MANIFEST.json (rows = the bucket manifests' sum, plus
+    * the stage schema, so an empty stage resumes with its columns).
+    * Cost model: ONE partitioned write job for every missing bucket, with
+    * the per-bucket row counts observed on it. Buckets written by one
+    * attempt commit together when its job ends: a kill during that job
+    * recomputes all of that attempt's buckets, while buckets committed by
+    * an earlier attempt cost zero compute and are never rewritten.
     */
   def runStagePartitioned(stage: String, inputs: Seq[String], bucketCol: String,
                           nBuckets: Int = 16)(compute: => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
     if (isCommitted(stage)) return readPartitioned(stage)
     val t0 = System.nanoTime()
     val before = Observed.snapshot()
-    // the bucket count IS the data's hash modulus: resuming with a
-    // different nBuckets would silently mix two bucketing schemes, so the
-    // scheme is committed first and validated on every resume
-    // the scheme line is written by this class with a fixed field order, so
-    // an exact-string compare IS a field-exact compare — a substring
-    // contains() would let '"nBuckets":16' match a resume with nBuckets=1
-    // (decimal-prefix bug: committed buckets 1..15 would then duplicate
-    // rows recomputed under mod-1)
+    // the bucket count IS the data's hash modulus, so the scheme is
+    // committed first and validated on every resume — as an exact string
+    // (fixed field order): a substring match would let '"nBuckets":16'
+    // accept a resume with nBuckets=1
     val schemeLine =
       s"""{"stage":"$stage","bucketCol":"$bucketCol","nBuckets":$nBuckets}"""
     val schemePath = Paths.get(s"$root/$stage/_BUCKETING.json")
@@ -103,36 +116,36 @@ final class Checkpoint(spark: SparkSession, root: String) {
     } else writeAtomic(schemePath, schemeLine)
     val missing = (0 until nBuckets)
       .filterNot(b => Files.exists(bucketManifestPath(stage, b)))
+    val df = compute
+    // 'bucket' is this method's partition-discovery column: a stage output
+    // already carrying it would be dropped by readPartitioned
+    require(!df.columns.contains("bucket"),
+      s"stage $stage output reserves column name 'bucket' for partitioned " +
+        s"checkpointing; rename it (got ${df.columns.mkString(",")})")
+    val data = Paths.get(s"${stageDir(stage)}/data")
     if (missing.nonEmpty) {
-      val raw = compute
-      // '_bucket' is this method's working column and 'bucket' its
-      // partition-discovery column: a stage output already carrying either
-      // would be silently overwritten here / dropped by readPartitioned
-      require(!raw.columns.contains("_bucket") && !raw.columns.contains("bucket"),
-        s"stage $stage output reserves column names '_bucket'/'bucket' " +
-          s"for partitioned checkpointing; rename them (got ${raw.columns.mkString(",")})")
-      val df = raw
-        .withColumn("_bucket", pmod(xxhash64(col(bucketCol)), lit(nBuckets)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        missing.foreach { b =>
-          val part = df.where(col("_bucket") === b).drop("_bucket")
-          part.write.mode("overwrite").parquet(s"${stageDir(stage)}/data/bucket=$b")
-          val rows = spark.read.parquet(s"${stageDir(stage)}/data/bucket=$b").count()
-          writeAtomic(bucketManifestPath(stage, b),
-            s"""{"stage":"$stage","bucket":$b,"rows":$rows,"ts":"${java.time.Instant.now()}"}""")
-        }
-      } finally df.unpersist()
+      // a killed attempt leaves bucket dirs without a manifest and the
+      // writer's _temporary dir: clear all but committed buckets, so the
+      // append below lands beside committed data and adds to nothing stale
+      val committed = (0 until nBuckets).diff(missing).map(b => data.resolve(s"bucket=$b")).toSet
+      children(data).filterNot(committed).foreach(Checkpoint.deleteRecursively)
+      val counts = observedWrite(
+        df.withColumn("bucket", pmod(xxhash64(col(bucketCol)), lit(nBuckets)))
+          .where(col("bucket").isin(missing: _*)),
+        missing.map(b => count(when(col("bucket") === b, 1)).as(s"b$b")): _*) {
+        _.write.mode("append").partitionBy("bucket").parquet(data.toString)
+      }
+      missing.zipWithIndex.foreach { case (b, i) =>
+        writeAtomic(bucketManifestPath(stage, b),
+          s"""{"stage":"$stage","bucket":$b,"rows":${counts.getLong(i)},"ts":"${java.time.Instant.now()}"}""")
+      }
     }
-    val out = readPartitioned(stage)
-    val rows = out.count()
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    val observed = observedDelta(before)
-    writeAtomic(manifestPath(stage),
-      s"""{"stage":"$stage","rows":$rows,"buckets":$nBuckets,"resumedBuckets":${nBuckets - missing.size},""" +
-        s""""inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],""" +
-        s""""wallSec":$wallSec,"observed":$observed,"ts":"${java.time.Instant.now()}"}""")
-    out
+    val rows = (0 until nBuckets).map(b =>
+      jsonLong(Files.readString(bucketManifestPath(stage, b)), "rows")).sum
+    writeManifest(stage,
+      s""""rows":$rows,"buckets":$nBuckets,"resumedBuckets":${nBuckets - missing.size},""" +
+        s""""schema":"${jsonEscape(df.schema.json)}"""", inputs, t0, before)
+    readPartitioned(stage)
   }
 
   private def bucketTableName(stage: String): String =
@@ -147,11 +160,8 @@ final class Checkpoint(spark: SparkSession, root: String) {
     * committed `_TABLE.json` spec when a resume runs in a fresh JVM (the
     * in-memory catalog does not survive restarts). Downstream stages that
     * join/aggregate on `bucketCol` read the table pre-hash-partitioned and
-    * pre-sorted — the shuffle is paid ONCE at write time. This is the
-    * parquet stand-in for an Iceberg bucket-partition transform: at 100 TB
-    * the repeated node ⨝ edge joins are the pipeline's dominant exchanges,
-    * and bucketing removes them from every consumer (round-3 verdict: the
-    * bucketed layout existed but nothing consumed it end-to-end).
+    * pre-sorted — the shuffle is paid ONCE at write time (the parquet
+    * stand-in for an Iceberg bucket-partition transform).
     */
   def runStageBucketed(stage: String, inputs: Seq[String], bucketCol: String,
                        nBuckets: Int = 16)(compute: => DataFrame): DataFrame = {
@@ -165,22 +175,18 @@ final class Checkpoint(spark: SparkSession, root: String) {
     val df = compute
     val table = bucketTableName(stage)
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
-      .option("path", s"${stageDir(stage)}/data")
-      .format("parquet").saveAsTable(table)
+    val rows = observedWrite(df, count(lit(1))) {
+      _.write.mode("overwrite")
+        .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
+        .option("path", s"${stageDir(stage)}/data")
+        .format("parquet").saveAsTable(table)
+    }.getLong(0)
     writeAtomic(tableSpecPath(stage),
       s"""{"table":"$table","bucketCol":"$bucketCol","nBuckets":$nBuckets,""" +
-        s""""schemaDdl":"${Checkpoint.jsonEscape(df.schema.toDDL)}"}""")
-    val out = spark.table(table)
-    val rows = out.count()
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    val observed = observedDelta(before)
-    writeAtomic(manifestPath(stage),
-      s"""{"stage":"$stage","rows":$rows,"bucketedBy":"$bucketCol","nBuckets":$nBuckets,""" +
-        s""""inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],""" +
-        s""""wallSec":$wallSec,"observed":$observed,"ts":"${java.time.Instant.now()}"}""")
-    out
+        s""""schemaDdl":"${jsonEscape(df.schema.toDDL)}"}""")
+    writeManifest(stage, s""""rows":$rows,"bucketedBy":"$bucketCol","nBuckets":$nBuckets""",
+      inputs, t0, before)
+    spark.table(table)
   }
 
   /** Read a bucketed stage, re-creating the catalog entry over the
@@ -188,13 +194,11 @@ final class Checkpoint(spark: SparkSession, root: String) {
     */
   def readBucketed(stage: String): DataFrame = {
     val spec = Files.readString(tableSpecPath(stage))
-    def field(k: String): String =
-      ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(spec)
-        .map(m => Checkpoint.jsonUnescape(m.group(1))).getOrElse(
-          throw new IllegalStateException(s"malformed _TABLE.json for $stage: $spec"))
+    def field(k: String): String = jsonString(spec, k).getOrElse(
+      throw new IllegalStateException(s"malformed _TABLE.json for $stage: $spec"))
     val table = field("table")
     val bucketCol = field("bucketCol")
-    val n = "\"nBuckets\":(\\d+)".r.findFirstMatchIn(spec).get.group(1).toInt
+    val n = jsonLong(spec, "nBuckets").toInt
     if (!spark.catalog.tableExists(table))
       spark.sql(s"CREATE TABLE $table (${field("schemaDdl")}) USING PARQUET " +
         s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $n BUCKETS " +
@@ -203,76 +207,69 @@ final class Checkpoint(spark: SparkSession, root: String) {
   }
 
   /** Per-stage delta of the process-cumulative observed counters as a
-    * JSON object string (see runStage's lineage-record comment).
+    * JSON object string (see [[writeManifest]]).
     */
-  private def observedDelta(before: Map[String, Map[String, Long]]): String = {
-    val delta = Observed.snapshot().flatMap { case (name, m) =>
+  private def observedDelta(before: Map[String, Map[String, Long]]): String =
+    Observed.snapshot().flatMap { case (name, m) =>
       val prev = before.getOrElse(name, Map.empty[String, Long])
-      val d = m.map { case (k, v) => k -> (v - prev.getOrElse(k, 0L)) }
-        .filter(_._2 != 0L)
-      if (d.isEmpty) None else Some(name -> d)
-    }
-    delta.map { case (name, m) =>
-      "\"" + name + "\":{" +
-        m.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",") + "}"
+      val d = m.map { case (k, v) => k -> (v - prev.getOrElse(k, 0L)) }.filter(_._2 != 0L)
+      if (d.isEmpty) None
+      else Some("\"" + name + "\":" + d.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
     }.mkString("{", ",", "}")
+
+  /** Read a committed bucket-partitioned stage with the schema its
+    * manifest records (inferred for a manifest written before the schema
+    * was recorded), dropping the discovery column.
+    */
+  def readPartitioned(stage: String): DataFrame = {
+    val schema = jsonString(Files.readString(manifestPath(stage)), "schema")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema).parquet(s"${stageDir(stage)}/data").drop("bucket")
   }
 
-  /** Read a bucket-partitioned stage, dropping the discovery column. */
-  def readPartitioned(stage: String): DataFrame =
-    spark.read.parquet(s"${stageDir(stage)}/data").drop("bucket")
+  def manifests(): Seq[String] =
+    children(Paths.get(root)).map(_.resolve("_MANIFEST.json")).filter(Files.exists(_))
+      .map(Files.readString(_))
 
-  def manifests(): Seq[String] = {
-    val r = Paths.get(root)
-    if (!Files.exists(r)) Nil
-    else {
-      val s = Files.list(r)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toSeq
-          .map(p => p.resolve("_MANIFEST.json"))
-          .filter(Files.exists(_))
-          .map(Files.readString(_))
-      } finally s.close()
-    }
-  }
+  private def children(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Nil else Using.resource(Files.list(dir))(_.iterator().asScala.toList)
 }
 
 object Checkpoint {
 
   /** Write-temp-then-ATOMIC_MOVE: a reader never observes a torn file and
-    * a crash mid-write leaves the previous content intact. Shared by the
-    * checkpoint manifests and [[graft.graphout.GraphStorage]]'s version
-    * metadata (round-3 advice: versions.json was a bare read-modify-write).
+    * a crash mid-write leaves the previous content intact (the manifests,
+    * and [[graft.graphout.GraphStorage]]'s version metadata).
     */
-  def writeAtomic(path: java.nio.file.Path, content: String): Unit = {
+  def writeAtomic(path: Path, content: String): Unit = {
     Files.createDirectories(path.getParent)
     val tmp = Paths.get(path.toString + ".tmp")
     Files.writeString(tmp, content, StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Recursive delete, children before parents. The ONE copy of
-    * filesystem-destructive walk logic (review round 6: three inline
-    * variants had drifted across GraphStorage and StreamScale).
+  /** Recursive delete, children before parents: the one copy of
+    * filesystem-destructive walk logic.
     */
-  def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      try {
-        s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      } finally s.close()
+  def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) Using.resource(Files.walk(root)) {
+      _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
     }
 
-  /** Minimal JSON string escape/unescape for the _TABLE.json spec —
-    * backslashes AND quotes (round-4 advice: quote-only escaping breaks
-    * the round-trip for a schema DDL carrying a backslash or an escaped
-    * column name, and the fresh-JVM CREATE TABLE on resume would then
-    * parse a corrupted DDL).
+  /** Minimal JSON string escape/unescape for the schemas the manifests
+    * carry — backslashes AND quotes, so a schema round-trips intact.
     */
   def jsonEscape(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** The string value of `key` in a flat JSON object this class wrote. */
+  private def jsonString(json: String, key: String): Option[String] =
+    ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(json)
+      .map(m => jsonUnescape(m.group(1)))
+
+  /** The integer value of `key` in a flat JSON object this class wrote. */
+  private def jsonLong(json: String, key: String): Long =
+    ("\"" + key + "\":(\\d+)").r.findFirstMatchIn(json).get.group(1).toLong
 
   def jsonUnescape(s: String): String = {
     val sb = new StringBuilder(s.length)

@@ -84,6 +84,11 @@ object Observed {
   def recordLast(prefix: String, m: Map[String, Long]): Unit =
     values.put(prefix, m)
 
+  private def minted(key: String): Boolean = {
+    val i = key.lastIndexOf('#')
+    i > 0 && i < key.length - 1 && key.substring(i + 1).forall(_.isDigit)
+  }
+
   private def prefixOf(key: String): String = {
     val i = key.lastIndexOf('#')
     if (i < 0) key else key.substring(0, i)
@@ -91,7 +96,10 @@ object Observed {
 
   private val listener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      qe.observedMetrics.foreach { case (name, row) =>
+      // only names minted by [[name]]: an `Observation` (a checkpoint
+      // commit's row count, a loop's convergence signature) is not a drop
+      // counter and stays out of the registry and the stage manifests
+      qe.observedMetrics.filter { case (name, _) => minted(name) }.foreach { case (name, row) =>
         val m = row.schema.fieldNames.map { f =>
           f -> (row.getAs[Any](f) match {
             case l: Long => l

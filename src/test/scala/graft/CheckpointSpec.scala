@@ -8,6 +8,7 @@ class CheckpointSpec extends SparkSpec {
   test("checkpointed run commits all stages with manifests and resumes without recompute") {
     import spark.implicits._
     val root = Files.createTempDirectory("ckpt").toString
+    graft.runtime.Observed.install(spark)
 
     val t0 = System.nanoTime()
     val first = CheckpointedPipeline.run(spark, root, 150).count()
@@ -29,8 +30,14 @@ class CheckpointSpec extends SparkSpec {
     // single-pass extraction: mentions/triples derive from 02_extracted
     assert(manifests.exists(m => m.contains("\"02_mentions\"") && m.contains("02_extracted")))
     assert(manifests.exists(m => m.contains("\"03_triples\"") && m.contains("02_extracted")))
-    // observed cap counters are part of the lineage record
-    assert(manifests.forall(_.contains("\"observed\":")))
+    // observed cap counters are part of the lineage record, and only they
+    // are: a commit's own row-count observation (unnamed columns, b<i> per
+    // bucket, under an Observation's UUID name) must not leak into it
+    val observed = manifests.map(m =>
+      "\"observed\":(\\{.*\\}),\"ts\"".r.findFirstMatchIn(m).map(_.group(1)).getOrElse(fail(m)))
+    val observedKeys = observed.flatMap(o => "\"([^\"]+)\":".r.findAllMatchIn(o).map(_.group(1)))
+    assert(observedKeys.forall(_.matches("[a-z_]+")) &&
+      !observedKeys.exists(k => k == "rows" || k.matches("b\\d+")), observed)
 
     // resume: a second run must read committed outputs (much faster, same rows)
     val t1 = System.nanoTime()
@@ -88,6 +95,71 @@ class CheckpointSpec extends SparkSpec {
     // the stage manifest records how many buckets were resumed vs recomputed
     assert(Files.readString(Paths.get(s"$root/00_corpus_p/_MANIFEST.json"))
       .contains("\"resumedBuckets\":5"))
+  }
+
+  test("a partitioned commit runs the same number of jobs at nB = 4 and nB = 16") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.graftshim.GraftCore
+    import graft.runtime.Observed
+    val sc = spark.sparkContext
+    Observed.install(spark)
+    def jobsFor(nB: Int): Int = {
+      val cp = new graft.runtime.Checkpoint(spark, Files.createTempDirectory("ckpt6").toString)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      assert(GraftCore.drainListenerBus(sc, 30000))
+      val registered = Observed.snapshot().keySet
+      sc.addSparkListener(l)
+      try {
+        cp.runStagePartitioned("00_corpus_p", Nil, "path", nB) {
+          graft.corpus.CorpusGen.generate(spark, 120).toDF()
+        }
+        assert(GraftCore.drainListenerBus(sc, 30000))
+      } finally sc.removeSparkListener(l)
+      // the commit's per-bucket row counts stay out of the drop-counter registry
+      assert(Observed.snapshot().keySet == registered)
+      jobs.get
+    }
+    val (j4, j16) = (jobsFor(4), jobsFor(16))
+    assert(j4 == j16 && j16 >= 1 && j16 <= 2, s"jobs at nB=4: $j4, at nB=16: $j16")
+  }
+
+  test("a bucket dir left without a manifest is replaced on resume, not appended to") {
+    val root = Files.createTempDirectory("ckpt7").toString
+    val cp = new graft.runtime.Checkpoint(spark, root)
+    val nB = 8
+    def compute = graft.corpus.CorpusGen.generate(spark, 120).toDF()
+    val fresh = cp.runStagePartitioned("00_corpus_p", Nil, "path", nB)(compute)
+      .collect().map(_.getAs[String]("path")).sorted.toSeq
+    // a kill after the write job committed but before the bucket manifests
+    // of buckets 6 and 7 landed, plus a writer temp dir of a later attempt
+    Files.delete(Paths.get(s"$root/00_corpus_p/_MANIFEST.json"))
+    (6 until nB).foreach(b => Files.delete(Paths.get(s"$root/00_corpus_p/_BUCKET_$b.json")))
+    Files.createDirectories(Paths.get(s"$root/00_corpus_p/data/_temporary/0"))
+    assert(Files.exists(Paths.get(s"$root/00_corpus_p/data/bucket=6")))
+    val resumed = cp.runStagePartitioned("00_corpus_p", Nil, "path", nB)(compute)
+      .collect().map(_.getAs[String]("path")).sorted.toSeq
+    assert(resumed == fresh && resumed.size == 120)
+    assert(!Files.exists(Paths.get(s"$root/00_corpus_p/data/_temporary")))
+    val manifest = Files.readString(Paths.get(s"$root/00_corpus_p/_MANIFEST.json"))
+    assert(manifest.contains("\"rows\":120,") && manifest.contains("\"resumedBuckets\":6"), manifest)
+  }
+
+  test("a stage with empty output commits and resumes as an empty frame with its schema") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("ckpt8").toString
+    def compute = graft.corpus.CorpusGen.generate(spark, 40).toDF().where(lit(false))
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val out = new graft.runtime.Checkpoint(spark, root)
+      .runStagePartitioned("00_corpus_p", Nil, "path", 4)(compute)
+    assert(out.count() == 0 && shape(out) == shape(compute))
+    assert(Files.readString(Paths.get(s"$root/00_corpus_p/_MANIFEST.json")).contains("\"rows\":0,"))
+    // resume in a fresh Checkpoint: no data file exists to infer from
+    val back = new graft.runtime.Checkpoint(spark, root)
+      .runStagePartitioned("00_corpus_p", Nil, "path", 4) { fail("must not recompute"); null }
+    assert(back.count() == 0 && shape(back) == shape(compute))
   }
 
   test("bucketed node/edge stages join exchange-free and re-register after a fresh-JVM resume") {

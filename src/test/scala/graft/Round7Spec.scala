@@ -58,6 +58,29 @@ class Round7Spec extends SparkSpec {
     assert(fastT == distT)
   }
 
+  test("traverse driver fast path ≡ distributed loop on parallel edges with null fields") {
+    // min(struct(...)) orders a null field first: the null-relId edge wins
+    // n01, and on the shared relId the null-relType edge wins n02
+    val nodes = Seq("n00", "n01", "n02", "n03").map(ent)
+    val edges = Seq(
+      rel("e1", "n00", "n01"), rel(null, "n00", "n01"),
+      rel("e2", "n00", "n02", "r"), rel("e2", "n00", "n02", null),
+      rel("e3", "n01", "n03", null), rel(null, "n02", "n03", null))
+    val g = gOf(nodes, edges)
+    for (dir <- Seq("outgoing", "incoming", "both")) {
+      val fast = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 3, direction = dir))
+      val dist = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 3, direction = dir,
+        driverLimit = 0))
+      assert(fast == dist, s"direction=$dir")
+    }
+    val won = GraphQueryOps.traverse(g, "n00", maxDepth = 2).collect()
+      .map(r => r.getAs[String]("childId") ->
+        (r.getAs[String]("parentId"), r.getAs[String]("relId"), r.getAs[String]("relType")))
+      .toMap
+    assert(won == Map("n01" -> ("n00", null, "r"), "n02" -> ("n00", "e2", null),
+      "n03" -> ("n01", "e3", null)))
+  }
+
   test("cyclicDependencies driver mirror ≡ distributed walk") {
     val nodes = (0 until 16).map(i => ent(f"c$i%02d"))
     val edges = Seq(
