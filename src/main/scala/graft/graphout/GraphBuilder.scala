@@ -28,8 +28,7 @@ object GraphBuilder {
     * (Extractor.extractSegment); importJson collapses user-supplied
     * duplicates keeping max confidence; StreamingIngest writes each
     * micro-batch to an idempotent batch=<id> dir (replays rewrite, never
-    * append duplicates); CheckpointedPipeline dedups legacy 02_extracted
-    * commits on read (_FORMAT.json marker).
+    * append duplicates).
     */
   def build(entities: Dataset[Entity], triples: Dataset[Triple]): Graph = {
     val spark = entities.sparkSession

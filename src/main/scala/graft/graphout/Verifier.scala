@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.model.{Issue, Severity}
+import graft.query.GraphQueryOps.boundedCollect
 
 /**
  * Rule-based graph verification V1-V4 (SURVEY.md §2.6; reference
@@ -63,17 +64,6 @@ object Verifier {
     * V² pairs regardless of edge count).
     */
   private val DriverPairBound = 2000000
-
-  /** Size-gated collect for the driver mirrors: one count job + one
-    * collect job — flat two jobs, unlike limit().collect()'s incremental
-    * take which escalates through up to four partial jobs re-running the
-    * lineage (measured: the escalation dominated the fast path's win on
-    * plans with broadcast-join branches). None = over the limit; the
-    * count pass is a column-pruned aggregate, cheap even at scale.
-    */
-  private def boundedCollect(df: org.apache.spark.sql.DataFrame, lim: Long)
-      : Option[Array[org.apache.spark.sql.Row]] =
-    if (df.count() > lim) None else Some(df.collect())
 
   /** V1 cyclic-dependency check: nodes on a hierarchical-type cycle.
     * DFS in the reference (knowledge_verifier.py:184-271); here a bounded

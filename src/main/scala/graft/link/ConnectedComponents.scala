@@ -121,8 +121,8 @@ object ConnectedComponents {
       e = smallStar(largeStar(e))
         .observe(obs, signatureMetrics.head, signatureMetrics.tail: _*)
         .localCheckpoint(true)
-      val m = obs.get
-      val s2 = (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long])
+      val m = graft.runtime.Observed.await(obs)
+      val s2 = (m.getAs[Long]("n"), m.getAs[Long]("h"))
       if (iter == 0) prev.unpersist(blocking = false) // the probe cache
       converged = s2 == sig
       sig = s2

@@ -67,7 +67,8 @@ object Dedup {
     // re-attach joins): measured round 7 — the columnar cache write/read
     // of the signature rows costs more than re-running the one-pass
     // native MinHashSignature scan (2.6 s vs 2.15 s for q24, task CPU
-    // 3x), the same negative result as the pipeline's cacheRaw knob.
+    // 3x), the same negative result as caching the KG pipeline's raw
+    // extraction (round 6: +439 MB shuffle write, +19 s CPU).
     val withMh = docs
       .select(col(idCol).as("id"),
         graft.functions.MinHashSignature(col(textCol), k, 3).as("mh"))

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusGen
 import graft.extract.Extractor
-import graft.graphout.GraphBuilder
-import graft.link.{EntityMerge, Linker}
 import graft.model.{CodeFile, Entity, Segment, Triple}
 import graft.runtime.Checkpoint
 import graft.segment.CodeSegmenter
@@ -26,6 +24,8 @@ import graft.segment.CodeSegmenter
  *          → mentions/triples (cheap explodes of the committed extraction)
  *          → canonical_mentions → links → nodes/edges (+ dstId-bucketed
  *            edge copy: dual sort order) → triple_set
+ * The stages from canonical_mentions on are the shared [[KgStages]]
+ * definition, committed through a checkpoint keep.
  */
 object CheckpointedPipeline {
 
@@ -53,23 +53,9 @@ object CheckpointedPipeline {
     // that parquet, never re-running extraction. Per-row failures land in
     // the error side-output stage (Result-monad mapping, SURVEY §2.12) —
     // its manifest rows counter IS the failure metric for the run.
-    // SEMANTIC-VERSION marker for the extraction format (round-6 review,
-    // provenance-corrected): since round 6 the extractor collapses
-    // duplicate triple ids per segment (row-unique ids — the contract
-    // GraphBuilder's id-keyed winner fetch relies on). The id-collapse
-    // semantic lives in THIS stage's rows, so the marker must record who
-    // committed 02_extracted — a marker on 03_triples would stamp
-    // "row-unique" over a 03 recomputed by exploding a LEGACY 02 commit
-    // (resume killed between 02 and 03).
-    val extractedFormatPath =
-      java.nio.file.Paths.get(s"$root/02_extracted/_FORMAT.json")
-    val extractedWereCommitted = cp.isCommitted("02_extracted")
     val extracted = cp.runStage("02_extracted", Seq("01_segments")) {
       Extractor.extractCombinedSafe(segments.as[Segment]).toDF()
     }
-    if (!extractedWereCommitted)
-      Checkpoint.writeAtomic(extractedFormatPath,
-        """{"tripleIds":"row-unique","version":2}""")
     cp.runStage("02_errors", Seq("02_extracted")) {
       extracted.where(col("error").isNotNull)
         .select(col("segId"), col("repo"), col("path"), col("error"))
@@ -78,99 +64,36 @@ object CheckpointedPipeline {
       extracted.where(col("error").isNull)
         .select(explode(col("entities")).as("e")).select("e.*")
     }
-    val triples0 = cp.runStage("03_triples", Seq("02_extracted")) {
+    val triples = cp.runStage("03_triples", Seq("02_extracted")) {
       extracted.where(col("error").isNull)
         .select(explode(col("triples")).as("t")).select("t.*")
     }
-    // A 02_extracted commit from pre-change code (no _FORMAT marker) can
-    // carry duplicate-id triple rows (identical copies); collapse them on
-    // legacy read so a resume can't double-emit winner rows. One-time
-    // legacy cost — marker-bearing commits skip it.
-    val triples =
-      if (java.nio.file.Files.exists(extractedFormatPath)) triples0
-      else triples0.dropDuplicates("id")
 
-    val canonical = cp.runStage("04_canonical_mentions", Seq("02_mentions")) {
-      EntityMerge.dedupeMentionsFast(mentions.as[Entity]).toDF()
-    }
-
-    // linking produces two outputs; stage them separately with shared input
-    val linkResultHolder = new Array[Linker.LinkResult](1)
-    def linked(): Linker.LinkResult = {
-      if (linkResultHolder(0) == null)
-        linkResultHolder(0) = Linker.link(canonical.as[Entity])
-      linkResultHolder(0)
-    }
-    // nodes and edges are the pipeline's REUSED tables (name attachment,
-    // endpoint checks, every downstream graph query) — committed BUCKETED
-    // on their join keys (nodes on id, edges on srcId, same bucket count)
-    // so every consumer joining on those keys reads them pre-partitioned
-    // and pre-sorted: the srcId name-attach below runs with ZERO Exchange
-    // on either side (PlanSpec-pinned). Iceberg bucket transform at
-    // production scale; the shuffle is paid once, at write time.
-    val nodes = cp.runStageBucketed("05_nodes", Seq("04_canonical_mentions"),
-      bucketCol = "id") {
-      linked().canonical.toDF()
-    }
-    val rewrite = cp.runStage("06_rewrite", Seq("04_canonical_mentions")) {
-      linked().rewrite
-    }
-
-    // SEMANTIC-VERSION marker for the edge format (round-5 advice, medium):
-    // since round 5, GraphBuilder.build attaches CANONICAL names to
-    // srcName/dstName inside its endpoint joins; pre-change commits carry
-    // the extraction-time SURFACE names. 08_triple_set below projects the
-    // name columns straight off 07_edges — resuming a legacy checkpoint dir
-    // through that projection would silently emit surface-name triples
-    // (e.g. knowledge_graph instead of KnowledgeGraph), diverging from both
-    // old and new full runs. The marker is written iff THIS code committed
-    // the stage; a committed 07_edges without it is legacy, and 08 then
-    // recomputes canonical names via the node join (the pre-change plan).
-    val edgesFormatPath = java.nio.file.Paths.get(s"$root/07_edges/_FORMAT.json")
-    val edgesWereCommitted = cp.isCommitted("07_edges")
-    val edges = cp.runStageBucketed("07_edges",
-      Seq("03_triples", "05_nodes", "06_rewrite"), bucketCol = "srcId") {
-      val redirected = Linker.redirectEdges(triples.as[Triple], rewrite)
-      GraphBuilder.build(nodes.as[Entity], redirected).edges.toDF()
-    }
-    if (!edgesWereCommitted)
-      Checkpoint.writeAtomic(edgesFormatPath, """{"edgeNames":"canonical","version":2}""")
-    val edgeNamesCanonical = java.nio.file.Files.exists(edgesFormatPath)
-
-    // DUAL-SORT-ORDER edge copy (round-4 verdict item 2): the same edge
-    // rows committed a second time, bucketed on dstId, so every
-    // incoming-direction consumer (reverse traversal, dangling-dst checks,
-    // objName attaches) reads pre-partitioned on ITS join key just like
-    // outgoing consumers read 07_edges on srcId. Storage is cheap at
-    // 100 TB; the repeated dstId exchange every consumer would otherwise
-    // pay is not — the shuffle is paid once, at this write.
-    cp.runStageBucketed("07_edges_bydst", Seq("07_edges"), bucketCol = "dstId") {
-      edges
-    }
-
-    cp.runStage("08_triple_set", Seq("07_edges")) {
-      if (edgeNamesCanonical) {
-        // ZERO-join triple set: build attached canonical srcName/dstName
-        // inside its endpoint joins, so this stage is a bucketed scan + one
-        // distinct aggregate (PlanSpec pins: no join, single exchange).
-        // Round 4 carried a dstId re-shuffle of the joined rows here — the
-        // pipeline's last read-path exchange; it no longer exists.
-        edges
-          .select(col("srcName").as("subjName"), col("relType"),
-            col("dstName").as("objName"))
-          .distinct()
-      } else {
-        // legacy 07_edges commit (surface names): recompute canonical names
-        // via the node join, exactly the pre-change plan — converges with
-        // what a fresh full run of the new code produces
-        edges
-          .join(nodes.select(col("id").as("srcId"), col("name").as("subjName")),
-            Seq("srcId"))
-          .join(nodes.select(col("id").as("dstId"), col("name").as("objName")),
-            Seq("dstId"))
-          .select(col("subjName"), col("relType"), col("objName"))
-          .distinct()
+    // Stages 04–08. The keyed stages — nodes and edges, the pipeline's
+    // REUSED tables (name attachment, endpoint checks, every downstream
+    // graph query) — are committed BUCKETED on their join keys (nodes on
+    // id, edges on srcId, same bucket count), so every consumer joining on
+    // those keys reads them pre-partitioned and pre-sorted: the srcId
+    // name-attach runs with ZERO Exchange on either side (PlanSpec-pinned).
+    // Iceberg bucket transform at production scale; the shuffle is paid
+    // once, at write time.
+    val keep = new KgStages.Keep {
+      def apply(stage: KgStages.Stage)(body: => DataFrame): DataFrame = stage.key match {
+        case None => cp.runStage(stage.name, stage.inputs)(body)
+        case Some(key) =>
+          val out = cp.runStageBucketed(stage.name, stage.inputs, bucketCol = key)(body)
+          // DUAL-SORT-ORDER edge copy (round-4 verdict item 2): the same
+          // edge rows committed a second time, bucketed on dstId, so every
+          // incoming-direction consumer (reverse traversal, dangling-dst
+          // checks, objName attaches) reads pre-partitioned on ITS join key
+          // just like outgoing consumers read 07_edges on srcId. Storage is
+          // cheap at 100 TB; the repeated dstId exchange every consumer
+          // would otherwise pay is not.
+          if (stage == KgStages.Edges)
+            cp.runStageBucketed("07_edges_bydst", Seq("07_edges"), bucketCol = "dstId")(out)
+          out
       }
     }
+    KgStages.run(mentions.as[Entity], triples.as[Triple], keep).tripleSet
   }
 }

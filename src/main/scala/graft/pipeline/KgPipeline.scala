@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.CorpusGen
 import graft.extract.Extractor
 import graft.graphout.GraphBuilder
-import graft.link.{EntityMerge, Linker}
+import graft.link.Linker
 import graft.model.{CodeFile, Entity, Segment, Triple}
 import graft.segment.CodeSegmenter
 
@@ -74,95 +74,65 @@ object KgPipeline {
   private def assemble(spark: SparkSession, files: Dataset[CodeFile],
                        linkThreshold: Double, force: Boolean)
       : (Result, Long, Seq[(String, Double)]) = {
-    import spark.implicits._
-    val laps = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def lap[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val x = f
-      laps += name -> (System.nanoTime() - t0) / 1e9
-      x
-    }
-
     val segments = CodeSegmenter.windows(files)
-    // Two independent narrow extraction passes (mentions, triples). Regex
-    // work runs twice, but narrow chains recompute for free in parallel
-    // and nothing large is pinned in executor memory — caching the raw
-    // per-segment extraction (nested Seq rows) thrashes memory at high
-    // task concurrency. At production scale the extraction output is a
-    // checkpoint table (see CheckpointedPipeline) and this choice vanishes.
+    // Two lazy extraction passes (mentions, triples), not the checkpointed
+    // run's one pass: extractCombinedSafe + explodes measured slower here
+    // (kg_build build_s 5.2 → 6.0 s; cached, 7.1 s and +30% peak memory).
     val (mentions, rawTriples) = Extractor.extract(segments)
+    val keep = new InMemoryKeep(spark.sessionState.conf.numShufflePartitions, force)
+    val out = KgStages.run(mentions, rawTriples, keep, linkThreshold)
+    import spark.implicits._
+    val graph = GraphBuilder.Graph(out.nodes.as[Entity], out.edges.as[Triple])
+    (Result(files, segments, mentions, graph.nodes, graph, out.tripleSet),
+      keep.tripleCount, keep.laps.toSeq)
+  }
 
-    // exact-identity dedup first (deterministic id = sha(normName|type)):
-    // one shuffle, map-side combined. The canonical mention table is small
-    // (distinct (name,type) pairs) and read 3+ times downstream → persist.
-    val deduped = lap("extract_dedup") {
-      val d = EntityMerge.dedupeMentionsFast(mentions)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (force) d.count()
-      d
+  /** The in-memory keep: persists 04, and hash-partitions and persists the
+    * keyed stages — 05 on id (explicit partition count, so AQE cannot
+    * coalesce it away from the join requirement: GraphBuilder.build's node
+    * side and every downstream id join read it co-partitioned) and 07 on
+    * srcId (the union with reversed rows erases the semi-join's
+    * partitioning, so the srcId joins downstream start co-located). 06 and
+    * 08 stay lazy.
+    * With `force`, 04, 05, 07 and the triple set are counted on the spot,
+    * and the time between stage ends is lapped under the [[Staged]] names.
+    */
+  private final class InMemoryKeep(parts: Int, force: Boolean) extends KgStages.Keep {
+    import KgStages._
+    val laps = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    var tripleCount = 0L
+    private var mark = System.nanoTime()
+    private def lap(name: String): Unit = {
+      val now = System.nanoTime()
+      laps(name) = laps.getOrElse(name, 0.0) + (now - mark) / 1e9
+      mark = now
+    }
+    private def persist(df: DataFrame) =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    def apply(stage: Stage)(body: => DataFrame): DataFrame = {
+      val out = stage match {
+        case CanonicalMentions => persist(body)
+        case Stage(_, _, Some(key)) => persist(body.repartition(parts, col(key)))
+        case _ => body
+      }
+      if (force && stage != Rewrite) {
+        val n = out.count()
+        if (stage == TripleSet) tripleCount = n
+      }
+      lap(stage match {
+        case CanonicalMentions => "extract_dedup"
+        case TripleSet => "triple_set"
+        case _ => "merge_build"
+      })
+      out
     }
 
-    // fuzzy linking over the already-deduped canonical mentions; the
-    // CC + rewrite map are eager (localCheckpoint) inside
-    val linked = lap("link_cc")(Linker.link(deduped, linkThreshold))
-
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val (nodes, edges) = lap("merge_build") {
-      // nodes cached HASH-PARTITIONED ON ID (explicit count so AQE cannot
-      // coalesce it away from the join requirement): the nodeIds builds in
-      // GraphBuilder.build and both tripleSet name-attach sides read the
-      // cache co-partitioned — zero node-side exchanges for the whole run
-      val n = linked.canonical.repartition(parts, $"id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // redirected edges are NOT cached by default: GraphBuilder.build
-      // does read the raw edge table from two plan sides (narrow winner
-      // aggregate, then the wide semi-join side), so caching looks like
-      // it should save an extraction pass — but the interleaved StageProbe
-      // A/B at 320k (BASELINE.md round 6) measured the cache at +439 MB
-      // shuffle write and +19 s CPU versus just recomputing the narrow
-      // regex lineage: the columnar cache write/read of the wide rows
-      // costs more than the extraction chain it saves, and the extra
-      // pass overlaps with other work. Knob kept for corpora whose
-      // extraction is genuinely expensive (the checkpointed pipeline gets
-      // the single-pass property from its committed parquet stages).
-      // The cache is gated on `force` as well: only the eager path has a
-      // release point (below, once the edge cache materializes). A lazy
-      // run() hands the caller unevaluated datasets with no hook to free
-      // the wide-row cache, so persisting there would pin it for the
-      // session and evict the node/edge caches it exists to serve.
-      val cacheRaw = force &&
-        spark.conf.get("spark.graft.pipeline.cacheRaw", "false").toBoolean
-      val redirected0 = Linker.redirectEdges(rawTriples, linked.rewrite)
-      val redirected = if (cacheRaw)
-        redirected0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else redirected0
-      val g = GraphBuilder.build(n, redirected)
-      // edges cached hash-partitioned on srcId (the union with reversed
-      // rows erases the semi-join's partitioning metadata): the srcId
-      // name-attach and every downstream traversal join start co-located
-      val e = g.edges.repartition(parts, $"srcId")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (force) { n.count(); e.count()
-        if (cacheRaw) redirected.unpersist(blocking = false) }
-      (n, e)
+    override def link(body: => Linker.LinkResult): Linker.LinkResult = {
+      val linked = body
+      lap("link_cc")
+      linked
     }
-    val graph = GraphBuilder.Graph(nodes, edges)
-
-    // triple-set projection: ZERO joins (round-4 verdict item 2). Edges
-    // carry canonical srcName/dstName since GraphBuilder.build attaches
-    // them inside the endpoint-existence joins, so the stage is one
-    // cached-scan + distinct — the partial aggregate collapses duplicate
-    // name-triples map-side and the single exchange ships the distinct
-    // set only. The dstId re-shuffle of the joined rows (the pipeline's
-    // last read-path exchange, 0.43-0.57 stage efficiency in round 4) no
-    // longer exists.
-    val tripleSet = graph.edges.toDF()
-      .select($"srcName".as("subjName"), $"relType", $"dstName".as("objName"))
-      .distinct()
-    val nTriples = lap("triple_set")(if (force) tripleSet.count() else 0L)
-
-    (Result(files, segments, mentions, linked.canonical, graph, tripleSet),
-      nTriples, laps.toSeq)
   }
 
   def runSynthetic(spark: SparkSession, n: Long, seed: Long = 42L): Result =

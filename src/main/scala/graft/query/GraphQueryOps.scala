@@ -345,9 +345,9 @@ object GraphQueryOps {
         stepped.observe(obs,
           coalesce(sum(when($"last" === dstId, 1L).otherwise(0L)), lit(0L)).as("hits"),
           count(lit(1)).as("n")).count()
-        val m = obs.get
-        val hits = m("hits").asInstanceOf[Long]
-        val n = m("n").asInstanceOf[Long]
+        val m = graft.runtime.Observed.await(obs)
+        val hits = m.getAs[Long]("hits")
+        val n = m.getAs[Long]("n")
         // the previous depth's cache fed this join; it is dead now
         prevCache.foreach(_.unpersist(blocking = false))
         if (hits > 0) {
@@ -501,11 +501,13 @@ object GraphQueryOps {
     * four partial jobs, each re-running the probe lineage (round-7
     * measurement: the escalation was most of the fast paths' residual
     * wall time). The count pass is column-pruned and aggregates only —
-    * cheap even when the probe then bails to the distributed path.
+    * cheap even when the probe then bails to the distributed path. The
+    * collected length is checked against `lim` again, so a plan whose
+    * rows change between the two jobs cannot get past the gate.
     */
   private[graft] def boundedCollect(df: DataFrame, lim: Long)
       : Option[Array[org.apache.spark.sql.Row]] =
-    if (df.count() > lim) None else Some(df.collect())
+    if (df.count() > lim) None else Some(df.collect()).filter(_.length <= lim)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.

@@ -1,7 +1,6 @@
 package graft.runtime
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
@@ -63,7 +62,7 @@ final class Checkpoint(spark: SparkSession, root: String) {
   private def observedWrite(df: DataFrame, metrics: Column*)(write: DataFrame => Unit): Row = {
     val obs = Observation()
     write(df.observe(obs, metrics.head, metrics.tail: _*))
-    scala.concurrent.Await.result(obs.future, 10.minutes)
+    Observed.await(obs)
   }
 
   /** Commit the stage manifest: `fields` (rows + layout), lineage inputs,
@@ -165,11 +164,7 @@ final class Checkpoint(spark: SparkSession, root: String) {
     */
   def runStageBucketed(stage: String, inputs: Seq[String], bucketCol: String,
                        nBuckets: Int = 16)(compute: => DataFrame): DataFrame = {
-    // a root committed by the pre-bucketed layout has the manifest but no
-    // _TABLE.json: honor the resume contract by reading the committed
-    // plain parquet (un-bucketed — consumers just pay the exchange)
-    if (isCommitted(stage))
-      return if (Files.exists(tableSpecPath(stage))) readBucketed(stage) else read(stage)
+    if (isCommitted(stage)) return readBucketed(stage)
     val t0 = System.nanoTime()
     val before = Observed.snapshot()
     val df = compute
@@ -218,13 +213,14 @@ final class Checkpoint(spark: SparkSession, root: String) {
     }.mkString("{", ",", "}")
 
   /** Read a committed bucket-partitioned stage with the schema its
-    * manifest records (inferred for a manifest written before the schema
-    * was recorded), dropping the discovery column.
+    * manifest records, dropping the discovery column.
     */
   def readPartitioned(stage: String): DataFrame = {
-    val schema = jsonString(Files.readString(manifestPath(stage)), "schema")
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    schema.fold(spark.read)(spark.read.schema).parquet(s"${stageDir(stage)}/data").drop("bucket")
+    val manifest = Files.readString(manifestPath(stage))
+    val schema = jsonString(manifest, "schema").getOrElse(
+      throw new IllegalStateException(s"manifest of $stage records no schema: $manifest"))
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
+      .parquet(s"${stageDir(stage)}/data").drop("bucket")
   }
 
   def manifests(): Seq[String] =

@@ -1,7 +1,9 @@
 package graft.runtime
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -83,6 +85,13 @@ object Observed {
     */
   def recordLast(prefix: String, m: Map[String, Long]): Unit =
     values.put(prefix, m)
+
+  /** The metrics row of `obs` once its action has run, waiting at most
+    * ten minutes: an observation that never fires surfaces as a
+    * `TimeoutException`, never as a hang.
+    */
+  def await(obs: Observation): Row =
+    Await.result(obs.future, 10.minutes)
 
   private def minted(key: String): Boolean = {
     val i = key.lastIndexOf('#')

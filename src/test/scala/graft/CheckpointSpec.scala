@@ -18,18 +18,32 @@ class CheckpointSpec extends SparkSpec {
     // every stage committed with a manifest carrying rows + lineage
     val cp = new graft.runtime.Checkpoint(spark, root)
     val manifests = cp.manifests()
-    assert(manifests.size == 12, s"expected 12 stage manifests, got ${manifests.size}")
-    // dual-sort-order edge copy committed bucketed on dstId (round-4
-    // verdict item 2)
-    assert(manifests.exists(m => m.contains("\"07_edges_bydst\"") &&
-      m.contains("\"bucketedBy\":\"dstId\"")))
+    // the full stage graph: name → (lineage inputs, bucket column). The
+    // bench harness and the manifests' readers depend on it; single-pass
+    // extraction shows as mentions/triples deriving from 02_extracted, the
+    // dual-sort-order edge copy as 07_edges_bydst bucketed on dstId
+    def field(m: String, re: String) = re.r.findFirstMatchIn(m).map(_.group(1))
+    val graph = manifests.map { m =>
+      field(m, "\"stage\":\"([^\"]+)\"").get ->
+        (field(m, "\"inputs\":\\[([^\\]]*)\\]").get.replace("\"", "").split(",")
+          .filter(_.nonEmpty).toSeq, field(m, "\"bucketedBy\":\"([^\"]+)\""))
+    }.toMap
+    assert(graph == Map(
+      "00_corpus" -> (Nil, None),
+      "01_segments" -> (Seq("00_corpus"), None),
+      "02_extracted" -> (Seq("01_segments"), None),
+      "02_errors" -> (Seq("02_extracted"), None),
+      "02_mentions" -> (Seq("02_extracted"), None),
+      "03_triples" -> (Seq("02_extracted"), None),
+      "04_canonical_mentions" -> (Seq("02_mentions"), None),
+      "05_nodes" -> (Seq("04_canonical_mentions"), Some("id")),
+      "06_rewrite" -> (Seq("04_canonical_mentions"), None),
+      "07_edges" -> (Seq("03_triples", "05_nodes", "06_rewrite"), Some("srcId")),
+      "07_edges_bydst" -> (Seq("07_edges"), Some("dstId")),
+      "08_triple_set" -> (Seq("07_edges"), None)), graph)
     // error side-output stage committed with zero failures on this corpus
     assert(manifests.exists(m => m.contains("\"02_errors\"") && m.contains("\"rows\":0")))
     assert(manifests.forall(_.contains("\"rows\":")))
-    assert(manifests.exists(m => m.contains("08_triple_set") && m.contains("07_edges")))
-    // single-pass extraction: mentions/triples derive from 02_extracted
-    assert(manifests.exists(m => m.contains("\"02_mentions\"") && m.contains("02_extracted")))
-    assert(manifests.exists(m => m.contains("\"03_triples\"") && m.contains("02_extracted")))
     // observed cap counters are part of the lineage record, and only they
     // are: a commit's own row-count observation (unnamed columns, b<i> per
     // bucket, under an Observation's UUID name) must not leak into it
@@ -196,27 +210,12 @@ class CheckpointSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
   }
 
-  test("runStageBucketed resumes a stage committed by the pre-bucketed layout") {
-    import org.apache.spark.sql.functions._
-    val root = Files.createTempDirectory("ckpt5").toString
-    val cp = new graft.runtime.Checkpoint(spark, root)
-    import spark.implicits._
-    // legacy commit: plain parquet + manifest, no _TABLE.json
-    cp.runStage("05_nodes", Nil)(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
-    assert(!Files.exists(Paths.get(s"$root/05_nodes/_TABLE.json")))
-    // the bucketed stage honors the committed data instead of crashing
-    val out = cp.runStageBucketed("05_nodes", Nil, bucketCol = "id") {
-      fail("must not recompute a committed stage"); null
-    }
-    assert(out.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
-  }
-
   test("a killed run resumes from the last committed stage") {
     val root = Files.createTempDirectory("ckpt2").toString
     // simulate a partial run: commit only the first two stages
     val cp = new graft.runtime.Checkpoint(spark, root)
     import spark.implicits._
-    cp.runStage("00_corpus", Nil) {
+    cp.runStagePartitioned("00_corpus", Nil, bucketCol = "path") {
       graft.corpus.CorpusGen.generate(spark, 80).toDF()
         .withColumn("content_sha", org.apache.spark.sql.functions.sha2(
           org.apache.spark.sql.functions.col("content"), 256))
@@ -228,10 +227,16 @@ class CheckpointSpec extends SparkSpec {
     assert(out.count() > 0)
     assert(cp.isCommitted("08_triple_set"))
 
-    // triple set equals an uncheckpointed run on the same corpus
-    val expected = graft.pipeline.KgPipeline.runSynthetic(spark, 80)
-      .tripleSet.as[(String, String, String)].collect().toSet
+    // an uncheckpointed run on the same corpus builds the same graph — the
+    // node and edge rows, not only the triple set — since both runs share
+    // one definition of stages 04–08
+    val inMemory = graft.pipeline.KgPipeline.runSynthetic(spark, 80)
+    val expected = inMemory.tripleSet.as[(String, String, String)].collect().toSet
     val actual = out.as[(String, String, String)].collect().toSet
     assert(actual == expected)
+    assert(cp.readBucketed("05_nodes").as[graft.model.Entity].collect().toSet ==
+      inMemory.graph.nodes.collect().toSet)
+    assert(cp.readBucketed("07_edges").as[graft.model.Triple].collect().toSet ==
+      inMemory.graph.edges.collect().toSet)
   }
 }

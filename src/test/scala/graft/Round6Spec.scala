@@ -6,8 +6,7 @@ import graft.query.GraphQueryOps
 /** Round-6 pins: UTF-8 binary ordering in the driver fast paths ≡ Spark's
   * own string order (incl. supplementary code points, where UTF-16
   * `String.compareTo` diverges); findPath's distributed loop releases its
-  * frontier caches; the legacy 07_edges resume recomputes canonical names
-  * via the node join; the bench compact summary line is machine-parsable.
+  * frontier caches; the bench compact summary line is machine-parsable.
   */
 class Utf8OrderSpec extends SparkSpec {
 
@@ -150,70 +149,6 @@ class CompactSummarySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(s.contains("\"efficiency\":null"))
     assert(s.contains("\"queriesTimed\":0"))
     assert(s.contains("\"abortedRounds\":null"))
-  }
-}
-
-/** A 07_edges commit from the PRE-round-5 layout carries extraction-time
-  * SURFACE names in srcName/dstName (the canonical-name attach moved into
-  * GraphBuilder.build in round 5); resuming such a checkpoint dir must NOT
-  * project those columns into the triple set — the `_FORMAT.json` marker
-  * dispatches 08 to the legacy node join, which recomputes canonical names
-  * (round-5 advice, medium).
-  */
-class LegacyEdgeResumeSpec extends SparkSpec {
-
-  test("legacy (marker-less) 07_edges resume joins nodes instead of trusting stale names") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("ckpt_legacy").toString
-    val expected = graft.pipeline.CheckpointedPipeline.run(spark, root, 80)
-      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toList
-
-    // simulate the pre-change commit: same edge ROWS but surface-era name
-    // columns garbled, committed WITHOUT the format marker
-    val schema = spark.read.parquet(s"$root/07_edges/data").schema
-    val garbled = spark.read.parquet(s"$root/07_edges/data")
-      .withColumn("srcName", concat(lit("SURFACE_"), col("srcName")))
-      .withColumn("dstName", concat(lit("SURFACE_"), col("dstName")))
-      .collect()
-    val garbledDf = spark.createDataFrame(
-      java.util.Arrays.asList(garbled: _*), schema)
-    // drop the committed stage (catalog entry + dir + marker) and re-commit
-    val spec = Files.readString(Paths.get(s"$root/07_edges/_TABLE.json"))
-    val table = "\"table\":\"([^\"]+)\"".r.findFirstMatchIn(spec).get.group(1)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try { import scala.jdk.CollectionConverters._
-          s.iterator().asScala.toSeq.foreach(rm) } finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(Paths.get(s"$root/07_edges"))
-    rm(Paths.get(s"$root/07_edges_bydst"))
-    rm(Paths.get(s"$root/08_triple_set"))
-    new graft.runtime.Checkpoint(spark, root)
-      .runStageBucketed("07_edges", Nil, bucketCol = "srcId") { garbledDf }
-    assert(!Files.exists(Paths.get(s"$root/07_edges/_FORMAT.json")),
-      "direct Checkpoint commits must not carry the pipeline's marker")
-
-    // resume: 08 must dispatch to the node join and emit CANONICAL names
-    val resumed = graft.pipeline.CheckpointedPipeline.run(spark, root, 80)
-      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toList
-    assert(!resumed.exists(_.contains("SURFACE_")),
-      "legacy resume projected stale surface names into the triple set")
-    assert(resumed == expected)
-
-    // and a marker-PRESENT resume keeps the zero-join projection: re-run
-    // the full pipeline fresh, delete only 08, resume again
-    val root2 = Files.createTempDirectory("ckpt_canon").toString
-    val fresh = graft.pipeline.CheckpointedPipeline.run(spark, root2, 80)
-      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toList
-    rm(Paths.get(s"$root2/08_triple_set"))
-    assert(Files.exists(Paths.get(s"$root2/07_edges/_FORMAT.json")))
-    val resumed2 = graft.pipeline.CheckpointedPipeline.run(spark, root2, 80)
-      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toList
-    assert(resumed2 == fresh && fresh == expected)
   }
 }
 
