@@ -62,9 +62,11 @@ object GraphBuilder {
     // sort bandwidth, primitive-only payload), and the wide rows take
     // exactly ONE linear shuffle (to the group keys, same as before)
     // plus a streamed hash-semi probe — no wide sort, no object state.
-    // The semi build side (one id per distinct group) reuses the
-    // aggregate's (srcId, relType, dstId) partitioning, so the join
-    // adds no exchange on that side.
+    // The semi build side (one id per distinct group) does NOT reuse the
+    // aggregate's (srcId, relType, dstId) partitioning: a shuffled join
+    // must co-partition on all its keys, so that side takes its own
+    // Exchange hashpartitioning(_ws, _wr, _wd, _wid) (seen in the 6,000-
+    // file build plan) — a shuffle of the narrow winner rows only.
     val cols = triples.toDF().columns
     val raw = triples.toDF()
     val winners0 = raw
@@ -298,10 +300,9 @@ object GraphBuilder {
     // undirected simple view, same (xxhash64, id)-ordered neighborhood
     // sample at maxDegree, same wedge membership test, same k(v)(k−1)
     // denominator; the cap counter lands in the same Observed registry.
-    locally {
-      val esOpt = graft.query.GraphQueryOps.boundedCollect(
-        g.edges.toDF().select($"srcId", $"dstId"), driverLimit)
-      esOpt.foreach { raw =>
+    graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).foreach { nodeIds =>
+      graft.runtime.DriverPath.probe(
+          g.edges.toDF().select($"srcId", $"dstId"), driverLimit).foreach { raw =>
         // null-endpoint rows drop exactly like the distributed =!= filter
         // (a null comparison is never true)
         val und = raw.map(r => (r.getString(0), r.getString(1)))
@@ -328,8 +329,7 @@ object GraphBuilder {
         // recorded even at 0, as the distributed observe reports it
         graft.runtime.Observed.record("clustering_deg_cap",
           Map("dropped" -> dropped))
-        val nodeCount = g.nodes.count()
-        if (nodeCount == 0) return 0.0
+        if (nodeIds.isEmpty) return 0.0
         // coefficient sum in sorted-center order (distributed partial-sum
         // order is arbitrary; ≡ to fp ulp, GraphQuerySpec-pinned)
         var coef = 0.0
@@ -354,7 +354,7 @@ object GraphBuilder {
             coef += tri * 2.0 / (k.toDouble * (k - 1))
           }
         }
-        return coef / nodeCount
+        return coef / nodeIds.length
       }
     }
 

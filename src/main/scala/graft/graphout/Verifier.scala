@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.model.{Issue, Severity}
-import graft.query.GraphQueryOps.boundedCollect
+import graft.runtime.DriverPath
 
 /**
  * Rule-based graph verification V1-V4 (SURVEY.md §2.6; reference
@@ -49,13 +49,14 @@ object Verifier {
 
   import graft.model.Issue
 
-  /** Small graphs run the V1/V4 walks as an in-memory driver loop (the
-    * GraphQueryOps.DriverIterationLimit pattern — round-7 measurement:
-    * the distributed loops are 20-34 driver-blocking jobs of ~50 ms fixed
-    * latency each for <0.3 s of actual task time on the planted catalog
-    * graphs). The driver mirrors replicate the distributed pair-set
-    * iteration literally (same extension, same dedup, same prune), so the
-    * result set is identical by construction; VerifierSpec pins it.
+  /** Small graphs run the V1/V4 walks as an in-memory driver loop, gated
+    * by one DriverPath.probe (the GraphQueryOps.DriverIterationLimit
+    * pattern — round-7 measurement: the distributed loops are 20-34
+    * driver-blocking jobs of ~50 ms fixed latency each for <0.3 s of
+    * actual task time on the planted catalog graphs). The driver mirrors
+    * replicate the distributed pair-set iteration literally (same
+    * extension, same dedup, same prune), so the result set is identical
+    * by construction; VerifierSpec pins it.
     */
   private[graphout] def driverLimit: Long = graft.query.GraphQueryOps.DriverIterationLimit
 
@@ -78,16 +79,15 @@ object Verifier {
       .where(lower($"relType").isin(HierarchicalTypes: _*))
       .select($"srcId".as("src"), $"dstId".as("dst")).distinct()
 
-    // ---- driver fast path: one collect job, then the identical pair-set
+    // ---- driver fast path: one probe job, then the identical pair-set
     // iteration in memory (Set ≡ distinct, same closure/prune order).
-    // The collect reads the PRE-distinct projection — the in-memory Set
+    // The probe reads the PRE-distinct projection — the in-memory Set
     // dedups anyway, and skipping distinct keeps the probe a pure scan
-    // take (no exchange to materialize before the first row arrives).
+    // (no exchange to materialize before the first row arrives).
     locally {
-      val lim = math.min(driverLimit, (Int.MaxValue - 2).toLong).toInt
-      val esOpt = boundedCollect(g.edges.toDF()
+      val esOpt = DriverPath.probe(g.edges.toDF()
         .where(lower($"relType").isin(HierarchicalTypes: _*))
-        .select($"srcId", $"dstId"), lim)
+        .select($"srcId", $"dstId"), driverLimit)
       esOpt.foreach { rows =>
         // null-endpoint rows are output-inert in the distributed form
         // (a null join key never matches, a null === comparison is never
@@ -195,19 +195,18 @@ object Verifier {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
-    // ---- driver fast path (round-7): two collect jobs replace the
+    // ---- driver fast path (round-7): one probe job replaces the
     // 30-odd driver-blocking jobs of the seeded distributed walk on small
     // graphs; the in-memory loop replicates the distributed (tt, origin,
     // last) set iteration literally — same seed pruning, same per-hop
     // distinct, same 2..maxHops accumulation, same final neg semi-join.
     locally {
-      val lim = math.min(driverLimit, (Int.MaxValue - 2).toLong).toInt
-      // ONE collect for both edge classes (pre-distinct — the in-memory
+      // ONE probe for both edge classes (pre-distinct — the in-memory
       // Sets dedup, and the unioned predicate keeps the probe a single
-      // scan take with no exchange)
-      val rowsOpt = boundedCollect(g.edges.toDF()
+      // scan with no exchange)
+      val rowsOpt = DriverPath.probe(g.edges.toDF()
         .where(lower($"relType").isin((NegationTypes ++ TransitiveTypes): _*))
-        .select(lower($"relType").as("rt"), $"srcId", $"dstId"), lim)
+        .select(lower($"relType").as("rt"), $"srcId", $"dstId"), driverLimit)
       rowsOpt.foreach { raw =>
         // null endpoints dropped — output-inert distributed (see
         // cyclicDependencies), key-colliding in Scala sets
@@ -296,12 +295,15 @@ object Verifier {
 
   final case class Verification(issues: Dataset[Issue], isValid: Boolean)
 
+  /** Runs V1–V4. Validity reads only the two checks that emit critical
+    * issues (V1, V2), so the V3 self-join runs once, when the caller
+    * reads `issues`.
+    */
   def verify(g: Graph): Verification = {
-    val all = cyclicDependencies(g)
-      .union(danglingReferences(g))
+    val critical = cyclicDependencies(g).union(danglingReferences(g))
+    val all = critical
       .union(contradictoryRelationships(g))
       .union(semanticContradictions(g))
-    val critical = all.where(col("severity") === Severity.Critical).limit(1).count()
-    Verification(all, critical == 0)
+    Verification(all, critical.limit(1).count() == 0)
   }
 }

@@ -78,18 +78,16 @@ object ConnectedComponents {
           driverThreshold: Long = DriverThreshold): DataFrame = {
     import org.apache.spark.sql.Observation
     import org.apache.spark.storage.StorageLevel
-    // ONE probe job total (round-4 verdict item 3 — this used to be a
-    // localCheckpoint job PLUS a head job): persist the normalized pair
-    // set, then head() both materializes the cache and fetches the rows
-    // for the driver fast path. persist (not localCheckpoint) keeps the
-    // iteration base resident without a second scan; lineage above a hot
-    // cache is free.
+    // ONE probe (round-4 verdict item 3): persist the normalized pair
+    // set, then DriverPath.probe both materializes the cache and fetches
+    // the rows for the driver fast path. persist (not localCheckpoint)
+    // keeps the iteration base resident without a second scan; lineage
+    // above a hot cache is free.
     var e = edges.select(col("src").cast("string"), col("dst").cast("string"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val taken = e.head(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1)
-    if (taken.length <= driverThreshold) {
+    graft.runtime.DriverPath.probe(e, driverThreshold).foreach { taken =>
       val out = unionFindLocal(e.sparkSession,
         taken.map(r => (r.getString(0), r.getString(1))))
       e.unpersist(blocking = false)
@@ -106,7 +104,7 @@ object ConnectedComponents {
       (r.getLong(0), r.getLong(1))
     }
     var iter = 0
-    var converged = taken.isEmpty
+    var converged = false
     while (!converged && iter < maxIter) {
       // ONE job per iteration (round-4 verdict item 3): the convergence
       // signature rides the eager localCheckpoint's own materialization
@@ -194,10 +192,10 @@ object ConnectedComponents {
     locally {
       val spark = edges.sparkSession
       import spark.implicits._
-      graft.query.GraphQueryOps.boundedCollect(
+      graft.runtime.DriverPath.probe(
         edges.select(col("src").cast("string"), col("dst").cast("string")),
         driverThreshold).foreach { raw =>
-        graft.query.GraphQueryOps.boundedCollect(
+        graft.runtime.DriverPath.probe(
           allIds.select(col("id").cast("string")), driverThreshold).foreach { idRows =>
           val pairs = raw.map(r => (r.getString(0), r.getString(1)))
             .filter(p => p._1 != null && p._2 != null && p._1 != p._2).distinct

@@ -89,7 +89,7 @@ object Linker {
   }
 
   /** Canonical-mention tables at or below this row count link on the
-    * driver: one narrow head() probe (3 string columns, cache-hot in the
+    * driver: one narrow DriverPath.probe (3 string columns, cache-hot in the
     * pipeline where extract_dedup materialized the mention cache), then
     * blocking + scoring + union-find in memory — the distributed form is
     * ~1-1.4 s of pure plan/exchange/job latency for a 25k-row table with
@@ -159,15 +159,15 @@ object Linker {
     val spark = entities.sparkSession
     import spark.implicits._
 
-    val comps: DataFrame = {
-      val lim = math.min(driverThreshold, (Int.MaxValue - 2).toLong).toInt
-      val probe = entities.select($"id", $"name", $"entityType")
-        .as[(String, String, String)].head(lim + 1)
-      if (probe.length <= lim) driverComps(spark, probe, threshold)
-      else ConnectedComponents.run(
-        candidatePairs(entities, threshold)
-          .select($"id1".as("src"), $"id2".as("dst")))
-    } // (id, comp) — only linked ids
+    val comps: DataFrame =
+      graft.runtime.DriverPath.probe(
+        entities.select($"id", $"name", $"entityType"), driverThreshold) match {
+        case Some(rows) => driverComps(spark,
+          rows.map(r => (r.getString(0), r.getString(1), r.getString(2))), threshold)
+        case None => ConnectedComponents.run(
+          candidatePairs(entities, threshold)
+            .select($"id1".as("src"), $"id2".as("dst")))
+      } // (id, comp) — only linked ids
 
     val withComp = entities
       .join(comps.withColumnRenamed("id", "eid"), entities("id") === col("eid"), "left")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.link.ConnectedComponents
 import graft.model.{Entity, Triple}
+import graft.runtime.DriverPath
 
 /**
  * Graph query operators Q1-Q10 (SURVEY.md §2.8) — each a lazy plan over
@@ -100,7 +101,7 @@ object GraphQueryOps {
         .where($"entityType".isin(ts: _*)).drop("entityType")
     }
 
-    // ---- driver fast path (round-7, the findPath pattern): one collect
+    // ---- driver fast path (round-7, the findPath pattern): one probe
     // job of the (already filtered) adjacency, then the identical
     // visited-once BFS in memory — the distributed loop is 3+ driver-
     // blocking jobs PER DEPTH (join+agg checkpoint, visited distinct
@@ -109,10 +110,9 @@ object GraphQueryOps {
     // relType, direction)) in Spark's binary string order (Utf8Order);
     // GraphQuerySpec pins driver ≡ distributed.
     locally {
-      val lim = math.min(driverLimit, (Int.MaxValue - 2).toLong).toInt
       // explicit column order: the entityTypes join reorders adj's columns
-      val rowsOpt = boundedCollect(
-        adj.select("fromId", "toId", "relId", "relType", "direction"), lim)
+      val rowsOpt = DriverPath.probe(
+        adj.select("fromId", "toId", "relId", "relType", "direction"), driverLimit)
       rowsOpt.foreach { rows =>
         val tuples = rows.map(r => (r.getString(0), r.getString(1), r.getString(2),
           r.getString(3), r.getString(4)))
@@ -236,12 +236,11 @@ object GraphQueryOps {
     val adjDf = g.edges.toDF().select($"srcId".as("last"), $"dstId".as("next"))
       .distinct()
 
-    // ---- driver fast path: count + collect (two flat jobs), then pure
-    // in-memory BFS. The probe reads the PRE-distinct projection — the
-    // in-memory dedup below is free, and skipping distinct keeps both
-    // probe jobs exchange-free scans.
+    // ---- driver fast path: one probe job, then pure in-memory BFS. The
+    // probe reads the PRE-distinct projection — the in-memory dedup below
+    // is free, and skipping distinct keeps the probe an exchange-free scan.
     locally {
-      val esOpt = boundedCollect(
+      val esOpt = DriverPath.probe(
         g.edges.toDF().select($"srcId", $"dstId"), driverLimit)
       esOpt.foreach { raw =>
         val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
@@ -484,30 +483,28 @@ object GraphQueryOps {
       .limit(k)
   }
 
-  /** Below this many nodes AND edges, iterative centralities run as an
-    * in-memory driver loop (mirrors ConnectedComponents' union-find fast
-    * path): a 10-40-iteration join-aggregate loop on a tiny graph is pure
-    * fixed job latency — dozens of driver-blocking rounds to move a few
-    * kilobytes. The driver loop is deterministic (contributions summed in
-    * sorted-source order), and the distributed path remains the one
-    * answer at scale; PropertySpec pins the two paths equal.
+  /** Below this many nodes AND edges, the query, centrality and
+    * verification operators run as an in-memory driver loop (mirrors
+    * ConnectedComponents' union-find fast path): a 10-40-iteration
+    * join-aggregate loop on a tiny graph is pure fixed job latency —
+    * dozens of driver-blocking rounds to move a few kilobytes. Each input
+    * is gated and fetched by one [[DriverPath.probe]] job, which stops
+    * reading a partition after `limit + 1` rows, so a graph far over the
+    * limit costs O(partitions · limit) to reject. The driver loops are
+    * deterministic (contributions summed in sorted-source order), and the
+    * distributed path remains the one answer at scale; PropertySpec and
+    * the `driverLimit = 0` parity pins hold the two paths equal.
     */
   val DriverIterationLimit: Long =
     sys.env.get("GRAFT_CENTRALITY_DRIVER_LIMIT").map(_.toLong).getOrElse(200000L)
 
-  /** Size-gated collect for the driver fast paths: one count job + one
-    * collect job — flat two jobs. The previous limit(lim+1).collect()
-    * probes paid Spark's incremental take, which escalates through up to
-    * four partial jobs, each re-running the probe lineage (round-7
-    * measurement: the escalation was most of the fast paths' residual
-    * wall time). The count pass is column-pruned and aggregates only —
-    * cheap even when the probe then bails to the distributed path. The
-    * collected length is checked against `lim` again, so a plan whose
-    * rows change between the two jobs cannot get past the gate.
+  /** The sorted node ids (duplicates kept, so the length is the node
+    * count `n`) when the node table fits the driver limit: one probe job
+    * serves both the size gate and the ids of the driver mirrors.
     */
-  private[graft] def boundedCollect(df: DataFrame, lim: Long)
-      : Option[Array[org.apache.spark.sql.Row]] =
-    if (df.count() > lim) None else Some(df.collect()).filter(_.length <= lim)
+  private[graft] def driverNodeIds(g: Graph, driverLimit: Long): Option[Array[String]] =
+    DriverPath.probe(g.nodes.toDF().select(col("id")), driverLimit)
+      .map(_.map(_.getString(0)).sorted)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.
@@ -516,17 +513,14 @@ object GraphQueryOps {
                driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val n = g.nodes.count().toDouble
-    // driver probe BEFORE the distinct+localCheckpoint: the checkpoint is
+    // driver probes BEFORE the distinct+localCheckpoint: the checkpoint is
     // only the distributed loop's lineage anchor, and paying its job (plus
     // a count) just to decide the path wasted two jobs per call (round-7)
-    if (n <= driverLimit)
-      boundedCollect(g.edges.toDF().select($"srcId", $"dstId"), driverLimit)
-        .foreach { raw =>
-          return pagerankDriver(g,
-            raw.map(r => (r.getString(0), r.getString(1))).distinct, n,
-            iterations, damping)
-        }
+    for (ids <- driverNodeIds(g, driverLimit);
+         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit))
+      return pagerankDriver(spark, ids,
+        raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations, damping)
+    val n = g.nodes.count().toDouble
     val edges = g.edges.toDF().select($"srcId", $"dstId").distinct()
       .localCheckpoint(true)
     val outDeg = edges.groupBy($"srcId").agg(count(lit(1)).as("outDeg"))
@@ -564,11 +558,11 @@ object GraphQueryOps {
     * same IEEE operations the distributed path performs for in-degree ≤ 2
     * and deterministic regardless.
     */
-  private def pagerankDriver(g: Graph, es: Array[(String, String)], n: Double,
+  private def pagerankDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
+                             es: Array[(String, String)],
                              iterations: Int, damping: Double): DataFrame = {
-    val spark = g.nodes.sparkSession
     import spark.implicits._
-    val ids = g.nodes.toDF().select($"id").as[String].collect().sorted
+    val n = ids.length.toDouble
     val idx = ids.zipWithIndex.toMap
     // out-degree counts ALL of a node's edges (even to dangling targets),
     // exactly like the distributed groupBy(srcId) — a node whose edges
@@ -619,15 +613,13 @@ object GraphQueryOps {
     // in-edges; the reference builds from an undirected metric sort — we
     // symmetrize so isolated direction quirks don't zero the vector)
     val dir = g.edges.toDF().select($"srcId".as("src"), $"dstId".as("dst"))
+    // driver probes before the distinct+localCheckpoint (see pagerank)
+    for (ids <- driverNodeIds(g, driverLimit);
+         raw <- DriverPath.probe(dir.union(dir.select($"dst".as("src"), $"src".as("dst"))),
+           driverLimit))
+      return eigenvectorDriver(spark, ids,
+        raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations)
     val n = g.nodes.count().toDouble
-    // driver probe before the distinct+localCheckpoint (see pagerank)
-    if (n <= driverLimit)
-      boundedCollect(dir.union(dir.select($"dst".as("src"), $"src".as("dst"))),
-          driverLimit)
-        .foreach { raw =>
-          return eigenvectorDriver(g,
-            raw.map(r => (r.getString(0), r.getString(1))).distinct, n, iterations)
-        }
     val edges = dir.union(dir.select($"dst".as("src"), $"src".as("dst")))
       .distinct().localCheckpoint(true)
     var x = g.nodes.toDF().select($"id", lit(1.0 / math.sqrt(n)).as("score"))
@@ -668,11 +660,10 @@ object GraphQueryOps {
     * normalization every 8th iteration and at the end — the same shift,
     * cadence, and floor as the join-aggregate path.
     */
-  private def eigenvectorDriver(g: Graph, und: Array[(String, String)], n: Double,
-                                iterations: Int): DataFrame = {
-    val spark = g.nodes.sparkSession
+  private def eigenvectorDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
+                                und: Array[(String, String)], iterations: Int): DataFrame = {
     import spark.implicits._
-    val ids = g.nodes.toDF().select($"id").as[String].collect().sorted
+    val n = ids.length.toDouble
     val idx = ids.zipWithIndex.toMap
     val nbrs = und
       .filter(p => idx.contains(p._1) && idx.contains(p._2))
@@ -819,26 +810,24 @@ object GraphQueryOps {
         org.apache.spark.unsafe.types.UTF8String.fromString(id), 42L), id))
       .take(samples)
 
-  /** Collected (id-indexed) graph for the BFS fast paths, or None when the
-    * edge set exceeds the driver limit. The index covers node ids AND all
-    * edge endpoints — the distributed frontier join traverses THROUGH ids
-    * absent from the node table, and the fast path must too.
+  /** Collected (id-indexed) graph for the BFS fast paths over the probed
+    * `nodeIds`, or None when the edge set exceeds the driver limit. The
+    * index covers node ids AND all edge endpoints — the distributed
+    * frontier join traverses THROUGH ids absent from the node table, and
+    * the fast path must too.
     */
-  private def collectForBfs(g: Graph, edgeDf: DataFrame, driverLimit: Long)
-      : Option[(Array[String], Map[Int, Array[Int]], Map[String, Int])] = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val raw = boundedCollect(edgeDf, driverLimit).getOrElse(return None)
+  private def collectForBfs(nodeIds: Array[String], edgeDf: DataFrame, driverLimit: Long)
+      : Option[(Map[Int, Array[Int]], Map[String, Int])] = {
+    val raw = DriverPath.probe(edgeDf, driverLimit).getOrElse(return None)
     // in-memory dedup: callers pass the pre-distinct pair projection, so
-    // both probe jobs stay exchange-free scans (the distributed paths
-    // build their own distinct edge sets)
+    // the probe stays an exchange-free scan (the distributed paths build
+    // their own distinct edge sets)
     val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
-    val nodeIds = g.nodes.toDF().select($"id").as[String].collect().sorted
     val allIds = (nodeIds ++ es.map(_._1) ++ es.map(_._2)).distinct.sorted
     val idx = allIds.zipWithIndex.toMap
     val adj = es.map { case (a, b) => (idx(a), idx(b)) }
       .groupBy(_._1).map { case (u, ps) => u -> ps.map(_._2).sorted }
-    Some((nodeIds, adj, idx))
+    Some((adj, idx))
   }
 
   /** Q9 closeness centrality (incoming distances, networkx semantics) via
@@ -857,11 +846,11 @@ object GraphQueryOps {
                           driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val n = g.nodes.count().toDouble
-    if (n <= driverLimit) {
+    driverNodeIds(g, driverLimit).foreach { nodeIds =>
+      val n = nodeIds.length.toDouble
       // pre-distinct projection: collectForBfs dedups in memory
       val edgeDf = g.edges.toDF().select($"srcId", $"dstId")
-      collectForBfs(g, edgeDf, driverLimit).foreach { case (nodeIds, adj, idx) =>
+      collectForBfs(nodeIds, edgeDf, driverLimit).foreach { case (adj, idx) =>
         val srcs = driverSampleSources(nodeIds, samples)
         val f = n / srcs.length.toDouble
         val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
@@ -882,6 +871,7 @@ object GraphQueryOps {
         }).toDF("id", "closeness")
       }
     }
+    val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
     val (settled, _) = multiSourceBfs(g, sources, maxDepth)
@@ -912,10 +902,10 @@ object GraphQueryOps {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val dir = g.edges.toDF().select($"srcId", $"dstId")
-    if (g.nodes.count() <= driverLimit) {
+    driverNodeIds(g, driverLimit).foreach { nodeIds =>
       // pre-distinct projection: collectForBfs dedups in memory
       val undDf = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-      collectForBfs(g, undDf, driverLimit).foreach { case (nodeIds, adj, idx) =>
+      collectForBfs(nodeIds, undDf, driverLimit).foreach { case (adj, idx) =>
         val srcs = driverSampleSources(nodeIds, samples)
         val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
         var s = 0L
@@ -955,11 +945,11 @@ object GraphQueryOps {
                             driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val n = g.nodes.count().toDouble
-    if (n <= driverLimit) {
+    driverNodeIds(g, driverLimit).foreach { nodeIds =>
+      val n = nodeIds.length.toDouble
       // pre-distinct projection: collectForBfs dedups in memory
       val edgeDf = g.edges.toDF().select($"srcId", $"dstId")
-      collectForBfs(g, edgeDf, driverLimit).foreach { case (nodeIds, adj, idx) =>
+      collectForBfs(nodeIds, edgeDf, driverLimit).foreach { case (adj, idx) =>
         val srcs = driverSampleSources(nodeIds, samples)
         val sCnt = srcs.length.toDouble
         val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
@@ -995,6 +985,7 @@ object GraphQueryOps {
         }).toDF("id", "betweenness")
       }
     }
+    val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
     val (_, levels) = multiSourceBfs(g, sources, maxDepth)

@@ -20,8 +20,7 @@ class CheckpointSpec extends SparkSpec {
     val manifests = cp.manifests()
     // the full stage graph: name → (lineage inputs, bucket column). The
     // bench harness and the manifests' readers depend on it; single-pass
-    // extraction shows as mentions/triples deriving from 02_extracted, the
-    // dual-sort-order edge copy as 07_edges_bydst bucketed on dstId
+    // extraction shows as mentions/triples deriving from 02_extracted
     def field(m: String, re: String) = re.r.findFirstMatchIn(m).map(_.group(1))
     val graph = manifests.map { m =>
       field(m, "\"stage\":\"([^\"]+)\"").get ->
@@ -39,7 +38,6 @@ class CheckpointSpec extends SparkSpec {
       "05_nodes" -> (Seq("04_canonical_mentions"), Some("id")),
       "06_rewrite" -> (Seq("04_canonical_mentions"), None),
       "07_edges" -> (Seq("03_triples", "05_nodes", "06_rewrite"), Some("srcId")),
-      "07_edges_bydst" -> (Seq("07_edges"), Some("dstId")),
       "08_triple_set" -> (Seq("07_edges"), None)), graph)
     // error side-output stage committed with zero failures on this corpus
     assert(manifests.exists(m => m.contains("\"02_errors\"") && m.contains("\"rows\":0")))

@@ -178,4 +178,23 @@ class VerifierSpec extends SparkSpec {
     val good = Graph(Seq(ent("a"), ent("b")).toDS(), Seq(rel("e1", "a", "b", "knows")).toDS())
     assert(Verifier.verify(good).isValid)
   }
+
+  test("verify(): validity follows the critical issues alone (V1/V2), not V3/V4") {
+    import spark.implicits._
+    def check(g: Graph, valid: Boolean): Unit = {
+      val v = Verifier.verify(g)
+      val issues = v.issues.collect()
+      assert(v.isValid == valid && issues.nonEmpty, issues.toSeq)
+      assert(v.isValid == !issues.exists(_.severity == "critical"), issues.toSeq)
+    }
+    // a hierarchical cycle and nothing else wrong: critical, invalid
+    check(Graph(Seq(ent("a"), ent("b")).toDS(),
+      Seq(rel("e1", "a", "b", "is-a"), rel("e2", "b", "a", "is-a")).toDS()), valid = false)
+    // a V3 contradiction and a V4 transitive contradiction, every endpoint
+    // a node and no cycle: medium issues only, valid
+    check(Graph(Seq(ent("a"), ent("b"), ent("c")).toDS(),
+      Seq(rel("e1", "a", "b", "is-a"), rel("e2", "b", "c", "is-a"),
+        rel("e3", "a", "c", "is-not-a"), rel("e4", "a", "b", "different-from"))
+        .toDS()), valid = true)
+  }
 }
