@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.model.{Issue, Severity}
-import graft.runtime.DriverPath
+import graft.runtime.{DriverPath, Utf8Order}
 
 /**
  * Rule-based graph verification V1-V4 (SURVEY.md §2.6; reference
@@ -47,81 +47,74 @@ object Verifier {
     (fwd ++ fwd.map(_.swap)).distinct
   }
 
-  import graft.model.Issue
-
-  /** Small graphs run the V1/V4 walks as an in-memory driver loop, gated
-    * by one DriverPath.probe (the GraphQueryOps.DriverIterationLimit
-    * pattern — round-7 measurement: the distributed loops are 20-34
-    * driver-blocking jobs of ~50 ms fixed latency each for <0.3 s of
-    * actual task time on the planted catalog graphs). The driver mirrors
-    * replicate the distributed pair-set iteration literally (same
-    * extension, same dedup, same prune), so the result set is identical
-    * by construction; VerifierSpec pins it.
+  /** Small graphs run the V1/V4 walks (and, in [[verify]], all four
+    * checks) in memory on the driver, gated by DriverPath.probe (the
+    * GraphQueryOps.DriverIterationLimit pattern — round-7 measurement:
+    * the distributed loops are 20-34 driver-blocking jobs of ~50 ms fixed
+    * latency each for <0.3 s of actual task time on the planted catalog
+    * graphs). The driver mirrors replicate the distributed pair-set
+    * iteration literally (same extension, same dedup, same prune), so the
+    * result set is identical by construction; Round7Spec and
+    * ReasoningDriverSpec pin it.
     */
   private[graphout] def driverLimit: Long = graft.query.GraphQueryOps.DriverIterationLimit
 
-  /** In-flight pair-set bound for the driver mirrors: past this the walk
-    * falls back to the distributed loop (a dense closure can hold up to
-    * V² pairs regardless of edge count).
-    */
-  private val DriverPairBound = 2000000
+  /** Default walk lengths of V1 and V4, shared by [[verify]]. */
+  private val CycleDepth = 10
+  private val ContradictionHops = 4
+
+  private val OppositeSet: Set[(String, String)] = Opposites.toSet
+
+  private def cycleIssue(origin: String) = Issue(
+    issueType = "cyclic_dependency",
+    involvedElements = Seq(origin),
+    proposedSolution = "Remove one edge of the hierarchical cycle",
+    severity = Severity.Critical)
+
+  private def danglingIssue(edgeId: String, missing: String) = Issue(
+    issueType = "dangling_reference",
+    involvedElements = Seq(edgeId, missing),
+    proposedSolution = "Remove the relationship or add the missing entity",
+    severity = Severity.Critical)
+
+  private def contradictionIssue(idA: String, idB: String) = Issue(
+    issueType = "contradictory_relationships",
+    involvedElements = Seq(idA, idB),
+    proposedSolution = "Keep the higher-confidence relationship",
+    severity = Severity.Medium)
+
+  private def transitiveIssue(tt: String, origin: String, last: String) = Issue(
+    issueType = s"transitive_contradiction_$tt",
+    involvedElements = Seq(origin, last),
+    proposedSolution = s"Resolve conflict between $tt chain and direct negation",
+    severity = Severity.Medium)
 
   /** V1 cyclic-dependency check: nodes on a hierarchical-type cycle.
     * DFS in the reference (knowledge_verifier.py:184-271); here a bounded
     * iterated frontier-join: propagate reachability up to maxDepth hops
     * and flag nodes that reach themselves. CRITICAL.
     */
-  def cyclicDependencies(g: Graph, maxDepth: Int = 10,
+  def cyclicDependencies(g: Graph, maxDepth: Int = CycleDepth,
                          driverLimit: Long = Verifier.driverLimit): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val hDf = g.edges.toDF()
-      .where(lower($"relType").isin(HierarchicalTypes: _*))
-      .select($"srcId".as("src"), $"dstId".as("dst")).distinct()
 
     // ---- driver fast path: one probe job, then the identical pair-set
-    // iteration in memory (Set ≡ distinct, same closure/prune order).
-    // The probe reads the PRE-distinct projection — the in-memory Set
-    // dedups anyway, and skipping distinct keeps the probe a pure scan
-    // (no exchange to materialize before the first row arrives).
-    locally {
-      val esOpt = DriverPath.probe(g.edges.toDF()
-        .where(lower($"relType").isin(HierarchicalTypes: _*))
-        .select($"srcId", $"dstId"), driverLimit)
-      esOpt.foreach { rows =>
-        // null-endpoint rows are output-inert in the distributed form
-        // (a null join key never matches, a null === comparison is never
-        // true) but a Scala HashMap would treat null as a real key —
-        // drop them so the mirror cannot diverge on malformed input
-        val es = rows.map(r => (r.getString(0), r.getString(1)))
-          .filter(p => p._1 != null && p._2 != null)
-        val dedup = es.distinct
-        val adj = dedup.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
-        var reach = dedup.toSet
-        val cycles = scala.collection.mutable.HashSet.empty[String]
-        cycles ++= reach.collect { case (o, l) if o == l => o }
-        var depth = 1
-        var blown = false
-        while (depth < maxDepth && reach.nonEmpty && !blown) {
-          reach = reach.flatMap { case (o, l) =>
-            adj.getOrElse(l, Array.empty[String]).map(d2 => (o, d2)) }
-          if (reach.size > DriverPairBound) blown = true
-          else {
-            cycles ++= reach.collect { case (o, l) if o == l => o }
-            reach = reach.filterNot(p => p._1 == p._2)
-            depth += 1
-          }
-        }
-        if (!blown)
-          return spark.createDataset(cycles.toSeq.sorted.map(o => Issue(
-            issueType = "cyclic_dependency",
-            involvedElements = Seq(o),
-            proposedSolution = "Remove one edge of the hierarchical cycle",
-            severity = Severity.Critical)))
-      }
-    }
+    // iteration in memory. The probe reads the PRE-distinct projection —
+    // the in-memory Set dedups anyway, and skipping distinct keeps the
+    // probe a pure scan (no exchange to materialize before the first row
+    // arrives).
+    DriverPath.probe(g.edges.toDF()
+      .where(lower($"relType").isin(HierarchicalTypes: _*))
+      .select($"srcId", $"dstId"), driverLimit)
+      .flatMap(rows => driverCycles(
+        rows.toIndexedSeq.map(r => (r.getString(0), r.getString(1))), maxDepth))
+      .foreach(issues => return issues.toDS())
 
-    val h = hDf.localCheckpoint(true)
+    val h = g.edges.toDF()
+      .where(lower($"relType").isin(HierarchicalTypes: _*))
+      .select($"srcId".as("src"), $"dstId".as("dst")).distinct()
+      .localCheckpoint(true)
     // paths(origin, last); a cycle exists when last == origin after ≥1 hop
     var reach = h.select($"src".as("origin"), $"dst".as("last"))
     var cycles = reach.where($"origin" === $"last")
@@ -136,12 +129,32 @@ object Verifier {
       reach = reach.where($"origin" =!= $"last")
       depth += 1
     }
-    cycles.select($"origin").distinct()
-      .map(r => Issue(
-        issueType = "cyclic_dependency",
-        involvedElements = Seq(r.getString(0)),
-        proposedSolution = "Remove one edge of the hierarchical cycle",
-        severity = Severity.Critical))
+    cycles.select($"origin").distinct().map(r => cycleIssue(r.getString(0)))
+  }
+
+  /** V1 on the driver from the hierarchical (srcId, dstId) edges: the
+    * distributed pair-set iteration with Set ≡ distinct, same closure and
+    * prune order. None when the walk outgrows [[DriverPath.PairBound]].
+    */
+  private def driverCycles(edges: Seq[(String, String)], maxDepth: Int): Option[Seq[Issue]] = {
+    // null-endpoint rows are output-inert in the distributed form (a null
+    // join key never matches, a null === comparison is never true) but a
+    // Scala HashMap would treat null as a real key — drop them so the
+    // mirror cannot diverge on malformed input
+    val dedup = edges.filter(p => p._1 != null && p._2 != null).distinct
+    val adj = dedup.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
+    var reach = dedup.toSet
+    val cycles = scala.collection.mutable.HashSet.empty[String]
+    cycles ++= reach.collect { case (o, l) if o == l => o }
+    var depth = 1
+    while (depth < maxDepth && reach.nonEmpty) {
+      reach = reach.flatMap { case (o, l) => adj.getOrElse(l, Nil).map(d2 => (o, d2)) }
+      if (reach.size > DriverPath.PairBound) return None
+      cycles ++= reach.collect { case (o, l) if o == l => o }
+      reach = reach.filterNot(p => p._1 == p._2)
+      depth += 1
+    }
+    Some(cycles.toSeq.sorted.map(cycleIssue))
   }
 
   /** V2 dangling references: edges whose src/dst id is not a node —
@@ -157,12 +170,7 @@ object Verifier {
     val badDst = g.edges.toDF()
       .join(ids.withColumnRenamed("id", "dstId"), Seq("dstId"), "left_anti")
       .select($"id", $"dstId".as("missing"))
-    badSrc.union(badDst)
-      .map(r => Issue(
-        issueType = "dangling_reference",
-        involvedElements = Seq(r.getString(0), r.getString(1)),
-        proposedSolution = "Remove the relationship or add the missing entity",
-        severity = Severity.Critical))
+    badSrc.union(badDst).map(r => danglingIssue(r.getString(0), r.getString(1)))
   }
 
   /** V3 contradictory relationships: same (src,dst) pair carrying opposite
@@ -179,72 +187,50 @@ object Verifier {
     a.join(b, Seq("srcId", "dstId"))
       .where($"idA" < $"idB")
       .join(opp, Seq("typeA", "typeB"), "left_semi")
-      .map(r => Issue(
-        issueType = "contradictory_relationships",
-        involvedElements = Seq(r.getAs[String]("idA"), r.getAs[String]("idB")),
-        proposedSolution = "Keep the higher-confidence relationship",
-        severity = Severity.Medium))
+      .map(r => contradictionIssue(r.getAs[String]("idA"), r.getAs[String]("idB")))
+  }
+
+  /** The driver form of the same-endpoint self-join behind V3 and
+    * `Reasoning.detectContradictory`: the index pairs (i, j) of `edges`
+    * (id, srcId, dstId, lowered relType) that share (srcId, dstId), with
+    * id_i < id_j in Spark's string order and (rt_i, rt_j) in `opposites`,
+    * each as often as the join emits it. As in SQL, a null endpoint never
+    * joins and a null id or type never passes a filter. None when the
+    * join would enumerate more than [[DriverPath.PairBound]] pairs.
+    */
+  private[graft] def driverOppositePairs(edges: IndexedSeq[(String, String, String, String)],
+                                         opposites: Set[(String, String)])
+      : Option[Seq[(Int, Int)]] = {
+    val groups = edges.indices.filter(i => edges(i)._2 != null && edges(i)._3 != null)
+      .groupBy(i => (edges(i)._2, edges(i)._3)).values.toSeq
+    if (groups.map(grp => grp.size.toLong * grp.size).sum > DriverPath.PairBound) None
+    else Some(for {
+      grp <- groups; i <- grp; j <- grp
+      if edges(i)._1 != null && edges(j)._1 != null &&
+        Utf8Order.compare(edges(i)._1, edges(j)._1) < 0 && opposites((edges(i)._4, edges(j)._4))
+    } yield (i, j))
   }
 
   /** V4 transitive contradictions: endpoints reachable via ≥2 hops of one
     * transitive type, with a direct negation edge between them
     * (knowledge_verifier.py:396-477). MEDIUM.
     */
-  def semanticContradictions(g: Graph, maxHops: Int = 4,
+  def semanticContradictions(g: Graph, maxHops: Int = ContradictionHops,
                              driverLimit: Long = Verifier.driverLimit): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
     // ---- driver fast path (round-7): one probe job replaces the
     // 30-odd driver-blocking jobs of the seeded distributed walk on small
-    // graphs; the in-memory loop replicates the distributed (tt, origin,
-    // last) set iteration literally — same seed pruning, same per-hop
-    // distinct, same 2..maxHops accumulation, same final neg semi-join.
-    locally {
-      // ONE probe for both edge classes (pre-distinct — the in-memory
-      // Sets dedup, and the unioned predicate keeps the probe a single
-      // scan with no exchange)
-      val rowsOpt = DriverPath.probe(g.edges.toDF()
-        .where(lower($"relType").isin((NegationTypes ++ TransitiveTypes): _*))
-        .select(lower($"relType").as("rt"), $"srcId", $"dstId"), driverLimit)
-      rowsOpt.foreach { raw =>
-        // null endpoints dropped — output-inert distributed (see
-        // cyclicDependencies), key-colliding in Scala sets
-        val rows = raw.map(r => (r.getString(0), r.getString(1), r.getString(2)))
-          .filter(t => t._2 != null && t._3 != null)
-        val negSet = rows.collect {
-          case (rt, s2, d2) if NegationTypes.contains(rt) => (s2, d2) }.toSet
-        if (negSet.isEmpty) return spark.emptyDataset[Issue]
-        val hRows = rows.collect {
-          case (rt, s2, d2) if TransitiveTypes.contains(rt) => (rt, s2, d2) }.distinct
-        locally {
-          val negOrigins = negSet.map(_._1)
-          val adj = hRows.groupBy(t => (t._1, t._2))
-            .map { case (k, ts) => k -> ts.map(_._3) }
-          var paths = hRows.collect {
-            case (tt, src, dst) if negOrigins(src) => (tt, src, dst) }.toSet
-          val acc = scala.collection.mutable.HashSet.empty[(String, String, String)]
-          var hop = 1
-          var blown = false
-          while (hop < maxHops && paths.nonEmpty && !blown) {
-            paths = paths.flatMap { case (tt, o, l) =>
-              adj.getOrElse((tt, l), Array.empty[String]).map(d2 => (tt, o, d2)) }
-            if (paths.size > DriverPairBound) blown = true
-            else { acc ++= paths; hop += 1 }
-          }
-          if (!blown)
-            return spark.createDataset(
-              acc.toSeq.filter { case (_, o, l) => negSet((o, l)) }.sorted.map {
-                case (tt, o, l) => Issue(
-                  issueType = s"transitive_contradiction_$tt",
-                  involvedElements = Seq(o, l),
-                  proposedSolution =
-                    s"Resolve conflict between $tt chain and direct negation",
-                  severity = Severity.Medium)
-              })
-        }
-      }
-    }
+    // graphs. ONE probe for both edge classes (pre-distinct — the
+    // in-memory Sets dedup, and the unioned predicate keeps the probe a
+    // single scan with no exchange).
+    DriverPath.probe(g.edges.toDF()
+      .where(lower($"relType").isin((NegationTypes ++ TransitiveTypes): _*))
+      .select(lower($"relType").as("rt"), $"srcId", $"dstId"), driverLimit)
+      .flatMap(rows => driverContradictions(
+        rows.toIndexedSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))), maxHops))
+      .foreach(issues => return issues.toDS())
 
     val neg = g.edges.toDF()
       .where(lower($"relType").isin(NegationTypes: _*))
@@ -283,27 +269,91 @@ object Verifier {
     if (acc == null) spark.emptyDataset[Issue]
     else acc.distinct()
       .join(neg, Seq("origin", "last"), "left_semi")
-      .map { r =>
-        val tt = r.getAs[String]("tt")
-        Issue(
-          issueType = s"transitive_contradiction_$tt",
-          involvedElements = Seq(r.getAs[String]("origin"), r.getAs[String]("last")),
-          proposedSolution = s"Resolve conflict between $tt chain and direct negation",
-          severity = Severity.Medium)
-      }
+      .map(r => transitiveIssue(r.getAs[String]("tt"), r.getAs[String]("origin"),
+        r.getAs[String]("last")))
+  }
+
+  /** V4 on the driver from (lowered relType, srcId, dstId) edges of any
+    * type: the distributed (tt, origin, last) set iteration literally —
+    * same seed pruning, same per-hop distinct, same 2..maxHops
+    * accumulation, same final negation semi-join. None when the walk
+    * outgrows [[DriverPath.PairBound]].
+    */
+  private def driverContradictions(edges: Seq[(String, String, String)],
+                                   maxHops: Int): Option[Seq[Issue]] = {
+    // null endpoints dropped — output-inert distributed (see
+    // driverCycles), key-colliding in Scala sets
+    val rows = edges.filter(t => t._2 != null && t._3 != null)
+    val negSet = rows.collect { case (rt, s2, d2) if NegationTypes.contains(rt) => (s2, d2) }.toSet
+    if (negSet.isEmpty) return Some(Nil)
+    val hRows = rows.filter(t => TransitiveTypes.contains(t._1)).distinct
+    val negOrigins = negSet.map(_._1)
+    val adj = hRows.groupBy(t => (t._1, t._2)).map { case (k, ts) => k -> ts.map(_._3) }
+    var paths = hRows.filter(t => negOrigins(t._2)).toSet
+    val acc = scala.collection.mutable.HashSet.empty[(String, String, String)]
+    var hop = 1
+    while (hop < maxHops && paths.nonEmpty) {
+      paths = paths.flatMap { case (tt, o, l) => adj.getOrElse((tt, l), Nil).map(d2 => (tt, o, d2)) }
+      if (paths.size > DriverPath.PairBound) return None
+      acc ++= paths
+      hop += 1
+    }
+    Some(acc.toSeq.filter { case (_, o, l) => negSet((o, l)) }.sorted.map {
+      case (tt, o, l) => transitiveIssue(tt, o, l)
+    })
   }
 
   final case class Verification(issues: Dataset[Issue], isValid: Boolean)
 
-  /** Runs V1–V4. Validity reads only the two checks that emit critical
-    * issues (V1, V2), so the V3 self-join runs once, when the caller
-    * reads `issues`.
+  /** Runs V1–V4.
+    *
+    * Under [[driverLimit]] edges and nodes, all four checks run on the
+    * driver from one snapshot: one probe of the edge columns they read
+    * (id, srcId, dstId, relType, case-folded by [[DriverPath.lowerAscii]])
+    * and one of the node ids for V2, so each check runs once, `issues` is
+    * a local relation and `isValid` is read from that same issue set. A
+    * non-ASCII relation type, a graph over the limit or a walk over
+    * [[DriverPath.PairBound]] takes the distributed form, where validity
+    * reads only the two checks that emit critical issues (V1, V2): they
+    * run eagerly for `isValid` and again when the caller reads `issues`,
+    * while the V3 self-join runs once, with `issues`.
     */
-  def verify(g: Graph): Verification = {
-    val critical = cyclicDependencies(g).union(danglingReferences(g))
-    val all = critical
-      .union(contradictoryRelationships(g))
-      .union(semanticContradictions(g))
-    Verification(all, critical.limit(1).count() == 0)
+  def verify(g: Graph, driverLimit: Long = Verifier.driverLimit): Verification = {
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
+    driverIssues(g, driverLimit) match {
+      case Some(issues) =>
+        Verification(issues.toDS(), !issues.exists(_.severity == Severity.Critical))
+      case None =>
+        val critical = cyclicDependencies(g, driverLimit = driverLimit)
+          .union(danglingReferences(g))
+        val all = critical
+          .union(contradictoryRelationships(g))
+          .union(semanticContradictions(g, driverLimit = driverLimit))
+        Verification(all, critical.limit(1).count() == 0)
+    }
+  }
+
+  /** V1–V4 of [[verify]] on the driver, in the distributed union's order
+    * (V1, V2 by source then by destination, V3, V4), or None when the
+    * graph takes the distributed form.
+    */
+  private def driverIssues(g: Graph, driverLimit: Long): Option[Seq[Issue]] = {
+    val raw = DriverPath.probe(g.edges.toDF().select("id", "srcId", "dstId", "relType"),
+      driverLimit).getOrElse(return None)
+    val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
+    val ids = graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).getOrElse(return None).toSet
+    val es = raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
+    // V2 is two anti-joins: a null endpoint matches no node id, so its
+    // edge is reported, as is an endpoint missing from the node ids
+    def dangling(end: ((String, String, String, String)) => String) =
+      es.collect { case e if end(e) == null || !ids(end(e)) => danglingIssue(e._1, end(e)) }
+    for {
+      v1 <- driverCycles(es.collect { case (_, s, d, rt) if HierarchicalTypes.contains(rt) => (s, d) },
+        CycleDepth)
+      v3 <- driverOppositePairs(es, OppositeSet)
+      v4 <- driverContradictions(es.map { case (_, s, d, rt) => (rt, s, d) }, ContradictionHops)
+    } yield v1 ++ dangling(_._2) ++ dangling(_._3) ++
+      v3.map { case (i, j) => contradictionIssue(es(i)._1, es(j)._1) } ++ v4
   }
 }

@@ -206,13 +206,6 @@ object GraphQueryOps {
     else acc
   }
 
-  /** Cap on live partial paths in [[findPath]]'s driver fast path: a
-    * dense small graph can hold exponentially many simple paths, and the
-    * driver enumeration must bail to the distributed loop before its
-    * working set outgrows the heap.
-    */
-  private val DriverPathBound = 2000000
-
   /** Q4 find_path — BFS paths src→dst, outgoing edges only, per-path cycle
     * avoidance, cap `maxPaths` results (reference caps 10 at
     * graph_query.py:210, depth default 5). Returns rows (path: array<id>,
@@ -271,7 +264,7 @@ object GraphQueryOps {
               if (!p.contains(nx)) {
                 stepped += (p :+ nx)
                 n += 1
-                if (n > DriverPathBound) blown = true
+                if (n > DriverPath.PairBound) blown = true
               }
               j += 1
             }
@@ -500,11 +493,14 @@ object GraphQueryOps {
 
   /** The sorted node ids (duplicates kept, so the length is the node
     * count `n`) when the node table fits the driver limit: one probe job
-    * serves both the size gate and the ids of the driver mirrors.
+    * serves both the size gate and the ids of the driver mirrors. A null
+    * id sends every caller to its distributed form (as traverse does on a
+    * null endpoint): the mirrors key maps by id and do not replicate how
+    * SQL groups and joins a null.
     */
   private[graft] def driverNodeIds(g: Graph, driverLimit: Long): Option[Array[String]] =
     DriverPath.probe(g.nodes.toDF().select(col("id")), driverLimit)
-      .map(_.map(_.getString(0)).sorted)
+      .map(_.map(_.getString(0))).filterNot(_.contains(null)).map(_.sorted)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.

@@ -1,10 +1,15 @@
 package graft.reason
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.graphout.GraphBuilder.Graph
+import graft.graphout.Verifier
 import graft.model.Triple
+import graft.query.GraphQueryOps
+import graft.runtime.DriverPath
 
 /**
  * Inference & conflict operators X2-X13 (SURVEY.md §2.9; reference
@@ -73,8 +78,14 @@ object Reasoning {
   /** X11 transitive inference: 2- and 3-hop chains of one transitive type,
     * conf = Π(edge conf) × 0.9^(hops-1), max over paths, skip existing
     * direct edges (graph_reasoning.py:641-812, cutoff 3 at :763).
+    *
+    * Under `driverLimit` edges the chains are walked on the driver from
+    * one probe of the four edge columns read ([[driverTransitive]]); the
+    * self-joins below are the distributed form.
     */
-  def inferTransitive(g: Graph, minConfidence: Double = 0.7): DataFrame = {
+  def inferTransitive(g: Graph, minConfidence: Double = 0.7,
+                      driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+    driverTransitive(g, minConfidence, driverLimit).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val e = lowered(g).where($"rt".isin(TransitiveTypes: _*))
@@ -98,6 +109,49 @@ object Reasoning {
       .where($"confidence" >= minConfidence)
       .join(existing, Seq("a", "c", "rt"), "left_anti")
       .select($"a".as("srcId"), $"c".as("dstId"), $"rt".as("relType"), $"confidence")
+  }
+
+  private val TransitiveSchema = StructType(Seq(StructField("srcId", StringType),
+    StructField("dstId", StringType), StructField("relType", StringType),
+    StructField("confidence", DoubleType)))
+
+  /** [[inferTransitive]] on the driver, the distributed form step for
+    * step: the same 2-hop (a ≠ c) and 3-hop (a ≠ d) chains within one
+    * type, the same products in the same order, `max` over paths and
+    * `>= minConfidence` in Spark's double order, and the anti-join against
+    * every direct edge of the type. A null endpoint never joins, and a
+    * path through a null confidence has a null product, which `max`
+    * skips. None (the distributed form) over the limit, on a non-ASCII
+    * relation type, or past [[DriverPath.PairBound]] paths.
+    */
+  private def driverTransitive(g: Graph, minConfidence: Double,
+                               driverLimit: Long): Option[DataFrame] = {
+    val raw = DriverPath.probe(g.edges.toDF().select("srcId", "dstId", "relType", "confidence"),
+      driverLimit).getOrElse(return None)
+    val rts = DriverPath.lowerAscii(raw.map(_.getString(2))).getOrElse(return None)
+    val es = raw.indices.collect { case i if TransitiveTypes.contains(rts(i)) &&
+      raw(i).getString(0) != null && raw(i).getString(1) != null =>
+      (raw(i).getString(0), raw(i).getString(1), rts(i), raw(i).get(3))
+    }
+    val existing = es.map(e => (e._1, e._2, e._3)).toSet
+    val weighted = es.collect { case (s, d, rt, c: java.lang.Double) => (s, d, rt, c.doubleValue) }
+    val out = weighted.groupBy(e => (e._3, e._1)).withDefaultValue(Nil)
+    val best = scala.collection.mutable.HashMap.empty[(String, String, String), Double]
+    var paths = 0L
+    def offer(a: String, c: String, rt: String, p: Double): Unit = {
+      paths += 1
+      if (best.get((a, c, rt)).forall(DriverPath.compareDoubles(p, _) > 0)) best((a, c, rt)) = p
+    }
+    for ((a, b, rt, cab) <- weighted; (_, c, _, cbc) <- out((rt, b)) if a != c) {
+      val p2 = cab * cbc * 0.9
+      offer(a, c, rt, p2)
+      for ((_, d, _, ccd) <- out((rt, c)) if a != d) offer(a, d, rt, p2 * ccd * 0.9)
+      if (paths > DriverPath.PairBound) return None
+    }
+    val rows = best.toSeq.collect { case ((a, c, rt), p)
+      if DriverPath.compareDoubles(p, minConfidence) >= 0 && !existing((a, c, rt)) => Row(a, c, rt, p)
+    }
+    Some(g.nodes.sparkSession.createDataFrame(rows.asJava, TransitiveSchema))
   }
 
   /** X12 symmetric inference: symmetric-type edge with no reverse ⇒
@@ -192,8 +246,13 @@ object Reasoning {
 
   /** X4 contradictory relationships: same (src,dst) pair with opposite
     * types (graph_reasoning.py:196-268). severity high, conf = min.
+    *
+    * Under `driverLimit` edges the pairs are found on the driver from one
+    * probe of the five edge columns read; the self-join is the
+    * distributed form.
     */
-  def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5): DataFrame = {
+  def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5,
+                          driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val opp = broadcast(Opposites.toDF("rtA", "rtB"))
@@ -201,12 +260,42 @@ object Reasoning {
       .select($"id", $"srcId", $"dstId", $"rt", $"confidence")
     val a = e.select($"srcId", $"dstId", $"id".as("idA"), $"rt".as("rtA"), $"confidence".as("confA"))
     val b = e.select($"srcId", $"dstId", $"id".as("idB"), $"rt".as("rtB"), $"confidence".as("confB"))
-    a.join(b, Seq("srcId", "dstId")).where($"idA" < $"idB")
+    val distributed = a.join(b, Seq("srcId", "dstId")).where($"idA" < $"idB")
       .join(opp, Seq("rtA", "rtB"), "left_semi")
       .select($"srcId", $"dstId", $"idA", $"idB", $"rtA", $"rtB",
         least($"confA", $"confB").as("confidence"),
         lit("contradictory_relationships").as("conflictType"),
         lit("high").as("severity"))
+    driverContradictory(g, confidenceThreshold, driverLimit, distributed.schema)
+      .getOrElse(distributed)
+  }
+
+  private val OppositeSet: Set[(String, String)] = Opposites.toSet
+
+  /** [[detectContradictory]] on the driver: the edges with
+    * `confidence >= confidenceThreshold` in Spark's double order (a null
+    * confidence fails it), paired by `Verifier.driverOppositePairs`, with
+    * `least` keeping the first side on a tie as Spark's does. None (the
+    * distributed form) over the limit, on a non-ASCII relation type, or
+    * past [[DriverPath.PairBound]] pairs.
+    */
+  private def driverContradictory(g: Graph, confidenceThreshold: Double, driverLimit: Long,
+                                  schema: StructType): Option[DataFrame] = {
+    val raw = DriverPath.probe(
+      g.edges.toDF().select("id", "srcId", "dstId", "relType", "confidence"),
+      driverLimit).getOrElse(return None)
+    val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
+    val kept = raw.indices.filter(i => !raw(i).isNullAt(4) &&
+      DriverPath.compareDoubles(raw(i).getDouble(4), confidenceThreshold) >= 0)
+    val es = kept.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
+    val pairs = Verifier.driverOppositePairs(es, OppositeSet).getOrElse(return None)
+    val rows = pairs.map { case (x, y) =>
+      val (ca, cb) = (raw(kept(x)).getDouble(4), raw(kept(y)).getDouble(4))
+      Row(es(x)._2, es(x)._3, es(x)._1, es(y)._1, es(x)._4, es(y)._4,
+        if (DriverPath.compareDoubles(cb, ca) < 0) cb else ca,
+        "contradictory_relationships", "high")
+    }
+    Some(g.nodes.sparkSession.createDataFrame(rows.asJava, schema))
   }
 
   /** X5 property conflicts: same-(name,type) entity pairs disagreeing on a

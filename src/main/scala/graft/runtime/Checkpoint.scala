@@ -16,7 +16,7 @@ import Checkpoint.{jsonEscape, jsonLong, jsonString, writeAtomic}
  * directories with an atomically-written `_MANIFEST.json`:
  *
  *   <root>/<stage>/data/      parquet (the committed stage output)
- *   <root>/<stage>/_MANIFEST.json   {stage, rows, inputs, wallSec, observed, ts}
+ *   <root>/<stage>/_MANIFEST.json   {stage, rows, schema, inputs, wallSec, observed, ts}
  *
  * A stage whose manifest exists is NOT recomputed — `runStage` returns the
  * committed parquet instead (resume-from-checkpoint). Parquet's _SUCCESS
@@ -25,7 +25,8 @@ import Checkpoint.{jsonEscape, jsonLong, jsonString, writeAtomic}
  *
  * Cost model: a commit is ONE write job. The manifest's `rows` comes from
  * an `observe` count riding that job, and the committed output is read
- * back with the known schema, so neither costs a job of its own.
+ * back, then and on every resume, with the schema the manifest records,
+ * so neither costs a job of its own.
  */
 final class Checkpoint(spark: SparkSession, root: String) {
 
@@ -34,10 +35,20 @@ final class Checkpoint(spark: SparkSession, root: String) {
 
   def isCommitted(stage: String): Boolean = Files.exists(manifestPath(stage))
 
-  def read(stage: String): DataFrame = spark.read.parquet(s"${stageDir(stage)}/data")
+  /** Read a committed stage with the schema its manifest records: no
+    * schema-inference job, and an empty stage keeps its columns. A
+    * manifest without a schema is refused rather than inferred from.
+    */
+  def read(stage: String): DataFrame = {
+    val manifest = Files.readString(manifestPath(stage))
+    val schema = jsonString(manifest, "schema").getOrElse(
+      throw new IllegalStateException(s"manifest of $stage records no schema: $manifest"))
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
+      .parquet(s"${stageDir(stage)}/data")
+  }
 
   /** Run `compute` unless the stage is already committed; write parquet +
-    * manifest (rows counter + lineage inputs + wall-clock).
+    * manifest (rows counter + schema + lineage inputs + wall-clock).
     */
   def runStage(stage: String, inputs: Seq[String])(compute: => DataFrame): DataFrame = {
     if (isCommitted(stage)) return read(stage)
@@ -47,8 +58,9 @@ final class Checkpoint(spark: SparkSession, root: String) {
     val rows = observedWrite(df, count(lit(1))) {
       _.write.mode("overwrite").parquet(s"${stageDir(stage)}/data")
     }.getLong(0)
-    writeManifest(stage, s""""rows":$rows""", inputs, t0, before)
-    spark.read.schema(df.schema).parquet(s"${stageDir(stage)}/data")
+    writeManifest(stage, s""""rows":$rows,"schema":"${jsonEscape(df.schema.json)}"""",
+      inputs, t0, before)
+    read(stage)
   }
 
   private def bucketManifestPath(stage: String, b: Int) =
@@ -212,16 +224,10 @@ final class Checkpoint(spark: SparkSession, root: String) {
       else Some("\"" + name + "\":" + d.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
     }.mkString("{", ",", "}")
 
-  /** Read a committed bucket-partitioned stage with the schema its
-    * manifest records, dropping the discovery column.
+  /** Read a committed bucket-partitioned stage ([[read]]), dropping the
+    * discovery column.
     */
-  def readPartitioned(stage: String): DataFrame = {
-    val manifest = Files.readString(manifestPath(stage))
-    val schema = jsonString(manifest, "schema").getOrElse(
-      throw new IllegalStateException(s"manifest of $stage records no schema: $manifest"))
-    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
-      .parquet(s"${stageDir(stage)}/data").drop("bucket")
-  }
+  def readPartitioned(stage: String): DataFrame = read(stage).drop("bucket")
 
   def manifests(): Seq[String] =
     children(Paths.get(root)).map(_.resolve("_MANIFEST.json")).filter(Files.exists(_))
@@ -258,10 +264,22 @@ object Checkpoint {
   def jsonEscape(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
 
-  /** The string value of `key` in a flat JSON object this class wrote. */
-  private def jsonString(json: String, key: String): Option[String] =
-    ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(json)
-      .map(m => jsonUnescape(m.group(1)))
+  /** The string value of `key` in a flat JSON object this class wrote.
+    * A scan, not a regex: an alternation under `*` recurses once per
+    * character in java.util.regex and overflows the stack on a nested
+    * stage schema.
+    */
+  private def jsonString(json: String, key: String): Option[String] = {
+    val open = "\"" + key + "\":\""
+    val at = json.indexOf(open)
+    if (at < 0) None
+    else {
+      val from = at + open.length
+      var i = from
+      while (i < json.length && json.charAt(i) != '"') i += (if (json.charAt(i) == '\\') 2 else 1)
+      Some(jsonUnescape(json.substring(from, math.min(i, json.length))))
+    }
+  }
 
   /** The integer value of `key` in a flat JSON object this class wrote. */
   private def jsonLong(json: String, key: String): Long =

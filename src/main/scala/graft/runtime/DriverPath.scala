@@ -2,13 +2,16 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
 
 /**
  * The size gate of every driver fast path (traverse, findPath, the
- * centralities, connected components, the linker, the verifier walks,
- * clustering): fetch a small input to the driver, or learn that it is
- * too large, in ONE early-stopping job.
+ * centralities, connected components, the linker, the verifier,
+ * transitive inference, contradiction detection, clustering): fetch a
+ * small input to the driver, or learn that it is too large, in ONE
+ * early-stopping job. The mirrors also share the policies below (the
+ * working-set bound, the case fold, the order of doubles).
  *
  * Not count + collect (three jobs: a count is two under AQE) nor
  * `head(lim + 1)` (Spark's incremental take escalates through up to four
@@ -56,4 +59,31 @@ object DriverPath {
       Some(parts.flatMap(_._2).map(toRow(_).asInstanceOf[Row]))
     } else Some(df.collect()).filter(_.length <= cap)
   }
+
+  /** In-flight bound of a driver mirror's working set (walk pairs, chain
+    * paths, same-endpoint edge pairs, findPath's partial paths): past it
+    * the mirror falls back to its distributed form before the working set
+    * outgrows the heap, since a dense closure can hold up to V² pairs, and
+    * a dense graph exponentially many simple paths, whatever the edge
+    * count.
+    */
+  val PairBound: Long = 2000000L
+
+  /** The case fold of the driver mirrors: Spark's `lower` of every value,
+    * computed on the driver, or None when any value is not ASCII (the
+    * caller then takes its distributed form). On ASCII text `lower` is
+    * ASCII lower-casing; beyond ASCII Spark maps case through ICU, which
+    * is not replicated here. Nulls stay null. Folding on the driver also
+    * keeps the first Spark `lower` of a JVM, and its one-time ICU
+    * case-mapping initialisation, off the small-graph path.
+    */
+  def lowerAscii(values: Array[String]): Option[Array[String]] =
+    if (values.exists(s => s != null && s.exists(_ > '\u007f'))) None
+    else Some(values.map(s => if (s == null) null else s.toLowerCase(java.util.Locale.ROOT)))
+
+  /** Spark's order of doubles, which the mirrors' `>=`, `max` and `least`
+    * follow: NaN above every double and equal to itself, -0.0 equal to
+    * 0.0 (IEEE comparison disagrees on both).
+    */
+  def compareDoubles(x: Double, y: Double): Int = SQLOrderingUtil.compareDoubles(x, y)
 }

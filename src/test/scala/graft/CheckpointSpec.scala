@@ -174,6 +174,32 @@ class CheckpointSpec extends SparkSpec {
     assert(back.count() == 0 && shape(back) == shape(compute))
   }
 
+  test("a committed runStage stage resumes with no job, an empty one with its columns") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("ckpt9").toString
+    def compute = graft.corpus.CorpusGen.generate(spark, 40).toDF()
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val cp = new graft.runtime.Checkpoint(spark, root)
+    cp.runStage("01_full", Nil)(compute)
+    cp.runStage("01_empty", Nil)(compute.where(lit(false)))
+    // resume in a fresh Checkpoint: the manifest's schema replaces the
+    // parquet footer read that schema inference would run as a job
+    val ((full, empty), jobs) = jobsOf {
+      val back = new graft.runtime.Checkpoint(spark, root)
+      (back.runStage("01_full", Nil) { fail("must not recompute") },
+        back.runStage("01_empty", Nil) { fail("must not recompute") })
+    }
+    assert(jobs == 0, s"resume ran $jobs jobs")
+    assert(shape(full) == shape(compute) && full.count() == 40)
+    assert(shape(empty) == shape(compute) && empty.count() == 0)
+    // a manifest that records no schema is refused, not inferred from
+    val m = Paths.get(s"$root/01_full/_MANIFEST.json")
+    val json = Files.readString(m)
+    Files.writeString(m, json.take(json.indexOf(",\"schema\":")) + json.drop(json.indexOf(",\"inputs\":")))
+    assert(!Files.readString(m).contains("schema"))
+    intercept[IllegalStateException](cp.read("01_full"))
+  }
+
   test("bucketed node/edge stages join exchange-free and re-register after a fresh-JVM resume") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("ckpt4").toString

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import org.apache.spark.TaskContext
-import org.apache.spark.graftshim.GraftCore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -40,21 +37,6 @@ class DriverPathSpec extends SparkSpec {
         }
       }
     spark.createDataFrame(rdd, schema)
-  }
-
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    assert(GraftCore.drainListenerBus(sc, 30000))
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      assert(GraftCore.drainListenerBus(sc, 30000))
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
   }
 
   // partition sizes: even spreads, everything in one partition, more

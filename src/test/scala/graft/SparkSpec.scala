@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftshim.GraftCore
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -17,4 +20,20 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** `body`'s result and the number of jobs it started. */
+  protected def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    assert(GraftCore.drainListenerBus(sc, 30000))
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      assert(GraftCore.drainListenerBus(sc, 30000))
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
