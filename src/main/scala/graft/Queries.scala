@@ -447,27 +447,39 @@ object Queries {
     graft.runtime.Observed.snapshot()
   }
 
-  val q24_minhash_dedup: Q = (s, d) => {
+  val q24_minhash_dedup: Q = (s, d) => minhashDedup(s, t(s, d, "documents"))
+
+  /** q24 over `docs`: MinHash-LSH candidates with estimate ≥ `estFloor`,
+    * verified by exact n-gram Jaccard ≥ 0.8, with an in-run recall gate.
+    * Under `driverLimit` documents both operators take their driver paths
+    * (one probe job each, local results); past it, their distributed forms.
+    */
+  def minhashDedup(s: SparkSession, docs: DataFrame, estFloor: Double = 0.5,
+                   driverLimit: Long = graft.query.GraphQueryOps.DriverIterationLimit)
+      : DataFrame = {
     val capSnap = capBaseline(s)
-    val docs = t(s, d, "documents")
     // estimate-filter candidates before the exact verification join —
     // the LSH bands over-generate on low-vocabulary corpora.
-    // (Round-7 negative results, measured and reverted: localCheckpointing
-    // this candidate set — and member-prefiltering the verify stage's
-    // shingle explode — each cut task CPU ~3x but ADDED enough stage
-    // latency that q24 wall regressed 2.15 s → 3.1 s at sf0.1; at this
-    // corpus size the duplicate-subtree recompute is cheaper than the
-    // extra stages. OPTIMIZATION_r07.md records the A/B.)
-    val pairs = graft.ops.Dedup.minhashLshPairs(docs)
-      .where(col("jaccard_est") >= 0.5)
-    // persisted for the invariant's extra pass AND the driver's final
-    // consumption; scope is session-lifetime by design (q24/q27/q28 —
-    // result-sized tables, the stand-in for the checkpoint table a
-    // production run would write; unpersisting before return would
-    // recompute the whole LSH pipeline for the driver's read)
-    val out = graft.ops.Dedup.ngramJaccard(docs, pairs.select("idA", "idB"))
-      .where(col("jaccard") >= 0.8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (Round-7 negative results for the distributed form, measured and
+    // reverted: localCheckpointing this candidate set — and
+    // member-prefiltering the verify stage's shingle explode — each cut
+    // task CPU ~3x but ADDED enough stage latency that q24 wall regressed
+    // 2.15 s → 3.1 s at sf0.1; at this corpus size the duplicate-subtree
+    // recompute is cheaper than the extra stages. OPTIMIZATION_r07.md
+    // records the A/B.)
+    val pairs = graft.ops.Dedup.minhashLshPairs(docs, driverLimit = driverLimit)
+      .where(col("jaccard_est") >= estFloor)
+    val verified = graft.ops.Dedup.ngramJaccard(docs, pairs.select("idA", "idB"),
+      driverLimit = driverLimit).where(col("jaccard") >= 0.8)
+    // a distributed result is persisted for the gate's pass AND the
+    // driver's final consumption; scope is session-lifetime by design
+    // (q24/q27/q28 — result-sized tables, the stand-in for the checkpoint
+    // table a production run would write; unpersisting before return would
+    // recompute the whole LSH pipeline for the driver's read). A driver
+    // path's local result is already held by the driver.
+    val out =
+      if (graft.runtime.DriverPath.isLocal(verified)) verified
+      else verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact sibling over ALL pairs of a bounded slice (the q45 kernel —
     // LSH-free): every exact-J≥0.8 slice pair the LSH path misses is a
     // recall loss; ≥0.7 tolerates est-filter edge pairs
@@ -477,15 +489,19 @@ object Queries {
     val allPairs = ids.select(col("doc_id").as("idA"))
       .crossJoin(ids.select(col("doc_id").as("idB")))
       .where(col("idA") < col("idB"))
-    val exactHigh = graft.ops.Dedup.ngramJaccard(slice, allPairs)
+    val exactHigh = graft.ops.Dedup.ngramJaccard(slice, allPairs, driverLimit = driverLimit)
       .where(col("jaccard") >= 0.8)
-    val e = exactHigh.count()
-    if (e > 0) {
-      val hit = out.join(exactHigh.select("idA", "idB"), Seq("idA", "idB"), "left_semi")
-        .count()
+    // the gate's two counts in ONE action: exact pairs, and those of them
+    // the LSH path found (out's pairs are distinct, so the left join keeps
+    // one row per exact pair); on the distributed path it also fills
+    // out's cache
+    val gate = exactHigh.select("idA", "idB")
+      .join(out.select(col("idA"), col("idB"), lit(true).as("hit")), Seq("idA", "idB"), "left")
+      .agg(count(lit(1)), count(col("hit"))).head()
+    val (e, hit) = (gate.getLong(0), gate.getLong(1))
+    if (e > 0)
       recallGate(s, "q24_minhash", Seq("minhash_band_cap"), capSnap, hit, e, 0.7,
         s"$hit of $e exact-J>=0.8 pairs on doc_id<200")
-    }
     out
   }
 

@@ -1,7 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{ArrayEqCount, MinHashSignature, ShingleHashes}
+import graft.query.GraphQueryOps
+import graft.runtime.{DriverPath, Observed}
 
 /**
  * Document deduplication operators for large-scale training-data
@@ -18,6 +26,16 @@ import org.apache.spark.sql.functions._
  *    = Hamming distance ≤ k, found by pigeonhole banding (4 bands of 16
  *    bits — any pair at distance ≤3 shares at least one exact band).
  *  - ngramJaccard: exact verification metric used on candidate pairs.
+ *  - driver paths: minhashLshPairs and ngramJaccard first take one
+ *    [[DriverPath.probe]] of the columns they read. When the documents (and
+ *    ngramJaccard's pairs) fit `driverLimit` rows, every id is a non-null
+ *    bigint, no id repeats and no text is null, they compute on the driver
+ *    with the same static kernels (MinHashSignature, ShingleHashes,
+ *    ArrayEqCount) and return a local relation; past that, or past
+ *    [[DriverPath.PairBound]] banded candidates, the distributed plans
+ *    below run unchanged. A local result probes for free, so
+ *    minhashLshPairs → ngramJaccard on a small corpus costs two probe jobs
+ *    where the distributed chain runs a dozen.
  */
 object Dedup {
 
@@ -56,12 +74,18 @@ object Dedup {
     }: _*)
 
   /** MinHash+LSH near-duplicate candidate pairs.
+    *
+    * Under `driverLimit` documents the candidates are computed on the
+    * driver from one probe ([[driverMinhash]]); the band self-join below is
+    * the distributed form.
     * @param bands b bands of r = k/b rows each; P(candidate) ≈ 1-(1-s^r)^b
     * @return (idA, idB, jaccardEstimate) with idA < idB
     */
   def minhashLshPairs(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id", k: Int = 32, bands: Int = 8,
-                      maxBucket: Int = 256): DataFrame = {
+                      maxBucket: Int = 256,
+                      driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+    driverMinhash(docs, textCol, idCol, k, bands, maxBucket, driverLimit).foreach(return _)
     val r = k / bands
     // NOT persisted although three consumers read it (banding + both
     // re-attach joins): measured round 7 — the columnar cache write/read
@@ -71,7 +95,7 @@ object Dedup {
     // extraction (round 6: +439 MB shuffle write, +19 s CPU).
     val withMh = docs
       .select(col(idCol).as("id"),
-        graft.functions.MinHashSignature(col(textCol), k, 3).as("mh"))
+        MinHashSignature(col(textCol), k, 3).as("mh"))
     // one row per band: (band, bandHash, id, mh)
     val banded = withMh.select(
       col("id"), col("mh"),
@@ -81,11 +105,11 @@ object Dedup {
     // cap bucket size (boilerplate-skew backstop) — drops are counted via
     // observe (rides the job, no extra action; Observed WARN-logs >0 and
     // checkpoint manifests snapshot it) so recall loss is never silent
-    graft.runtime.Observed.install(docs.sparkSession)
+    Observed.install(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "bandHash").orderBy("id")
     val capped = banded.withColumn("rn", row_number().over(w))
-      .observe(graft.runtime.Observed.name("minhash_band_cap"),
+      .observe(Observed.name("minhash_band_cap"),
         sum(when(col("rn") > maxBucket, 1L).otherwise(0L)).as("dropped"))
       .where(col("rn") <= maxBucket)
     // SLIM pair generation: the self-join and the (idA,idB) dedup move id
@@ -109,8 +133,60 @@ object Dedup {
       .select(col("idA"), col("idB"),
         // native agreement count: the zip_with+filter+size spec is three
         // interpreted HOF walks per candidate pair
-        (graft.functions.ArrayEqCount(col("mhA"), col("mhB"))
-          .cast("double") / k).as("jaccard_est"))
+        (ArrayEqCount(col("mhA"), col("mhB")).cast("double") / k).as("jaccard_est"))
+  }
+
+  /** `(id, text)` of every document, ascending by id, from one probe of the
+    * two columns; None (the distributed form) when they are not a bigint id
+    * and a string text, over `driverLimit` rows, or with a null or
+    * repeated id or a null text — cases whose SQL join and window
+    * semantics the driver paths do not replicate.
+    */
+  private def driverDocs(docs: DataFrame, textCol: String, idCol: String,
+                         driverLimit: Long): Option[Array[(Long, String)]] = {
+    val sel = docs.select(col(idCol), col(textCol))
+    if (sel.schema(0).dataType != LongType || sel.schema(1).dataType != StringType) return None
+    val raw = DriverPath.probe(sel, driverLimit).getOrElse(return None)
+    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val ds = raw.map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    if (ds.indices.exists(i => i > 0 && ds(i)._1 == ds(i - 1)._1)) None else Some(ds)
+  }
+
+  /** [[minhashLshPairs]] on the driver: the same signatures
+    * (MinHashSignature.compute), the same band keys (Spark's
+    * `xxhash64(concat_ws(",", slice), b)`, i.e. XXH64 of the joined string
+    * at seed 42, then of the band index), buckets capped to their first
+    * `maxBucket` ids ascending with the drops recorded under
+    * `minhash_band_cap`, and the estimate ArrayEqCount / k. None when the
+    * documents do not qualify ([[driverDocs]]) or the capped buckets hold
+    * more than [[DriverPath.PairBound]] pairs.
+    */
+  private def driverMinhash(docs: DataFrame, textCol: String, idCol: String, k: Int,
+                            bands: Int, maxBucket: Int, driverLimit: Long): Option[DataFrame] = {
+    val ds = driverDocs(docs, textCol, idCol, driverLimit).getOrElse(return None)
+    val r = k / bands
+    val sigs = ds.map(d => MinHashSignature.compute(UTF8String.fromString(d._2), k, 3))
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
+    for (i <- ds.indices; b <- 0 until bands) {
+      val slice = (b * r until b * r + r).map(sigs(i).getLong).mkString(",")
+      val key = XXH64.hashInt(b, XXH64.hashUTF8String(UTF8String.fromString(slice), 42L))
+      buckets.getOrElseUpdate((b, key), mutable.ArrayBuffer.empty) += i
+    }
+    val kept = buckets.values.map(m => m.take(math.max(maxBucket, 0))).toSeq
+    if (kept.map(m => m.length.toLong * (m.length - 1) / 2).sum > DriverPath.PairBound) return None
+    val dropped = buckets.values.map(_.length.toLong).sum - kept.map(_.length.toLong).sum
+    Observed.record("minhash_band_cap", Map("dropped" -> dropped))
+    // document index pairs a < b, packed into one long
+    val pairs = mutable.HashSet.empty[Long]
+    for (m <- kept; x <- m.indices; y <- x + 1 until m.length) pairs += (m(x).toLong << 32 | m(y))
+    val rows = pairs.toArray.sorted.toSeq.map { p =>
+      val (a, b) = ((p >>> 32).toInt, p.toInt)
+      Row(ds(a)._1, ds(b)._1, ArrayEqCount.compute(sigs(a), sigs(b)).toDouble / k)
+    }
+    val idNull = docs.select(col(idCol)).schema(0).nullable
+    Some(docs.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("idA", LongType, idNull), StructField("idB", LongType, idNull),
+      StructField("jaccard_est", DoubleType)))))
   }
 
   /** 64-bit SimHash of a text column — DECLARATIVE SPEC, not the hot path
@@ -185,9 +261,15 @@ object Dedup {
     * shingle arrays inside every pair row and running array_intersect —
     * duplicates each document's array into every candidate pair
     * (measured 200s vs ~5s on 5k docs with heavy band collisions).
+    *
+    * Under `driverLimit` documents and pairs the Jaccards are computed on
+    * the driver ([[driverJaccard]]); a pair set that is already local
+    * costs that path no job.
     */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", n: Int = 3): DataFrame = {
+                   idCol: String = "doc_id", n: Int = 3,
+                   driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+    driverJaccard(docs, pairs, textCol, idCol, n, driverLimit).foreach(return _)
     // native one-pass shingle hashing (ShingleHashes): the declarative
     // explode(shingles)+xxhash64 form pays interpreted HOF evaluation of
     // the shingle subtree per row — this scan runs over every candidate
@@ -200,7 +282,7 @@ object Dedup {
     // consumer. Re-apply when candidates ≪ corpus AND pairs arrive
     // materialized, e.g. from a checkpoint table.)
     val hashed = docs.select(col(idCol).as("id"),
-      graft.functions.ShingleHashes(col(textCol), n).as("shhs"))
+      ShingleHashes(col(textCol), n).as("shhs"))
     val exploded = hashed.select(col("id"), explode(col("shhs")).as("shh"))
     val sizes = hashed.select(col("id"), size(col("shhs")).as("sz"))
     val inter = pairs.select("idA", "idB")
@@ -212,9 +294,44 @@ object Dedup {
       .na.fill(0L, Seq("nInter"))
       .join(sizes.select(col("id").as("idA"), col("sz").as("szA")), Seq("idA"))
       .join(sizes.select(col("id").as("idB"), col("sz").as("szB")), Seq("idB"))
-      .select(col("idA"), col("idB"),
-        (col("nInter").cast("double") /
-          (col("szA") + col("szB") - col("nInter"))).as("jaccard"))
+      .select(col("idA"), col("idB"), when(union =!= 0,
+        col("nInter").cast("double") / union).as("jaccard"))
+  }
+
+  /** |A∪B| of [[ngramJaccard]]: two documents with no shingle (fewer than
+    * n tokens) have an empty union, and their Jaccard is null, not a
+    * division by zero.
+    */
+  private val union: Column = col("szA") + col("szB") - col("nInter")
+
+  /** [[ngramJaccard]] on the driver: ShingleHashes.compute per document,
+    * |A∩B| over the hash sets, and per input pair one row, or none when an
+    * id is null or names no document (the distributed inner joins). None
+    * when the documents do not qualify ([[driverDocs]]), the pair ids are
+    * not bigint, the pairs exceed `driverLimit` rows, or a pair repeats
+    * (the distributed form counts its intersection once per copy).
+    */
+  private def driverJaccard(docs: DataFrame, pairs: DataFrame, textCol: String, idCol: String,
+                            n: Int, driverLimit: Long): Option[DataFrame] = {
+    val ps = pairs.select("idA", "idB")
+    if (ps.schema.exists(_.dataType != LongType)) return None
+    val ds = driverDocs(docs, textCol, idCol, driverLimit).getOrElse(return None)
+    val raw = DriverPath.probe(ps, driverLimit).getOrElse(return None)
+    val keyed = raw.map(r => (r.get(0), r.get(1)))
+    if (keyed.distinct.length != keyed.length) return None
+    val texts = ds.toMap
+    val shingles = mutable.HashMap.empty[Long, Set[Long]]
+    def shingleSet(id: Long): Set[Long] = shingles.getOrElseUpdate(id,
+      ShingleHashes.compute(UTF8String.fromString(texts(id)), n).toLongArray().toSet)
+    val rows = raw.toSeq.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) &&
+        texts.contains(r.getLong(0)) && texts.contains(r.getLong(1)) =>
+      val (a, b) = (shingleSet(r.getLong(0)), shingleSet(r.getLong(1)))
+      val inter = a.count(b).toLong
+      val den = a.size + b.size - inter
+      Row(r.getLong(0), r.getLong(1), if (den == 0) null else inter.toDouble / den)
+    }
+    Some(docs.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      ps.schema(0), ps.schema(1), StructField("jaccard", DoubleType)))))
   }
 
   /** Embedding cosine near-duplicate pairs above a threshold, blocked by

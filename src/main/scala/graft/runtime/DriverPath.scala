@@ -2,13 +2,15 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
 
 /**
  * The size gate of every driver fast path (traverse, findPath, the
  * centralities, connected components, the linker, the verifier,
- * transitive inference, contradiction detection, clustering): fetch a
+ * transitive inference, contradiction detection, clustering, the MinHash
+ * candidates and the n-gram Jaccard verify): fetch a
  * small input to the driver, or learn that it is too large, in ONE
  * early-stopping job. The mirrors also share the policies below (the
  * working-set bound, the case fold, the order of doubles).
@@ -34,11 +36,23 @@ object DriverPath {
     * share) pays one fallback `collect()`, whose length is re-checked.
     * `lim` is clamped to the largest array the driver can hold. An
     * `observe` on a rejected input counts only the rows the probe read.
+    *
+    * A plan that optimizes to a local relation (a driver mirror's result,
+    * a filter or projection of one, an empty relation) is answered from
+    * its rows with no job and no SQL execution, under the same limit: so
+    * one mirror reads another's result for free.
     */
   def probe(df: DataFrame, lim: Long): Option[Array[Row]] = {
     val cap = math.min(lim, Int.MaxValue - 2L)
     if (cap < 0) return None
     val qe = df.queryExecution
+    qe.optimizedPlan match {
+      case l: LocalRelation =>
+        if (l.data.length > cap) return None
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        return Some(l.data.map(toRow(_).asInstanceOf[Row]).toArray)
+      case _ =>
+    }
     val parts = SQLExecution.withNewExecutionId(qe, Some("probe")) {
       val rdd = qe.toRdd
       val share = cap / math.max(rdd.getNumPartitions, 1)
@@ -59,6 +73,13 @@ object DriverPath {
       Some(parts.flatMap(_._2).map(toRow(_).asInstanceOf[Row]))
     } else Some(df.collect()).filter(_.length <= cap)
   }
+
+  /** Whether `df`'s plan optimizes to a local relation, as a driver
+    * mirror's result does: [[probe]] reads it with no job, and caching it
+    * would only copy rows the driver already holds.
+    */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** In-flight bound of a driver mirror's working set (walk pairs, chain
     * paths, same-endpoint edge pairs, findPath's partial paths): past it

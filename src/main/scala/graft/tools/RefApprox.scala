@@ -118,7 +118,7 @@ object RefApprox {
       val (ga, gb) = (sh(a), sh(b))
       val ni = ga.count(gb.contains)
       val denom = ga.size.toLong + gb.size - ni
-      // 0/0 is NaN in the pipeline's double division — filtered by >= jacFloor
+      // an empty shingle union has a null Jaccard in the pipeline — filtered by >= jacFloor
       if (denom == 0) None
       else {
         val j = ni.toDouble / denom.toDouble

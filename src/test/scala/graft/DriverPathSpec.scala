@@ -100,4 +100,21 @@ class DriverPathSpec extends SparkSpec {
     assert(DriverPath.probe(probe, n - 1).isEmpty)
     assert(DriverPath.probe(probe, n).map(_.length.toLong).contains(n))
   }
+
+  test("a plan that optimizes to a local relation: no job, rows in order, same limit") {
+    import spark.implicits._
+    val local = (0 until 9).map(i => (i, s"r$i")).toDF("i", "s")
+    // a filter and projection of a local relation fold into one, and so
+    // does a scan filtered to nothing
+    val derived = local.where($"i" % 2 === 0).select($"s", ($"i" * 10).as("j"))
+    val empty = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where(lit(false))
+    for ((df, n) <- Seq(local -> 9, derived -> 5, empty -> 0)) {
+      assert(DriverPath.isLocal(df))
+      val (taken, j1) = jobsOf(DriverPath.probe(df, n))
+      assert(taken.map(_.map(_.toSeq).toSeq).contains(df.collect().map(_.toSeq).toSeq) && j1 == 0)
+      val (refused, j2) = jobsOf(DriverPath.probe(df, n - 1))
+      assert(refused.isEmpty && j2 == 0, s"n=$n")
+    }
+    assert(!DriverPath.isLocal(input(Seq(1, 2))))
+  }
 }

@@ -203,15 +203,19 @@ class PlanSpec extends SparkSpec {
     val docs = (0 until 30)
       .map(i => (i.toLong, "identical boilerplate text shared by every document row"))
       .toDF("doc_id", "text")
-    graft.runtime.Observed.clear("minhash_band_cap") // earlier suites also report here
-    graft.ops.Dedup.minhashLshPairs(docs, maxBucket = 4).count()
-    // QueryExecutionListener callbacks are delivered asynchronously
-    def poll(): Option[Long] =
-      graft.runtime.Observed.get("minhash_band_cap").map(_("dropped"))
-    val deadline = System.currentTimeMillis() + 10000
-    while (poll().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    // 30 identical docs × 8 bands, cap 4 → 26 dropped per band = 208
-    assert(poll().contains(208L), s"observed=${poll()}")
+    // the driver path records its drops directly, the distributed form
+    // through observe
+    for (lim <- Seq(graft.query.GraphQueryOps.DriverIterationLimit, 0L)) {
+      graft.runtime.Observed.clear("minhash_band_cap") // earlier suites also report here
+      graft.ops.Dedup.minhashLshPairs(docs, maxBucket = 4, driverLimit = lim).count()
+      // QueryExecutionListener callbacks are delivered asynchronously
+      def poll(): Option[Long] =
+        graft.runtime.Observed.get("minhash_band_cap").map(_("dropped"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (poll().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      // 30 identical docs × 8 bands, cap 4 → 26 dropped per band = 208
+      assert(poll().contains(208L), s"driverLimit=$lim observed=${poll()}")
+    }
   }
 
   test("edge redirect: salted fallback path ≡ broadcast path") {

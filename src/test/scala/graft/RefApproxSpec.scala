@@ -25,9 +25,14 @@ class RefApproxSpec extends SparkSpec {
 
   test("serial q24 MinHash+LSH reference ≡ Spark pipeline (sf0.001)") {
     val serial = RefApprox.q24MinhashDedup(docs).toSet
-    val dist = Queries.all("q24_minhash_dedup")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(serial == dist && serial.nonEmpty)
+    // the catalog entry takes the driver paths; driverLimit 0 forces the
+    // distributed forms
+    val driver = Queries.all("q24_minhash_dedup")(spark, dir)
+    val dist = Queries.minhashDedup(spark, spark.read.parquet(s"$dir/documents.parquet"),
+      driverLimit = 0)
+    for (df <- Seq(driver, dist))
+      assert(serial == df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    assert(serial.nonEmpty)
   }
 
   test("serial q25 SimHash banding reference ≡ Spark pipeline (sf0.001)") {
