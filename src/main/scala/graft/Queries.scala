@@ -251,10 +251,6 @@ object Queries {
       lit(1.0).as("confidence"), lit("").as("segId"), lit("").as("repo"),
       lit("").as("path"), lit("").as("contentSha"))
 
-  /** Probe-visible accessor for [[tpchGraph]] (round-7 measurement tools). */
-  private[graft] def tpchGraphForProbe(s: SparkSession, d: String): graft.graphout.GraphBuilder.Graph =
-    tpchGraph(s, d)
-
   private def tpchGraph(s: SparkSession, d: String): graft.graphout.GraphBuilder.Graph = {
     import s.implicits._
     val cust = t(s, d, "customer").select(
@@ -455,7 +451,7 @@ object Queries {
     * (one probe job each, local results); past it, their distributed forms.
     */
   def minhashDedup(s: SparkSession, docs: DataFrame, estFloor: Double = 0.5,
-                   driverLimit: Long = graft.query.GraphQueryOps.DriverIterationLimit)
+                   driverLimit: Long = graft.runtime.DriverPath.DriverIterationLimit)
       : DataFrame = {
     val capSnap = capBaseline(s)
     // estimate-filter candidates before the exact verification join —

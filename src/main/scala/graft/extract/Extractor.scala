@@ -167,17 +167,6 @@ object Extractor {
     (mentions, triples)
   }
 
-  /** Single-pass variant when both outputs are consumed: extract once into
-    * a combined row, then split. Used by the pipeline to avoid running the
-    * regex bank twice over 100 TB of segments.
-    */
-  def extractCombined(segments: Dataset[Segment]): Dataset[(Seq[Entity], Seq[Triple])] = {
-    import segments.sparkSession.implicits._
-    segments.mapPartitions(_.map { s =>
-      val x = extractSegment(s); (x.entities, x.triples)
-    })
-  }
-
   /** One combined extraction row per segment with per-row failure
     * isolation — the Spark form of the reference's Result monad
     * (src/utils/result.py:23-244; SURVEY §2.12): a row that throws emits

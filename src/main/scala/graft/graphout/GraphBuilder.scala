@@ -3,7 +3,6 @@ package graft.graphout
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.{Entity, Triple}
-import graft.runtime.Observed
 
 /**
  * Graph materialization (SURVEY.md §2.7; reference
@@ -69,77 +68,17 @@ object GraphBuilder {
     // file build plan) — a shuffle of the narrow winner rows only.
     val cols = triples.toDF().columns
     val raw = triples.toDF()
-    val winners0 = raw
+    val winners = raw
       .select(col("srcId").as("_ws"), col("relType").as("_wr"),
         col("dstId").as("_wd"), col("id"), col("confidence"))
       .groupBy("_ws", "_wr", "_wd")
       .agg(min_by(col("id"),
         struct((-col("confidence")).as("nc"), col("id").as("tid"))).as("_wid"))
-    // Bloom PREFILTER on winner ids (round 6) — implemented, measured,
-    // and DEFAULT OFF. The idea: the semi join above ships every raw wide
-    // row through one exchange, including the ~20% loser rows the join
-    // discards (DupRatio at 160k: 2.66M raw, 2.14M groups); winner ids
-    // are known before that exchange (the narrow aggregate), so a side
-    // job can build a bloom over xxhash64(winnerId) and a might_contain
-    // filter drops losers below the exchange. Row-unique ids make the
-    // winner-id set a sound filter; false positives pass through to the
-    // exact semi join, so results are bit-identical (pinned below).
-    // MEASURED (interleaved StageProbe A/B, BASELINE.md round 6): every
-    // way of funding the bloom's second winners consumer loses at this
-    // corpus's dup ratio. Re-running the narrow aggregate costs +691 MB
-    // shuffle at 320k to save ~90 MB of the (lz4-compressed) wide
-    // exchange; localCheckpoint-ing winners makes the bloom free at 320k
-    // (net −84 MB) but at 1.28M the ~17M-row deserialized checkpoint
-    // evicts the edge/node caches and the run collapses (609-694 s vs
-    // 247-305 s with the bloom off, triple_set 5 s → 298 s). The wide
-    // rows compress too well and the loser fraction is too low for the
-    // filter to pay. Kept behind a conf for corpora where losers
-    // dominate (50%+ template mass): "auto" gates on plan stats,
-    // "force" for tests.
-    val bloomConf = spark.conf.get("spark.graft.dedup.bloom", "off")
-    val bloomBits = spark.conf.get("spark.graft.dedup.bloom.bits", (64L * 1024 * 1024).toString).toLong
-    val bloomMinBytes = spark.conf.get("spark.graft.dedup.bloom.minBytes", (64L * 1024 * 1024).toString).toLong
-    val engageBloom = bloomConf match {
-      case "off"   => false
-      case "force" => true
-      case "auto"  => raw.queryExecution.optimizedPlan.stats.sizeInBytes >= bloomMinBytes
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.dedup.bloom must be off|auto|force, got '$other'")
-    }
-    // When the bloom engages, winners gains a second consumer (the bloom
-    // side job plus the semi-join build side); localCheckpoint
-    // materializes the aggregate once (eager, partitioning preserved via
-    // LogicalRDD) so the side job doesn't re-run it — but the checkpoint
-    // storage itself is what sinks the bloom at scale (see above). The
-    // default off path keeps the single-consumer lazy form — no
-    // checkpoint, no extra job.
-    val winners = if (!engageBloom) winners0 else winners0.localCheckpoint(true)
-    val preFiltered = if (!engageBloom) raw else {
-      // Size the filter's hash-function count from the REAL winner
-      // cardinality (the checkpoint makes count() a metadata read), not
-      // the bits budget: expecting bits/10 items mis-tunes k whenever
-      // winners exceed it and the FPR silently collapses toward 1 (every
-      // loser passes and the prefilter pays pure overhead). Bits stay the
-      // hard memory budget; an overload below ~10 bits/item is recorded
-      // as a gauge so a degraded filter is attributable, not silent.
-      val nWinners = winners.count().max(1L)
-      Observed.recordLast("dedup", Map("bloom_bits_per_item" -> bloomBits / nWinners))
-      val bf = winners.select(xxhash64(col("_wid")).as("h"))
-        .stat.bloomFilter("h", nWinners, bloomBits)
-      val bytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos); bos.toByteArray
-      }
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.graftshim.GraftSql
-      raw.filter(GraftSql.column(BloomFilterMightContain(
-        Literal(bytes, org.apache.spark.sql.types.BinaryType),
-        GraftSql.expression(xxhash64(col("id"))))))
-    }
-    val deduped = preFiltered.join(
+    // No bloom prefilter: at 19.6% loser rows it lost at every size (BASELINE.md round 6).
+    val deduped = raw.join(
       winners.hint("shuffle_hash"),
-      preFiltered("srcId") === winners("_ws") && preFiltered("relType") === winners("_wr") &&
-        preFiltered("dstId") === winners("_wd") && preFiltered("id") === winners("_wid"),
+      raw("srcId") === winners("_ws") && raw("relType") === winners("_wr") &&
+        raw("dstId") === winners("_wd") && raw("id") === winners("_wid"),
       "left_semi")
 
     // endpoint existence: two joins against the node (id, name) projection
@@ -290,7 +229,7 @@ object GraphBuilder {
     */
   def avgClusteringCoefficient(g: Graph, maxDegree: Int = 256,
                                driverLimit: Long =
-                                 graft.query.GraphQueryOps.DriverIterationLimit): Double = {
+                                 graft.runtime.DriverPath.DriverIterationLimit): Double = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 

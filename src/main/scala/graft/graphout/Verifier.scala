@@ -49,7 +49,7 @@ object Verifier {
 
   /** Small graphs run the V1/V4 walks (and, in [[verify]], all four
     * checks) in memory on the driver, gated by DriverPath.probe (the
-    * GraphQueryOps.DriverIterationLimit pattern — round-7 measurement:
+    * DriverPath.DriverIterationLimit pattern — round-7 measurement:
     * the distributed loops are 20-34 driver-blocking jobs of ~50 ms fixed
     * latency each for <0.3 s of actual task time on the planted catalog
     * graphs). The driver mirrors replicate the distributed pair-set
@@ -57,7 +57,7 @@ object Verifier {
     * result set is identical by construction; Round7Spec and
     * ReasoningDriverSpec pin it.
     */
-  private[graphout] def driverLimit: Long = graft.query.GraphQueryOps.DriverIterationLimit
+  private[graphout] def driverLimit: Long = DriverPath.DriverIterationLimit
 
   /** Default walk lengths of V1 and V4, shared by [[verify]]. */
   private val CycleDepth = 10

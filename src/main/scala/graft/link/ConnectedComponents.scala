@@ -2,6 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.DriverPath
 
 /**
  * Iterative large-star / small-star connected components over an edge list
@@ -58,24 +59,16 @@ object ConnectedComponents {
     count(lit(1)).as("n"),
     coalesce(sum(hash(col("src"), col("dst")).cast("long")), lit(0L)).as("h"))
 
-  /** Pair graphs below this size are solved with a driver-side union-find
-    * (one collect job) instead of iterated star rounds: the alias pair
-    * graph is typically minuscule relative to the corpus, and ~10 shuffle
-    * rounds of near-empty data are pure fixed cost that destroys scaling
-    * efficiency. Above the threshold the distributed algorithm runs.
+  /** Pair graphs of at most `driverLimit` edges are solved with a
+    * driver-side union-find (one probe job) instead of iterated star
+    * rounds: ~10 shuffle rounds of near-empty data are pure fixed cost.
+    * The limit is a driver-heap bound (200k edges × two ~32-char ids at
+    * ≈ 150 B/id ≈ 60 MB), the same one the graph query operators use.
     *
-    * Sized against driver heap, not fixed-cost savings: 200k edges × two
-    * ~32-char ids × (String + HashMap entry + tuple overhead ≈ 150 B/id)
-    * ≈ 60 MB — safe under any default driver memory. (Round-1 had 2M,
-    * which is hundreds of MB of driver heap — an OOM risk that engaged
-    * before the distributed path ever could.) Override via env for tests.
+    * @return DataFrame(id, comp)
     */
-  val DriverThreshold: Long =
-    sys.env.get("GRAFT_CC_DRIVER_THRESHOLD").map(_.toLong).getOrElse(200000L)
-
-  /** @return DataFrame(id, comp) */
   def run(edges: DataFrame, maxIter: Int = 30,
-          driverThreshold: Long = DriverThreshold): DataFrame = {
+          driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     import org.apache.spark.sql.Observation
     import org.apache.spark.storage.StorageLevel
     // ONE probe (round-4 verdict item 3): persist the normalized pair
@@ -87,7 +80,7 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.runtime.DriverPath.probe(e, driverThreshold).foreach { taken =>
+    DriverPath.probe(e, driverLimit).foreach { taken =>
       val out = unionFindLocal(e.sparkSession,
         taken.map(r => (r.getString(0), r.getString(1))))
       e.unpersist(blocking = false)
@@ -179,7 +172,7 @@ object ConnectedComponents {
 
   /** run() plus passthrough for isolated ids not present in any edge. */
   def withIsolated(edges: DataFrame, allIds: DataFrame,
-                   driverThreshold: Long = DriverThreshold): DataFrame = {
+                   driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     // ---- driver fast path (round-7): when BOTH the pair set and the id
     // universe fit the driver limit, the union-find (already the
     // small-graph CC path) AND the isolated-id passthrough run in memory
@@ -192,11 +185,11 @@ object ConnectedComponents {
     locally {
       val spark = edges.sparkSession
       import spark.implicits._
-      graft.runtime.DriverPath.probe(
+      DriverPath.probe(
         edges.select(col("src").cast("string"), col("dst").cast("string")),
-        driverThreshold).foreach { raw =>
-        graft.runtime.DriverPath.probe(
-          allIds.select(col("id").cast("string")), driverThreshold).foreach { idRows =>
+        driverLimit).foreach { raw =>
+        DriverPath.probe(
+          allIds.select(col("id").cast("string")), driverLimit).foreach { idRows =>
           val pairs = raw.map(r => (r.getString(0), r.getString(1)))
             .filter(p => p._1 != null && p._2 != null && p._1 != p._2).distinct
           val ccRows = unionFindRows(pairs)
@@ -207,8 +200,9 @@ object ConnectedComponents {
         }
       }
     }
-    val cc = run(edges)
-    val isolated = allIds.select(col("id"))
+    val cc = run(edges, driverLimit = driverLimit)
+    // string ids like run()'s: an integer id column would widen the union to bigint
+    val isolated = allIds.select(col("id").cast("string"))
       .join(cc.select("id"), Seq("id"), "left_anti")
       .withColumn("comp", col("id"))
     cc.union(isolated)

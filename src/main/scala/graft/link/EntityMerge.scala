@@ -25,9 +25,6 @@ import graft.model.Entity
  */
 object EntityMerge {
 
-  private[link] def jsonList(values: Seq[String]): String =
-    values.map(v => if (v.startsWith("[")) v.substring(1, v.length - 1) else quote(v))
-      .mkString("[", ",", "]")
   private def quote(s: String): String =
     if (s.startsWith("\"")) s
     else "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{ArrayEqCount, MinHashSignature, ShingleHashes}
-import graft.query.GraphQueryOps
 import graft.runtime.{DriverPath, Observed}
 
 /**
@@ -84,7 +83,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id", k: Int = 32, bands: Int = 8,
                       maxBucket: Int = 256,
-                      driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+                      driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     driverMinhash(docs, textCol, idCol, k, bands, maxBucket, driverLimit).foreach(return _)
     val r = k / bands
     // NOT persisted although three consumers read it (banding + both
@@ -268,7 +267,7 @@ object Dedup {
     */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id", n: Int = 3,
-                   driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+                   driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     driverJaccard(docs, pairs, textCol, idCol, n, driverLimit).foreach(return _)
     // native one-pass shingle hashing (ShingleHashes): the declarative
     // explode(shingles)+xxhash64 form pays interpreted HOF evaluation of

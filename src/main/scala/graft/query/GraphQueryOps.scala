@@ -6,6 +6,7 @@ import graft.graphout.GraphBuilder.Graph
 import graft.link.ConnectedComponents
 import graft.model.{Entity, Triple}
 import graft.runtime.DriverPath
+import graft.runtime.DriverPath.DriverIterationLimit
 
 /**
  * Graph query operators Q1-Q10 (SURVEY.md §2.8) — each a lazy plan over
@@ -475,21 +476,6 @@ object GraphQueryOps {
       .orderBy(desc("degree"), asc("id"))
       .limit(k)
   }
-
-  /** Below this many nodes AND edges, the query, centrality and
-    * verification operators run as an in-memory driver loop (mirrors
-    * ConnectedComponents' union-find fast path): a 10-40-iteration
-    * join-aggregate loop on a tiny graph is pure fixed job latency —
-    * dozens of driver-blocking rounds to move a few kilobytes. Each input
-    * is gated and fetched by one [[DriverPath.probe]] job, which stops
-    * reading a partition after `limit + 1` rows, so a graph far over the
-    * limit costs O(partitions · limit) to reject. The driver loops are
-    * deterministic (contributions summed in sorted-source order), and the
-    * distributed path remains the one answer at scale; PropertySpec and
-    * the `driverLimit = 0` parity pins hold the two paths equal.
-    */
-  val DriverIterationLimit: Long =
-    sys.env.get("GRAFT_CENTRALITY_DRIVER_LIMIT").map(_.toLong).getOrElse(200000L)
 
   /** The sorted node ids (duplicates kept, so the length is the node
     * count `n`) when the node table fits the driver limit: one probe job

@@ -8,7 +8,6 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 import graft.graphout.GraphBuilder.Graph
 import graft.graphout.Verifier
 import graft.model.Triple
-import graft.query.GraphQueryOps
 import graft.runtime.DriverPath
 
 /**
@@ -84,7 +83,7 @@ object Reasoning {
     * self-joins below are the distributed form.
     */
   def inferTransitive(g: Graph, minConfidence: Double = 0.7,
-                      driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+                      driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     driverTransitive(g, minConfidence, driverLimit).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
@@ -252,7 +251,7 @@ object Reasoning {
     * distributed form.
     */
   def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5,
-                          driverLimit: Long = GraphQueryOps.DriverIterationLimit): DataFrame = {
+                          driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val opp = broadcast(Opposites.toDF("rtA", "rtB"))

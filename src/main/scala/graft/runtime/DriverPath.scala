@@ -23,6 +23,21 @@ import org.apache.spark.sql.execution.SQLExecution
  */
 object DriverPath {
 
+  /** Below this many nodes AND edges, the query, centrality and
+    * verification operators run as an in-memory driver loop, and
+    * ConnectedComponents takes its union-find fast path: a 10-40-iteration
+    * join-aggregate loop on a tiny graph is pure fixed job latency —
+    * dozens of driver-blocking rounds to move a few kilobytes. Each input
+    * is gated and fetched by one [[probe]] job, which stops
+    * reading a partition after `limit + 1` rows, so a graph far over the
+    * limit costs O(partitions · limit) to reject. The driver loops are
+    * deterministic (contributions summed in sorted-source order), and the
+    * distributed path remains the one answer at scale; PropertySpec and
+    * the `driverLimit = 0` parity pins hold the two paths equal.
+    */
+  val DriverIterationLimit: Long =
+    sys.env.get("GRAFT_CENTRALITY_DRIVER_LIMIT").map(_.toLong).getOrElse(200000L)
+
   /** `Some(df.collect())` when `df` has at most `lim` rows, else `None`.
     *
     * One `runJob` over the plan's RDD, inside a SQL execution (so SQL

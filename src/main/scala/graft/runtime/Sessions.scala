@@ -30,9 +30,10 @@ object Sessions {
   /** The scale contract stated at the OHA threshold below, as code:
     * shuffle partitions grow with the corpus so per-task aggregate/join
     * state stays bounded, never below 2× the core count (so every level
-    * of a scaling pair keeps full reduce-side parallelism). Both Bench
-    * and StageProbe default to this; a fixed-parts run of a 4× corpus
-    * is comparing different per-task regimes, not different core counts.
+    * of a scaling pair keeps full reduce-side parallelism). Bench,
+    * PipelineMain and perfbench default to this; a fixed-parts run of a
+    * 4× corpus is comparing different per-task regimes, not different
+    * core counts.
     */
   def shufflePartitionsFor(cores: Int, files: Long): Int =
     math.max(2 * cores, ((files + FilesPerTask - 1) / FilesPerTask).toInt)

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.Dedup
-import graft.query.GraphQueryOps
 import graft.runtime.{DriverPath, Observed}
 import graft.tools.RefApprox
 
@@ -110,7 +109,7 @@ class DedupDriverSpec extends SparkSpec {
   test("minhashLshPairs: the driver path ≡ the distributed form, cap drops included") {
     var paired, capped = 0
     cases.foreach { c =>
-      val (fast, rows, drops) = minhash(c, GraphQueryOps.DriverIterationLimit)
+      val (fast, rows, drops) = minhash(c, DriverPath.DriverIterationLimit)
       val (dist, want, wantDrops) = minhash(c, 0)
       assert(rows == want, s"case=$c")
       assert(drops == wantDrops, s"drops $drops vs $wantDrops case=$c")
@@ -148,7 +147,7 @@ class DedupDriverSpec extends SparkSpec {
 
   test("two documents with no shingle: estimate 1.0, null Jaccard, no DIVIDE_BY_ZERO") {
     val docs = docsOf(fourDocs)
-    for (lim <- Seq(GraphQueryOps.DriverIterationLimit, 0L)) {
+    for (lim <- Seq(DriverPath.DriverIterationLimit, 0L)) {
       val pairs = Dedup.minhashLshPairs(docs, driverLimit = lim)
       val est = pairs.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       assert(est.get((1L, 2L)).contains(1.0) && est.contains((3L, 4L)), s"lim=$lim $est")
@@ -168,7 +167,7 @@ class DedupDriverSpec extends SparkSpec {
 
   test("q24's recall gate throws on both paths when estFloor admits no candidate") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    for (lim <- Seq(GraphQueryOps.DriverIterationLimit, 0L)) {
+    for (lim <- Seq(DriverPath.DriverIterationLimit, 0L)) {
       val e = intercept[IllegalStateException](
         Queries.minhashDedup(spark, docs, estFloor = 1.01, driverLimit = lim))
       assert(e.getMessage.contains("q24_minhash recall collapsed"), s"lim=$lim")

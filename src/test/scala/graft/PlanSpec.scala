@@ -205,7 +205,7 @@ class PlanSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // the driver path records its drops directly, the distributed form
     // through observe
-    for (lim <- Seq(graft.query.GraphQueryOps.DriverIterationLimit, 0L)) {
+    for (lim <- Seq(graft.runtime.DriverPath.DriverIterationLimit, 0L)) {
       graft.runtime.Observed.clear("minhash_band_cap") // earlier suites also report here
       graft.ops.Dedup.minhashLshPairs(docs, maxBucket = 4, driverLimit = lim).count()
       // QueryExecutionListener callbacks are delivered asynchronously

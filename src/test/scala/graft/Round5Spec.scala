@@ -21,7 +21,7 @@ class CcDistributedSpec extends SparkSpec {
     def collect(res: org.apache.spark.sql.DataFrame): Map[String, String] =
       res.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val driver = collect(graft.link.ConnectedComponents.run(df))
-    val dist = collect(graft.link.ConnectedComponents.run(df, driverThreshold = 0))
+    val dist = collect(graft.link.ConnectedComponents.run(df, driverLimit = 0))
     assert(dist.nonEmpty && dist == driver)
   }
 
@@ -34,7 +34,7 @@ class CcDistributedSpec extends SparkSpec {
     val df = Seq(("b", "a"), ("c", "a"), ("d", "a"), ("y", "x"))
       .toDF("src", "dst")
     graft.runtime.Observed.clear("cc_iterations")
-    val res = graft.link.ConnectedComponents.run(df, driverThreshold = 0)
+    val res = graft.link.ConnectedComponents.run(df, driverLimit = 0)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(res == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
       "x" -> "x", "y" -> "x"))

@@ -56,7 +56,7 @@ class Utf8OrderSpec extends SparkSpec {
     def m(res: org.apache.spark.sql.DataFrame) =
       res.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val driver = m(graft.link.ConnectedComponents.run(df))
-    val dist = m(graft.link.ConnectedComponents.run(df, driverThreshold = 0))
+    val dist = m(graft.link.ConnectedComponents.run(df, driverLimit = 0))
     assert(driver == dist)
     // the component min under UTF-8 order is the PUA char, NOT the
     // surrogate-encoded supplementary one (UTF-16 would pick the latter)
@@ -249,59 +249,6 @@ class KeepRowBySpec extends SparkSpec {
       assert(!l.contains("context") && !l.contains("attributes") &&
         !l.contains("srcName") && !l.contains("dstName"), l.take(300))
     }
-  }
-
-  test("bloom prefilter: forced ≡ off (edges bit-identical), filter below the wide exchange") {
-    import spark.implicits._
-    val ents = fuzzedTriples(600, seed = 11L).collect()
-      .flatMap(t => Seq(t.srcId, t.dstId)).distinct.map { id =>
-        graft.model.Entity(id, s"N$id", "class", None, Map.empty, 0.9,
-          "s0", "r", "p", "sha")
-      }.toSeq.toDS()
-    def edgesJson(mode: String) = {
-      spark.conf.set("spark.graft.dedup.bloom", mode)
-      // tiny bits budget: the default 64M bits would embed an 8 MB binary
-      // literal in the plan (and its hex render in the plan STRING below)
-      // for ~70 winner groups — identical code path, none of the cost
-      spark.conf.set("spark.graft.dedup.bloom.bits", "1024")
-      try {
-        val g = graft.graphout.GraphBuilder.build(ents, fuzzedTriples(600, seed = 11L))
-        val df = g.edges.toDF().withColumn("attributes", to_json(col("attributes")))
-        (df, df.collect().map(_.toString).sorted.toSeq)
-      } finally {
-        spark.conf.unset("spark.graft.dedup.bloom")
-        spark.conf.unset("spark.graft.dedup.bloom.bits")
-      }
-    }
-    val (dfOff, off) = edgesJson("off")
-    val (dfOn, on) = edgesJson("force")
-    assert(on == off && on.nonEmpty)
-    val pOn = dfOn.queryExecution.executedPlan.toString
-    val pOff = dfOff.queryExecution.executedPlan.toString
-    assert(pOn.contains("might_contain"), pOn.take(2000))
-    assert(!pOff.contains("might_contain"), pOff.take(2000))
-    // the prefilter must sit BELOW the semi join's exchange: the filter's
-    // whole point is that loser rows die before the wide shuffle. In the
-    // plan string the Exchange feeding the LeftSemi stream side must
-    // appear ABOVE (before) the might_contain filter line.
-    val lines = pOn.linesIterator.toVector
-    val filterIdx = lines.indexWhere(_.contains("might_contain"))
-    val semiIdx = lines.indexWhere(l => l.contains("ShuffledHashJoin") && l.contains("LeftSemi"))
-    assert(semiIdx >= 0 && filterIdx > semiIdx,
-      s"might_contain at $filterIdx, semi join at $semiIdx\n" + pOn.take(2000))
-  }
-
-  test("bloom prefilter: an unknown mode throws instead of silently acting as auto") {
-    import spark.implicits._
-    val ents = Seq(graft.model.Entity("e1", "N1", "class", None, Map.empty,
-      0.9, "s0", "r", "p", "sha")).toDS()
-    spark.conf.set("spark.graft.dedup.bloom", "bloom")  // typo'd mode
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        graft.graphout.GraphBuilder.build(ents, fuzzedTriples(10, seed = 3L))
-      }
-      assert(ex.getMessage.contains("off|auto|force"))
-    } finally spark.conf.unset("spark.graft.dedup.bloom")
   }
 }
 

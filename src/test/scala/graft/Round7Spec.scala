@@ -184,7 +184,7 @@ class Round7Spec extends SparkSpec {
     val ids = Seq("a", "b", "c", "x", "y", "iso1", "iso2", "iso1").toDF("id")
     val fast = ConnectedComponents.withIsolated(edges, ids)
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val dist = ConnectedComponents.withIsolated(edges, ids, driverThreshold = 0)
+    val dist = ConnectedComponents.withIsolated(edges, ids, driverLimit = 0)
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     assert(fast == dist)
     assert(fast.count(_ == (("iso1", "iso1"))) == 2) // dup rows preserved
