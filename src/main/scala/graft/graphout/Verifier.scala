@@ -1,6 +1,6 @@
 package graft.graphout
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.model.{Issue, Severity}
@@ -13,6 +13,15 @@ import graft.runtime.{DriverPath, Utf8Order}
  * deterministic checks plus counters are the verification contract.
  *
  * A graph is valid iff no critical issue (knowledge_verifier.py:78-82).
+ *
+ * Graphs under DriverPath.DriverIterationLimit edges run the V1/V4 walks
+ * (and, in [[verify]], all four checks) in memory on the driver, from one
+ * DriverPath.probe (round-7 measurement: the distributed loops are 20-34
+ * driver-blocking jobs of ~50 ms fixed latency each for <0.3 s of actual
+ * task time on the planted catalog graphs). The driver mirrors replicate
+ * the distributed pair-set iteration literally (same extension, same
+ * dedup, same prune), so the result set is identical by construction;
+ * Round7Spec and ReasoningDriverSpec pin it.
  */
 object Verifier {
 
@@ -46,18 +55,6 @@ object Verifier {
     val fwd = base.flatMap { case (k, vs) => vs.map(v => (k, v)) }
     (fwd ++ fwd.map(_.swap)).distinct
   }
-
-  /** Small graphs run the V1/V4 walks (and, in [[verify]], all four
-    * checks) in memory on the driver, gated by DriverPath.probe (the
-    * DriverPath.DriverIterationLimit pattern — round-7 measurement:
-    * the distributed loops are 20-34 driver-blocking jobs of ~50 ms fixed
-    * latency each for <0.3 s of actual task time on the planted catalog
-    * graphs). The driver mirrors replicate the distributed pair-set
-    * iteration literally (same extension, same dedup, same prune), so the
-    * result set is identical by construction; Round7Spec and
-    * ReasoningDriverSpec pin it.
-    */
-  private[graphout] def driverLimit: Long = DriverPath.DriverIterationLimit
 
   /** Default walk lengths of V1 and V4, shared by [[verify]]. */
   private val CycleDepth = 10
@@ -95,20 +92,17 @@ object Verifier {
     * and flag nodes that reach themselves. CRITICAL.
     */
   def cyclicDependencies(g: Graph, maxDepth: Int = CycleDepth,
-                         driverLimit: Long = Verifier.driverLimit): Dataset[Issue] = {
+                         driverLimit: Long = DriverPath.DriverIterationLimit): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
     // ---- driver fast path: one probe job, then the identical pair-set
-    // iteration in memory. The probe reads the PRE-distinct projection —
-    // the in-memory Set dedups anyway, and skipping distinct keeps the
-    // probe a pure scan (no exchange to materialize before the first row
-    // arrives).
-    DriverPath.probe(g.edges.toDF()
-      .where(lower($"relType").isin(HierarchicalTypes: _*))
-      .select($"srcId", $"dstId"), driverLimit)
-      .flatMap(rows => driverCycles(
-        rows.toIndexedSeq.map(r => (r.getString(0), r.getString(1))), maxDepth))
+    // iteration in memory (the type filter runs on the driver too)
+    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType"), driverLimit)
+      .flatMap { case (raw, rts) =>
+        driverCycles(raw.indices.filter(i => HierarchicalTypes.contains(rts(i)))
+          .map(i => (raw(i).getString(0), raw(i).getString(1))), maxDepth)
+      }
       .foreach(issues => return issues.toDS())
 
     val h = g.edges.toDF()
@@ -216,20 +210,18 @@ object Verifier {
     * (knowledge_verifier.py:396-477). MEDIUM.
     */
   def semanticContradictions(g: Graph, maxHops: Int = ContradictionHops,
-                             driverLimit: Long = Verifier.driverLimit): Dataset[Issue] = {
+                             driverLimit: Long = DriverPath.DriverIterationLimit): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
     // ---- driver fast path (round-7): one probe job replaces the
     // 30-odd driver-blocking jobs of the seeded distributed walk on small
-    // graphs. ONE probe for both edge classes (pre-distinct — the
-    // in-memory Sets dedup, and the unioned predicate keeps the probe a
-    // single scan with no exchange).
-    DriverPath.probe(g.edges.toDF()
-      .where(lower($"relType").isin((NegationTypes ++ TransitiveTypes): _*))
-      .select(lower($"relType").as("rt"), $"srcId", $"dstId"), driverLimit)
-      .flatMap(rows => driverContradictions(
-        rows.toIndexedSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))), maxHops))
+    // graphs; driverContradictions picks both edge classes out itself
+    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType"), driverLimit)
+      .flatMap { case (raw, rts) =>
+        driverContradictions(raw.indices.map(i => (rts(i), raw(i).getString(0), raw(i).getString(1))),
+          maxHops)
+      }
       .foreach(issues => return issues.toDS())
 
     val neg = g.edges.toDF()
@@ -307,7 +299,7 @@ object Verifier {
 
   /** Runs V1–V4.
     *
-    * Under [[driverLimit]] edges and nodes, all four checks run on the
+    * Under `driverLimit` edges and nodes, all four checks run on the
     * driver from one snapshot: one probe of the edge columns they read
     * (id, srcId, dstId, relType, case-folded by [[DriverPath.lowerAscii]])
     * and one of the node ids for V2, so each check runs once, `issues` is
@@ -318,7 +310,7 @@ object Verifier {
     * run eagerly for `isValid` and again when the caller reads `issues`,
     * while the V3 self-join runs once, with `issues`.
     */
-  def verify(g: Graph, driverLimit: Long = Verifier.driverLimit): Verification = {
+  def verify(g: Graph, driverLimit: Long = DriverPath.DriverIterationLimit): Verification = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     driverIssues(g, driverLimit) match {
@@ -334,14 +326,23 @@ object Verifier {
     }
   }
 
+  /** The rows of `edges`, an edge projection whose last column is
+    * relType, and that column case-folded by [[DriverPath.lowerAscii]]:
+    * one probe with no Spark `lower` in its plan. None over `driverLimit`
+    * rows or on a non-ASCII type, which take the distributed forms.
+    */
+  private def foldedEdges(edges: DataFrame, driverLimit: Long): Option[(Array[Row], Array[String])] =
+    DriverPath.probe(edges, driverLimit).flatMap { raw =>
+      DriverPath.lowerAscii(raw.map(_.getString(edges.columns.length - 1))).map(raw -> _)
+    }
+
   /** V1–V4 of [[verify]] on the driver, in the distributed union's order
     * (V1, V2 by source then by destination, V3, V4), or None when the
     * graph takes the distributed form.
     */
   private def driverIssues(g: Graph, driverLimit: Long): Option[Seq[Issue]] = {
-    val raw = DriverPath.probe(g.edges.toDF().select("id", "srcId", "dstId", "relType"),
+    val (raw, rts) = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType"),
       driverLimit).getOrElse(return None)
-    val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
     val ids = graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).getOrElse(return None).toSet
     val es = raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
     // V2 is two anti-joins: a null endpoint matches no node id, so its

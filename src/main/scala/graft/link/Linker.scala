@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.{Entity, Triple}
+import graft.runtime.DriverPath
 
 /**
  * Entity linking / coreference resolution / canonicalization
@@ -88,19 +89,6 @@ object Linker {
         graft.functions.SimilarityAccept($"name1", $"name2"))
   }
 
-  /** Canonical-mention tables at or below this row count link on the
-    * driver: one narrow DriverPath.probe (3 string columns, cache-hot in the
-    * pipeline where extract_dedup materialized the mention cache), then
-    * blocking + scoring + union-find in memory — the distributed form is
-    * ~1-1.4 s of pure plan/exchange/job latency for a 25k-row table with
-    * 3 accepted pairs (profiled at 320k files, round 5: link_cc stage
-    * efficiency 0.24-0.31 because that latency is identical at every
-    * parallelism level). The distributed blocking join below remains the
-    * 100 TB path and LinkerDriverSpec pins the two identical.
-    */
-  val DriverLinkThreshold: Long =
-    sys.env.get("GRAFT_LINK_DRIVER_THRESHOLD").map(_.toLong).getOrElse(300000L)
-
   /** Driver-side mirror of [[candidatePairs]] + connected components:
     * SAME blocking keys, SAME deterministic per-block cap (ordered by id,
     * counted via the Observed registry — the no-silent-caps rule doesn't
@@ -154,14 +142,19 @@ object Linker {
       rewrite: DataFrame
   )
 
+  /** Canonical-mention tables of at most `driverLimit` rows link on the
+    * driver: one narrow probe of 3 string columns (cache-hot in the
+    * pipeline, where extract_dedup materialized the mentions), then
+    * [[driverComps]]. The distributed blocking join remains the path at
+    * scale; LinkerDriverSpec pins the two identical.
+    */
   def link(entities: Dataset[Entity], threshold: Double = DefaultThreshold,
-           driverThreshold: Long = DriverLinkThreshold): LinkResult = {
+           driverLimit: Long = DriverPath.DriverIterationLimit): LinkResult = {
     val spark = entities.sparkSession
     import spark.implicits._
 
     val comps: DataFrame =
-      graft.runtime.DriverPath.probe(
-        entities.select($"id", $"name", $"entityType"), driverThreshold) match {
+      DriverPath.probe(entities.select($"id", $"name", $"entityType"), driverLimit) match {
         case Some(rows) => driverComps(spark,
           rows.map(r => (r.getString(0), r.getString(1), r.getString(2))), threshold)
         case None => ConnectedComponents.run(
@@ -209,8 +202,7 @@ object Linker {
     * canonical targets of giant alias families are exactly the celebrity
     * hot keys AQE skew-splitting may miss on the probe side.
     */
-  val BroadcastRewriteLimit: Long =
-    sys.env.get("GRAFT_REWRITE_BCAST_LIMIT").map(_.toLong).getOrElse(2000000L)
+  val BroadcastRewriteLimit: Long = 2000000L
 
   /** C5 edge redirection: re-point both endpoints through the rewrite map
     * (broadcast when small; salted shuffle join beyond
@@ -222,22 +214,19 @@ object Linker {
     val spark = triples.sparkSession
     import spark.implicits._
     // only non-identity rewrites matter — keep the join side minimal.
-    // When the rewrite map optimizes to a LocalRelation (the CC driver
-    // fast path — the common case for alias-scale pair graphs), its row
-    // count is read off the plan with ZERO jobs and no checkpoint is
-    // needed; a distributed map is still materialized before the
+    // A local rewrite map (the linker's driver path, the common case for
+    // alias-scale pair graphs) is sized from its rows with ZERO jobs and
+    // needs no checkpoint; a distributed map is materialized before the
     // path-choosing count so its CC lineage runs once, not twice
     // (round-2 advice; round-4 verdict item 3 removed the two driver
     // actions this cost on every small-corpus run).
     val filtered = rewrite.where(col("id") =!= col("canonicalId"))
-    val localRows: Option[Long] =
-      filtered.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(lr.data.length.toLong)
-        case _ => None
+    val (rw, big) =
+      if (DriverPath.isLocal(filtered)) (filtered, DriverPath.probe(filtered, broadcastLimit).isEmpty)
+      else {
+        val m = filtered.localCheckpoint(true)
+        (m, m.count() > broadcastLimit)
       }
-    val rw = if (localRows.isDefined) filtered else filtered.localCheckpoint(true)
-    val big = localRows.getOrElse(rw.count()) > broadcastLimit
     val redirected =
       if (!big) {
         val srcMap = broadcast(rw.select(col("id").as("_sid"), col("canonicalId").as("_scan")))

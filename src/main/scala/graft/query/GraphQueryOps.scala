@@ -685,18 +685,21 @@ object GraphQueryOps {
     g.nodes.toDF().select(col("id"))
       .orderBy(xxhash64(col("id")), col("id")).limit(s)
 
-  /** Multi-source lockstep BFS: for every sampled source, (src, id, dist,
-    * sigma = #shortest paths from src to id), one frontier join per depth.
-    * Directed, unit edge weights.
+  /** The `(from, to)` projection of a frame's `(srcId, dstId)` edges. */
+  private def fromTo(edges: DataFrame): DataFrame =
+    edges.select(col("srcId").as("from"), col("dstId").as("to"))
+
+  /** Multi-source lockstep BFS over the directed `(from, to)` edges: for
+    * every sampled source, (src, id, dist, sigma = #shortest paths from
+    * src to id), one frontier join per depth. Unit edge weights.
     * @return (settledAllDepths, perDepthLevels) — levels are needed by the
     *         Brandes backward pass.
     */
-  private def multiSourceBfs(g: Graph, sources: DataFrame, maxDepth: Int)
+  private def multiSourceBfs(directed: DataFrame, sources: DataFrame, maxDepth: Int)
       : (DataFrame, Seq[DataFrame]) = {
-    val spark = g.nodes.sparkSession
+    val spark = directed.sparkSession
     import spark.implicits._
-    val edges = g.edges.toDF().select($"srcId".as("from"), $"dstId".as("to"))
-      .distinct().localCheckpoint(true)
+    val edges = directed.distinct().localCheckpoint(true)
     var frontier = sources.select($"id".as("src"), $"id", lit(0).as("dist"),
       lit(1L).as("sigma")).localCheckpoint(true)
     var settled = frontier
@@ -856,7 +859,7 @@ object GraphQueryOps {
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
-    val (settled, _) = multiSourceBfs(g, sources, maxDepth)
+    val (settled, _) = multiSourceBfs(fromTo(g.edges.toDF()), sources, maxDepth)
     // Wasserman–Faust closeness under source sampling: with r_v sampled
     // reachers (dist>0) and inflation f = n/s, the estimated reacher
     // count is r·f and the estimated distance sum Σ·f, so
@@ -899,17 +902,7 @@ object GraphQueryOps {
       }
     }
     val und = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-    val undG = Graph(g.nodes, und
-      .withColumn("id", concat($"srcId", lit("~"), $"dstId"))
-      .withColumn("srcName", lit("")).withColumn("dstName", lit(""))
-      .withColumn("relType", lit("und"))
-      .withColumn("context", lit(null).cast("string"))
-      .withColumn("bidirectional", lit(false))
-      .withColumn("strength", lit(1.0)).withColumn("confidence", lit(1.0))
-      .withColumn("segId", lit(""))
-      .withColumn("attributes", map().cast("map<string,string>"))
-      .as[Triple])
-    val (settled, _) = multiSourceBfs(undG, sampleSources(g, samples), maxDepth)
+    val (settled, _) = multiSourceBfs(fromTo(und), sampleSources(g, samples), maxDepth)
     val row = settled.where($"dist" > 0)
       .agg(coalesce(sum($"dist"), lit(0L)).as("s"), count(lit(1)).as("c")).head()
     if (row.getLong(1) == 0) 0.0 else row.getLong(0).toDouble / row.getLong(1)
@@ -970,9 +963,8 @@ object GraphQueryOps {
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
-    val (_, levels) = multiSourceBfs(g, sources, maxDepth)
-    val edges = g.edges.toDF().select($"srcId".as("from"), $"dstId".as("to"))
-      .distinct().localCheckpoint(true)
+    val (_, levels) = multiSourceBfs(fromTo(g.edges.toDF()), sources, maxDepth)
+    val edges = fromTo(g.edges.toDF()).distinct().localCheckpoint(true)
 
     // backward accumulation, deepest level first: δ of depth d+1 is final
     // before depth d consumes it (one join per level, all sources at once)

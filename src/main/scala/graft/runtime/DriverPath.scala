@@ -23,17 +23,28 @@ import org.apache.spark.sql.execution.SQLExecution
  */
 object DriverPath {
 
-  /** Below this many nodes AND edges, the query, centrality and
-    * verification operators run as an in-memory driver loop, and
-    * ConnectedComponents takes its union-find fast path: a 10-40-iteration
-    * join-aggregate loop on a tiny graph is pure fixed job latency —
-    * dozens of driver-blocking rounds to move a few kilobytes. Each input
-    * is gated and fetched by one [[probe]] job, which stops
-    * reading a partition after `limit + 1` rows, so a graph far over the
+  /** The one size limit of every driver fast path. Below this many nodes
+    * AND edges, the query, centrality and verification operators run as an
+    * in-memory driver loop, and ConnectedComponents takes its union-find
+    * fast path: a 10-40-iteration join-aggregate loop on a tiny graph is
+    * pure fixed job latency — dozens of driver-blocking rounds to move a
+    * few kilobytes. Below this many canonical mentions the linker blocks,
+    * scores and clusters on the driver: its distributed blocking join is
+    * ~1-1.4 s of plan/exchange/job latency for a 25k-row table with 3
+    * accepted pairs (320k files, BASELINE.md round 5: link_cc stage
+    * efficiency 0.24-0.31, the same latency at every parallelism level).
+    * Each input is gated and fetched by one [[probe]] job, which stops
+    * reading a partition after `limit + 1` rows, so an input far over the
     * limit costs O(partitions · limit) to reject. The driver loops are
     * deterministic (contributions summed in sorted-source order), and the
     * distributed path remains the one answer at scale; PropertySpec and
     * the `driverLimit = 0` parity pins hold the two paths equal.
+    *
+    * `GRAFT_CENTRALITY_DRIVER_LIMIT` overrides it for the whole JVM; `0`
+    * forces every distributed form at once. It is the library's only
+    * tuning switch: measuring each mirror's win on a benchmark workload
+    * needs the distributed forms of the same build, which no parameter
+    * reaches from outside the program.
     */
   val DriverIterationLimit: Long =
     sys.env.get("GRAFT_CENTRALITY_DRIVER_LIMIT").map(_.toLong).getOrElse(200000L)

@@ -51,10 +51,9 @@ object Sessions {
         sys.env.getOrElse("GRAFT_LOCAL_DIR",
           if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
           else System.getProperty("java.io.tmpdir")))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true")) // A/B knob: AQE query-stage
-      // barriers add driver-serial replan latency per exchange; production
-      // keeps AQE on (skew mandate) — the knob exists to quantify the cost
+      // AQE query-stage barriers add driver-serial replan latency per
+      // exchange; production keeps AQE on (skew mandate)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // keep reduce-side parallelism pinned to the core count: without
       // this AQE coalesces small-data shuffles to a handful of 64MB-target
@@ -76,8 +75,7 @@ object Sessions {
       // all (edge keep-max = narrow winner + semi join); the scale
       // contract is that shuffle partitions grow with data so
       // groups/partition stays far under this bound.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OHA_FALLBACK", "524288"))
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       // zstd shuffle codec, measured not assumed (2.56M-file StageProbe
       // A/B, BASELINE.md round 6): vs Spark's lz4 default it compresses
@@ -87,17 +85,13 @@ object Sessions {
       // 458 s to 238 s with NO compute-side penalty (merge CPU excluding
       // write time was 1240-1340 s under both codecs; zstd decompression
       // on the read side is included in those runs). At 100 TB the halved
-      // shuffle bytes are also network bytes. lz4 stays reachable for
-      // A/B via GRAFT_SHUFFLE_CODEC; the 1m file-buffer variant measured
-      // a smaller win than the codec and is not defaulted.
+      // shuffle bytes are also network bytes. The 1m file-buffer variant
+      // measured a smaller win than the codec and is not defaulted.
       // SCOPE NOTE (round-6 advice): spark.io.compression.codec is
       // Spark's GLOBAL I/O codec — it also covers spill, broadcast and
-      // RDD-checkpoint compression, not shuffle alone; the env name is
-      // kept for compatibility with the archived A/B runs.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_SHUFFLE_CODEC", "zstd"))
-      .config("spark.shuffle.file.buffer",
-        sys.env.getOrElse("GRAFT_SHUFFLE_BUFFER", "32k"))
+      // RDD-checkpoint compression, not shuffle alone.
+      .config("spark.io.compression.codec", "zstd")
+      .config("spark.shuffle.file.buffer", "32k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

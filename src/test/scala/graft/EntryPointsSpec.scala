@@ -37,4 +37,35 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(Files.isDirectory(root), root)
     assert(entryPoints(root) == Expected)
   }
+
+  /** Source files of the five entry points, which read their own run
+    * settings (corpus size, cpus, budgets) from the environment.
+    */
+  private val EntryFiles = Set("Bench.scala", "Verify.scala", "PipelineMain.scala",
+    "FixtureGen.scala", "StreamScale.scala")
+
+  /** Every environment read of the library: the deployment scratch path
+    * and the one switch that forces every driver fast path's distributed
+    * form. A tuning value is a constant in the code that uses it, so a new
+    * variable has to be added here on purpose.
+    */
+  private val ExpectedEnv = Set("GRAFT_LOCAL_DIR", "GRAFT_CENTRALITY_DRIVER_LIMIT")
+
+  test("src/main reads exactly two environment variables outside the entry points") {
+    val src = Paths.get("src/main/scala")
+    assert(Files.isDirectory(src), src.toAbsolutePath)
+    val read = """(?:sys\.env|System\.getenv)(?:\.(?:get|getOrElse|contains|apply))?\(\s*"([A-Za-z0-9_]+)"""".r
+    val any = """sys\.env|System\.getenv""".r
+    val files = Files.walk(src).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !EntryFiles(f.getFileName.toString)).toSeq
+    assert(files.nonEmpty)
+    val names = files.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      val named = read.findAllMatchIn(text).map(_.group(1)).toSeq
+      // a read whose name is not a literal would escape the pin
+      assert(any.findAllMatchIn(text).size == named.size, s"$f reads the environment by a computed name")
+      named
+    }.toSet
+    assert(names == ExpectedEnv)
+  }
 }

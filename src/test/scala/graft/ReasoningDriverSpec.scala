@@ -18,7 +18,9 @@ import graft.reason.Reasoning
 /** The driver paths of `Reasoning.inferTransitive`,
   * `Reasoning.detectContradictory` and `Verifier.verify` equal their
   * distributed forms (`driverLimit = 0`) on adversarial small graphs, take
-  * one probe job each (two for verify) and never evaluate Spark's `lower`.
+  * one probe job each (two for verify) and never evaluate Spark's `lower`;
+  * nor do the standalone V1/V4 checks (`cyclicDependencies`,
+  * `semanticContradictions`).
   */
 class ReasoningDriverSpec extends SparkSpec {
 
@@ -229,8 +231,8 @@ class ReasoningDriverSpec extends SparkSpec {
     E("e7", "b", "a", "works-for", 0.9), E("e8", "b", "a", "Not-Affiliated-With", 0.7),
     E("e9", "d", "ghost", "knows", 0.5)))
 
-  /** Jobs and SQL executions of the three calls, results collected. */
-  private def run(g: Graph): (Int, Int, Int, Seq[(String, QueryExecution)]) = {
+  /** `body`'s result and the SQL executions it ran. */
+  private def withExecs[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
     val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val l = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = execs.add(f -> qe)
@@ -239,13 +241,22 @@ class ReasoningDriverSpec extends SparkSpec {
     assert(GraftCore.drainListenerBus(spark.sparkContext, 30000))
     spark.listenerManager.register(l)
     try {
+      val r = body
+      assert(GraftCore.drainListenerBus(spark.sparkContext, 30000))
+      (r, execs.asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** Jobs and SQL executions of the three calls, results collected. */
+  private def run(g: Graph): (Int, Int, Int, Seq[(String, QueryExecution)]) = {
+    val ((j1, j2, j3), execs) = withExecs {
       val (it, j1) = jobsOf(Reasoning.inferTransitive(g).collect())
       val (dc, j2) = jobsOf(Reasoning.detectContradictory(g).collect())
       val (v, j3) = jobsOf { val v = Verifier.verify(g); (v.isValid, v.issues.collect()) }
       assert(it.nonEmpty && dc.nonEmpty && !v._1 && v._2.nonEmpty)
-      assert(GraftCore.drainListenerBus(spark.sparkContext, 30000))
-      (j1, j2, j3, execs.asScala.toSeq)
-    } finally spark.listenerManager.unregister(l)
+      (j1, j2, j3)
+    }
+    (j1, j2, j3, execs)
   }
 
   private def hasLower(qe: QueryExecution): Boolean =
@@ -274,6 +285,23 @@ class ReasoningDriverSpec extends SparkSpec {
       assert(it.schema == Reasoning.inferTransitive(g).schema)
       assert(sortedRows(dc) == sortedRows(Reasoning.detectContradictory(g)))
       assert(dc.schema == Reasoning.detectContradictory(g).schema)
+    }
+  }
+
+  test("standalone V1 and V4: one probe job each and no lower(), ≡ the distributed form") {
+    def issues(ds: org.apache.spark.sql.Dataset[graft.model.Issue]) = ds.collect().map(_.toString).sorted.toSeq
+    for ((es, onDriver) <- Seq(pinned._2 -> true, (pinned._2 :+ E("u", "a", "d", NonAscii, 0.9)) -> false)) {
+      val g = stored(pinned._1, es)
+      val (((v1, j1), (v4, j4)), execs) = withExecs((
+        jobsOf(issues(Verifier.cyclicDependencies(g))),
+        jobsOf(issues(Verifier.semanticContradictions(g)))))
+      assert(v1.nonEmpty && v4.nonEmpty)
+      assert(v1 == issues(Verifier.cyclicDependencies(g, driverLimit = 0)))
+      assert(v4 == issues(Verifier.semanticContradictions(g, driverLimit = 0)))
+      if (onDriver) {
+        assert((j1, j4) == (1, 1), s"jobs: cyclicDependencies=$j1 semanticContradictions=$j4")
+        assert(!execs.exists(e => hasLower(e._2)), execs.map(_._1))
+      } else assert(j1 > 1 && j4 > 1 && execs.exists(e => hasLower(e._2)), s"jobs: $j1 $j4")
     }
   }
 }

@@ -146,7 +146,7 @@ class LinkerDriverSpec extends SparkSpec {
       r.rewrite.collect().map(x => x.getString(0) -> x.getString(1)).toMap)
 
     val fast = canon(graft.link.Linker.link(ents))
-    val dist = canon(graft.link.Linker.link(ents, driverThreshold = 0))
+    val dist = canon(graft.link.Linker.link(ents, driverLimit = 0))
     assert(fast == dist)
     // the alias family actually merged (to min id e1), the type gate held
     assert(fast._2.get("e2").contains("e1") && fast._2.get("e3").contains("e1"))
