@@ -241,11 +241,8 @@ object GraphBuilder {
     // denominator; the cap counter lands in the same Observed registry.
     graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).foreach { nodeIds =>
       graft.runtime.DriverPath.probe(
-          g.edges.toDF().select($"srcId", $"dstId"), driverLimit).foreach { raw =>
-        // null-endpoint rows drop exactly like the distributed =!= filter
-        // (a null comparison is never true)
-        val und = raw.map(r => (r.getString(0), r.getString(1)))
-          .filter(p => p._1 != null && p._2 != null && p._1 != p._2)
+          g.edges.toDF().select($"srcId", $"dstId"), driverLimit, "srcId", "dstId").foreach { raw =>
+        val und = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2)
           .flatMap(p => Seq(p, p.swap)).distinct
         val undSet = und.toSet
         // sampled adjacency: per center, neighbors ordered by

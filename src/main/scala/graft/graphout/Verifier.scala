@@ -131,11 +131,7 @@ object Verifier {
     * prune order. None when the walk outgrows [[DriverPath.PairBound]].
     */
   private def driverCycles(edges: Seq[(String, String)], maxDepth: Int): Option[Seq[Issue]] = {
-    // null-endpoint rows are output-inert in the distributed form (a null
-    // join key never matches, a null === comparison is never true) but a
-    // Scala HashMap would treat null as a real key — drop them so the
-    // mirror cannot diverge on malformed input
-    val dedup = edges.filter(p => p._1 != null && p._2 != null).distinct
+    val dedup = edges.distinct
     val adj = dedup.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
     var reach = dedup.toSet
     val cycles = scala.collection.mutable.HashSet.empty[String]
@@ -188,15 +184,15 @@ object Verifier {
     * `Reasoning.detectContradictory`: the index pairs (i, j) of `edges`
     * (id, srcId, dstId, lowered relType) that share (srcId, dstId), with
     * id_i < id_j in Spark's string order and (rt_i, rt_j) in `opposites`,
-    * each as often as the join emits it. As in SQL, a null endpoint never
-    * joins and a null id or type never passes a filter. None when the
-    * join would enumerate more than [[DriverPath.PairBound]] pairs.
+    * each as often as the join emits it. As in SQL, a null id or type
+    * never passes a filter (the endpoints are probe keys, never null).
+    * None when the join would enumerate more than [[DriverPath.PairBound]]
+    * pairs.
     */
   private[graft] def driverOppositePairs(edges: IndexedSeq[(String, String, String, String)],
                                          opposites: Set[(String, String)])
       : Option[Seq[(Int, Int)]] = {
-    val groups = edges.indices.filter(i => edges(i)._2 != null && edges(i)._3 != null)
-      .groupBy(i => (edges(i)._2, edges(i)._3)).values.toSeq
+    val groups = edges.indices.groupBy(i => (edges(i)._2, edges(i)._3)).values.toSeq
     if (groups.map(grp => grp.size.toLong * grp.size).sum > DriverPath.PairBound) None
     else Some(for {
       grp <- groups; i <- grp; j <- grp
@@ -273,12 +269,9 @@ object Verifier {
     */
   private def driverContradictions(edges: Seq[(String, String, String)],
                                    maxHops: Int): Option[Seq[Issue]] = {
-    // null endpoints dropped — output-inert distributed (see
-    // driverCycles), key-colliding in Scala sets
-    val rows = edges.filter(t => t._2 != null && t._3 != null)
-    val negSet = rows.collect { case (rt, s2, d2) if NegationTypes.contains(rt) => (s2, d2) }.toSet
+    val negSet = edges.collect { case (rt, s2, d2) if NegationTypes.contains(rt) => (s2, d2) }.toSet
     if (negSet.isEmpty) return Some(Nil)
-    val hRows = rows.filter(t => TransitiveTypes.contains(t._1)).distinct
+    val hRows = edges.filter(t => TransitiveTypes.contains(t._1)).distinct
     val negOrigins = negSet.map(_._1)
     val adj = hRows.groupBy(t => (t._1, t._2)).map { case (k, ts) => k -> ts.map(_._3) }
     var paths = hRows.filter(t => negOrigins(t._2)).toSet
@@ -308,47 +301,52 @@ object Verifier {
     * [[DriverPath.PairBound]] takes the distributed form, where validity
     * reads only the two checks that emit critical issues (V1, V2): they
     * run eagerly for `isValid` and again when the caller reads `issues`,
-    * while the V3 self-join runs once, with `issues`.
+    * while the V3 self-join runs once, with `issues`. V1 and V4 read the
+    * same edge rows as the refused probe, so they skip their own.
     */
   def verify(g: Graph, driverLimit: Long = DriverPath.DriverIterationLimit): Verification = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverIssues(g, driverLimit) match {
+    val edges = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType"), driverLimit)
+    edges.flatMap { case (raw, rts) => driverIssues(g, raw, rts, driverLimit) } match {
       case Some(issues) =>
         Verification(issues.toDS(), !issues.exists(_.severity == Severity.Critical))
       case None =>
-        val critical = cyclicDependencies(g, driverLimit = driverLimit)
+        // V1/V4's own probe would read the rows refused here again; a
+        // negative limit refuses with no job
+        val walkLimit = if (edges.isEmpty) -1L else driverLimit
+        val critical = cyclicDependencies(g, driverLimit = walkLimit)
           .union(danglingReferences(g))
         val all = critical
           .union(contradictoryRelationships(g))
-          .union(semanticContradictions(g, driverLimit = driverLimit))
+          .union(semanticContradictions(g, driverLimit = walkLimit))
         Verification(all, critical.limit(1).count() == 0)
     }
   }
 
   /** The rows of `edges`, an edge projection whose last column is
     * relType, and that column case-folded by [[DriverPath.lowerAscii]]:
-    * one probe with no Spark `lower` in its plan. None over `driverLimit`
-    * rows or on a non-ASCII type, which take the distributed forms.
+    * one probe with no Spark `lower` in its plan, keyed on the endpoints.
+    * None over `driverLimit` rows, on a null endpoint or on a non-ASCII
+    * type, which take the distributed forms.
     */
   private def foldedEdges(edges: DataFrame, driverLimit: Long): Option[(Array[Row], Array[String])] =
-    DriverPath.probe(edges, driverLimit).flatMap { raw =>
+    DriverPath.probe(edges, driverLimit, "srcId", "dstId").flatMap { raw =>
       DriverPath.lowerAscii(raw.map(_.getString(edges.columns.length - 1))).map(raw -> _)
     }
 
-  /** V1–V4 of [[verify]] on the driver, in the distributed union's order
-    * (V1, V2 by source then by destination, V3, V4), or None when the
-    * graph takes the distributed form.
+  /** V1–V4 of [[verify]] on the driver from the [[foldedEdges]] of
+    * (id, srcId, dstId, relType), in the distributed union's order (V1, V2
+    * by source then by destination, V3, V4), or None when the graph takes
+    * the distributed form.
     */
-  private def driverIssues(g: Graph, driverLimit: Long): Option[Seq[Issue]] = {
-    val (raw, rts) = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType"),
-      driverLimit).getOrElse(return None)
+  private def driverIssues(g: Graph, raw: Array[Row], rts: Array[String],
+                           driverLimit: Long): Option[Seq[Issue]] = {
     val ids = graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).getOrElse(return None).toSet
     val es = raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
-    // V2 is two anti-joins: a null endpoint matches no node id, so its
-    // edge is reported, as is an endpoint missing from the node ids
+    // V2 is two anti-joins: an endpoint missing from the node ids is reported
     def dangling(end: ((String, String, String, String)) => String) =
-      es.collect { case e if end(e) == null || !ids(end(e)) => danglingIssue(e._1, end(e)) }
+      es.collect { case e if !ids(end(e)) => danglingIssue(e._1, end(e)) }
     for {
       v1 <- driverCycles(es.collect { case (_, s, d, rt) if HierarchicalTypes.contains(rt) => (s, d) },
         CycleDepth)

@@ -178,24 +178,20 @@ object ConnectedComponents {
     // small-graph CC path) AND the isolated-id passthrough run in memory
     // as one local relation — the anti-join + union otherwise costs ~6
     // distributed jobs to append ids the driver has already seen.
-    // Normalization mirrors run(): cast-to-string, self-loop and
-    // null-endpoint rows dropped (=!= never holds on null), Set ≡
-    // distinct; null ids in allIds stay isolated rows exactly like the
-    // null-key left-anti join keeps them.
+    // Normalization mirrors run(): cast-to-string, self-loops dropped,
+    // Set ≡ distinct.
     locally {
       val spark = edges.sparkSession
       import spark.implicits._
       DriverPath.probe(
         edges.select(col("src").cast("string"), col("dst").cast("string")),
-        driverLimit).foreach { raw =>
+        driverLimit, "src", "dst").foreach { raw =>
         DriverPath.probe(
-          allIds.select(col("id").cast("string")), driverLimit).foreach { idRows =>
-          val pairs = raw.map(r => (r.getString(0), r.getString(1)))
-            .filter(p => p._1 != null && p._2 != null && p._1 != p._2).distinct
+          allIds.select(col("id").cast("string")), driverLimit, "id").foreach { idRows =>
+          val pairs = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2).distinct
           val ccRows = unionFindRows(pairs)
           val ccIds = ccRows.map(_._1).toSet
-          val isolated = idRows.map(_.getString(0)).toSeq
-            .filterNot(id => id != null && ccIds(id)).map(id => (id, id))
+          val isolated = idRows.map(_.getString(0)).toSeq.filterNot(ccIds).map(id => (id, id))
           return (ccRows ++ isolated).toDF("id", "comp")
         }
       }

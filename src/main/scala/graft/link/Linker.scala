@@ -154,7 +154,7 @@ object Linker {
     import spark.implicits._
 
     val comps: DataFrame =
-      DriverPath.probe(entities.select($"id", $"name", $"entityType"), driverLimit) match {
+      DriverPath.probe(entities.select($"id", $"name", $"entityType"), driverLimit, "id") match {
         case Some(rows) => driverComps(spark,
           rows.map(r => (r.getString(0), r.getString(1), r.getString(2))), threshold)
         case None => ConnectedComponents.run(

@@ -145,8 +145,7 @@ object Dedup {
                          driverLimit: Long): Option[Array[(Long, String)]] = {
     val sel = docs.select(col(idCol), col(textCol))
     if (sel.schema(0).dataType != LongType || sel.schema(1).dataType != StringType) return None
-    val raw = DriverPath.probe(sel, driverLimit).getOrElse(return None)
-    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val raw = DriverPath.probe(sel, driverLimit, idCol, textCol).getOrElse(return None)
     val ds = raw.map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     if (ds.indices.exists(i => i > 0 && ds(i)._1 == ds(i - 1)._1)) None else Some(ds)
   }

@@ -110,66 +110,56 @@ object GraphQueryOps {
     // graphs. The winner rule is the same min(struct(fromId, relId,
     // relType, direction)) in Spark's binary string order (Utf8Order);
     // GraphQuerySpec pins driver ≡ distributed.
-    locally {
-      // explicit column order: the entityTypes join reorders adj's columns
-      val rowsOpt = DriverPath.probe(
-        adj.select("fromId", "toId", "relId", "relType", "direction"), driverLimit)
-      rowsOpt.foreach { rows =>
-        val tuples = rows.map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4)))
-        // a null endpoint is NOT output-inert in the distributed loop
-        // (GROUP BY groups null children together and can emit a
-        // null-child row) — rather than replicate SQL null grouping in
-        // Scala maps, bail to the distributed path on malformed input
-        if (tuples.forall(t => t._1 != null && t._2 != null)) {
-          val byFrom = tuples.groupBy(_._1)
-        val visited = scala.collection.mutable.HashSet(startId)
-        var frontier = Array(startId)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, String, String, String, Int)]
-        var depth = 1
-        while (depth <= maxDepth && frontier.nonEmpty) {
-          // winner per child: min over (fromId, relId, relType, direction)
-          // in UTF-8 binary order — field by field, like min(struct(...))
-          val best = scala.collection.mutable.HashMap
-            .empty[String, (String, String, String, String)]
-          frontier.foreach { f =>
-            byFrom.getOrElse(f, Array.empty).foreach {
-              case (fromId, toId, relId, relType, dir2) =>
-                if (!visited.contains(toId)) {
-                  val cand = (fromId, relId, relType, dir2)
-                  val cur = best.get(toId)
-                  // a null field sorts first, as in min(struct(...))
-                  def cmp(x: String, y: String): Int =
-                    if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
-                    else graft.runtime.Utf8Order.compare(x, y)
-                  def lt(a: (String, String, String, String),
-                         b: (String, String, String, String)): Boolean = {
-                    val c1 = cmp(a._1, b._1)
-                    if (c1 != 0) return c1 < 0
-                    val c2 = cmp(a._2, b._2)
-                    if (c2 != 0) return c2 < 0
-                    val c3 = cmp(a._3, b._3)
-                    if (c3 != 0) return c3 < 0
-                    cmp(a._4, b._4) < 0
-                  }
-                  if (cur.isEmpty || lt(cand, cur.get)) best(toId) = cand
+    // explicit column order: the entityTypes join reorders adj's columns
+    DriverPath.probe(adj.select("fromId", "toId", "relId", "relType", "direction"),
+      driverLimit, "fromId", "toId").foreach { rows =>
+      val byFrom = rows.map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4))).groupBy(_._1)
+      val visited = scala.collection.mutable.HashSet(startId)
+      var frontier = Array(startId)
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(String, String, String, String, String, Int)]
+      var depth = 1
+      while (depth <= maxDepth && frontier.nonEmpty) {
+        // winner per child: min over (fromId, relId, relType, direction)
+        // in UTF-8 binary order — field by field, like min(struct(...))
+        val best = scala.collection.mutable.HashMap
+          .empty[String, (String, String, String, String)]
+        frontier.foreach { f =>
+          byFrom.getOrElse(f, Array.empty).foreach {
+            case (fromId, toId, relId, relType, dir2) =>
+              if (!visited.contains(toId)) {
+                val cand = (fromId, relId, relType, dir2)
+                val cur = best.get(toId)
+                // a null field sorts first, as in min(struct(...))
+                def cmp(x: String, y: String): Int =
+                  if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
+                  else graft.runtime.Utf8Order.compare(x, y)
+                def lt(a: (String, String, String, String),
+                       b: (String, String, String, String)): Boolean = {
+                  val c1 = cmp(a._1, b._1)
+                  if (c1 != 0) return c1 < 0
+                  val c2 = cmp(a._2, b._2)
+                  if (c2 != 0) return c2 < 0
+                  val c3 = cmp(a._3, b._3)
+                  if (c3 != 0) return c3 < 0
+                  cmp(a._4, b._4) < 0
                 }
-            }
+                if (cur.isEmpty || lt(cand, cur.get)) best(toId) = cand
+              }
           }
-          val children = best.keys.toArray.sorted
-          children.foreach { c =>
-            val (p, rid, rt, dir2) = best(c)
-            out += ((p, rid, rt, dir2, c, depth))
-          }
-          visited ++= children
-          frontier = children
-          depth += 1
         }
-          return out.toSeq
-            .toDF("parentId", "relId", "relType", "direction", "childId", "depth")
+        val children = best.keys.toArray.sorted
+        children.foreach { c =>
+          val (p, rid, rt, dir2) = best(c)
+          out += ((p, rid, rt, dir2, c, depth))
         }
+        visited ++= children
+        frontier = children
+        depth += 1
       }
+      return out.toSeq
+        .toDF("parentId", "relId", "relType", "direction", "childId", "depth")
     }
 
     var visited = Seq(startId).toDF("id")
@@ -235,7 +225,7 @@ object GraphQueryOps {
     // is free, and skipping distinct keeps the probe an exchange-free scan.
     locally {
       val esOpt = DriverPath.probe(
-        g.edges.toDF().select($"srcId", $"dstId"), driverLimit)
+        g.edges.toDF().select($"srcId", $"dstId"), driverLimit, "srcId", "dstId")
       esOpt.foreach { raw =>
         val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
         // sorted neighbor lists: enumeration order is deterministic (the
@@ -479,14 +469,11 @@ object GraphQueryOps {
 
   /** The sorted node ids (duplicates kept, so the length is the node
     * count `n`) when the node table fits the driver limit: one probe job
-    * serves both the size gate and the ids of the driver mirrors. A null
-    * id sends every caller to its distributed form (as traverse does on a
-    * null endpoint): the mirrors key maps by id and do not replicate how
-    * SQL groups and joins a null.
+    * serves both the size gate and the ids of the driver mirrors.
     */
   private[graft] def driverNodeIds(g: Graph, driverLimit: Long): Option[Array[String]] =
-    DriverPath.probe(g.nodes.toDF().select(col("id")), driverLimit)
-      .map(_.map(_.getString(0))).filterNot(_.contains(null)).map(_.sorted)
+    DriverPath.probe(g.nodes.toDF().select(col("id")), driverLimit, "id")
+      .map(_.map(_.getString(0)).sorted)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.
@@ -499,7 +486,8 @@ object GraphQueryOps {
     // only the distributed loop's lineage anchor, and paying its job (plus
     // a count) just to decide the path wasted two jobs per call (round-7)
     for (ids <- driverNodeIds(g, driverLimit);
-         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit))
+         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit,
+           "srcId", "dstId"))
       return pagerankDriver(spark, ids,
         raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations, damping)
     val n = g.nodes.count().toDouble
@@ -538,24 +526,21 @@ object GraphQueryOps {
     * r'(v) = (1−d)/n + d·(Σ_{u→v} r(u)/outdeg(u) + D/n), contributions
     * and the dangling mass D summed in sorted-id order from 0.0 — the
     * same IEEE operations the distributed path performs for in-degree ≤ 2
-    * and deterministic regardless.
+    * and deterministic regardless. Ranks are per node ROW, as the
+    * distributed joins hold them: each copy of a repeated id has its own
+    * rank and contributes it.
     */
   private def pagerankDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
                              es: Array[(String, String)],
                              iterations: Int, damping: Double): DataFrame = {
     import spark.implicits._
     val n = ids.length.toDouble
-    val idx = ids.zipWithIndex.toMap
     // out-degree counts ALL of a node's edges (even to dangling targets),
     // exactly like the distributed groupBy(srcId) — a node whose edges
     // all point at unknown ids is NOT a dangling node
-    val outDeg = new Array[Int](ids.length)
-    es.foreach { case (s, _) => idx.get(s).foreach(i => outDeg(i) += 1) }
-    // in-edges per known target from known sources, sorted by source id
-    // for a fixed sum order
-    val inEdges = es.filter(p => idx.contains(p._1) && idx.contains(p._2))
-      .sortBy(_._1).groupBy(_._2)
-      .map { case (d, ps) => idx(d) -> ps.map(p => idx(p._1)) }
+    val outCount = es.groupBy(_._1).map { case (s, ps) => s -> ps.length }
+    val outDeg = ids.map(outCount.getOrElse(_, 0))
+    val inEdges = inRows(ids, es)
     val c = (1.0 - damping) / n
     var r = Array.fill(ids.length)(1.0 / n)
     var it = 0
@@ -570,15 +555,25 @@ object GraphQueryOps {
       v = 0
       while (v < ids.length) {
         var inSum = 0.0
-        inEdges.get(v).foreach(_.foreach(u => inSum += r(u) / outDeg(u)))
+        inEdges(v).foreach(u => inSum += r(u) / outDeg(u))
         nr(v) = c + damping * (inSum + dangling / n)
         v += 1
       }
       r = nr
       it += 1
     }
-    spark.createDataset(ids.toIndexedSeq.map(id => (id, r(idx(id)))))
-      .toDF("id", "rank")
+    spark.createDataset(ids.indices.map(v => (ids(v), r(v)))).toDF("id", "rank")
+  }
+
+  /** Per node row of `ids`, the rows of the sources of its `(src, dst)`
+    * edges from node ids, sorted by source id for a fixed sum order.
+    */
+  private def inRows(ids: Array[String], es: Array[(String, String)]): Array[IndexedSeq[Int]] = {
+    val rows = ids.indices.groupBy(ids(_))
+    val in = es.filter(p => rows.contains(p._1) && rows.contains(p._2))
+      .sortBy(_._1).groupBy(_._2)
+      .map { case (d, ps) => d -> ps.toIndexedSeq.flatMap(p => rows(p._1)) }
+    ids.map(in.getOrElse(_, IndexedSeq.empty))
   }
 
   /** Q9 eigenvector centrality — power iteration on the undirected
@@ -598,7 +593,7 @@ object GraphQueryOps {
     // driver probes before the distinct+localCheckpoint (see pagerank)
     for (ids <- driverNodeIds(g, driverLimit);
          raw <- DriverPath.probe(dir.union(dir.select($"dst".as("src"), $"src".as("dst"))),
-           driverLimit))
+           driverLimit, "src", "dst"))
       return eigenvectorDriver(spark, ids,
         raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations)
     val n = g.nodes.count().toDouble
@@ -625,32 +620,30 @@ object GraphQueryOps {
       // more than the extra fixed-latency materialization jobs
       if (i % 8 == 7) {
         val norm = math.sqrt(
-          joined.agg(sum($"raw" * $"raw")).head().getDouble(0).max(1e-300))
+          joined.agg(coalesce(sum($"raw" * $"raw"), lit(0.0))).head().getDouble(0).max(1e-300))
         x = joined.select($"id", ($"raw" / norm).as("score")).localCheckpoint(true)
       } else {
         x = joined.select($"id", $"raw".as("score")).localCheckpoint(true)
       }
       i += 1
     }
+    // an empty node table sums to null: 0.0, as the driver path sums it
     val fnorm = math.sqrt(
-      x.agg(sum($"score" * $"score")).head().getDouble(0).max(1e-300))
+      x.agg(coalesce(sum($"score" * $"score"), lit(0.0))).head().getDouble(0).max(1e-300))
     x.select($"id", ($"score" / fnorm).as("score"))
   }
 
   /** In-memory power iteration replicating the distributed loop: raw(v) =
     * x(v) + Σ_{u~v} x(u) (neighbor sums in sorted-id order from 0.0), L2
     * normalization every 8th iteration and at the end — the same shift,
-    * cadence, and floor as the join-aggregate path.
+    * cadence, and floor as the join-aggregate path; per node row, as in
+    * [[pagerankDriver]].
     */
   private def eigenvectorDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
                                 und: Array[(String, String)], iterations: Int): DataFrame = {
     import spark.implicits._
     val n = ids.length.toDouble
-    val idx = ids.zipWithIndex.toMap
-    val nbrs = und
-      .filter(p => idx.contains(p._1) && idx.contains(p._2))
-      .sortBy(_._1).groupBy(_._2)
-      .map { case (d, ps) => idx(d) -> ps.map(p => idx(p._1)) }
+    val nbrs = inRows(ids, und)
     var x = Array.fill(ids.length)(1.0 / math.sqrt(n))
     var i = 0
     while (i < iterations) {
@@ -658,7 +651,7 @@ object GraphQueryOps {
       var v = 0
       while (v < ids.length) {
         var s = 0.0
-        nbrs.get(v).foreach(_.foreach(u => s += x(u)))
+        nbrs(v).foreach(u => s += x(u))
         raw(v) = x(v) + s
         v += 1
       }
@@ -673,8 +666,7 @@ object GraphQueryOps {
     var sq = 0.0
     x.foreach(r => sq += r * r)
     val fnorm = math.sqrt(sq.max(1e-300))
-    spark.createDataset(ids.toIndexedSeq.map(id => (id, x(idx(id)) / fnorm)))
-      .toDF("id", "score")
+    spark.createDataset(ids.indices.map(v => (ids(v), x(v) / fnorm))).toDF("id", "score")
   }
 
   /** Deterministic source sample for the sampled centralities: the s node
@@ -685,21 +677,23 @@ object GraphQueryOps {
     g.nodes.toDF().select(col("id"))
       .orderBy(xxhash64(col("id")), col("id")).limit(s)
 
-  /** The `(from, to)` projection of a frame's `(srcId, dstId)` edges. */
-  private def fromTo(edges: DataFrame): DataFrame =
-    edges.select(col("srcId").as("from"), col("dstId").as("to"))
+  /** The distinct `(from, to)` pairs of a frame's `(srcId, dstId)` edges,
+    * checkpointed: the edge set every BFS depth (and Brandes' backward
+    * pass) joins.
+    */
+  private def bfsEdges(edges: DataFrame): DataFrame =
+    edges.select(col("srcId").as("from"), col("dstId").as("to")).distinct().localCheckpoint(true)
 
-  /** Multi-source lockstep BFS over the directed `(from, to)` edges: for
-    * every sampled source, (src, id, dist, sigma = #shortest paths from
-    * src to id), one frontier join per depth. Unit edge weights.
+  /** Multi-source lockstep BFS over the [[bfsEdges]] `edges`: for every
+    * sampled source, (src, id, dist, sigma = #shortest paths from src to
+    * id), one frontier join per depth. Unit edge weights.
     * @return (settledAllDepths, perDepthLevels) — levels are needed by the
     *         Brandes backward pass.
     */
-  private def multiSourceBfs(directed: DataFrame, sources: DataFrame, maxDepth: Int)
+  private def multiSourceBfs(edges: DataFrame, sources: DataFrame, maxDepth: Int)
       : (DataFrame, Seq[DataFrame]) = {
-    val spark = directed.sparkSession
+    val spark = edges.sparkSession
     import spark.implicits._
-    val edges = directed.distinct().localCheckpoint(true)
     var frontier = sources.select($"id".as("src"), $"id", lit(0).as("dist"),
       lit(1L).as("sigma")).localCheckpoint(true)
     var settled = frontier
@@ -795,24 +789,32 @@ object GraphQueryOps {
         org.apache.spark.unsafe.types.UTF8String.fromString(id), 42L), id))
       .take(samples)
 
-  /** Collected (id-indexed) graph for the BFS fast paths over the probed
-    * `nodeIds`, or None when the edge set exceeds the driver limit. The
-    * index covers node ids AND all edge endpoints — the distributed
-    * frontier join traverses THROUGH ids absent from the node table, and
-    * the fast path must too.
+  /** The driver prologue of the BFS centralities: the probed node ids, the
+    * id index and adjacency of the `(srcId, dstId)` edges `edgeDf`, and one
+    * [[driverBfs]] tree per sampled source; None (the distributed form)
+    * when either probe refuses. The index covers node ids AND all edge
+    * endpoints — the distributed frontier join traverses THROUGH ids
+    * absent from the node table, and the fast path must too.
     */
-  private def collectForBfs(nodeIds: Array[String], edgeDf: DataFrame, driverLimit: Long)
-      : Option[(Map[Int, Array[Int]], Map[String, Int])] = {
-    val raw = DriverPath.probe(edgeDf, driverLimit).getOrElse(return None)
+  private final case class DriverBfsRun(nodeIds: Array[String], idx: Map[String, Int],
+                                        adj: Map[Int, Array[Int]], sampled: Int,
+                                        trees: Seq[BfsTree])
+
+  private def driverBfsRun(g: Graph, edgeDf: DataFrame, samples: Int, maxDepth: Int,
+                           driverLimit: Long): Option[DriverBfsRun] = {
+    val nodeIds = driverNodeIds(g, driverLimit).getOrElse(return None)
+    val raw = DriverPath.probe(edgeDf, driverLimit, "srcId", "dstId").getOrElse(return None)
     // in-memory dedup: callers pass the pre-distinct pair projection, so
-    // the probe stays an exchange-free scan (the distributed paths build
-    // their own distinct edge sets)
+    // the probe stays an exchange-free scan
     val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
-    val allIds = (nodeIds ++ es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val idx = allIds.zipWithIndex.toMap
+    val idx = (nodeIds ++ es.map(_._1) ++ es.map(_._2)).distinct.sorted.zipWithIndex.toMap
     val adj = es.map { case (a, b) => (idx(a), idx(b)) }
       .groupBy(_._1).map { case (u, ps) => u -> ps.map(_._2).sorted }
-    Some((adj, idx))
+    // a repeated id is sampled once per copy (the estimators' s) but, as
+    // the distributed frontier groups by source, walked once
+    val srcs = driverSampleSources(nodeIds, samples)
+    Some(DriverBfsRun(nodeIds, idx, adj, srcs.length,
+      driverBfs(adj, srcs.distinct.map(idx).toSeq, maxDepth)))
   }
 
   /** Q9 closeness centrality (incoming distances, networkx semantics) via
@@ -831,35 +833,30 @@ object GraphQueryOps {
                           driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverNodeIds(g, driverLimit).foreach { nodeIds =>
-      val n = nodeIds.length.toDouble
-      // pre-distinct projection: collectForBfs dedups in memory
-      val edgeDf = g.edges.toDF().select($"srcId", $"dstId")
-      collectForBfs(nodeIds, edgeDf, driverLimit).foreach { case (adj, idx) =>
-        val srcs = driverSampleSources(nodeIds, samples)
-        val f = n / srcs.length.toDouble
-        val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
+    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth, driverLimit)
+      .foreach { run =>
+        val n = run.nodeIds.length.toDouble
+        val f = n / run.sampled
         val sumDist = scala.collection.mutable.HashMap.empty[Int, Long]
         val reached = scala.collection.mutable.HashMap.empty[Int, Long]
-        trees.foreach(_.dist.foreach { case (v, d) =>
+        run.trees.foreach(_.dist.foreach { case (v, d) =>
           if (d > 0) {
             sumDist(v) = sumDist.getOrElse(v, 0L) + d
             reached(v) = reached.getOrElse(v, 0L) + 1L
           }
         })
-        return spark.createDataset(nodeIds.toIndexedSeq.map { id =>
-          val v = idx(id)
+        return spark.createDataset(run.nodeIds.toIndexedSeq.map { id =>
+          val v = run.idx(id)
           val sd = sumDist.getOrElse(v, 0L)
           val r = reached.getOrElse(v, 0L)
           // the distributed expression verbatim: (r·r·f) / ((n−1)·Σd)
           (id, if (sd > 0) (r * r * f) / ((n - 1) * sd) else 0.0)
         }).toDF("id", "closeness")
       }
-    }
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
-    val (settled, _) = multiSourceBfs(fromTo(g.edges.toDF()), sources, maxDepth)
+    val (settled, _) = multiSourceBfs(bfsEdges(g.edges.toDF()), sources, maxDepth)
     // Wasserman–Faust closeness under source sampling: with r_v sampled
     // reachers (dist>0) and inflation f = n/s, the estimated reacher
     // count is r·f and the estimated distance sum Σ·f, so
@@ -887,22 +884,16 @@ object GraphQueryOps {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val dir = g.edges.toDF().select($"srcId", $"dstId")
-    driverNodeIds(g, driverLimit).foreach { nodeIds =>
-      // pre-distinct projection: collectForBfs dedups in memory
-      val undDf = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-      collectForBfs(nodeIds, undDf, driverLimit).foreach { case (adj, idx) =>
-        val srcs = driverSampleSources(nodeIds, samples)
-        val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
-        var s = 0L
-        var c = 0L
-        trees.foreach(_.dist.foreach { case (_, d) =>
-          if (d > 0) { s += d; c += 1 }
-        })
-        return if (c == 0) 0.0 else s.toDouble / c
-      }
-    }
     val und = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-    val (settled, _) = multiSourceBfs(fromTo(und), sampleSources(g, samples), maxDepth)
+    driverBfsRun(g, und, samples, maxDepth, driverLimit).foreach { run =>
+      var s = 0L
+      var c = 0L
+      run.trees.foreach(_.dist.foreach { case (_, d) =>
+        if (d > 0) { s += d; c += 1 }
+      })
+      return if (c == 0) 0.0 else s.toDouble / c
+    }
+    val (settled, _) = multiSourceBfs(bfsEdges(und), sampleSources(g, samples), maxDepth)
     val row = settled.where($"dist" > 0)
       .agg(coalesce(sum($"dist"), lit(0L)).as("s"), count(lit(1)).as("c")).head()
     if (row.getLong(1) == 0) 0.0 else row.getLong(0).toDouble / row.getLong(1)
@@ -920,26 +911,22 @@ object GraphQueryOps {
                             driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverNodeIds(g, driverLimit).foreach { nodeIds =>
-      val n = nodeIds.length.toDouble
-      // pre-distinct projection: collectForBfs dedups in memory
-      val edgeDf = g.edges.toDF().select($"srcId", $"dstId")
-      collectForBfs(nodeIds, edgeDf, driverLimit).foreach { case (adj, idx) =>
-        val srcs = driverSampleSources(nodeIds, samples)
-        val sCnt = srcs.length.toDouble
-        val trees = driverBfs(adj, srcs.map(idx).toSeq, maxDepth)
+    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth, driverLimit)
+      .foreach { run =>
+        val n = run.nodeIds.length.toDouble
+        val sCnt = run.sampled.toDouble
         val raw = scala.collection.mutable.HashMap.empty[Int, Double]
         // Brandes backward pass per tree, deepest level first; successor
         // and source sums in sorted order (the distributed groupBy order
         // is arbitrary — fp-identical on unique-path graphs, ≡ to 1e-9
         // otherwise, GraphQuerySpec-pinned)
-        trees.foreach { t =>
+        run.trees.foreach { t =>
           val delta = scala.collection.mutable.HashMap.empty[Int, Double]
           var d = t.levels.size - 2
           while (d >= 0) {
             t.levels(d).foreach { v =>
               var c = 0.0
-              adj.getOrElse(v, Array.empty[Int]).foreach { w =>
+              run.adj.getOrElse(v, Array.empty[Int]).foreach { w =>
                 if (t.dist.get(w).contains(t.dist(v) + 1))
                   c += (t.sigma(v).toDouble / t.sigma(w)) * (1.0 + delta.getOrElse(w, 0.0))
               }
@@ -955,16 +942,16 @@ object GraphQueryOps {
           if (!normalized) n / sCnt
           else if (n > 2) (n / sCnt) / ((n - 1) * (n - 2))
           else 1.0
-        return spark.createDataset(nodeIds.toIndexedSeq.map { id =>
-          (id, raw.getOrElse(idx(id), 0.0) * scale)
+        return spark.createDataset(run.nodeIds.toIndexedSeq.map { id =>
+          (id, raw.getOrElse(run.idx(id), 0.0) * scale)
         }).toDF("id", "betweenness")
       }
-    }
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
-    val (_, levels) = multiSourceBfs(fromTo(g.edges.toDF()), sources, maxDepth)
-    val edges = fromTo(g.edges.toDF()).distinct().localCheckpoint(true)
+    // one checkpointed edge set serves the forward BFS and the backward pass
+    val edges = bfsEdges(g.edges.toDF())
+    val (_, levels) = multiSourceBfs(edges, sources, maxDepth)
 
     // backward accumulation, deepest level first: δ of depth d+1 is final
     // before depth d consumes it (one join per level, all sources at once)

@@ -118,18 +118,17 @@ object Reasoning {
     * step: the same 2-hop (a ≠ c) and 3-hop (a ≠ d) chains within one
     * type, the same products in the same order, `max` over paths and
     * `>= minConfidence` in Spark's double order, and the anti-join against
-    * every direct edge of the type. A null endpoint never joins, and a
-    * path through a null confidence has a null product, which `max`
-    * skips. None (the distributed form) over the limit, on a non-ASCII
-    * relation type, or past [[DriverPath.PairBound]] paths.
+    * every direct edge of the type. A path through a null confidence has
+    * a null product, which `max` skips. None (the distributed form) over
+    * the limit, on a null endpoint or a non-ASCII relation type, or past
+    * [[DriverPath.PairBound]] paths.
     */
   private def driverTransitive(g: Graph, minConfidence: Double,
                                driverLimit: Long): Option[DataFrame] = {
     val raw = DriverPath.probe(g.edges.toDF().select("srcId", "dstId", "relType", "confidence"),
-      driverLimit).getOrElse(return None)
+      driverLimit, "srcId", "dstId").getOrElse(return None)
     val rts = DriverPath.lowerAscii(raw.map(_.getString(2))).getOrElse(return None)
-    val es = raw.indices.collect { case i if TransitiveTypes.contains(rts(i)) &&
-      raw(i).getString(0) != null && raw(i).getString(1) != null =>
+    val es = raw.indices.collect { case i if TransitiveTypes.contains(rts(i)) =>
       (raw(i).getString(0), raw(i).getString(1), rts(i), raw(i).get(3))
     }
     val existing = es.map(e => (e._1, e._2, e._3)).toSet
@@ -254,19 +253,27 @@ object Reasoning {
                           driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val opp = broadcast(Opposites.toDF("rtA", "rtB"))
-    val e = lowered(g).where($"confidence" >= confidenceThreshold)
-      .select($"id", $"srcId", $"dstId", $"rt", $"confidence")
-    val a = e.select($"srcId", $"dstId", $"id".as("idA"), $"rt".as("rtA"), $"confidence".as("confA"))
-    val b = e.select($"srcId", $"dstId", $"id".as("idB"), $"rt".as("rtB"), $"confidence".as("confB"))
-    val distributed = a.join(b, Seq("srcId", "dstId")).where($"idA" < $"idB")
-      .join(opp, Seq("rtA", "rtB"), "left_semi")
+    val distributed = oppositePairs(g, confidenceThreshold)
       .select($"srcId", $"dstId", $"idA", $"idB", $"rtA", $"rtB",
         least($"confA", $"confB").as("confidence"),
         lit("contradictory_relationships").as("conflictType"),
         lit("high").as("severity"))
     driverContradictory(g, confidenceThreshold, driverLimit, distributed.schema)
       .getOrElse(distributed)
+  }
+
+  /** The same-endpoint self-join behind X4 and X8: edge pairs A, B with
+    * lowered types rtA, rtB opposite, both confidences at least
+    * `confidenceThreshold`, and idA < idB.
+    */
+  private def oppositePairs(g: Graph, confidenceThreshold: Double): DataFrame = {
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
+    val e = lowered(g).where($"confidence" >= confidenceThreshold)
+    val a = e.select($"srcId", $"dstId", $"id".as("idA"), $"rt".as("rtA"), $"confidence".as("confA"))
+    val b = e.select($"srcId", $"dstId", $"id".as("idB"), $"rt".as("rtB"), $"confidence".as("confB"))
+    a.join(b, Seq("srcId", "dstId")).where($"idA" < $"idB")
+      .join(broadcast(Opposites.toDF("rtA", "rtB")), Seq("rtA", "rtB"), "left_semi")
   }
 
   private val OppositeSet: Set[(String, String)] = Opposites.toSet
@@ -282,7 +289,7 @@ object Reasoning {
                                   schema: StructType): Option[DataFrame] = {
     val raw = DriverPath.probe(
       g.edges.toDF().select("id", "srcId", "dstId", "relType", "confidence"),
-      driverLimit).getOrElse(return None)
+      driverLimit, "srcId", "dstId").getOrElse(return None)
     val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
     val kept = raw.indices.filter(i => !raw(i).isNullAt(4) &&
       DriverPath.compareDoubles(raw(i).getDouble(4), confidenceThreshold) >= 0)
@@ -387,19 +394,10 @@ object Reasoning {
     g.edges.join(loserIds(g, confidenceThreshold), Seq("id"), "left_anti").as[Triple]
   }
 
-  private def loserIds(g: Graph, confidenceThreshold: Double): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val opp = broadcast(Opposites.toDF("rtA", "rtB"))
-    val e = lowered(g).where($"confidence" >= confidenceThreshold)
-      .select($"id", $"srcId", $"dstId", $"rt", $"confidence")
-    val a = e.select($"srcId", $"dstId", $"id".as("idA"), $"rt".as("rtA"), $"confidence".as("confA"))
-    val b = e.select($"srcId", $"dstId", $"id".as("idB"), $"rt".as("rtB"), $"confidence".as("confB"))
-    a.join(b, Seq("srcId", "dstId")).where($"idA" < $"idB")
-      .join(opp, Seq("rtA", "rtB"), "left_semi")
-      .select(when($"confA" >= $"confB", $"idB").otherwise($"idA").as("id"))
+  private def loserIds(g: Graph, confidenceThreshold: Double): DataFrame =
+    oppositePairs(g, confidenceThreshold)
+      .select(when(col("confA") >= col("confB"), col("idB")).otherwise(col("idA")).as("id"))
       .distinct()
-  }
 
   /** X9 resolve property conflicts: highest-confidence same-name entity's
     * attribute values win (graph_reasoning.py:508-559) — keep-max window +

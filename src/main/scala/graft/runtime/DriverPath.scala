@@ -20,6 +20,14 @@ import org.apache.spark.sql.execution.SQLExecution
  * jobs, each re-running the lineage): both read every row of an input
  * far over the limit, while this probe reads at most `lim + 1` rows per
  * partition.
+ *
+ * The null rule of every mirror: a null in a key column — a node or
+ * entity id, an edge endpoint — sends the call to its distributed form.
+ * SQL never joins or groups a null the way a Scala map keys it, so no
+ * mirror replicates it; each names its key columns to [[probe]], which
+ * answers None for them. Payload columns (an edge id, a relation type, a
+ * confidence, a name) stay on the driver: a null there sorts first, as in
+ * `min(struct(...))`, and fails `<` and `>=`, as in SQL.
  */
 object DriverPath {
 
@@ -60,15 +68,24 @@ object DriverPath {
     * order from the same pass, and the driver never holds more than
     * `lim` of them. A small but skewed input (one partition over its
     * share) pays one fallback `collect()`, whose length is re-checked.
-    * `lim` is clamped to the largest array the driver can hold. An
-    * `observe` on a rejected input counts only the rows the probe read.
+    * `lim` is clamped to the largest array the driver can hold; a negative
+    * `lim` refuses with no job. An `observe` on a rejected input counts
+    * only the rows the probe read.
     *
     * A plan that optimizes to a local relation (a driver mirror's result,
     * a filter or projection of one, an empty relation) is answered from
     * its rows with no job and no SQL execution, under the same limit: so
     * one mirror reads another's result for free.
+    *
+    * None also when a fetched row has a null in one of the `keys` columns
+    * (the null rule above), from the same rows and with no further job.
     */
-  def probe(df: DataFrame, lim: Long): Option[Array[Row]] = {
+  def probe(df: DataFrame, lim: Long, keys: String*): Option[Array[Row]] = {
+    val ks = keys.map(df.schema.fieldIndex)
+    fetch(df, lim).filterNot(_.exists(r => ks.exists(r.isNullAt)))
+  }
+
+  private def fetch(df: DataFrame, lim: Long): Option[Array[Row]] = {
     val cap = math.min(lim, Int.MaxValue - 2L)
     if (cap < 0) return None
     val qe = df.queryExecution

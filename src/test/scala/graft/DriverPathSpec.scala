@@ -12,7 +12,8 @@ import graft.runtime.DriverPath
 
 /** The size gate every driver fast path takes: `DriverPath.probe(df, lim)`
   * is `Some(df.collect())` (same rows, same order) exactly when `df` has
-  * at most `lim` rows, in one early-stopping job.
+  * at most `lim` rows, in one early-stopping job; and None when a row has
+  * a null in one of the key columns it is given.
   */
 class DriverPathSpec extends SparkSpec {
 
@@ -116,5 +117,23 @@ class DriverPathSpec extends SparkSpec {
       assert(refused.isEmpty && j2 == 0, s"n=$n")
     }
     assert(!DriverPath.isLocal(input(Seq(1, 2))))
+  }
+
+  test("the null rule: a null key refuses from the same job; a null payload comes back") {
+    import spark.implicits._
+    // 4 partitions × 3 rows: row i = 2 of every partition has a null s
+    val df = input(Seq(3, 3, 3, 3))
+    val (keyed, j1) = jobsOf(DriverPath.probe(df, 20, "p", "s"))
+    assert(keyed.isEmpty && j1 == 1, s"jobs=$j1")
+    val (payload, j2) = jobsOf(DriverPath.probe(df, 20, "p", "i"))
+    assert(payload.map(_.map(_.toSeq).toSeq).contains(df.collect().map(_.toSeq).toSeq) && j2 == 1)
+    assert(payload.exists(_.exists(_.isNullAt(2))))
+    // no keys: the rows, nulls included, as before
+    assert(DriverPath.probe(df, 20).map(_.length).contains(12))
+    // a local relation with a null key: refused with no job
+    val local = Seq(("a", "x"), (null, "y")).toDF("id", "v")
+    val (refused, j3) = jobsOf(DriverPath.probe(local, 10, "id"))
+    assert(refused.isEmpty && j3 == 0, s"jobs=$j3")
+    assert(DriverPath.probe(local, 10, "v").map(_.length).contains(2))
   }
 }

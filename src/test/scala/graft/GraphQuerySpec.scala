@@ -271,24 +271,44 @@ class GraphQuerySpec extends SparkSpec {
     assert(math.abs(total - 1.0) < 1e-6, s"sum=$total")
   }
 
-  test("centrality driver fast path ≡ distributed join-aggregate loop") {
+  /** The centrality fixture: 40 nodes, hubs + a dangling tail,
+    * deterministic pseudo-random wiring — PLUS edges through a ghost id
+    * absent from the node table (the distributed BFS frontier traverses
+    * through unknown endpoints; the driver fast path must replicate that).
+    */
+  private def centralityGraph: graft.graphout.GraphBuilder.Graph = {
     import spark.implicits._
     import graft.model.{Entity, Triple}
     def ent(id: String) = Entity(id, id, "t", None, Map.empty, 1.0, "", "", "", "")
     def rel(id: String, s: String, d: String) =
       Triple(id, s, d, "", "", "r", None, bidirectional = false, 1.0, 1.0, "")
-    // 40 nodes, hubs + a dangling tail, deterministic pseudo-random
-    // wiring — PLUS edges through a ghost id absent from the node table
-    // (the distributed BFS frontier traverses through unknown endpoints;
-    // the driver fast path must replicate that)
     val nodes = (0 until 40).map(i => ent(f"n$i%02d"))
     val edges = (0 until 120).map { i =>
       rel(s"e$i", f"n${i * 7 % 40}%02d", f"n${(i * 13 + 3) % 37}%02d")
     } ++ Seq(rel("gx1", "n00", "zz_ghost"), rel("gx2", "zz_ghost", "n05"),
       rel("gx3", "n11", "zz_ghost"))
-    val gg = graft.graphout.GraphBuilder.Graph(nodes.toDS(), edges.toDS())
-    def toMap(df: org.apache.spark.sql.DataFrame, col: String) =
-      df.collect().map(r => r.getAs[String]("id") -> r.getAs[Double](col)).toMap
+    graft.graphout.GraphBuilder.Graph(nodes.toDS(), edges.toDS())
+  }
+
+  private def toMap(df: org.apache.spark.sql.DataFrame, col: String) =
+    df.collect().map(r => r.getAs[String]("id") -> r.getAs[Double](col)).toMap
+
+  test("distributed betweenness checkpoints its edge set once, for both passes") {
+    val gg = centralityGraph
+    val (dist, execs) = withExecs(toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16,
+      maxDepth = 8, driverLimit = 0), "betweenness"))
+    // counted as checkpoint executions, not jobs: the job count of one
+    // call varies by one from run to run
+    val edgeSets = execs.count { case (f, qe) =>
+      f == "localCheckpoint" && qe.analyzed.output.map(_.name) == Seq("from", "to") }
+    assert(edgeSets == 1, execs.map(_._1))
+    val fast = toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 8), "betweenness")
+    assert(fast.keySet == dist.keySet)
+    fast.foreach { case (k, v) => assert(math.abs(v - dist(k)) < 1e-9, s"$k: $v vs ${dist(k)}") }
+  }
+
+  test("centrality driver fast path ≡ distributed join-aggregate loop") {
+    val gg = centralityGraph
 
     val prFast = toMap(GraphQueryOps.pagerank(gg, iterations = 10), "rank")
     val prDist = toMap(GraphQueryOps.pagerank(gg, iterations = 10, driverLimit = 0), "rank")

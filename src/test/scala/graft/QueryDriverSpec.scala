@@ -1,0 +1,239 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.GraphGen._
+import graft.graphout.{GraphBuilder, Verifier}
+import graft.graphout.GraphBuilder.Graph
+import graft.link.Linker
+import graft.model.Entity
+import graft.query.GraphQueryOps
+
+/** The query, centrality, clustering, standalone V1/V4 and linker mirrors
+  * equal their distributed forms (`driverLimit = 0`) on generated inputs,
+  * and take the driver path exactly when no probed id or endpoint is null
+  * (the `DriverPath` null rule).
+  */
+class QueryDriverSpec extends SparkSpec {
+
+  // the first 16 of ReasoningDriverSpec's graphs: 10 take every mirror's
+  // driver path, 13 the edge-only mirrors'
+  private val GraphCount = 16
+
+  private lazy val graphs: Seq[(Seq[String], Seq[E])] = GraphGen.graphs(GraphCount)
+
+  /** One mirror: whether its probes read the node ids and the relation
+    * types, the probe jobs its driver path runs on a Seq-backed graph (a
+    * union of two local relations is not one), and the call.
+    */
+  private final case class Mirror(name: String, readsNodes: Boolean, readsTypes: Boolean,
+                                  driverJobs: Int, run: (Graph, Long) => Either[DataFrame, Double])
+
+  private val mirrors = Seq(
+    Mirror("traverse outgoing", false, false, 0,
+      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "outgoing", driverLimit = l))),
+    Mirror("traverse incoming", false, false, 0,
+      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "incoming", driverLimit = l))),
+    Mirror("traverse both", false, false, 1,
+      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "both", driverLimit = l))),
+    Mirror("findPath", false, false, 0,
+      (g, l) => Left(GraphQueryOps.findPath(g, "n0", "n2", maxDepth = 4, driverLimit = l))),
+    Mirror("pagerank", true, false, 0,
+      (g, l) => Left(GraphQueryOps.pagerank(g, iterations = 2, driverLimit = l))),
+    // 9 iterations: the every-8th normalization runs once
+    Mirror("eigenvector", true, false, 1,
+      (g, l) => Left(GraphQueryOps.eigenvectorCentrality(g, iterations = 9, driverLimit = l))),
+    Mirror("closeness", true, false, 0,
+      (g, l) => Left(GraphQueryOps.closenessCentrality(g, driverLimit = l))),
+    Mirror("betweenness", true, false, 0,
+      (g, l) => Left(GraphQueryOps.betweennessCentrality(g, driverLimit = l))),
+    Mirror("avgShortestPathSampled", true, false, 1,
+      (g, l) => Right(GraphQueryOps.avgShortestPathSampled(g, driverLimit = l))),
+    Mirror("avgClusteringCoefficient", true, false, 0,
+      (g, l) => Right(GraphBuilder.avgClusteringCoefficient(g, driverLimit = l))),
+    Mirror("cyclicDependencies", false, true, 0,
+      (g, l) => Left(Verifier.cyclicDependencies(g, driverLimit = l).toDF())),
+    Mirror("semanticContradictions", false, true, 0,
+      (g, l) => Left(Verifier.semanticContradictions(g, driverLimit = l).toDF())))
+
+  /** Whether the null rule (and, for the V1/V4 case fold, ASCII types)
+    * keeps `m` on the driver for graph `g`.
+    */
+  private def expectDriver(m: Mirror, g: (Seq[String], Seq[E])): Boolean =
+    !nullEnd(g._2) && !(m.readsNodes && g._1.contains(null)) &&
+      !(m.readsTypes && g._2.exists(_.rt == NonAscii))
+
+  /** Rows in a canonical order: by their non-double fields, then by their
+    * doubles; arrays printed as lists.
+    */
+  private def rows(df: DataFrame): Seq[Seq[Any]] = {
+    val rs = df.collect().toSeq.map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case o => o
+    })
+    def key(r: Seq[Any]) = r.filterNot(_.isInstanceOf[Double]).map(String.valueOf).mkString("|")
+    def dbls(r: Seq[Any]) = r.collect { case d: Double => d }
+    rs.sortWith { (a, b) =>
+      if (key(a) != key(b)) key(a) < key(b)
+      else dbls(a).zip(dbls(b)).map { case (x, y) => java.lang.Double.compare(x, y) }
+        .find(_ != 0).exists(_ < 0)
+    }
+  }
+
+  /** Equal values, doubles to 1e-9 (as GraphQuerySpec compares them). */
+  private def same(x: Any, y: Any): Boolean = (x, y) match {
+    case (p: Double, q: Double) => p.isNaN && q.isNaN || math.abs(p - q) <= 1e-9
+    case _ => x == y
+  }
+
+  private def sameRows(a: Seq[Seq[Any]], b: Seq[Seq[Any]]): Boolean =
+    a.length == b.length && a.zip(b).forall { case (x, y) =>
+      x.length == y.length && x.zip(y).forall { case (p, q) => same(p, q) }
+    }
+
+  /** The result of a call, materialized, and whether it took the driver
+    * path: it ran no job but its probes' (a distributed form runs more).
+    */
+  private def call(m: Mirror, g: Graph, limit: Long): (Either[Seq[Seq[Any]], Double], Boolean) = {
+    val (r, jobs) = jobsOf(m.run(g, limit))
+    (r.left.map(rows), jobs <= m.driverJobs)
+  }
+
+  test("every query mirror ≡ its distributed form; the null rule picks the path") {
+    val driven = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    graphs.foreach { case (ns, es) =>
+      val g = graphOf(ns, es)
+      mirrors.foreach { m =>
+        val (fast, onDriver) = call(m, g, graft.runtime.DriverPath.DriverIterationLimit)
+        assert(onDriver == expectDriver(m, (ns, es)), s"${m.name}: nodes=$ns edges=$es")
+        // off the driver, `fast` already is the distributed form
+        val (dist, offDriver) = if (onDriver) call(m, g, 0L) else (fast, false)
+        assert(!offDriver, s"${m.name}: driverLimit = 0 took the driver path")
+        val equal = (fast, dist) match {
+          case (Left(a), Left(b)) => sameRows(a, b)
+          case (Right(a), Right(b)) => same(a, b)
+          case _ => false
+        }
+        assert(equal, s"${m.name}: $fast vs $dist; nodes=$ns edges=$es")
+        if (onDriver) driven(m.name) += 1
+      }
+    }
+    mirrors.foreach(m => assert(2 * driven(m.name) >= graphs.length, s"${m.name}: $driven"))
+  }
+
+  // ------------------------------------------------------ null endpoints
+
+  private def ent(id: String, name: String = "n", etype: String = "class") =
+    Entity(id, name, etype, None, Map.empty, 0.9, "s", "r", "p", "c")
+
+  /** a, b, c with edges a→null and null→b: on the driver the null was a
+    * node id, so findPath(a, b) found [a, null, b]; SQL's
+    * `array_contains(path, null)` is null and drops the hop.
+    */
+  private def g1 = graphOf(Seq("a", "b", "c"), Seq(E("e1", "a", null, "r", 1.0),
+    E("e2", null, "b", "r", 1.0)))
+
+  /** a, b, c with edges a→null, a→c, c→b: sorting a neighbour list or the
+    * BFS index with a null in it threw on the driver.
+    */
+  private def g2 = graphOf(Seq("a", "b", "c"), Seq(E("e1", "a", null, "r", 1.0),
+    E("e2", "a", "c", "r", 1.0), E("e3", "c", "b", "r", 1.0)))
+
+  private def paths(df: DataFrame) =
+    df.collect().map(r => (r.getSeq[String](0).toList, r.getInt(1))).toList
+
+  test("findPath across a null endpoint: no path on either form") {
+    assert(paths(GraphQueryOps.findPath(g1, "a", "b")).isEmpty)
+    assert(paths(GraphQueryOps.findPath(g1, "a", "b", driverLimit = 0)).isEmpty)
+  }
+
+  test("findPath beside a null endpoint: the distributed form's path, no NPE") {
+    assert(paths(GraphQueryOps.findPath(g2, "a", "b")) == List((List("a", "c", "b"), 2)))
+    assert(paths(GraphQueryOps.findPath(g2, "a", "b", driverLimit = 0)) ==
+      List((List("a", "c", "b"), 2)))
+  }
+
+  private def byId(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
+  test("closeness beside a null endpoint: the distributed values, no NPE") {
+    val cl = byId(GraphQueryOps.closenessCentrality(g2))
+    assert(math.abs(cl("b") - 2.0 / 3) < 1e-9 && math.abs(cl("c") - 0.5) < 1e-9 && cl("a") == 0.0, cl)
+    assert(cl == byId(GraphQueryOps.closenessCentrality(g2, driverLimit = 0)))
+  }
+
+  test("betweenness beside a null endpoint: the distributed values, no NPE") {
+    val bc = byId(GraphQueryOps.betweennessCentrality(g2))
+    assert(math.abs(bc("c") - 0.5) < 1e-9, bc)
+    assert(bc == byId(GraphQueryOps.betweennessCentrality(g2, driverLimit = 0)))
+  }
+
+  test("avgShortestPathSampled beside a null endpoint: the distributed value, no NPE") {
+    val ap = GraphQueryOps.avgShortestPathSampled(g2)
+    assert(ap > 0.0 && ap == GraphQueryOps.avgShortestPathSampled(g2, driverLimit = 0))
+  }
+
+  test("a repeated node id or no node at all: the driver values ≡ the distributed ones") {
+    // each copy of b is a row of the distributed joins: it holds a rank
+    // and a score, contributes them, and is sampled as a source once per copy
+    val dup = graphOf(Seq("a", "b", "b", "c"), Seq(E("e1", "a", "b", "r", 1.0),
+      E("e2", "b", "c", "r", 1.0), E("e3", "c", "a", "r", 1.0)))
+    val empty = graphOf(Nil, Seq(E("e1", "a", "b", "r", 1.0)))
+    for (g <- Seq(dup, empty); (name, run) <- Seq[(String, Long => DataFrame)](
+        "pagerank" -> (l => GraphQueryOps.pagerank(g, iterations = 3, driverLimit = l)),
+        "eigenvector" -> (l => GraphQueryOps.eigenvectorCentrality(g, iterations = 9, driverLimit = l)),
+        "closeness" -> (l => GraphQueryOps.closenessCentrality(g, driverLimit = l)),
+        "betweenness" -> (l => GraphQueryOps.betweennessCentrality(g, driverLimit = l)))) {
+      val (fast, dist) = (rows(run(graft.runtime.DriverPath.DriverIterationLimit)), rows(run(0L)))
+      assert(sameRows(fast, dist), s"$name: $fast vs $dist")
+    }
+  }
+
+  // -------------------------------------------------------------- linker
+
+  private def canon(r: Linker.LinkResult): (Seq[String], Seq[String]) = (
+    r.canonical.collect().map(e => s"${e.id}|${e.name}|${e.entityType}").toSeq.sorted,
+    r.rewrite.collect().map(x => s"${x.getString(0)}->${x.getString(1)}").toSeq.sorted)
+
+  test("Linker.link with a null entity id: the distributed rewrite, no NPE") {
+    import spark.implicits._
+    val ents = Seq(ent("a1", "FooBar"), ent(null, "foo_bar"), ent("a3", "Foo-Bar"),
+      ent("b1", "Other")).toDS()
+    val fast = canon(Linker.link(ents))
+    assert(fast._2 == Seq("a3->a1"), fast)
+    assert(fast == canon(Linker.link(ents, driverLimit = 0)))
+  }
+
+  /** Entities over ids a0..a7 (some null, some repeated) named from two
+    * alias families and a loner, of two types.
+    */
+  private val genEntities: Gen[Seq[Entity]] = {
+    val names = Seq("FooBar", "foo_bar", "Foo-Bar", "FB", "foo bar",
+      "DataStore", "data store", "data-store", "DS", "Other")
+    val genEnt = for {
+      id <- Gen.frequency(10 -> Gen.choose(0, 7).map(i => s"a$i"), 1 -> Gen.const[String](null))
+      name <- Gen.oneOf(names)
+      etype <- Gen.frequency(4 -> Gen.const("class"), 1 -> Gen.const("function"))
+    } yield ent(id, name, etype)
+    Gen.choose(2, 10).flatMap(Gen.listOfN(_, genEnt))
+  }
+
+  test("Linker.link: the driver path ≡ the distributed form; a null id takes the latter") {
+    import spark.implicits._
+    val sets = (0 until GraphCount).flatMap(i => genEntities(Gen.Parameters.default, Seed(i.toLong)))
+    var driven = 0
+    var linked = 0
+    sets.foreach { es =>
+      val ents = es.toDS()
+      val fast = canon(Linker.link(ents))
+      assert(fast == canon(Linker.link(ents, driverLimit = 0)), s"entities=$es")
+      // the driver path probes a local relation and runs no job
+      val onDriver = jobsOf(Linker.link(ents))._2 == 0
+      assert(onDriver == !es.exists(_.id == null), s"entities=$es")
+      if (onDriver) driven += 1
+      if (onDriver && fast._2.nonEmpty) linked += 1
+    }
+    assert(sets.exists(_.exists(_.id == null)))
+    assert(2 * driven >= sets.length && linked >= 4, s"driven=$driven linked=$linked")
+  }
+}
