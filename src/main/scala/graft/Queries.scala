@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 /**
  * The driver-facing query catalog: each entry exercises one operator
@@ -21,8 +22,14 @@ import org.apache.spark.sql.expressions.Window
  */
 object Queries {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A catalog table, read with the schema of its parquet footer: no
+    * schema-inference job.
+    */
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    GraftParquet.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** Money column (double, 2dp) → exact integer cents. round() semantics
     * match DuckDB's for values that are already within 1e-9 of an integer
@@ -487,14 +494,24 @@ object Queries {
       .where(col("idA") < col("idB"))
     val exactHigh = graft.ops.Dedup.ngramJaccard(slice, allPairs, driverLimit = driverLimit)
       .where(col("jaccard") >= 0.8)
-    // the gate's two counts in ONE action: exact pairs, and those of them
-    // the LSH path found (out's pairs are distinct, so the left join keeps
-    // one row per exact pair); on the distributed path it also fills
-    // out's cache
-    val gate = exactHigh.select("idA", "idB")
-      .join(out.select(col("idA"), col("idB"), lit(true).as("hit")), Seq("idA", "idB"), "left")
-      .agg(count(lit(1)), count(col("hit"))).head()
-    val (e, hit) = (gate.getLong(0), gate.getLong(1))
+    // the gate's two counts: exact pairs, and those of them the LSH path
+    // found (out's pairs are distinct, so the left join keeps one row per
+    // exact pair). When both sides are local they are counted from their
+    // rows, a null id matching nothing as in the join; otherwise in ONE
+    // action, which on the distributed path also fills out's cache
+    def localPairs(df: DataFrame): Option[Array[(Any, Any)]] =
+      if (!graft.runtime.DriverPath.isLocal(df)) None
+      else graft.runtime.DriverPath.probe(df.select("idA", "idB"), driverLimit)
+        .map(_.map(r => (r.get(0), r.get(1))))
+    val (e, hit) = (for (exact <- localPairs(exactHigh); lsh <- localPairs(out)) yield {
+      val found = lsh.filter(p => p._1 != null && p._2 != null).toSet
+      (exact.length.toLong, exact.count(found).toLong)
+    }).getOrElse {
+      val gate = exactHigh.select("idA", "idB")
+        .join(out.select(col("idA"), col("idB"), lit(true).as("hit")), Seq("idA", "idB"), "left")
+        .agg(count(lit(1)), count(col("hit"))).head()
+      (gate.getLong(0), gate.getLong(1))
+    }
     if (e > 0)
       recallGate(s, "q24_minhash", Seq("minhash_band_cap"), capSnap, hit, e, 0.7,
         s"$hit of $e exact-J>=0.8 pairs on doc_id<200")

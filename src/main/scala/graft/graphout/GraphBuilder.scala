@@ -1,8 +1,9 @@
 package graft.graphout
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.model.{Entity, Triple}
+import graft.runtime.DriverPath
 
 /**
  * Graph materialization (SURVEY.md §2.7; reference
@@ -166,23 +167,35 @@ object GraphBuilder {
     * (exactly one connected component), and — when connected, matching the
     * reference's guard — the SAMPLED average shortest path length
     * (multi-source BFS; exact when samples ≥ |V|).
+    *
+    * Under `driverLimit` the type counts are tallied from one probe of the
+    * entity types and one of the relation types (no keys: a null type is
+    * a group of its own, as in the groupBy); the `full` metrics keep their
+    * own driver paths.
     */
-  def stats(g: Graph, full: Boolean = false): DataFrame = {
+  def stats(g: Graph, full: Boolean = false,
+            driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
+    def tally(side: String, rows: Array[Row]) =
+      rows.groupMapReduce(r => if (r.isNullAt(0)) null else r.getString(0))(_ => 1L)(_ + _)
+        .toSeq.map { case (t, c) => (side, t, c) }
     // ONE action computes both per-type breakdowns AND the node/edge
     // totals (round-7: this was two count jobs plus a full recompute of
     // both groupBys when the caller's own action ran the returned union).
     // Side tags, not key prefixes, drive the local sums: a null
     // entityType/relType produces a null key (exactly like the previous
     // concat form) but must still count toward its side's total.
-    val typed = g.nodes.groupBy($"entityType").count()
-        .select(lit("E").as("side"), $"entityType".as("t"), $"count")
-      .union(g.edges.groupBy($"relType").count()
-        .select(lit("R").as("side"), $"relType".as("t"), $"count"))
-      .collect()
-      .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1),
-        r.getLong(2)))
+    val typed = (for (ns <- DriverPath.probe(g.nodes.select($"entityType"), driverLimit);
+                      es <- DriverPath.probe(g.edges.select($"relType"), driverLimit))
+      yield tally("E", ns) ++ tally("R", es)).getOrElse(
+      g.nodes.groupBy($"entityType").count()
+          .select(lit("E").as("side"), $"entityType".as("t"), $"count")
+        .union(g.edges.groupBy($"relType").count()
+          .select(lit("R").as("side"), $"relType".as("t"), $"count"))
+        .collect().toSeq
+        .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1),
+          r.getLong(2))))
     val n = typed.collect { case ("E", _, c) => c }.sum.toDouble
     val e = typed.collect { case ("R", _, c) => c }.sum.toDouble
     val density = if (n > 1) e / (n * (n - 1)) else 0.0

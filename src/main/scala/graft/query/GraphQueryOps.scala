@@ -1,6 +1,7 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.link.ConnectedComponents
@@ -455,16 +456,37 @@ object GraphQueryOps {
 
   /** Q9 degree centrality top-k: explode endpoints → count →
     * TakeOrderedAndProject (sort+limit).
+    *
+    * Under the driver limit the degrees are tallied from one probe of the
+    * endpoints and one of the node ids and names: each endpoint adds one,
+    * so a self-loop counts twice (as the explode does), and the join keeps
+    * one row per node row. Ties in degree go to the smaller id in UTF-8
+    * order, as the sort does.
     */
-  def topKByDegree(g: Graph, k: Int = 10): DataFrame = {
+  def topKByDegree(g: Graph, k: Int = 10, driverLimit: Long = DriverIterationLimit): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    g.edges.toDF()
+    val dist = g.edges.toDF()
       .select(explode(array($"srcId", $"dstId")).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree"))
       .join(g.nodes.toDF().select($"id", $"name"), Seq("id"))
       .orderBy(desc("degree"), asc("id"))
       .limit(k)
+    for (es <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit,
+           "srcId", "dstId");
+         ns <- DriverPath.probe(g.nodes.toDF().select($"id", $"name"), driverLimit, "id")) {
+      val degree = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+      es.foreach { r => degree(r.getString(0)) += 1; degree(r.getString(1)) += 1 }
+      val top = ns.filter(r => degree.contains(r.getString(0)))
+        .map(r => Row(r.getString(0), degree(r.getString(0)), r.getString(1)))
+        .sortWith { (a, b) =>
+          a.getLong(1) > b.getLong(1) ||
+            a.getLong(1) == b.getLong(1) && graft.runtime.Utf8Order.lt(a.getString(0), b.getString(0))
+        }
+        .take(k)
+      return spark.createDataFrame(top.toSeq.asJava, dist.schema)
+    }
+    dist
   }
 
   /** The sorted node ids (duplicates kept, so the length is the node

@@ -176,7 +176,7 @@ final class Checkpoint(spark: SparkSession, root: String) {
     */
   def runStageBucketed(stage: String, inputs: Seq[String], bucketCol: String,
                        nBuckets: Int = 16)(compute: => DataFrame): DataFrame = {
-    if (isCommitted(stage)) return readBucketed(stage)
+    if (isCommitted(stage)) return bucketedTable(stage)
     val t0 = System.nanoTime()
     val before = Observed.snapshot()
     val df = compute
@@ -196,10 +196,28 @@ final class Checkpoint(spark: SparkSession, root: String) {
     spark.table(table)
   }
 
-  /** Read a bucketed stage, re-creating the catalog entry over the
-    * committed files if this JVM has not seen it (fresh-process resume).
+  /** Read a bucketed stage for the read pass. A small stage is collected
+    * once and returned as a local relation with the table's schema, so
+    * every driver mirror probes it with no job (the in-memory graph the
+    * read pass of a small KG works on). Small means both: at most
+    * `DriverPath.DriverIterationLimit` rows by the manifest, and files no
+    * larger than `spark.sql.autoBroadcastJoinThreshold`, Spark's own bound
+    * on what the driver may hold whole. Neither test runs a job. Over
+    * either bound the bucketed table is returned, so a join on the bucket
+    * column stays exchange-free at scale.
     */
   def readBucketed(stage: String): DataFrame = {
+    val df = bucketedTable(stage)
+    val rows = jsonLong(Files.readString(manifestPath(stage)), "rows")
+    if (rows > DriverPath.DriverIterationLimit || df.queryExecution.optimizedPlan.stats.sizeInBytes >
+        spark.sessionState.conf.autoBroadcastJoinThreshold) df
+    else spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  }
+
+  /** A bucketed stage's catalog table, re-created over the committed files
+    * if this JVM has not seen it (fresh-process resume).
+    */
+  private def bucketedTable(stage: String): DataFrame = {
     val spec = Files.readString(tableSpecPath(stage))
     def field(k: String): String = jsonString(spec, k).getOrElse(
       throw new IllegalStateException(s"malformed _TABLE.json for $stage: $spec"))

@@ -2,17 +2,18 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
 
 /**
  * The size gate of every driver fast path (traverse, findPath, the
- * centralities, connected components, the linker, the verifier,
- * transitive inference, contradiction detection, clustering, the MinHash
- * candidates and the n-gram Jaccard verify): fetch a
- * small input to the driver, or learn that it is too large, in ONE
- * early-stopping job. The mirrors also share the policies below (the
+ * centralities, the degree top-k, connected components, the graph stats,
+ * the linker, the verifier, transitive inference, contradiction
+ * detection, clustering, the MinHash candidates and the n-gram Jaccard
+ * verify): fetch a small input to the driver, or learn that it is too
+ * large, in ONE early-stopping job, or in none when the input is
+ * already local. The mirrors also share the policies below (the
  * working-set bound, the case fold, the order of doubles).
  *
  * Not count + collect (three jobs: a count is two under AQE) nor
@@ -73,9 +74,11 @@ object DriverPath {
     * only the rows the probe read.
     *
     * A plan that optimizes to a local relation (a driver mirror's result,
-    * a filter or projection of one, an empty relation) is answered from
-    * its rows with no job and no SQL execution, under the same limit: so
-    * one mirror reads another's result for free.
+    * a filter or projection of one, an empty relation, a small committed
+    * stage [[Checkpoint.readBucketed]] read whole) or to a union of them
+    * (the undirected view of a local edge table) is answered from its rows
+    * with no job and no SQL execution, under the same limit: so one mirror
+    * reads another's result, or a small checkpointed graph, for free.
     *
     * None also when a fetched row has a null in one of the `keys` columns
     * (the null rule above), from the same rows and with no further job.
@@ -89,12 +92,10 @@ object DriverPath {
     val cap = math.min(lim, Int.MaxValue - 2L)
     if (cap < 0) return None
     val qe = df.queryExecution
-    qe.optimizedPlan match {
-      case l: LocalRelation =>
-        if (l.data.length > cap) return None
-        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-        return Some(l.data.map(toRow(_).asInstanceOf[Row]).toArray)
-      case _ =>
+    localRows(qe.optimizedPlan).foreach { data =>
+      if (data.length > cap) return None
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      return Some(data.map(toRow(_).asInstanceOf[Row]).toArray)
     }
     val parts = SQLExecution.withNewExecutionId(qe, Some("probe")) {
       val rdd = qe.toRdd
@@ -117,12 +118,22 @@ object DriverPath {
     } else Some(df.collect()).filter(_.length <= cap)
   }
 
-  /** Whether `df`'s plan optimizes to a local relation, as a driver
-    * mirror's result does: [[probe]] reads it with no job, and caching it
-    * would only copy rows the driver already holds.
+  /** The rows of a plan the driver already holds: a local relation, or a
+    * union of local relations (Spark folds a projection or filter of a
+    * local relation into one, but not a union), concatenated in order.
     */
-  def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  private def localRows(plan: LogicalPlan): Option[Seq[InternalRow]] = plan match {
+    case l: LocalRelation => Some(l.data)
+    case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+      Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
+    case _ => None
+  }
+
+  /** Whether `df`'s plan optimizes to a local relation or a union of them,
+    * as a driver mirror's result does: [[probe]] reads it with no job, and
+    * caching it would only copy rows the driver already holds.
+    */
+  def isLocal(df: DataFrame): Boolean = localRows(df.queryExecution.optimizedPlan).isDefined
 
   /** In-flight bound of a driver mirror's working set (walk pairs, chain
     * paths, same-endpoint edge pairs, findPath's partial paths): past it

@@ -234,6 +234,60 @@ class CheckpointSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
   }
 
+  /** A 100-file graph committed by the checkpointed pipeline. */
+  private lazy val smallRoot = {
+    val root = Files.createTempDirectory("ckpt5").toString
+    CheckpointedPipeline.run(spark, root, 100).count()
+    root
+  }
+
+  test("a small committed stage reads as a local relation; without broadcast, and on resume, it stays bucketed") {
+    val cp = new graft.runtime.Checkpoint(spark, smallRoot)
+    // the gate reads the manifest and the file sizes: the one job collects
+    val (local, jobs) = jobsOf(cp.readBucketed("05_nodes"))
+    assert(jobs == 1 && graft.runtime.DriverPath.isLocal(local))
+    def bucketCols(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.bucketSpec }
+      .flatten.map(_.bucketColumnNames)
+    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val bucketed = try cp.readBucketed("05_nodes")
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+    assert(bucketCols(bucketed) == Some(Seq("id")))
+    assert(local.schema == bucketed.schema)
+    assert(local.collect().toSeq.map(_.toString).sorted == bucketed.collect().toSeq.map(_.toString).sorted)
+    // a resumed construction stage hands downstream stages the bucketed
+    // table, as a fresh commit does
+    val resumed = cp.runStageBucketed("05_nodes", Nil, bucketCol = "id")(sys.error("recomputed"))
+    assert(bucketCols(resumed) == Some(Seq("id")))
+  }
+
+  test("on a small checkpointed graph read back whole, the ten read-pass graph ops run no job") {
+    import spark.implicits._
+    import graft.graphout.{GraphBuilder, Verifier}
+    import graft.query.GraphQueryOps
+    import graft.reason.Reasoning
+    val cp = new graft.runtime.Checkpoint(spark, smallRoot)
+    val g = GraphBuilder.Graph(cp.readBucketed("05_nodes").as[graft.model.Entity],
+      cp.readBucketed("07_edges").as[graft.model.Triple])
+    val (src, dst) = g.edges.select("srcId", "dstId").as[(String, String)].collect().head
+    val ops = Seq[(String, () => Any)](
+      "traverse" -> (() => GraphQueryOps.traverse(g, src, maxDepth = 3).collect()),
+      "findPath" -> (() => GraphQueryOps.findPath(g, src, dst, maxDepth = 4, maxPaths = 5).collect()),
+      "pagerank" -> (() => GraphQueryOps.pagerank(g, iterations = 5).collect()),
+      "connectedComponents" -> (() => GraphQueryOps.connectedComponents(g).collect()),
+      "closenessCentrality" -> (() =>
+        GraphQueryOps.closenessCentrality(g, samples = 8, maxDepth = 4).collect()),
+      "topKByDegree" -> (() => GraphQueryOps.topKByDegree(g, k = 10).collect()),
+      "inferTransitive" -> (() => Reasoning.inferTransitive(g).collect()),
+      "detectContradictory" -> (() => Reasoning.detectContradictory(g).collect()),
+      "verify" -> (() => { val v = Verifier.verify(g); (v.isValid, v.issues.collect()) }),
+      "stats" -> (() => GraphBuilder.stats(g).collect()))
+    val jobs = ops.map { case (name, op) => name -> jobsOf(op())._2 }
+    assert(jobs.forall(_._2 == 0), jobs)
+  }
+
   test("a killed run resumes from the last committed stage") {
     val root = Files.createTempDirectory("ckpt2").toString
     // simulate a partial run: commit only the first two stages

@@ -180,7 +180,8 @@ class DedupDriverSpec extends SparkSpec {
     val (fast, jf) = jobsOf(sortedRows(Queries.minhashDedup(spark, docs)))
     val (dist, jd) = jobsOf(sortedRows(Queries.minhashDedup(spark, docs, driverLimit = 0)))
     assert(fast == dist && fast.nonEmpty)
-    assert(jf <= 12 && jd > 2 * jf, s"jobs: driver=$jf distributed=$jd")
+    // the recall gate counts two local relations on the driver: no job
+    assert(jf <= 6 && jd > 2 * jf, s"jobs: driver=$jf distributed=$jd")
   }
 }
 

@@ -27,6 +27,34 @@ class PlanSpec extends SparkSpec {
     assert(readSchema.contains("l_orderkey"))
   }
 
+  test("catalog tables take their parquet footer schema: no job, the inferred schema") {
+    import org.apache.spark.sql.execution.datasources.parquet.GraftParquet.footerSchema
+    val tables = new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted
+    assert(tables.length == 10)
+    tables.foreach { f =>
+      val (schema, jobs) = jobsOf(footerSchema(spark, s"$dir/$f"))
+      assert(jobs == 0 && schema.contains(spark.read.parquet(s"$dir/$f").schema), s"$f: $schema")
+    }
+    // so building a catalog entry's frame runs no job
+    assert(jobsOf(Queries.q06_self_join_pairs(spark, dir))._2 == 0)
+    // a Spark-written directory reads its first data file; a partitioned
+    // one is left to inference, which adds the partition column
+    val out = java.nio.file.Files.createTempDirectory("footer").toString
+    spark.range(5).selectExpr("id", "cast(id as string) s").write.parquet(s"$out/flat")
+    spark.range(5).selectExpr("id", "id % 2 p").write.partitionBy("p").parquet(s"$out/parted")
+    assert(footerSchema(spark, s"$out/flat").contains(spark.read.parquet(s"$out/flat").schema))
+    assert(footerSchema(spark, s"$out/parted").isEmpty)
+    // inference reads a summary file first, merges under mergeSchema, and
+    // owns the missing-path error: all three are left to it
+    spark.range(5).write.parquet(s"$out/summarized")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$out/summarized/_common_metadata"))
+    assert(footerSchema(spark, s"$out/summarized").isEmpty)
+    assert(footerSchema(spark, s"$out/missing").isEmpty)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(footerSchema(spark, s"$out/flat").isEmpty)
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
   test("small dim join broadcasts (q03)") {
     val p = plan(Queries.q03_broadcast_join(spark, dir))
     assert(p.contains("BroadcastHashJoin"), p.take(800))

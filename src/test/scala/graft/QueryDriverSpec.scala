@@ -10,10 +10,11 @@ import graft.link.Linker
 import graft.model.Entity
 import graft.query.GraphQueryOps
 
-/** The query, centrality, clustering, standalone V1/V4 and linker mirrors
-  * equal their distributed forms (`driverLimit = 0`) on generated inputs,
-  * and take the driver path exactly when no probed id or endpoint is null
-  * (the `DriverPath` null rule).
+/** The query, centrality, degree top-k, stats, clustering, standalone
+  * V1/V4 and linker mirrors equal their distributed forms
+  * (`driverLimit = 0`) on generated inputs, and take the driver path
+  * exactly when no probed id or endpoint is null (the `DriverPath` null
+  * rule).
   */
 class QueryDriverSpec extends SparkSpec {
 
@@ -24,44 +25,50 @@ class QueryDriverSpec extends SparkSpec {
   private lazy val graphs: Seq[(Seq[String], Seq[E])] = GraphGen.graphs(GraphCount)
 
   /** One mirror: whether its probes read the node ids and the relation
-    * types, the probe jobs its driver path runs on a Seq-backed graph (a
-    * union of two local relations is not one), and the call.
+    * types, the call, and whether it keys the edge endpoints.
     */
   private final case class Mirror(name: String, readsNodes: Boolean, readsTypes: Boolean,
-                                  driverJobs: Int, run: (Graph, Long) => Either[DataFrame, Double])
+                                  run: (Graph, Long) => Either[DataFrame, Double],
+                                  readsEnds: Boolean = true)
 
   private val mirrors = Seq(
-    Mirror("traverse outgoing", false, false, 0,
+    Mirror("traverse outgoing", false, false,
       (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "outgoing", driverLimit = l))),
-    Mirror("traverse incoming", false, false, 0,
+    Mirror("traverse incoming", false, false,
       (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "incoming", driverLimit = l))),
-    Mirror("traverse both", false, false, 1,
+    Mirror("traverse both", false, false,
       (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "both", driverLimit = l))),
-    Mirror("findPath", false, false, 0,
+    Mirror("findPath", false, false,
       (g, l) => Left(GraphQueryOps.findPath(g, "n0", "n2", maxDepth = 4, driverLimit = l))),
-    Mirror("pagerank", true, false, 0,
+    Mirror("pagerank", true, false,
       (g, l) => Left(GraphQueryOps.pagerank(g, iterations = 2, driverLimit = l))),
     // 9 iterations: the every-8th normalization runs once
-    Mirror("eigenvector", true, false, 1,
+    Mirror("eigenvector", true, false,
       (g, l) => Left(GraphQueryOps.eigenvectorCentrality(g, iterations = 9, driverLimit = l))),
-    Mirror("closeness", true, false, 0,
+    Mirror("closeness", true, false,
       (g, l) => Left(GraphQueryOps.closenessCentrality(g, driverLimit = l))),
-    Mirror("betweenness", true, false, 0,
+    Mirror("betweenness", true, false,
       (g, l) => Left(GraphQueryOps.betweennessCentrality(g, driverLimit = l))),
-    Mirror("avgShortestPathSampled", true, false, 1,
+    Mirror("avgShortestPathSampled", true, false,
       (g, l) => Right(GraphQueryOps.avgShortestPathSampled(g, driverLimit = l))),
-    Mirror("avgClusteringCoefficient", true, false, 0,
+    Mirror("avgClusteringCoefficient", true, false,
       (g, l) => Right(GraphBuilder.avgClusteringCoefficient(g, driverLimit = l))),
-    Mirror("cyclicDependencies", false, true, 0,
+    Mirror("cyclicDependencies", false, true,
       (g, l) => Left(Verifier.cyclicDependencies(g, driverLimit = l).toDF())),
-    Mirror("semanticContradictions", false, true, 0,
-      (g, l) => Left(Verifier.semanticContradictions(g, driverLimit = l).toDF())))
+    Mirror("semanticContradictions", false, true,
+      (g, l) => Left(Verifier.semanticContradictions(g, driverLimit = l).toDF())),
+    // k = 4 cuts through degree ties on most graphs
+    Mirror("topKByDegree", true, false,
+      (g, l) => Left(GraphQueryOps.topKByDegree(g, k = 4, driverLimit = l))),
+    // no key column: a null id or endpoint leaves the tally on the driver
+    Mirror("stats", false, false,
+      (g, l) => Left(GraphBuilder.stats(g, driverLimit = l)), readsEnds = false))
 
   /** Whether the null rule (and, for the V1/V4 case fold, ASCII types)
     * keeps `m` on the driver for graph `g`.
     */
   private def expectDriver(m: Mirror, g: (Seq[String], Seq[E])): Boolean =
-    !nullEnd(g._2) && !(m.readsNodes && g._1.contains(null)) &&
+    !(m.readsEnds && nullEnd(g._2)) && !(m.readsNodes && g._1.contains(null)) &&
       !(m.readsTypes && g._2.exists(_.rt == NonAscii))
 
   /** Rows in a canonical order: by their non-double fields, then by their
@@ -93,11 +100,13 @@ class QueryDriverSpec extends SparkSpec {
     }
 
   /** The result of a call, materialized, and whether it took the driver
-    * path: it ran no job but its probes' (a distributed form runs more).
+    * path: on a Seq-backed graph every probe reads a local relation, so
+    * the driver path runs no job, its result included, and a distributed
+    * form runs some.
     */
   private def call(m: Mirror, g: Graph, limit: Long): (Either[Seq[Seq[Any]], Double], Boolean) = {
-    val (r, jobs) = jobsOf(m.run(g, limit))
-    (r.left.map(rows), jobs <= m.driverJobs)
+    val (r, jobs) = jobsOf(m.run(g, limit).left.map(rows))
+    (r, jobs == 0)
   }
 
   test("every query mirror ≡ its distributed form; the null rule picks the path") {
@@ -106,10 +115,15 @@ class QueryDriverSpec extends SparkSpec {
       val g = graphOf(ns, es)
       mirrors.foreach { m =>
         val (fast, onDriver) = call(m, g, graft.runtime.DriverPath.DriverIterationLimit)
-        assert(onDriver == expectDriver(m, (ns, es)), s"${m.name}: nodes=$ns edges=$es")
         // off the driver, `fast` already is the distributed form
         val (dist, offDriver) = if (onDriver) call(m, g, 0L) else (fast, false)
-        assert(!offDriver, s"${m.name}: driverLimit = 0 took the driver path")
+        // Spark folds a plan that inner-joins an empty node table into an
+        // empty local relation: that distributed form runs no job either,
+        // and only there is a job-free limit-0 call not the driver path
+        val folded = m.readsNodes && ns.isEmpty && offDriver && dist == Left(Nil)
+        assert(onDriver == expectDriver(m, (ns, es)) || folded, s"${m.name}: nodes=$ns edges=$es")
+        assert(!offDriver || folded,
+          s"${m.name}: driverLimit = 0 took the driver path; nodes=$ns edges=$es")
         val equal = (fast, dist) match {
           case (Left(a), Left(b)) => sameRows(a, b)
           case (Right(a), Right(b)) => same(a, b)
@@ -187,6 +201,31 @@ class QueryDriverSpec extends SparkSpec {
       val (fast, dist) = (rows(run(graft.runtime.DriverPath.DriverIterationLimit)), rows(run(0L)))
       assert(sameRows(fast, dist), s"$name: $fast vs $dist")
     }
+  }
+
+  test("topKByDegree breaks degree ties in UTF-8 order; stats tallies null types") {
+    import spark.implicits._
+    // U+FFFD sorts before U+1F600 in UTF-8, after it in UTF-16; the
+    // self-loop on a counts twice
+    val (bmp, supp) = ("\uFFFD", "\uD83D\uDE00")
+    val es = graphOf(Nil, Seq(E("e1", supp, "a", "r", 1.0), E("e2", bmp, "a", null, 1.0),
+      E("e3", "a", "a", "r", 1.0), E(null, supp, bmp, "r", 1.0))).edges
+    val g = Graph(Seq(ent("a"), ent(supp, etype = null), ent(bmp), ent("b", etype = null)).toDS(), es)
+    def top(l: Long) = GraphQueryOps.topKByDegree(g, k = 2, driverLimit = l)
+    val (fast, jobs) = jobsOf(top(graft.runtime.DriverPath.DriverIterationLimit))
+    assert(jobs == 0)
+    assert(fast.schema == top(0L).schema && !fast.schema("degree").nullable)
+    assert(fast.collect().toSeq == top(0L).collect().toSeq)
+    assert(fast.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("a", 4L), (bmp, 2L)))
+
+    def stats(l: Long) = GraphBuilder.stats(g, driverLimit = l).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSet
+    val st = stats(graft.runtime.DriverPath.DriverIterationLimit)
+    assert(st == stats(0L))
+    assert(st.contains(("nodes", 4.0)) && st.contains(("edges", 4.0)) &&
+      st.contains(("entity:class", 2.0)) && st.contains(("rel:r", 3.0)), st)
+    // one null key per side: 2 entities, 1 relation
+    assert(st.filter(_._1 == null).map(_._2) == Set(1.0, 2.0), st)
   }
 
   // -------------------------------------------------------------- linker
