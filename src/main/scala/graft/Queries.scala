@@ -454,12 +454,10 @@ object Queries {
 
   /** q24 over `docs`: MinHash-LSH candidates with estimate ≥ `estFloor`,
     * verified by exact n-gram Jaccard ≥ 0.8, with an in-run recall gate.
-    * Under `driverLimit` documents both operators take their driver paths
+    * Under `DriverPath.limit` documents both operators take their driver paths
     * (one probe job each, local results); past it, their distributed forms.
     */
-  def minhashDedup(s: SparkSession, docs: DataFrame, estFloor: Double = 0.5,
-                   driverLimit: Long = graft.runtime.DriverPath.DriverIterationLimit)
-      : DataFrame = {
+  def minhashDedup(s: SparkSession, docs: DataFrame, estFloor: Double = 0.5): DataFrame = {
     val capSnap = capBaseline(s)
     // estimate-filter candidates before the exact verification join —
     // the LSH bands over-generate on low-vocabulary corpora.
@@ -470,10 +468,10 @@ object Queries {
     // 2.15 s → 3.1 s at sf0.1; at this corpus size the duplicate-subtree
     // recompute is cheaper than the extra stages. OPTIMIZATION_r07.md
     // records the A/B.)
-    val pairs = graft.ops.Dedup.minhashLshPairs(docs, driverLimit = driverLimit)
+    val pairs = graft.ops.Dedup.minhashLshPairs(docs)
       .where(col("jaccard_est") >= estFloor)
-    val verified = graft.ops.Dedup.ngramJaccard(docs, pairs.select("idA", "idB"),
-      driverLimit = driverLimit).where(col("jaccard") >= 0.8)
+    val verified = graft.ops.Dedup.ngramJaccard(docs, pairs.select("idA", "idB"))
+      .where(col("jaccard") >= 0.8)
     // a distributed result is persisted for the gate's pass AND the
     // driver's final consumption; scope is session-lifetime by design
     // (q24/q27/q28 — result-sized tables, the stand-in for the checkpoint
@@ -492,7 +490,7 @@ object Queries {
     val allPairs = ids.select(col("doc_id").as("idA"))
       .crossJoin(ids.select(col("doc_id").as("idB")))
       .where(col("idA") < col("idB"))
-    val exactHigh = graft.ops.Dedup.ngramJaccard(slice, allPairs, driverLimit = driverLimit)
+    val exactHigh = graft.ops.Dedup.ngramJaccard(slice, allPairs)
       .where(col("jaccard") >= 0.8)
     // the gate's two counts: exact pairs, and those of them the LSH path
     // found (out's pairs are distinct, so the left join keeps one row per
@@ -501,7 +499,7 @@ object Queries {
     // action, which on the distributed path also fills out's cache
     def localPairs(df: DataFrame): Option[Array[(Any, Any)]] =
       if (!graft.runtime.DriverPath.isLocal(df)) None
-      else graft.runtime.DriverPath.probe(df.select("idA", "idB"), driverLimit)
+      else graft.runtime.DriverPath.probe(df.select("idA", "idB"))
         .map(_.map(r => (r.get(0), r.get(1))))
     val (e, hit) = (for (exact <- localPairs(exactHigh); lsh <- localPairs(out)) yield {
       val found = lsh.filter(p => p._1 != null && p._2 != null).toSet

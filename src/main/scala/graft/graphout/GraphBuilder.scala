@@ -168,13 +168,12 @@ object GraphBuilder {
     * reference's guard — the SAMPLED average shortest path length
     * (multi-source BFS; exact when samples ≥ |V|).
     *
-    * Under `driverLimit` the type counts are tallied from one probe of the
+    * Under `DriverPath.limit` the type counts are tallied from one probe of the
     * entity types and one of the relation types (no keys: a null type is
     * a group of its own, as in the groupBy); the `full` metrics keep their
     * own driver paths.
     */
-  def stats(g: Graph, full: Boolean = false,
-            driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
+  def stats(g: Graph, full: Boolean = false): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     def tally(side: String, rows: Array[Row]) =
@@ -186,8 +185,8 @@ object GraphBuilder {
     // Side tags, not key prefixes, drive the local sums: a null
     // entityType/relType produces a null key (exactly like the previous
     // concat form) but must still count toward its side's total.
-    val typed = (for (ns <- DriverPath.probe(g.nodes.select($"entityType"), driverLimit);
-                      es <- DriverPath.probe(g.edges.select($"relType"), driverLimit))
+    val typed = (for (ns <- DriverPath.probe(g.nodes.select($"entityType"));
+                      es <- DriverPath.probe(g.edges.select($"relType")))
       yield tally("E", ns) ++ tally("R", es)).getOrElse(
       g.nodes.groupBy($"entityType").count()
           .select(lit("E").as("side"), $"entityType".as("t"), $"count")
@@ -240,9 +239,7 @@ object GraphBuilder {
     * neighborhood-sampling estimator; EXACT whenever deg(v) ≤ maxDegree
     * (every node of the small-graph parity tests).
     */
-  def avgClusteringCoefficient(g: Graph, maxDegree: Int = 256,
-                               driverLimit: Long =
-                                 graft.runtime.DriverPath.DriverIterationLimit): Double = {
+  def avgClusteringCoefficient(g: Graph, maxDegree: Int = 256): Double = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
@@ -252,9 +249,9 @@ object GraphBuilder {
     // undirected simple view, same (xxhash64, id)-ordered neighborhood
     // sample at maxDegree, same wedge membership test, same k(v)(k−1)
     // denominator; the cap counter lands in the same Observed registry.
-    graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).foreach { nodeIds =>
+    graft.query.GraphQueryOps.driverNodeIds(g).foreach { nodeIds =>
       graft.runtime.DriverPath.probe(
-          g.edges.toDF().select($"srcId", $"dstId"), driverLimit, "srcId", "dstId").foreach { raw =>
+          g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId").foreach { raw =>
         val und = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2)
           .flatMap(p => Seq(p, p.swap)).distinct
         val undSet = und.toSet

@@ -14,7 +14,7 @@ import graft.runtime.{DriverPath, Utf8Order}
  *
  * A graph is valid iff no critical issue (knowledge_verifier.py:78-82).
  *
- * Graphs under DriverPath.DriverIterationLimit edges run the V1/V4 walks
+ * Graphs under [[DriverPath.limit]] edges run the V1/V4 walks
  * (and, in [[verify]], all four checks) in memory on the driver, from one
  * DriverPath.probe (round-7 measurement: the distributed loops are 20-34
  * driver-blocking jobs of ~50 ms fixed latency each for <0.3 s of actual
@@ -91,20 +91,17 @@ object Verifier {
     * iterated frontier-join: propagate reachability up to maxDepth hops
     * and flag nodes that reach themselves. CRITICAL.
     */
-  def cyclicDependencies(g: Graph, maxDepth: Int = CycleDepth,
-                         driverLimit: Long = DriverPath.DriverIterationLimit): Dataset[Issue] = {
+  def cyclicDependencies(g: Graph, maxDepth: Int = CycleDepth): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-
     // ---- driver fast path: one probe job, then the identical pair-set
     // iteration in memory (the type filter runs on the driver too)
-    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType"), driverLimit)
-      .flatMap { case (raw, rts) =>
-        driverCycles(raw.indices.filter(i => HierarchicalTypes.contains(rts(i)))
-          .map(i => (raw(i).getString(0), raw(i).getString(1))), maxDepth)
-      }
-      .foreach(issues => return issues.toDS())
+    walkEdges(g).flatMap(driverCycles(_, maxDepth)).fold(distributedCycles(g, maxDepth))(_.toDS())
+  }
 
+  private def distributedCycles(g: Graph, maxDepth: Int): Dataset[Issue] = {
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
     val h = g.edges.toDF()
       .where(lower($"relType").isin(HierarchicalTypes: _*))
       .select($"srcId".as("src"), $"dstId".as("dst")).distinct()
@@ -126,12 +123,14 @@ object Verifier {
     cycles.select($"origin").distinct().map(r => cycleIssue(r.getString(0)))
   }
 
-  /** V1 on the driver from the hierarchical (srcId, dstId) edges: the
-    * distributed pair-set iteration with Set ≡ distinct, same closure and
-    * prune order. None when the walk outgrows [[DriverPath.PairBound]].
+  /** V1 on the driver from the [[walkEdges]], of which it keeps the
+    * hierarchical ones: the distributed pair-set iteration with Set ≡
+    * distinct, same closure and prune order. None when the walk outgrows
+    * [[DriverPath.PairBound]].
     */
-  private def driverCycles(edges: Seq[(String, String)], maxDepth: Int): Option[Seq[Issue]] = {
-    val dedup = edges.distinct
+  private def driverCycles(edges: Seq[(String, String, String)],
+                           maxDepth: Int): Option[Seq[Issue]] = {
+    val dedup = edges.collect { case (s, d, rt) if HierarchicalTypes.contains(rt) => (s, d) }.distinct
     val adj = dedup.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
     var reach = dedup.toSet
     val cycles = scala.collection.mutable.HashSet.empty[String]
@@ -205,21 +204,19 @@ object Verifier {
     * transitive type, with a direct negation edge between them
     * (knowledge_verifier.py:396-477). MEDIUM.
     */
-  def semanticContradictions(g: Graph, maxHops: Int = ContradictionHops,
-                             driverLimit: Long = DriverPath.DriverIterationLimit): Dataset[Issue] = {
+  def semanticContradictions(g: Graph, maxHops: Int = ContradictionHops): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-
     // ---- driver fast path (round-7): one probe job replaces the
     // 30-odd driver-blocking jobs of the seeded distributed walk on small
     // graphs; driverContradictions picks both edge classes out itself
-    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType"), driverLimit)
-      .flatMap { case (raw, rts) =>
-        driverContradictions(raw.indices.map(i => (rts(i), raw(i).getString(0), raw(i).getString(1))),
-          maxHops)
-      }
-      .foreach(issues => return issues.toDS())
+    walkEdges(g).flatMap(driverContradictions(_, maxHops))
+      .fold(distributedContradictions(g, maxHops))(_.toDS())
+  }
 
+  private def distributedContradictions(g: Graph, maxHops: Int): Dataset[Issue] = {
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
     val neg = g.edges.toDF()
       .where(lower($"relType").isin(NegationTypes: _*))
       .select($"srcId".as("origin"), $"dstId".as("last"))
@@ -261,17 +258,17 @@ object Verifier {
         r.getAs[String]("last")))
   }
 
-  /** V4 on the driver from (lowered relType, srcId, dstId) edges of any
-    * type: the distributed (tt, origin, last) set iteration literally —
-    * same seed pruning, same per-hop distinct, same 2..maxHops
-    * accumulation, same final negation semi-join. None when the walk
-    * outgrows [[DriverPath.PairBound]].
+  /** V4 on the driver from the [[walkEdges]] of any type: the distributed
+    * (tt, origin, last) set iteration literally — same seed pruning, same
+    * per-hop distinct, same 2..maxHops accumulation, same final negation
+    * semi-join. None when the walk outgrows [[DriverPath.PairBound]].
     */
   private def driverContradictions(edges: Seq[(String, String, String)],
                                    maxHops: Int): Option[Seq[Issue]] = {
-    val negSet = edges.collect { case (rt, s2, d2) if NegationTypes.contains(rt) => (s2, d2) }.toSet
+    val negSet = edges.collect { case (s2, d2, rt) if NegationTypes.contains(rt) => (s2, d2) }.toSet
     if (negSet.isEmpty) return Some(Nil)
-    val hRows = edges.filter(t => TransitiveTypes.contains(t._1)).distinct
+    val hRows = edges.collect { case (s2, d2, rt) if TransitiveTypes.contains(rt) => (rt, s2, d2) }
+      .distinct
     val negOrigins = negSet.map(_._1)
     val adj = hRows.groupBy(t => (t._1, t._2)).map { case (k, ts) => k -> ts.map(_._3) }
     var paths = hRows.filter(t => negOrigins(t._2)).toSet
@@ -292,34 +289,40 @@ object Verifier {
 
   /** Runs V1–V4.
     *
-    * Under `driverLimit` edges and nodes, all four checks run on the
+    * Under [[DriverPath.limit]] edges and nodes, all four checks run on the
     * driver from one snapshot: one probe of the edge columns they read
     * (id, srcId, dstId, relType, case-folded by [[DriverPath.lowerAscii]])
     * and one of the node ids for V2, so each check runs once, `issues` is
     * a local relation and `isValid` is read from that same issue set. A
-    * non-ASCII relation type, a graph over the limit or a walk over
-    * [[DriverPath.PairBound]] takes the distributed form, where validity
-    * reads only the two checks that emit critical issues (V1, V2): they
-    * run eagerly for `isValid` and again when the caller reads `issues`,
-    * while the V3 self-join runs once, with `issues`. V1 and V4 read the
-    * same edge rows as the refused probe, so they skip their own.
+    * check the driver cannot run takes its distributed form: V2 and V3 when
+    * the node ids are refused or V3's pairs outgrow [[DriverPath.PairBound]],
+    * V1 or V4 when its walk does, all four on a non-ASCII relation type or
+    * an edge table over the limit. V1 and V4 walk the rows the edge probe
+    * fetched, so they never probe again. Then validity reads only the two
+    * checks that emit critical issues (V1, V2): they run eagerly for
+    * `isValid` and again when the caller reads `issues`, while the V3
+    * self-join runs once, with `issues`.
     */
-  def verify(g: Graph, driverLimit: Long = DriverPath.DriverIterationLimit): Verification = {
+  def verify(g: Graph): Verification = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val edges = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType"), driverLimit)
-    edges.flatMap { case (raw, rts) => driverIssues(g, raw, rts, driverLimit) } match {
-      case Some(issues) =>
+    val es = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType")).map {
+      case (raw, rts) =>
+        raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
+    }
+    val walks = es.map(_.map { case (_, s, d, rt) => (s, d, rt) })
+    val v1 = walks.flatMap(driverCycles(_, CycleDepth))
+    val v4 = walks.flatMap(driverContradictions(_, ContradictionHops))
+    (v1, es.flatMap(driverV2V3(g, _)), v4) match {
+      case (Some(cycles), Some(v2v3), Some(transitive)) =>
+        val issues = cycles ++ v2v3 ++ transitive
         Verification(issues.toDS(), !issues.exists(_.severity == Severity.Critical))
-      case None =>
-        // V1/V4's own probe would read the rows refused here again; a
-        // negative limit refuses with no job
-        val walkLimit = if (edges.isEmpty) -1L else driverLimit
-        val critical = cyclicDependencies(g, driverLimit = walkLimit)
+      case _ =>
+        val critical = v1.fold(distributedCycles(g, CycleDepth))(_.toDS())
           .union(danglingReferences(g))
         val all = critical
           .union(contradictoryRelationships(g))
-          .union(semanticContradictions(g, driverLimit = walkLimit))
+          .union(v4.fold(distributedContradictions(g, ContradictionHops))(_.toDS()))
         Verification(all, critical.limit(1).count() == 0)
     }
   }
@@ -327,32 +330,33 @@ object Verifier {
   /** The rows of `edges`, an edge projection whose last column is
     * relType, and that column case-folded by [[DriverPath.lowerAscii]]:
     * one probe with no Spark `lower` in its plan, keyed on the endpoints.
-    * None over `driverLimit` rows, on a null endpoint or on a non-ASCII
+    * None over `DriverPath.limit` rows, on a null endpoint or on a non-ASCII
     * type, which take the distributed forms.
     */
-  private def foldedEdges(edges: DataFrame, driverLimit: Long): Option[(Array[Row], Array[String])] =
-    DriverPath.probe(edges, driverLimit, "srcId", "dstId").flatMap { raw =>
+  private def foldedEdges(edges: DataFrame): Option[(Array[Row], Array[String])] =
+    DriverPath.probe(edges, "srcId", "dstId").flatMap { raw =>
       DriverPath.lowerAscii(raw.map(_.getString(edges.columns.length - 1))).map(raw -> _)
     }
 
-  /** V1–V4 of [[verify]] on the driver from the [[foldedEdges]] of
-    * (id, srcId, dstId, relType), in the distributed union's order (V1, V2
-    * by source then by destination, V3, V4), or None when the graph takes
-    * the distributed form.
+  /** (srcId, dstId, case-folded relType) of every edge, the input of the
+    * standalone V1 and V4 driver walks, or None (their distributed forms).
     */
-  private def driverIssues(g: Graph, raw: Array[Row], rts: Array[String],
-                           driverLimit: Long): Option[Seq[Issue]] = {
-    val ids = graft.query.GraphQueryOps.driverNodeIds(g, driverLimit).getOrElse(return None).toSet
-    val es = raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
+  private def walkEdges(g: Graph): Option[IndexedSeq[(String, String, String)]] =
+    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType")).map { case (raw, rts) =>
+      raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), rts(i)))
+    }
+
+  /** V2 then V3 of [[verify]] on the driver from its (id, srcId, dstId,
+    * folded relType) edges, in the distributed union's order (V2 by source
+    * then by destination), or None when the node ids or V3's pairs refuse.
+    */
+  private def driverV2V3(g: Graph, es: IndexedSeq[(String, String, String, String)])
+      : Option[Seq[Issue]] = {
+    val ids = graft.query.GraphQueryOps.driverNodeIds(g).getOrElse(return None).toSet
     // V2 is two anti-joins: an endpoint missing from the node ids is reported
     def dangling(end: ((String, String, String, String)) => String) =
       es.collect { case e if !ids(end(e)) => danglingIssue(e._1, end(e)) }
-    for {
-      v1 <- driverCycles(es.collect { case (_, s, d, rt) if HierarchicalTypes.contains(rt) => (s, d) },
-        CycleDepth)
-      v3 <- driverOppositePairs(es, OppositeSet)
-      v4 <- driverContradictions(es.map { case (_, s, d, rt) => (rt, s, d) }, ContradictionHops)
-    } yield v1 ++ dangling(_._2) ++ dangling(_._3) ++
-      v3.map { case (i, j) => contradictionIssue(es(i)._1, es(j)._1) } ++ v4
+    driverOppositePairs(es, OppositeSet).map(v3 => dangling(_._2) ++ dangling(_._3) ++
+      v3.map { case (i, j) => contradictionIssue(es(i)._1, es(j)._1) })
   }
 }

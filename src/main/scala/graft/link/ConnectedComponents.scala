@@ -59,7 +59,7 @@ object ConnectedComponents {
     count(lit(1)).as("n"),
     coalesce(sum(hash(col("src"), col("dst")).cast("long")), lit(0L)).as("h"))
 
-  /** Pair graphs of at most `driverLimit` edges are solved with a
+  /** Pair graphs of at most `DriverPath.limit` edges are solved with a
     * driver-side union-find (one probe job) instead of iterated star
     * rounds: ~10 shuffle rounds of near-empty data are pure fixed cost.
     * The limit is a driver-heap bound (200k edges × two ~32-char ids at
@@ -67,8 +67,7 @@ object ConnectedComponents {
     *
     * @return DataFrame(id, comp)
     */
-  def run(edges: DataFrame, maxIter: Int = 30,
-          driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 30): DataFrame = {
     import org.apache.spark.sql.Observation
     import org.apache.spark.storage.StorageLevel
     // ONE probe (round-4 verdict item 3): persist the normalized pair
@@ -80,7 +79,7 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    DriverPath.probe(e, driverLimit).foreach { taken =>
+    DriverPath.probe(e).foreach { taken =>
       val out = unionFindLocal(e.sparkSession,
         taken.map(r => (r.getString(0), r.getString(1))))
       e.unpersist(blocking = false)
@@ -171,8 +170,7 @@ object ConnectedComponents {
   }
 
   /** run() plus passthrough for isolated ids not present in any edge. */
-  def withIsolated(edges: DataFrame, allIds: DataFrame,
-                   driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
+  def withIsolated(edges: DataFrame, allIds: DataFrame): DataFrame = {
     // ---- driver fast path (round-7): when BOTH the pair set and the id
     // universe fit the driver limit, the union-find (already the
     // small-graph CC path) AND the isolated-id passthrough run in memory
@@ -183,11 +181,9 @@ object ConnectedComponents {
     locally {
       val spark = edges.sparkSession
       import spark.implicits._
-      DriverPath.probe(
-        edges.select(col("src").cast("string"), col("dst").cast("string")),
-        driverLimit, "src", "dst").foreach { raw =>
-        DriverPath.probe(
-          allIds.select(col("id").cast("string")), driverLimit, "id").foreach { idRows =>
+      DriverPath.probe(edges.select(col("src").cast("string"), col("dst").cast("string")),
+        "src", "dst").foreach { raw =>
+        DriverPath.probe(allIds.select(col("id").cast("string")), "id").foreach { idRows =>
           val pairs = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2).distinct
           val ccRows = unionFindRows(pairs)
           val ccIds = ccRows.map(_._1).toSet
@@ -196,7 +192,7 @@ object ConnectedComponents {
         }
       }
     }
-    val cc = run(edges, driverLimit = driverLimit)
+    val cc = run(edges)
     // string ids like run()'s: an integer id column would widen the union to bigint
     val isolated = allIds.select(col("id").cast("string"))
       .join(cc.select("id"), Seq("id"), "left_anti")

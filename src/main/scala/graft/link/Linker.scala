@@ -142,19 +142,18 @@ object Linker {
       rewrite: DataFrame
   )
 
-  /** Canonical-mention tables of at most `driverLimit` rows link on the
+  /** Canonical-mention tables of at most `DriverPath.limit` rows link on the
     * driver: one narrow probe of 3 string columns (cache-hot in the
     * pipeline, where extract_dedup materialized the mentions), then
     * [[driverComps]]. The distributed blocking join remains the path at
-    * scale; LinkerDriverSpec pins the two identical.
+    * scale; QueryDriverSpec pins the two identical.
     */
-  def link(entities: Dataset[Entity], threshold: Double = DefaultThreshold,
-           driverLimit: Long = DriverPath.DriverIterationLimit): LinkResult = {
+  def link(entities: Dataset[Entity], threshold: Double = DefaultThreshold): LinkResult = {
     val spark = entities.sparkSession
     import spark.implicits._
 
     val comps: DataFrame =
-      DriverPath.probe(entities.select($"id", $"name", $"entityType"), driverLimit, "id") match {
+      DriverPath.probe(entities.select($"id", $"name", $"entityType"), "id") match {
         case Some(rows) => driverComps(spark,
           rows.map(r => (r.getString(0), r.getString(1), r.getString(2))), threshold)
         case None => ConnectedComponents.run(
@@ -221,12 +220,12 @@ object Linker {
     // (round-2 advice; round-4 verdict item 3 removed the two driver
     // actions this cost on every small-corpus run).
     val filtered = rewrite.where(col("id") =!= col("canonicalId"))
-    val (rw, big) =
-      if (DriverPath.isLocal(filtered)) (filtered, DriverPath.probe(filtered, broadcastLimit).isEmpty)
-      else {
+    val (rw, big) = DriverPath.localCount(filtered) match {
+      case Some(n) => (filtered, n > broadcastLimit)
+      case None =>
         val m = filtered.localCheckpoint(true)
         (m, m.count() > broadcastLimit)
-      }
+    }
     val redirected =
       if (!big) {
         val srcMap = broadcast(rw.select(col("id").as("_sid"), col("canonicalId").as("_scan")))

@@ -27,7 +27,7 @@ import graft.runtime.{DriverPath, Observed}
  *  - ngramJaccard: exact verification metric used on candidate pairs.
  *  - driver paths: minhashLshPairs and ngramJaccard first take one
  *    [[DriverPath.probe]] of the columns they read. When the documents (and
- *    ngramJaccard's pairs) fit `driverLimit` rows, every id is a non-null
+ *    ngramJaccard's pairs) fit `DriverPath.limit` rows, every id is a non-null
  *    bigint, no id repeats and no text is null, they compute on the driver
  *    with the same static kernels (MinHashSignature, ShingleHashes,
  *    ArrayEqCount) and return a local relation; past that, or past
@@ -74,7 +74,7 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate candidate pairs.
     *
-    * Under `driverLimit` documents the candidates are computed on the
+    * Under `DriverPath.limit` documents the candidates are computed on the
     * driver from one probe ([[driverMinhash]]); the band self-join below is
     * the distributed form.
     * @param bands b bands of r = k/b rows each; P(candidate) ≈ 1-(1-s^r)^b
@@ -82,9 +82,8 @@ object Dedup {
     */
   def minhashLshPairs(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id", k: Int = 32, bands: Int = 8,
-                      maxBucket: Int = 256,
-                      driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
-    driverMinhash(docs, textCol, idCol, k, bands, maxBucket, driverLimit).foreach(return _)
+                      maxBucket: Int = 256): DataFrame = {
+    driverMinhash(docs, textCol, idCol, k, bands, maxBucket).foreach(return _)
     val r = k / bands
     // NOT persisted although three consumers read it (banding + both
     // re-attach joins): measured round 7 — the columnar cache write/read
@@ -137,15 +136,15 @@ object Dedup {
 
   /** `(id, text)` of every document, ascending by id, from one probe of the
     * two columns; None (the distributed form) when they are not a bigint id
-    * and a string text, over `driverLimit` rows, or with a null or
+    * and a string text, over `DriverPath.limit` rows, or with a null or
     * repeated id or a null text — cases whose SQL join and window
     * semantics the driver paths do not replicate.
     */
-  private def driverDocs(docs: DataFrame, textCol: String, idCol: String,
-                         driverLimit: Long): Option[Array[(Long, String)]] = {
+  private def driverDocs(docs: DataFrame, textCol: String,
+                         idCol: String): Option[Array[(Long, String)]] = {
     val sel = docs.select(col(idCol), col(textCol))
     if (sel.schema(0).dataType != LongType || sel.schema(1).dataType != StringType) return None
-    val raw = DriverPath.probe(sel, driverLimit, idCol, textCol).getOrElse(return None)
+    val raw = DriverPath.probe(sel, idCol, textCol).getOrElse(return None)
     val ds = raw.map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     if (ds.indices.exists(i => i > 0 && ds(i)._1 == ds(i - 1)._1)) None else Some(ds)
   }
@@ -160,8 +159,8 @@ object Dedup {
     * more than [[DriverPath.PairBound]] pairs.
     */
   private def driverMinhash(docs: DataFrame, textCol: String, idCol: String, k: Int,
-                            bands: Int, maxBucket: Int, driverLimit: Long): Option[DataFrame] = {
-    val ds = driverDocs(docs, textCol, idCol, driverLimit).getOrElse(return None)
+                            bands: Int, maxBucket: Int): Option[DataFrame] = {
+    val ds = driverDocs(docs, textCol, idCol).getOrElse(return None)
     val r = k / bands
     val sigs = ds.map(d => MinHashSignature.compute(UTF8String.fromString(d._2), k, 3))
     val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
@@ -260,14 +259,13 @@ object Dedup {
     * duplicates each document's array into every candidate pair
     * (measured 200s vs ~5s on 5k docs with heavy band collisions).
     *
-    * Under `driverLimit` documents and pairs the Jaccards are computed on
+    * Under `DriverPath.limit` documents and pairs the Jaccards are computed on
     * the driver ([[driverJaccard]]); a pair set that is already local
     * costs that path no job.
     */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id", n: Int = 3,
-                   driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
-    driverJaccard(docs, pairs, textCol, idCol, n, driverLimit).foreach(return _)
+                   idCol: String = "doc_id", n: Int = 3): DataFrame = {
+    driverJaccard(docs, pairs, textCol, idCol, n).foreach(return _)
     // native one-pass shingle hashing (ShingleHashes): the declarative
     // explode(shingles)+xxhash64 form pays interpreted HOF evaluation of
     // the shingle subtree per row — this scan runs over every candidate
@@ -306,15 +304,15 @@ object Dedup {
     * |A∩B| over the hash sets, and per input pair one row, or none when an
     * id is null or names no document (the distributed inner joins). None
     * when the documents do not qualify ([[driverDocs]]), the pair ids are
-    * not bigint, the pairs exceed `driverLimit` rows, or a pair repeats
+    * not bigint, the pairs exceed `DriverPath.limit` rows, or a pair repeats
     * (the distributed form counts its intersection once per copy).
     */
   private def driverJaccard(docs: DataFrame, pairs: DataFrame, textCol: String, idCol: String,
-                            n: Int, driverLimit: Long): Option[DataFrame] = {
+                            n: Int): Option[DataFrame] = {
     val ps = pairs.select("idA", "idB")
     if (ps.schema.exists(_.dataType != LongType)) return None
-    val ds = driverDocs(docs, textCol, idCol, driverLimit).getOrElse(return None)
-    val raw = DriverPath.probe(ps, driverLimit).getOrElse(return None)
+    val ds = driverDocs(docs, textCol, idCol).getOrElse(return None)
+    val raw = DriverPath.probe(ps).getOrElse(return None)
     val keyed = raw.map(r => (r.get(0), r.get(1)))
     if (keyed.distinct.length != keyed.length) return None
     val texts = ds.toMap

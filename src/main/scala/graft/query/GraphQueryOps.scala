@@ -7,7 +7,6 @@ import graft.graphout.GraphBuilder.Graph
 import graft.link.ConnectedComponents
 import graft.model.{Entity, Triple}
 import graft.runtime.DriverPath
-import graft.runtime.DriverPath.DriverIterationLimit
 
 /**
  * Graph query operators Q1-Q10 (SURVEY.md §2.8) — each a lazy plan over
@@ -79,8 +78,7 @@ object GraphQueryOps {
       maxDepth: Int = 3,
       direction: String = "outgoing",
       relTypes: Option[Seq[String]] = None,
-      entityTypes: Option[Seq[String]] = None,
-      driverLimit: Long = DriverIterationLimit
+      entityTypes: Option[Seq[String]] = None
   ): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
@@ -113,7 +111,7 @@ object GraphQueryOps {
     // GraphQuerySpec pins driver ≡ distributed.
     // explicit column order: the entityTypes join reorders adj's columns
     DriverPath.probe(adj.select("fromId", "toId", "relId", "relType", "direction"),
-      driverLimit, "fromId", "toId").foreach { rows =>
+      "fromId", "toId").foreach { rows =>
       val byFrom = rows.map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3), r.getString(4))).groupBy(_._1)
       val visited = scala.collection.mutable.HashSet(startId)
@@ -203,7 +201,7 @@ object GraphQueryOps {
     * graph_query.py:210, depth default 5). Returns rows (path: array<id>,
     * depth), the `maxPaths` smallest by (depth, lexicographic path).
     *
-    * Small graphs (≤ driverLimit edges — the same fast-path rule the
+    * Small graphs (≤ `DriverPath.limit` edges — the same fast-path rule the
     * iterative centralities use) enumerate in a driver loop: the
     * distributed form is D+1 driver-blocking jobs of fixed latency for a
     * few kilobytes of frontier (round-4 verdict item 4 — q20 was the
@@ -214,8 +212,7 @@ object GraphQueryOps {
     * same observed metrics. FindPathSpec pins driver ≡ distributed.
     */
   def findPath(g: Graph, srcId: String, dstId: String, maxDepth: Int = 5,
-               maxPaths: Int = 10,
-               driverLimit: Long = DriverIterationLimit): DataFrame = {
+               maxPaths: Int = 10): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val adjDf = g.edges.toDF().select($"srcId".as("last"), $"dstId".as("next"))
@@ -226,7 +223,7 @@ object GraphQueryOps {
     // is free, and skipping distinct keeps the probe an exchange-free scan.
     locally {
       val esOpt = DriverPath.probe(
-        g.edges.toDF().select($"srcId", $"dstId"), driverLimit, "srcId", "dstId")
+        g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId")
       esOpt.foreach { raw =>
         val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
         // sorted neighbor lists: enumeration order is deterministic (the
@@ -463,7 +460,7 @@ object GraphQueryOps {
     * one row per node row. Ties in degree go to the smaller id in UTF-8
     * order, as the sort does.
     */
-  def topKByDegree(g: Graph, k: Int = 10, driverLimit: Long = DriverIterationLimit): DataFrame = {
+  def topKByDegree(g: Graph, k: Int = 10): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val dist = g.edges.toDF()
@@ -472,9 +469,8 @@ object GraphQueryOps {
       .join(g.nodes.toDF().select($"id", $"name"), Seq("id"))
       .orderBy(desc("degree"), asc("id"))
       .limit(k)
-    for (es <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit,
-           "srcId", "dstId");
-         ns <- DriverPath.probe(g.nodes.toDF().select($"id", $"name"), driverLimit, "id")) {
+    for (es <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId");
+         ns <- DriverPath.probe(g.nodes.toDF().select($"id", $"name"), "id")) {
       val degree = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       es.foreach { r => degree(r.getString(0)) += 1; degree(r.getString(1)) += 1 }
       val top = ns.filter(r => degree.contains(r.getString(0)))
@@ -493,23 +489,21 @@ object GraphQueryOps {
     * count `n`) when the node table fits the driver limit: one probe job
     * serves both the size gate and the ids of the driver mirrors.
     */
-  private[graft] def driverNodeIds(g: Graph, driverLimit: Long): Option[Array[String]] =
-    DriverPath.probe(g.nodes.toDF().select(col("id")), driverLimit, "id")
+  private[graft] def driverNodeIds(g: Graph): Option[Array[String]] =
+    DriverPath.probe(g.nodes.toDF().select(col("id")), "id")
       .map(_.map(_.getString(0)).sorted)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.
     */
-  def pagerank(g: Graph, iterations: Int = 10, damping: Double = 0.85,
-               driverLimit: Long = DriverIterationLimit): DataFrame = {
+  def pagerank(g: Graph, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     // driver probes BEFORE the distinct+localCheckpoint: the checkpoint is
     // only the distributed loop's lineage anchor, and paying its job (plus
     // a count) just to decide the path wasted two jobs per call (round-7)
-    for (ids <- driverNodeIds(g, driverLimit);
-         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), driverLimit,
-           "srcId", "dstId"))
+    for (ids <- driverNodeIds(g);
+         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId"))
       return pagerankDriver(spark, ids,
         raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations, damping)
     val n = g.nodes.count().toDouble
@@ -604,8 +598,7 @@ object GraphQueryOps {
     * skeleton as pagerank; the vector is L2-normalized each iteration via
     * one scalar aggregate.
     */
-  def eigenvectorCentrality(g: Graph, iterations: Int = 20,
-                            driverLimit: Long = DriverIterationLimit): DataFrame = {
+  def eigenvectorCentrality(g: Graph, iterations: Int = 20): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     // undirected view (networkx eigenvector_centrality on DiGraph uses
@@ -613,9 +606,9 @@ object GraphQueryOps {
     // symmetrize so isolated direction quirks don't zero the vector)
     val dir = g.edges.toDF().select($"srcId".as("src"), $"dstId".as("dst"))
     // driver probes before the distinct+localCheckpoint (see pagerank)
-    for (ids <- driverNodeIds(g, driverLimit);
+    for (ids <- driverNodeIds(g);
          raw <- DriverPath.probe(dir.union(dir.select($"dst".as("src"), $"src".as("dst"))),
-           driverLimit, "src", "dst"))
+           "src", "dst"))
       return eigenvectorDriver(spark, ids,
         raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations)
     val n = g.nodes.count().toDouble
@@ -822,10 +815,10 @@ object GraphQueryOps {
                                         adj: Map[Int, Array[Int]], sampled: Int,
                                         trees: Seq[BfsTree])
 
-  private def driverBfsRun(g: Graph, edgeDf: DataFrame, samples: Int, maxDepth: Int,
-                           driverLimit: Long): Option[DriverBfsRun] = {
-    val nodeIds = driverNodeIds(g, driverLimit).getOrElse(return None)
-    val raw = DriverPath.probe(edgeDf, driverLimit, "srcId", "dstId").getOrElse(return None)
+  private def driverBfsRun(g: Graph, edgeDf: DataFrame, samples: Int,
+                           maxDepth: Int): Option[DriverBfsRun] = {
+    val nodeIds = driverNodeIds(g).getOrElse(return None)
+    val raw = DriverPath.probe(edgeDf, "srcId", "dstId").getOrElse(return None)
     // in-memory dedup: callers pass the pre-distinct pair projection, so
     // the probe stays an exchange-free scan
     val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
@@ -846,16 +839,15 @@ object GraphQueryOps {
     * EXACT when samples ≥ |V| (the estimator reduces to Wasserman–Faust
     * closeness). The reference's nx.closeness_centrality is all-pairs —
     * quadratic and impossible at 10^12; sampling is the scale path.
-    * Below [[DriverIterationLimit]] nodes+edges the BFS runs as an
+    * Below [[DriverPath.limit]] nodes+edges the BFS runs as an
     * in-memory driver loop (a depth-D frontier-join loop on a tiny graph
     * is D driver-blocking jobs of fixed latency); reached/sumDist are
     * integers, so the estimate is bit-identical across the two paths.
     */
-  def closenessCentrality(g: Graph, samples: Int = 64, maxDepth: Int = 10,
-                          driverLimit: Long = DriverIterationLimit): DataFrame = {
+  def closenessCentrality(g: Graph, samples: Int = 64, maxDepth: Int = 10): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth, driverLimit)
+    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth)
       .foreach { run =>
         val n = run.nodeIds.length.toDouble
         val f = n / run.sampled
@@ -901,13 +893,12 @@ object GraphQueryOps {
     * BFS on the symmetrized edges: Σd / #reachable-pairs over s sampled
     * sources; EXACT (= nx) when samples ≥ |V| and the graph is connected.
     */
-  def avgShortestPathSampled(g: Graph, samples: Int = 32, maxDepth: Int = 15,
-                             driverLimit: Long = DriverIterationLimit): Double = {
+  def avgShortestPathSampled(g: Graph, samples: Int = 32, maxDepth: Int = 15): Double = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val dir = g.edges.toDF().select($"srcId", $"dstId")
     val und = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-    driverBfsRun(g, und, samples, maxDepth, driverLimit).foreach { run =>
+    driverBfsRun(g, und, samples, maxDepth).foreach { run =>
       var s = 0L
       var c = 0L
       run.trees.foreach(_.dist.foreach { case (_, d) =>
@@ -929,11 +920,10 @@ object GraphQueryOps {
     * samples ≥ |V|. Directed, endpoints excluded (networkx defaults).
     */
   def betweennessCentrality(g: Graph, samples: Int = 32, maxDepth: Int = 10,
-                            normalized: Boolean = true,
-                            driverLimit: Long = DriverIterationLimit): DataFrame = {
+                            normalized: Boolean = true): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth, driverLimit)
+    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth)
       .foreach { run =>
         val n = run.nodeIds.length.toDouble
         val sCnt = run.sampled.toDouble

@@ -78,13 +78,12 @@ object Reasoning {
     * conf = Π(edge conf) × 0.9^(hops-1), max over paths, skip existing
     * direct edges (graph_reasoning.py:641-812, cutoff 3 at :763).
     *
-    * Under `driverLimit` edges the chains are walked on the driver from
+    * Under `DriverPath.limit` edges the chains are walked on the driver from
     * one probe of the four edge columns read ([[driverTransitive]]); the
     * self-joins below are the distributed form.
     */
-  def inferTransitive(g: Graph, minConfidence: Double = 0.7,
-                      driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
-    driverTransitive(g, minConfidence, driverLimit).foreach(df => return df)
+  def inferTransitive(g: Graph, minConfidence: Double = 0.7): DataFrame = {
+    driverTransitive(g, minConfidence).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val e = lowered(g).where($"rt".isin(TransitiveTypes: _*))
@@ -123,10 +122,9 @@ object Reasoning {
     * the limit, on a null endpoint or a non-ASCII relation type, or past
     * [[DriverPath.PairBound]] paths.
     */
-  private def driverTransitive(g: Graph, minConfidence: Double,
-                               driverLimit: Long): Option[DataFrame] = {
+  private def driverTransitive(g: Graph, minConfidence: Double): Option[DataFrame] = {
     val raw = DriverPath.probe(g.edges.toDF().select("srcId", "dstId", "relType", "confidence"),
-      driverLimit, "srcId", "dstId").getOrElse(return None)
+      "srcId", "dstId").getOrElse(return None)
     val rts = DriverPath.lowerAscii(raw.map(_.getString(2))).getOrElse(return None)
     val es = raw.indices.collect { case i if TransitiveTypes.contains(rts(i)) =>
       (raw(i).getString(0), raw(i).getString(1), rts(i), raw(i).get(3))
@@ -245,12 +243,11 @@ object Reasoning {
   /** X4 contradictory relationships: same (src,dst) pair with opposite
     * types (graph_reasoning.py:196-268). severity high, conf = min.
     *
-    * Under `driverLimit` edges the pairs are found on the driver from one
+    * Under `DriverPath.limit` edges the pairs are found on the driver from one
     * probe of the five edge columns read; the self-join is the
     * distributed form.
     */
-  def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5,
-                          driverLimit: Long = DriverPath.DriverIterationLimit): DataFrame = {
+  def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val distributed = oppositePairs(g, confidenceThreshold)
@@ -258,7 +255,7 @@ object Reasoning {
         least($"confA", $"confB").as("confidence"),
         lit("contradictory_relationships").as("conflictType"),
         lit("high").as("severity"))
-    driverContradictory(g, confidenceThreshold, driverLimit, distributed.schema)
+    driverContradictory(g, confidenceThreshold, distributed.schema)
       .getOrElse(distributed)
   }
 
@@ -285,11 +282,11 @@ object Reasoning {
     * distributed form) over the limit, on a non-ASCII relation type, or
     * past [[DriverPath.PairBound]] pairs.
     */
-  private def driverContradictory(g: Graph, confidenceThreshold: Double, driverLimit: Long,
+  private def driverContradictory(g: Graph, confidenceThreshold: Double,
                                   schema: StructType): Option[DataFrame] = {
     val raw = DriverPath.probe(
       g.edges.toDF().select("id", "srcId", "dstId", "relType", "confidence"),
-      driverLimit, "srcId", "dstId").getOrElse(return None)
+      "srcId", "dstId").getOrElse(return None)
     val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
     val kept = raw.indices.filter(i => !raw(i).isNullAt(4) &&
       DriverPath.compareDoubles(raw(i).getDouble(4), confidenceThreshold) >= 0)

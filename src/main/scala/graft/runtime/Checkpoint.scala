@@ -200,7 +200,7 @@ final class Checkpoint(spark: SparkSession, root: String) {
     * once and returned as a local relation with the table's schema, so
     * every driver mirror probes it with no job (the in-memory graph the
     * read pass of a small KG works on). Small means both: at most
-    * `DriverPath.DriverIterationLimit` rows by the manifest, and files no
+    * [[DriverPath.limit]] rows by the manifest, and files no
     * larger than `spark.sql.autoBroadcastJoinThreshold`, Spark's own bound
     * on what the driver may hold whole. Neither test runs a job. Over
     * either bound the bucketed table is returned, so a join on the bucket
@@ -209,7 +209,7 @@ final class Checkpoint(spark: SparkSession, root: String) {
   def readBucketed(stage: String): DataFrame = {
     val df = bucketedTable(stage)
     val rows = jsonLong(Files.readString(manifestPath(stage)), "rows")
-    if (rows > DriverPath.DriverIterationLimit || df.queryExecution.optimizedPlan.stats.sizeInBytes >
+    if (rows > DriverPath.limit || df.queryExecution.optimizedPlan.stats.sizeInBytes >
         spark.sessionState.conf.autoBroadcastJoinThreshold) df
     else spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
   }

@@ -47,18 +47,33 @@ object DriverPath {
     * limit costs O(partitions · limit) to reject. The driver loops are
     * deterministic (contributions summed in sorted-source order), and the
     * distributed path remains the one answer at scale; PropertySpec and
-    * the `driverLimit = 0` parity pins hold the two paths equal.
+    * the `withLimit(0)` parity pins hold the two paths equal.
     *
-    * `GRAFT_CENTRALITY_DRIVER_LIMIT` overrides it for the whole JVM; `0`
-    * forces every distributed form at once. It is the library's only
-    * tuning switch: measuring each mirror's win on a benchmark workload
-    * needs the distributed forms of the same build, which no parameter
-    * reaches from outside the program.
+    * `GRAFT_CENTRALITY_DRIVER_LIMIT` sets it for the whole JVM; `0` forces
+    * every distributed form at once (measuring each mirror's win on a
+    * benchmark workload needs the distributed forms of the same build).
+    * It is only the initial value of [[limit]]: no operator takes the
+    * limit as a parameter, [[withLimit]] scopes another value.
     */
   val DriverIterationLimit: Long =
     sys.env.get("GRAFT_CENTRALITY_DRIVER_LIMIT").map(_.toLong).getOrElse(200000L)
 
-  /** `Some(df.collect())` when `df` has at most `lim` rows, else `None`.
+  private val scoped = new scala.util.DynamicVariable[Long](DriverIterationLimit)
+
+  /** The size limit in force on this thread: [[DriverIterationLimit]]
+    * unless a [[withLimit]] scope set another. [[probe]] and
+    * [[Checkpoint.readBucketed]] read it; nothing else does.
+    */
+  def limit: Long = scoped.value
+
+  /** Runs `body` with [[limit]] at `n`, restoring the outer value when it
+    * returns or throws; `withLimit(0)` forces every distributed form the
+    * body reaches (the parity pins' reference).
+    */
+  def withLimit[T](n: Long)(body: => T): T = scoped.withValue(n)(body)
+
+  /** `Some(df.collect())` when `df` has at most `lim` = [[limit]] rows,
+    * else `None`.
     *
     * One `runJob` over the plan's RDD, inside a SQL execution (so SQL
     * listeners and `observe` see it): each partition iterates at most
@@ -83,9 +98,9 @@ object DriverPath {
     * None also when a fetched row has a null in one of the `keys` columns
     * (the null rule above), from the same rows and with no further job.
     */
-  def probe(df: DataFrame, lim: Long, keys: String*): Option[Array[Row]] = {
+  def probe(df: DataFrame, keys: String*): Option[Array[Row]] = {
     val ks = keys.map(df.schema.fieldIndex)
-    fetch(df, lim).filterNot(_.exists(r => ks.exists(r.isNullAt)))
+    fetch(df, limit).filterNot(_.exists(r => ks.exists(r.isNullAt)))
   }
 
   private def fetch(df: DataFrame, lim: Long): Option[Array[Row]] = {
@@ -133,7 +148,11 @@ object DriverPath {
     * as a driver mirror's result does: [[probe]] reads it with no job, and
     * caching it would only copy rows the driver already holds.
     */
-  def isLocal(df: DataFrame): Boolean = localRows(df.queryExecution.optimizedPlan).isDefined
+  def isLocal(df: DataFrame): Boolean = localCount(df).isDefined
+
+  /** The row count of a plan [[isLocal]] holds, counted with no job. */
+  def localCount(df: DataFrame): Option[Int] =
+    localRows(df.queryExecution.optimizedPlan).map(_.length)
 
   /** In-flight bound of a driver mirror's working set (walk pairs, chain
     * paths, same-endpoint edge pairs, findPath's partial paths): past it

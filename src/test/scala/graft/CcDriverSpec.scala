@@ -7,11 +7,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.link.ConnectedComponents
 import graft.runtime.Observed
+import graft.runtime.DriverPath.withLimit
 
 /** The driver union-find paths of `ConnectedComponents.run` and
   * `ConnectedComponents.withIsolated` equal their distributed star rounds
-  * (`driverLimit = 0`) on adversarial pair graphs, and `withIsolated`
-  * passes its limit on to `run`.
+  * (`DriverPath.withLimit(0)`) on adversarial pair graphs, and
+  * `withIsolated` under that scope reaches `run`'s star rounds.
   */
 class CcDriverSpec extends SparkSpec {
 
@@ -87,26 +88,34 @@ class CcDriverSpec extends SparkSpec {
     var linked = 0
     cases.foreach { c =>
       val fast = sortedRows(ConnectedComponents.run(edgesOf(c)))
-      assert(fast == sortedRows(ConnectedComponents.run(edgesOf(c), driverLimit = 0)), s"case=$c")
+      assert(fast == sortedRows(withLimit(0)(ConnectedComponents.run(edgesOf(c)))), s"case=$c")
       if (fast.nonEmpty) linked += 1
     }
     assert(linked >= 16, linked)
   }
 
   test("withIsolated: the driver path ≡ the distributed form (sorted rows, schema)") {
+    var repeated = 0
     cases.foreach { c =>
       val fast = ConnectedComponents.withIsolated(edgesOf(c), idsOf(c))
-      val dist = ConnectedComponents.withIsolated(edgesOf(c), idsOf(c), driverLimit = 0)
+      val dist = withLimit(0)(ConnectedComponents.withIsolated(edgesOf(c), idsOf(c)))
       assert(sortedRows(fast) == sortedRows(dist), s"case=$c")
       assert(fast.schema == dist.schema, s"case=$c")
+      // an isolated id listed twice keeps both rows, as the anti-join does
+      c.ids.filter(i => i != null && i >= 12).groupBy(identity).foreach { case (i, copies) =>
+        val v = value(c, i)
+        assert(sortedRows(fast).count(_ == s"$v|$v") == copies.length, s"case=$c")
+        if (copies.length > 1) repeated += 1
+      }
     }
+    assert(repeated >= 1, repeated)
   }
 
   test("withIsolated at driverLimit = 0 runs the star rounds (records cc_iterations)") {
     import spark.implicits._
     Observed.clear("cc_iterations")
-    val rows = ConnectedComponents.withIsolated(Seq(("a", "b"), ("b", "c")).toDF("src", "dst"),
-      Seq("a", "d").toDF("id"), driverLimit = 0).collect()
+    val rows = withLimit(0)(ConnectedComponents.withIsolated(
+      Seq(("a", "b"), ("b", "c")).toDF("src", "dst"), Seq("a", "d").toDF("id"))).collect()
     assert(rows.length == 4)
     val rounds = Observed.get("cc_iterations").flatMap(_.get("rounds"))
     assert(rounds.exists(_ >= 1), s"expected star rounds, observed $rounds")

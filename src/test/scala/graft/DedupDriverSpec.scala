@@ -9,9 +9,10 @@ import org.scalacheck.rng.Seed
 import graft.ops.Dedup
 import graft.runtime.{DriverPath, Observed}
 import graft.tools.RefApprox
+import graft.runtime.DriverPath.withLimit
 
 /** The driver paths of `Dedup.minhashLshPairs` and `Dedup.ngramJaccard`
-  * equal their distributed forms (`driverLimit = 0`) on adversarial
+  * equal their distributed forms (`DriverPath.withLimit(0)`) on adversarial
   * document sets, cap drops included, and return local relations; inputs
   * the mirrors do not replicate take the distributed form. q24 composes
   * the two in a handful of jobs and keeps its recall gate on both paths.
@@ -84,11 +85,10 @@ class DedupDriverSpec extends SparkSpec {
       .toSeq.sorted
 
   /** Rows and cap drops of one `minhashLshPairs` call. */
-  private def minhash(c: Case, driverLimit: Long): (DataFrame, Seq[String], Long) = {
+  private def minhash(c: Case, lim: Long): (DataFrame, Seq[String], Long) = {
     assert(GraftCore.drainListenerBus(spark.sparkContext, 30000))
     Observed.clear("minhash_band_cap")
-    val df = Dedup.minhashLshPairs(docsOf(c.docs), maxBucket = c.maxBucket,
-      driverLimit = driverLimit)
+    val df = withLimit(lim)(Dedup.minhashLshPairs(docsOf(c.docs), maxBucket = c.maxBucket))
     val rows = sortedRows(df)
     assert(GraftCore.drainListenerBus(spark.sparkContext, 30000))
     (df, rows, Observed.get("minhash_band_cap").map(_("dropped")).getOrElse(-1L))
@@ -132,7 +132,7 @@ class DedupDriverSpec extends SparkSpec {
         Seq(Row(ids.head, ids.head), Row(null, ids.head))
       val pairs = spark.createDataFrame(rows.asJava, pairSchema)
       val fast = Dedup.ngramJaccard(docs, pairs)
-      val dist = Dedup.ngramJaccard(docs, pairs, driverLimit = 0)
+      val dist = withLimit(0)(Dedup.ngramJaccard(docs, pairs))
       val got = sortedRows(fast)
       assert(got == sortedRows(dist), s"case=$c")
       assert(fast.schema == dist.schema)
@@ -148,13 +148,13 @@ class DedupDriverSpec extends SparkSpec {
   test("two documents with no shingle: estimate 1.0, null Jaccard, no DIVIDE_BY_ZERO") {
     val docs = docsOf(fourDocs)
     for (lim <- Seq(DriverPath.DriverIterationLimit, 0L)) {
-      val pairs = Dedup.minhashLshPairs(docs, driverLimit = lim)
+      val pairs = withLimit(lim)(Dedup.minhashLshPairs(docs))
       val est = pairs.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       assert(est.get((1L, 2L)).contains(1.0) && est.contains((3L, 4L)), s"lim=$lim $est")
-      val j = Dedup.ngramJaccard(docs, pairs.select("idA", "idB"), driverLimit = lim)
+      val j = withLimit(lim)(Dedup.ngramJaccard(docs, pairs.select("idA", "idB")))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.get(2)).toMap
       assert(j((1L, 2L)) == null && j((3L, 4L)) == 5.0 / 6, s"lim=$lim $j")
-      val q24 = Queries.minhashDedup(spark, docs, driverLimit = lim).collect()
+      val q24 = withLimit(lim)(Queries.minhashDedup(spark, docs)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(q24 == RefApprox.q24MinhashDedup(fourDocs.map(d => (d._1.longValue, d._2))),
         s"lim=$lim")
@@ -169,7 +169,7 @@ class DedupDriverSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     for (lim <- Seq(DriverPath.DriverIterationLimit, 0L)) {
       val e = intercept[IllegalStateException](
-        Queries.minhashDedup(spark, docs, estFloor = 1.01, driverLimit = lim))
+        withLimit(lim)(Queries.minhashDedup(spark, docs, estFloor = 1.01)))
       assert(e.getMessage.contains("q24_minhash recall collapsed"), s"lim=$lim")
     }
   }
@@ -178,7 +178,7 @@ class DedupDriverSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Queries.minhashDedup(spark, docs).count() // warm-up: file listing, codegen
     val (fast, jf) = jobsOf(sortedRows(Queries.minhashDedup(spark, docs)))
-    val (dist, jd) = jobsOf(sortedRows(Queries.minhashDedup(spark, docs, driverLimit = 0)))
+    val (dist, jd) = jobsOf(sortedRows(withLimit(0)(Queries.minhashDedup(spark, docs))))
     assert(fast == dist && fast.nonEmpty)
     // the recall gate counts two local relations on the driver: no job
     assert(jf <= 6 && jd > 2 * jf, s"jobs: driver=$jf distributed=$jd")

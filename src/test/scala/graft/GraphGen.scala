@@ -10,7 +10,7 @@ import graft.model.{Entity, Triple}
 
 /** The adversarial small graphs of the driver-mirror parity suites
   * (ReasoningDriverSpec, QueryDriverSpec): every mirror is run against its
-  * distributed form (`driverLimit = 0`) on the same generated graphs.
+  * distributed form (`DriverPath.withLimit(0)`) on the same generated graphs.
   */
 object GraphGen {
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.query.GraphQueryOps
 import graft.query.GraphQueryOps.{EntityQuery, RelQuery}
+import graft.runtime.DriverPath.withLimit
 
 /** Assertions ported from /root/reference/src/graph_management/
   * test_graph_query.py (FIXTURES.md §3.2).
@@ -295,8 +296,8 @@ class GraphQuerySpec extends SparkSpec {
 
   test("distributed betweenness checkpoints its edge set once, for both passes") {
     val gg = centralityGraph
-    val (dist, execs) = withExecs(toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16,
-      maxDepth = 8, driverLimit = 0), "betweenness"))
+    val (dist, execs) = withExecs(toMap(withLimit(0)(
+      GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 8)), "betweenness"))
     // counted as checkpoint executions, not jobs: the job count of one
     // call varies by one from run to run
     val edgeSets = execs.count { case (f, qe) =>
@@ -311,14 +312,14 @@ class GraphQuerySpec extends SparkSpec {
     val gg = centralityGraph
 
     val prFast = toMap(GraphQueryOps.pagerank(gg, iterations = 10), "rank")
-    val prDist = toMap(GraphQueryOps.pagerank(gg, iterations = 10, driverLimit = 0), "rank")
+    val prDist = toMap(withLimit(0)(GraphQueryOps.pagerank(gg, iterations = 10)), "rank")
     assert(prFast.keySet == prDist.keySet)
     prFast.foreach { case (k, v) =>
       assert(math.abs(v - prDist(k)) < 1e-9, s"$k: $v vs ${prDist(k)}") }
 
     val evFast = toMap(GraphQueryOps.eigenvectorCentrality(gg, iterations = 20), "score")
-    val evDist = toMap(GraphQueryOps.eigenvectorCentrality(gg, iterations = 20,
-      driverLimit = 0), "score")
+    val evDist = toMap(withLimit(0)(GraphQueryOps.eigenvectorCentrality(gg, iterations = 20)),
+      "score")
     assert(evFast.keySet == evDist.keySet)
     evFast.foreach { case (k, v) =>
       assert(math.abs(v - evDist(k)) < 1e-9, s"$k: $v vs ${evDist(k)}") }
@@ -326,33 +327,33 @@ class GraphQuerySpec extends SparkSpec {
     // sampled BFS family (round-4 fast paths): sampled sources, σ path
     // counts, depth cutoffs, and the estimator arithmetic must all agree
     val clFast = toMap(GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 8), "closeness")
-    val clDist = toMap(GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 8,
-      driverLimit = 0), "closeness")
+    val clDist = toMap(withLimit(0)(
+      GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 8)), "closeness")
     assert(clFast.keySet == clDist.keySet)
     clFast.foreach { case (k, v) =>
       assert(math.abs(v - clDist(k)) < 1e-12, s"$k: $v vs ${clDist(k)}") }
 
     val bcFast = toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 8), "betweenness")
-    val bcDist = toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 8,
-      driverLimit = 0), "betweenness")
+    val bcDist = toMap(withLimit(0)(
+      GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 8)), "betweenness")
     assert(bcFast.keySet == bcDist.keySet)
     bcFast.foreach { case (k, v) =>
       assert(math.abs(v - bcDist(k)) < 1e-9, s"$k: $v vs ${bcDist(k)}") }
 
     val apFast = GraphQueryOps.avgShortestPathSampled(gg, samples = 16)
-    val apDist = GraphQueryOps.avgShortestPathSampled(gg, samples = 16, driverLimit = 0)
+    val apDist = withLimit(0)(GraphQueryOps.avgShortestPathSampled(gg, samples = 16))
     assert(math.abs(apFast - apDist) < 1e-12, s"$apFast vs $apDist")
 
     // depth-cutoff parity: maxDepth below the graph's reach — both paths
     // must cut the SAME frontier and agree on the truncated estimates
     val clCutF = toMap(GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 2), "closeness")
-    val clCutD = toMap(GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 2,
-      driverLimit = 0), "closeness")
+    val clCutD = toMap(withLimit(0)(
+      GraphQueryOps.closenessCentrality(gg, samples = 16, maxDepth = 2)), "closeness")
     clCutF.foreach { case (k, v) =>
       assert(math.abs(v - clCutD(k)) < 1e-12, s"cutoff $k: $v vs ${clCutD(k)}") }
     val bcCutF = toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 2), "betweenness")
-    val bcCutD = toMap(GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 2,
-      driverLimit = 0), "betweenness")
+    val bcCutD = toMap(withLimit(0)(
+      GraphQueryOps.betweennessCentrality(gg, samples = 16, maxDepth = 2)), "betweenness")
     bcCutF.foreach { case (k, v) =>
       assert(math.abs(v - bcCutD(k)) < 1e-9, s"cutoff $k: $v vs ${bcCutD(k)}") }
   }

@@ -3,6 +3,7 @@ package graft
 import graft.functions.SimilarityScore
 import graft.runtime.Skew
 import org.apache.spark.sql.functions._
+import graft.runtime.DriverPath.withLimit
 
 /** Physical-plan shape assertions: the optimizations the engine relies on
   * must actually appear in `explain` output (pushdown regressions are
@@ -235,14 +236,14 @@ class PlanSpec extends SparkSpec {
     // through observe
     for (lim <- Seq(graft.runtime.DriverPath.DriverIterationLimit, 0L)) {
       graft.runtime.Observed.clear("minhash_band_cap") // earlier suites also report here
-      graft.ops.Dedup.minhashLshPairs(docs, maxBucket = 4, driverLimit = lim).count()
+      withLimit(lim)(graft.ops.Dedup.minhashLshPairs(docs, maxBucket = 4)).count()
       // QueryExecutionListener callbacks are delivered asynchronously
       def poll(): Option[Long] =
         graft.runtime.Observed.get("minhash_band_cap").map(_("dropped"))
       val deadline = System.currentTimeMillis() + 10000
       while (poll().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
       // 30 identical docs × 8 bands, cap 4 → 26 dropped per band = 208
-      assert(poll().contains(208L), s"driverLimit=$lim observed=${poll()}")
+      assert(poll().contains(208L), s"limit=$lim observed=${poll()}")
     }
   }
 

@@ -9,12 +9,13 @@ import graft.graphout.GraphBuilder.Graph
 import graft.link.Linker
 import graft.model.Entity
 import graft.query.GraphQueryOps
+import graft.runtime.DriverPath.withLimit
 
-/** The query, centrality, degree top-k, stats, clustering, standalone
-  * V1/V4 and linker mirrors equal their distributed forms
-  * (`driverLimit = 0`) on generated inputs, and take the driver path
-  * exactly when no probed id or endpoint is null (the `DriverPath` null
-  * rule).
+/** The query, centrality, degree top-k, stats, clustering, connected
+  * components, standalone V1/V4 and linker mirrors equal their distributed
+  * forms (`DriverPath.withLimit(0)`) on generated inputs, and take the
+  * driver path exactly when no probed id or endpoint is null (the
+  * `DriverPath` null rule).
   */
 class QueryDriverSpec extends SparkSpec {
 
@@ -28,41 +29,43 @@ class QueryDriverSpec extends SparkSpec {
     * types, the call, and whether it keys the edge endpoints.
     */
   private final case class Mirror(name: String, readsNodes: Boolean, readsTypes: Boolean,
-                                  run: (Graph, Long) => Either[DataFrame, Double],
+                                  run: Graph => Either[DataFrame, Double],
                                   readsEnds: Boolean = true)
 
   private val mirrors = Seq(
     Mirror("traverse outgoing", false, false,
-      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "outgoing", driverLimit = l))),
+      g => Left(GraphQueryOps.traverse(g, "n0", 3, "outgoing"))),
     Mirror("traverse incoming", false, false,
-      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "incoming", driverLimit = l))),
+      g => Left(GraphQueryOps.traverse(g, "n0", 3, "incoming"))),
     Mirror("traverse both", false, false,
-      (g, l) => Left(GraphQueryOps.traverse(g, "n0", 3, "both", driverLimit = l))),
+      g => Left(GraphQueryOps.traverse(g, "n0", 3, "both"))),
     Mirror("findPath", false, false,
-      (g, l) => Left(GraphQueryOps.findPath(g, "n0", "n2", maxDepth = 4, driverLimit = l))),
+      g => Left(GraphQueryOps.findPath(g, "n0", "n2", maxDepth = 4))),
     Mirror("pagerank", true, false,
-      (g, l) => Left(GraphQueryOps.pagerank(g, iterations = 2, driverLimit = l))),
+      g => Left(GraphQueryOps.pagerank(g, iterations = 2))),
     // 9 iterations: the every-8th normalization runs once
     Mirror("eigenvector", true, false,
-      (g, l) => Left(GraphQueryOps.eigenvectorCentrality(g, iterations = 9, driverLimit = l))),
+      g => Left(GraphQueryOps.eigenvectorCentrality(g, iterations = 9))),
     Mirror("closeness", true, false,
-      (g, l) => Left(GraphQueryOps.closenessCentrality(g, driverLimit = l))),
+      g => Left(GraphQueryOps.closenessCentrality(g))),
     Mirror("betweenness", true, false,
-      (g, l) => Left(GraphQueryOps.betweennessCentrality(g, driverLimit = l))),
+      g => Left(GraphQueryOps.betweennessCentrality(g))),
     Mirror("avgShortestPathSampled", true, false,
-      (g, l) => Right(GraphQueryOps.avgShortestPathSampled(g, driverLimit = l))),
+      g => Right(GraphQueryOps.avgShortestPathSampled(g))),
     Mirror("avgClusteringCoefficient", true, false,
-      (g, l) => Right(GraphBuilder.avgClusteringCoefficient(g, driverLimit = l))),
+      g => Right(GraphBuilder.avgClusteringCoefficient(g))),
     Mirror("cyclicDependencies", false, true,
-      (g, l) => Left(Verifier.cyclicDependencies(g, driverLimit = l).toDF())),
+      g => Left(Verifier.cyclicDependencies(g).toDF())),
     Mirror("semanticContradictions", false, true,
-      (g, l) => Left(Verifier.semanticContradictions(g, driverLimit = l).toDF())),
+      g => Left(Verifier.semanticContradictions(g).toDF())),
+    // the withIsolated composite: its edge and node-id probes key src/dst and id
+    Mirror("connectedComponents", true, false, g => Left(GraphQueryOps.connectedComponents(g))),
     // k = 4 cuts through degree ties on most graphs
     Mirror("topKByDegree", true, false,
-      (g, l) => Left(GraphQueryOps.topKByDegree(g, k = 4, driverLimit = l))),
+      g => Left(GraphQueryOps.topKByDegree(g, k = 4))),
     // no key column: a null id or endpoint leaves the tally on the driver
     Mirror("stats", false, false,
-      (g, l) => Left(GraphBuilder.stats(g, driverLimit = l)), readsEnds = false))
+      g => Left(GraphBuilder.stats(g)), readsEnds = false))
 
   /** Whether the null rule (and, for the V1/V4 case fold, ASCII types)
     * keeps `m` on the driver for graph `g`.
@@ -105,7 +108,7 @@ class QueryDriverSpec extends SparkSpec {
     * form runs some.
     */
   private def call(m: Mirror, g: Graph, limit: Long): (Either[Seq[Seq[Any]], Double], Boolean) = {
-    val (r, jobs) = jobsOf(m.run(g, limit).left.map(rows))
+    val (r, jobs) = jobsOf(withLimit(limit)(m.run(g).left.map(rows)))
     (r, jobs == 0)
   }
 
@@ -123,7 +126,7 @@ class QueryDriverSpec extends SparkSpec {
         val folded = m.readsNodes && ns.isEmpty && offDriver && dist == Left(Nil)
         assert(onDriver == expectDriver(m, (ns, es)) || folded, s"${m.name}: nodes=$ns edges=$es")
         assert(!offDriver || folded,
-          s"${m.name}: driverLimit = 0 took the driver path; nodes=$ns edges=$es")
+          s"${m.name}: withLimit(0) took the driver path; nodes=$ns edges=$es")
         val equal = (fast, dist) match {
           case (Left(a), Left(b)) => sameRows(a, b)
           case (Right(a), Right(b)) => same(a, b)
@@ -134,6 +137,18 @@ class QueryDriverSpec extends SparkSpec {
       }
     }
     mirrors.foreach(m => assert(2 * driven(m.name) >= graphs.length, s"${m.name}: $driven"))
+  }
+
+  test("findPath's mirror finds an n0 → n2 path over tied parallel edges") {
+    // the driver path dedups the probed endpoints in memory: some graph
+    // on it has a found path through a repeated (src, dst) pair
+    val hits = graphs.count { case (ns, es) =>
+      val tied = es.groupBy(e => (e.src, e.dst)).collect { case (p, copies) if copies.size > 1 => p }
+        .toSet
+      !nullEnd(es) && GraphQueryOps.findPath(graphOf(ns, es), "n0", "n2", maxDepth = 4).collect()
+        .exists(_.getSeq[String](0).sliding(2).exists(p => tied((p.head, p.last))))
+    }
+    assert(hits >= 1, hits)
   }
 
   // ------------------------------------------------------ null endpoints
@@ -159,12 +174,12 @@ class QueryDriverSpec extends SparkSpec {
 
   test("findPath across a null endpoint: no path on either form") {
     assert(paths(GraphQueryOps.findPath(g1, "a", "b")).isEmpty)
-    assert(paths(GraphQueryOps.findPath(g1, "a", "b", driverLimit = 0)).isEmpty)
+    assert(paths(withLimit(0)(GraphQueryOps.findPath(g1, "a", "b"))).isEmpty)
   }
 
   test("findPath beside a null endpoint: the distributed form's path, no NPE") {
     assert(paths(GraphQueryOps.findPath(g2, "a", "b")) == List((List("a", "c", "b"), 2)))
-    assert(paths(GraphQueryOps.findPath(g2, "a", "b", driverLimit = 0)) ==
+    assert(paths(withLimit(0)(GraphQueryOps.findPath(g2, "a", "b"))) ==
       List((List("a", "c", "b"), 2)))
   }
 
@@ -173,18 +188,18 @@ class QueryDriverSpec extends SparkSpec {
   test("closeness beside a null endpoint: the distributed values, no NPE") {
     val cl = byId(GraphQueryOps.closenessCentrality(g2))
     assert(math.abs(cl("b") - 2.0 / 3) < 1e-9 && math.abs(cl("c") - 0.5) < 1e-9 && cl("a") == 0.0, cl)
-    assert(cl == byId(GraphQueryOps.closenessCentrality(g2, driverLimit = 0)))
+    assert(cl == byId(withLimit(0)(GraphQueryOps.closenessCentrality(g2))))
   }
 
   test("betweenness beside a null endpoint: the distributed values, no NPE") {
     val bc = byId(GraphQueryOps.betweennessCentrality(g2))
     assert(math.abs(bc("c") - 0.5) < 1e-9, bc)
-    assert(bc == byId(GraphQueryOps.betweennessCentrality(g2, driverLimit = 0)))
+    assert(bc == byId(withLimit(0)(GraphQueryOps.betweennessCentrality(g2))))
   }
 
   test("avgShortestPathSampled beside a null endpoint: the distributed value, no NPE") {
     val ap = GraphQueryOps.avgShortestPathSampled(g2)
-    assert(ap > 0.0 && ap == GraphQueryOps.avgShortestPathSampled(g2, driverLimit = 0))
+    assert(ap > 0.0 && ap == withLimit(0)(GraphQueryOps.avgShortestPathSampled(g2)))
   }
 
   test("a repeated node id or no node at all: the driver values ≡ the distributed ones") {
@@ -193,12 +208,12 @@ class QueryDriverSpec extends SparkSpec {
     val dup = graphOf(Seq("a", "b", "b", "c"), Seq(E("e1", "a", "b", "r", 1.0),
       E("e2", "b", "c", "r", 1.0), E("e3", "c", "a", "r", 1.0)))
     val empty = graphOf(Nil, Seq(E("e1", "a", "b", "r", 1.0)))
-    for (g <- Seq(dup, empty); (name, run) <- Seq[(String, Long => DataFrame)](
-        "pagerank" -> (l => GraphQueryOps.pagerank(g, iterations = 3, driverLimit = l)),
-        "eigenvector" -> (l => GraphQueryOps.eigenvectorCentrality(g, iterations = 9, driverLimit = l)),
-        "closeness" -> (l => GraphQueryOps.closenessCentrality(g, driverLimit = l)),
-        "betweenness" -> (l => GraphQueryOps.betweennessCentrality(g, driverLimit = l)))) {
-      val (fast, dist) = (rows(run(graft.runtime.DriverPath.DriverIterationLimit)), rows(run(0L)))
+    for (g <- Seq(dup, empty); (name, run) <- Seq[(String, () => DataFrame)](
+        "pagerank" -> (() => GraphQueryOps.pagerank(g, iterations = 3)),
+        "eigenvector" -> (() => GraphQueryOps.eigenvectorCentrality(g, iterations = 9)),
+        "closeness" -> (() => GraphQueryOps.closenessCentrality(g)),
+        "betweenness" -> (() => GraphQueryOps.betweennessCentrality(g)))) {
+      val (fast, dist) = (rows(run()), rows(withLimit(0)(run())))
       assert(sameRows(fast, dist), s"$name: $fast vs $dist")
     }
   }
@@ -211,14 +226,14 @@ class QueryDriverSpec extends SparkSpec {
     val es = graphOf(Nil, Seq(E("e1", supp, "a", "r", 1.0), E("e2", bmp, "a", null, 1.0),
       E("e3", "a", "a", "r", 1.0), E(null, supp, bmp, "r", 1.0))).edges
     val g = Graph(Seq(ent("a"), ent(supp, etype = null), ent(bmp), ent("b", etype = null)).toDS(), es)
-    def top(l: Long) = GraphQueryOps.topKByDegree(g, k = 2, driverLimit = l)
+    def top(l: Long) = withLimit(l)(GraphQueryOps.topKByDegree(g, k = 2))
     val (fast, jobs) = jobsOf(top(graft.runtime.DriverPath.DriverIterationLimit))
     assert(jobs == 0)
     assert(fast.schema == top(0L).schema && !fast.schema("degree").nullable)
     assert(fast.collect().toSeq == top(0L).collect().toSeq)
     assert(fast.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("a", 4L), (bmp, 2L)))
 
-    def stats(l: Long) = GraphBuilder.stats(g, driverLimit = l).collect()
+    def stats(l: Long) = withLimit(l)(GraphBuilder.stats(g)).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSet
     val st = stats(graft.runtime.DriverPath.DriverIterationLimit)
     assert(st == stats(0L))
@@ -240,7 +255,17 @@ class QueryDriverSpec extends SparkSpec {
       ent("b1", "Other")).toDS()
     val fast = canon(Linker.link(ents))
     assert(fast._2 == Seq("a3->a1"), fast)
-    assert(fast == canon(Linker.link(ents, driverLimit = 0)))
+    assert(fast == canon(withLimit(0)(Linker.link(ents))))
+  }
+
+  test("Linker.link under withLimit(0) solves its pair graph with CC's star rounds") {
+    import spark.implicits._
+    val ents = Seq(ent("a1", "FooBar"), ent("a2", "Foo-Bar"), ent("b1", "Other")).toDS()
+    graft.runtime.Observed.clear("cc_iterations")
+    val r = withLimit(0)(Linker.link(ents))
+    assert(canon(r)._2 == Seq("a2->a1"))
+    val rounds = graft.runtime.Observed.get("cc_iterations").flatMap(_.get("rounds"))
+    assert(rounds.exists(_ >= 1), s"expected star rounds, observed $rounds")
   }
 
   /** Entities over ids a0..a7 (some null, some repeated) named from two
@@ -265,7 +290,7 @@ class QueryDriverSpec extends SparkSpec {
     sets.foreach { es =>
       val ents = es.toDS()
       val fast = canon(Linker.link(ents))
-      assert(fast == canon(Linker.link(ents, driverLimit = 0)), s"entities=$es")
+      assert(fast == canon(withLimit(0)(Linker.link(ents))), s"entities=$es")
       // the driver path probes a local relation and runs no job
       val onDriver = jobsOf(Linker.link(ents))._2 == 0
       assert(onDriver == !es.exists(_.id == null), s"entities=$es")

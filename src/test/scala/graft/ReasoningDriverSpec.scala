@@ -9,10 +9,11 @@ import graft.graphout.GraphBuilder.Graph
 import graft.graphout.Verifier
 import graft.model.{Entity, Triple}
 import graft.reason.Reasoning
+import graft.runtime.DriverPath.withLimit
 
 /** The driver paths of `Reasoning.inferTransitive`,
   * `Reasoning.detectContradictory` and `Verifier.verify` equal their
-  * distributed forms (`driverLimit = 0`) on adversarial small graphs, take
+  * distributed forms (`DriverPath.withLimit(0)`) on adversarial small graphs, take
   * one probe job each (two for verify) and never evaluate Spark's `lower`;
   * nor do the standalone V1/V4 checks (`cyclicDependencies`,
   * `semanticContradictions`).
@@ -69,7 +70,7 @@ class ReasoningDriverSpec extends SparkSpec {
       val g = graphOf(ns, es)
       for (mc <- Seq(0.7, 0.0)) {
         val fast = rows(Reasoning.inferTransitive(g, mc))
-        assert(fast == rows(Reasoning.inferTransitive(g, mc, driverLimit = 0)),
+        assert(fast == rows(withLimit(0)(Reasoning.inferTransitive(g, mc))),
           s"minConfidence=$mc edges=$es")
         if (fast.nonEmpty && !es.exists(_.rt == NonAscii)) nonEmpty += 1
       }
@@ -83,7 +84,7 @@ class ReasoningDriverSpec extends SparkSpec {
       val g = graphOf(ns, es)
       for (t <- Seq(0.5, 0.0)) {
         val fast = sortedRows(Reasoning.detectContradictory(g, t))
-        assert(fast == sortedRows(Reasoning.detectContradictory(g, t, driverLimit = 0)),
+        assert(fast == sortedRows(withLimit(0)(Reasoning.detectContradictory(g, t))),
           s"threshold=$t edges=$es")
         if (fast.nonEmpty && !es.exists(_.rt == NonAscii)) nonEmpty += 1
       }
@@ -97,7 +98,7 @@ class ReasoningDriverSpec extends SparkSpec {
     graphs.foreach { case (ns, es) =>
       val g = graphOf(ns, es)
       val fast = Verifier.verify(g)
-      val dist = Verifier.verify(g, driverLimit = 0)
+      val dist = withLimit(0)(Verifier.verify(g))
       val issues = fast.issues.collect()
       assert(issues.map(_.toString).toSeq.sorted ==
         dist.issues.collect().map(_.toString).toSeq.sorted, s"edges=$es")
@@ -168,8 +169,8 @@ class ReasoningDriverSpec extends SparkSpec {
   test("a graph over the limit takes the distributed form with equal results") {
     val g = stored(pinned._1, pinned._2)
     for (lim <- Seq(0L, 3L)) {
-      val (it, dc) = (Reasoning.inferTransitive(g, driverLimit = lim),
-        Reasoning.detectContradictory(g, driverLimit = lim))
+      val (it, dc) = (withLimit(lim)(Reasoning.inferTransitive(g)),
+        withLimit(lim)(Reasoning.detectContradictory(g)))
       assert(sortedRows(it) == sortedRows(Reasoning.inferTransitive(g)))
       assert(it.schema == Reasoning.inferTransitive(g).schema)
       assert(sortedRows(dc) == sortedRows(Reasoning.detectContradictory(g)))
@@ -179,7 +180,7 @@ class ReasoningDriverSpec extends SparkSpec {
 
   test("verify over the limit probes the edges once: V1 and V4 skip their own probes") {
     val g = stored(pinned._1, pinned._2)
-    val (issues, execs) = withExecs(Verifier.verify(g, driverLimit = 3).issues.collect())
+    val (issues, execs) = withExecs(withLimit(3)(Verifier.verify(g)).issues.collect())
     assert(execs.count(_._1 == "probe") == 1, execs.map(_._1))
     assert(issues.map(_.toString).sorted.toSeq ==
       Verifier.verify(g).issues.collect().map(_.toString).sorted.toSeq)
@@ -193,8 +194,8 @@ class ReasoningDriverSpec extends SparkSpec {
         jobsOf(issues(Verifier.cyclicDependencies(g))),
         jobsOf(issues(Verifier.semanticContradictions(g)))))
       assert(v1.nonEmpty && v4.nonEmpty)
-      assert(v1 == issues(Verifier.cyclicDependencies(g, driverLimit = 0)))
-      assert(v4 == issues(Verifier.semanticContradictions(g, driverLimit = 0)))
+      assert(v1 == issues(withLimit(0)(Verifier.cyclicDependencies(g))))
+      assert(v4 == issues(withLimit(0)(Verifier.semanticContradictions(g))))
       if (onDriver) {
         assert((j1, j4) == (1, 1), s"jobs: cyclicDependencies=$j1 semanticContradictions=$j4")
         assert(!execs.exists(e => hasLower(e._2)), execs.map(_._1))

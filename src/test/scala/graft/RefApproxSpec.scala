@@ -1,6 +1,7 @@
 package graft
 
 import graft.tools.RefApprox
+import graft.runtime.DriverPath.withLimit
 
 /** Round-6 fixture-oracle backing: the independent serial reimplementations
   * (RefApprox, ClosedFormGraph) that FixtureGen pins the committed
@@ -25,11 +26,11 @@ class RefApproxSpec extends SparkSpec {
 
   test("serial q24 MinHash+LSH reference ≡ Spark pipeline (sf0.001)") {
     val serial = RefApprox.q24MinhashDedup(docs).toSet
-    // the catalog entry takes the driver paths; driverLimit 0 forces the
+    // the catalog entry takes the driver paths; withLimit(0) forces the
     // distributed forms
     val driver = Queries.all("q24_minhash_dedup")(spark, dir)
-    val dist = Queries.minhashDedup(spark, spark.read.parquet(s"$dir/documents.parquet"),
-      driverLimit = 0)
+    val dist = withLimit(0)(
+      Queries.minhashDedup(spark, spark.read.parquet(s"$dir/documents.parquet")))
     for (df <- Seq(driver, dist))
       assert(serial == df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     assert(serial.nonEmpty)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.query.GraphQueryOps
+import graft.runtime.DriverPath.withLimit
 
 /** Round-5 pins: distributed CC star rounds with observed-signature
   * convergence ≡ driver union-find; findPath driver fast path ≡
@@ -21,7 +22,7 @@ class CcDistributedSpec extends SparkSpec {
     def collect(res: org.apache.spark.sql.DataFrame): Map[String, String] =
       res.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val driver = collect(graft.link.ConnectedComponents.run(df))
-    val dist = collect(graft.link.ConnectedComponents.run(df, driverLimit = 0))
+    val dist = collect(withLimit(0)(graft.link.ConnectedComponents.run(df)))
     assert(dist.nonEmpty && dist == driver)
   }
 
@@ -34,7 +35,7 @@ class CcDistributedSpec extends SparkSpec {
     val df = Seq(("b", "a"), ("c", "a"), ("d", "a"), ("y", "x"))
       .toDF("src", "dst")
     graft.runtime.Observed.clear("cc_iterations")
-    val res = graft.link.ConnectedComponents.run(df, driverLimit = 0)
+    val res = withLimit(0)(graft.link.ConnectedComponents.run(df))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(res == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
       "x" -> "x", "y" -> "x"))
@@ -54,11 +55,11 @@ class FindPathSpec extends SparkSpec {
   test("driver fast path ≡ distributed loop on the query fixture") {
     val g = Fixtures.queryGraph(spark)
     val fast = rows(GraphQueryOps.findPath(g, "alice", "project_y"))
-    val dist = rows(GraphQueryOps.findPath(g, "alice", "project_y", driverLimit = 0))
+    val dist = rows(withLimit(0)(GraphQueryOps.findPath(g, "alice", "project_y")))
     assert(fast.nonEmpty && fast == dist)
     // depth-capped: both paths agree on emptiness too
-    assert(rows(GraphQueryOps.findPath(g, "alice", "project_y", maxDepth = 1,
-      driverLimit = 0)).isEmpty)
+    assert(rows(withLimit(0)(
+      GraphQueryOps.findPath(g, "alice", "project_y", maxDepth = 1))).isEmpty)
     assert(rows(GraphQueryOps.findPath(g, "alice", "project_y", maxDepth = 1)).isEmpty)
   }
 
@@ -75,8 +76,7 @@ class FindPathSpec extends SparkSpec {
       Map.empty, 1.0, "", "", "", ""))
     val g = graft.graphout.GraphBuilder.Graph(nodes.toDS(), edges.toDS())
     val fast = rows(GraphQueryOps.findPath(g, "a", "f", maxDepth = 4, maxPaths = 7))
-    val dist = rows(GraphQueryOps.findPath(g, "a", "f", maxDepth = 4, maxPaths = 7,
-      driverLimit = 0))
+    val dist = rows(withLimit(0)(GraphQueryOps.findPath(g, "a", "f", maxDepth = 4, maxPaths = 7)))
     assert(fast.size == 7 && fast == dist)
     // shortest path first, then lexicographic
     assert(fast.head._1 == List("a", "f") && fast.head._2 == 1)
@@ -146,7 +146,7 @@ class LinkerDriverSpec extends SparkSpec {
       r.rewrite.collect().map(x => x.getString(0) -> x.getString(1)).toMap)
 
     val fast = canon(graft.link.Linker.link(ents))
-    val dist = canon(graft.link.Linker.link(ents, driverLimit = 0))
+    val dist = canon(withLimit(0)(graft.link.Linker.link(ents)))
     assert(fast == dist)
     // the alias family actually merged (to min id e1), the type gate held
     assert(fast._2.get("e2").contains("e1") && fast._2.get("e3").contains("e1"))

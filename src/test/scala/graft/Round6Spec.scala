@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.query.GraphQueryOps
+import graft.runtime.DriverPath.withLimit
 
 /** Round-6 pins: UTF-8 binary ordering in the driver fast paths ≡ Spark's
   * own string order (incl. supplementary code points, where UTF-16
@@ -56,7 +57,7 @@ class Utf8OrderSpec extends SparkSpec {
     def m(res: org.apache.spark.sql.DataFrame) =
       res.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val driver = m(graft.link.ConnectedComponents.run(df))
-    val dist = m(graft.link.ConnectedComponents.run(df, driverLimit = 0))
+    val dist = m(withLimit(0)(graft.link.ConnectedComponents.run(df)))
     assert(driver == dist)
     // the component min under UTF-8 order is the PUA char, NOT the
     // surrogate-encoded supplementary one (UTF-16 would pick the latter)
@@ -73,8 +74,8 @@ class Utf8OrderSpec extends SparkSpec {
       .map { case (id, a, b) => graft.model.Triple(id, a, b, "", "", "r",
         None, bidirectional = false, 1.0, 1.0, "") }.toDS()
     val g = graft.graphout.GraphBuilder.Graph(nodes, edges)
-    def one(driverLimit: Long) =
-      GraphQueryOps.findPath(g, "s", "t", maxPaths = 1, driverLimit = driverLimit)
+    def one(lim: Long) =
+      withLimit(lim)(GraphQueryOps.findPath(g, "s", "t", maxPaths = 1))
         .collect().map(_.getAs[scala.collection.Seq[String]]("path").toList).toList
     val fast = one(Long.MaxValue)
     val dist = one(0)
@@ -89,9 +90,9 @@ class FindPathCacheSpec extends SparkSpec {
   test("distributed findPath unpersists every frontier it cached") {
     val g = Fixtures.queryGraph(spark)
     // warm the fixture (its own localCheckpoints register persistent RDDs)
-    GraphQueryOps.findPath(g, "alice", "project_y", driverLimit = 0).collect()
+    withLimit(0)(GraphQueryOps.findPath(g, "alice", "project_y")).collect()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val res = GraphQueryOps.findPath(g, "alice", "project_y", driverLimit = 0)
+    val res = withLimit(0)(GraphQueryOps.findPath(g, "alice", "project_y"))
     assert(res.count() > 0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.graphout.{GraphBuilder, Verifier}
 import graft.query.GraphQueryOps
+import graft.runtime.DriverPath.withLimit
 
 /** Round-7 (optimization round) pins: every operator whose internals were
   * restructured for job-count/shuffle wins keeps identical results —
@@ -38,23 +39,23 @@ class Round7Spec extends SparkSpec {
     val g = gOf(nodes, edges)
     for (dir <- Seq("outgoing", "incoming", "both")) {
       val fast = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 4, direction = dir))
-      val dist = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 4, direction = dir,
-        driverLimit = 0))
+      val dist = rowsOf(withLimit(0)(
+        GraphQueryOps.traverse(g, "n00", maxDepth = 4, direction = dir)))
       assert(fast == dist, s"direction=$dir")
     }
     // relTypes filter parity
     val fastF = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 4,
       relTypes = Some(Seq("r"))))
-    val distF = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 4,
-      relTypes = Some(Seq("r")), driverLimit = 0))
+    val distF = rowsOf(withLimit(0)(GraphQueryOps.traverse(g, "n00", maxDepth = 4,
+      relTypes = Some(Seq("r")))))
     assert(fastF == distF)
     // entityTypes filter parity (exercises the reordered-column join path)
     val typed = nodes.map(e => if (e.id < "n06") e.copy(entityType = "x") else e)
     val g2 = gOf(typed, edges)
     val fastT = rowsOf(GraphQueryOps.traverse(g2, "n00", maxDepth = 4,
       entityTypes = Some(Seq("x"))))
-    val distT = rowsOf(GraphQueryOps.traverse(g2, "n00", maxDepth = 4,
-      entityTypes = Some(Seq("x")), driverLimit = 0))
+    val distT = rowsOf(withLimit(0)(GraphQueryOps.traverse(g2, "n00", maxDepth = 4,
+      entityTypes = Some(Seq("x")))))
     assert(fastT == distT)
   }
 
@@ -69,8 +70,8 @@ class Round7Spec extends SparkSpec {
     val g = gOf(nodes, edges)
     for (dir <- Seq("outgoing", "incoming", "both")) {
       val fast = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 3, direction = dir))
-      val dist = rowsOf(GraphQueryOps.traverse(g, "n00", maxDepth = 3, direction = dir,
-        driverLimit = 0))
+      val dist = rowsOf(withLimit(0)(
+        GraphQueryOps.traverse(g, "n00", maxDepth = 3, direction = dir)))
       assert(fast == dist, s"direction=$dir")
     }
     val won = GraphQueryOps.traverse(g, "n00", maxDepth = 2).collect()
@@ -93,11 +94,11 @@ class Round7Spec extends SparkSpec {
       (0 until 12).map(i => rel(s"L$i", f"L${i}%02d", f"L${(i + 1) % 12}%02d", "contains"))
     val g = gOf(nodes, edges)
     val fast = rowsOf(Verifier.cyclicDependencies(g).toDF())
-    val dist = rowsOf(Verifier.cyclicDependencies(g, driverLimit = 0).toDF())
+    val dist = rowsOf(withLimit(0)(Verifier.cyclicDependencies(g)).toDF())
     assert(fast == dist)
     // the long cycle IS found once maxDepth covers it — both paths
     val fast12 = rowsOf(Verifier.cyclicDependencies(g, maxDepth = 12).toDF())
-    val dist12 = rowsOf(Verifier.cyclicDependencies(g, maxDepth = 12, driverLimit = 0).toDF())
+    val dist12 = rowsOf(withLimit(0)(Verifier.cyclicDependencies(g, maxDepth = 12)).toDF())
     assert(fast12 == dist12)
     assert(fast12.size > fast.size)
   }
@@ -116,13 +117,13 @@ class Round7Spec extends SparkSpec {
       rel("t4", "s08", "s09", "subclass-of"))
     val g = gOf(nodes, edges)
     val fast = rowsOf(Verifier.semanticContradictions(g).toDF())
-    val dist = rowsOf(Verifier.semanticContradictions(g, driverLimit = 0).toDF())
+    val dist = rowsOf(withLimit(0)(Verifier.semanticContradictions(g)).toDF())
     assert(fast == dist)
     assert(fast.nonEmpty)
     // no negation edges at all → empty on both paths
     val g2 = gOf(nodes, edges.filter(e => !Verifier.NegationTypes.contains(e.relType)))
     assert(rowsOf(Verifier.semanticContradictions(g2).toDF()) ==
-      rowsOf(Verifier.semanticContradictions(g2, driverLimit = 0).toDF()))
+      rowsOf(withLimit(0)(Verifier.semanticContradictions(g2)).toDF()))
   }
 
   test("q06 per-group pair generation ≡ the self-join form (sf0.001)") {
@@ -148,8 +149,7 @@ class Round7Spec extends SparkSpec {
     val g = gOf(nodes, edges)
     for (cap <- Seq(256, 4)) {
       val fast = GraphBuilder.avgClusteringCoefficient(g, maxDegree = cap)
-      val dist = GraphBuilder.avgClusteringCoefficient(g, maxDegree = cap,
-        driverLimit = 0)
+      val dist = withLimit(0)(GraphBuilder.avgClusteringCoefficient(g, maxDegree = cap))
       assert(math.abs(fast - dist) < 1e-12, s"cap=$cap: $fast vs $dist")
     }
   }
@@ -173,32 +173,5 @@ class Round7Spec extends SparkSpec {
     assert(rowArr.length == 9) // 3 scalars + 3 entity + 3 rel groups
     val density = rows.toMap.apply("density")
     assert(math.abs(density - 3.0 / (4.0 * 3.0)) < 1e-15)
-  }
-
-  test("withIsolated driver fast path ≡ distributed anti-join union") {
-    import spark.implicits._
-    import graft.link.ConnectedComponents
-    val edges = Seq(("a", "b"), ("b", "c"), ("x", "y"), ("a", "a"), ("b", "a"))
-      .toDF("src", "dst")
-    // duplicate isolated ids and an id that also appears in an edge
-    val ids = Seq("a", "b", "c", "x", "y", "iso1", "iso2", "iso1").toDF("id")
-    val fast = ConnectedComponents.withIsolated(edges, ids)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val dist = ConnectedComponents.withIsolated(edges, ids, driverLimit = 0)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(fast == dist)
-    assert(fast.count(_ == (("iso1", "iso1"))) == 2) // dup rows preserved
-  }
-
-  test("findPath driver probe (pre-distinct collect) ≡ distributed") {
-    val nodes = (0 until 8).map(i => ent(f"p$i%02d"))
-    val edges = Seq(
-      rel("f1", "p00", "p01"), rel("f1b", "p00", "p01", "r2"), // dup pair
-      rel("f2", "p01", "p02"), rel("f3", "p00", "p02"),
-      rel("f4", "p02", "p03"), rel("f5", "p03", "p00"))
-    val g = gOf(nodes, edges)
-    val fast = rowsOf(GraphQueryOps.findPath(g, "p00", "p03").toDF())
-    val dist = rowsOf(GraphQueryOps.findPath(g, "p00", "p03", driverLimit = 0).toDF())
-    assert(fast == dist && fast.nonEmpty)
   }
 }
