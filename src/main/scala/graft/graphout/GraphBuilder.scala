@@ -1,9 +1,12 @@
 package graft.graphout
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.{Entity, Triple}
-import graft.runtime.DriverPath
+import graft.runtime.{DriverPath, LocalGraph}
 
 /**
  * Graph materialization (SURVEY.md §2.7; reference
@@ -168,26 +171,24 @@ object GraphBuilder {
     * reference's guard — the SAMPLED average shortest path length
     * (multi-source BFS; exact when samples ≥ |V|).
     *
-    * Under `DriverPath.limit` the type counts are tallied from one probe of the
-    * entity types and one of the relation types (no keys: a null type is
-    * a group of its own, as in the groupBy); the `full` metrics keep their
-    * own driver paths.
+    * Under `DriverPath.limit` the type counts are tallied on the graph's
+    * `LocalGraph` (no key: a null type is a group of its own, as in the
+    * groupBy); the `full` metrics keep their own driver paths.
     */
   def stats(g: Graph, full: Boolean = false): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    def tally(side: String, rows: Array[Row]) =
-      rows.groupMapReduce(r => if (r.isNullAt(0)) null else r.getString(0))(_ => 1L)(_ + _)
-        .toSeq.map { case (t, c) => (side, t, c) }
+    def tally(side: String, types: Array[UTF8String]) =
+      types.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+        .map { case (t, c) => (side, if (t == null) null else t.toString, c) }
     // ONE action computes both per-type breakdowns AND the node/edge
     // totals (round-7: this was two count jobs plus a full recompute of
     // both groupBys when the caller's own action ran the returned union).
     // Side tags, not key prefixes, drive the local sums: a null
     // entityType/relType produces a null key (exactly like the previous
     // concat form) but must still count toward its side's total.
-    val typed = (for (ns <- DriverPath.probe(g.nodes.select($"entityType"));
-                      es <- DriverPath.probe(g.edges.select($"relType")))
-      yield tally("E", ns) ++ tally("R", es)).getOrElse(
+    val typed = LocalGraph.of(g.nodes, g.edges, readNodes = true).filter(_.nodesFit)
+      .map(lg => tally("E", lg.nodeType) ++ tally("R", lg.relType)).getOrElse(
       g.nodes.groupBy($"entityType").count()
           .select(lit("E").as("side"), $"entityType".as("t"), $"count")
         .union(g.edges.groupBy($"relType").count()
@@ -219,9 +220,13 @@ object GraphBuilder {
     // a LOCAL result relation: the row set is identical to the previous
     // lazy union (scalars ++ entity breakdown ++ rel breakdown), already
     // materialized — a caller's count()/collect() re-runs nothing
-    (Seq(("nodes", n), ("edges", e), ("density", density)) ++ extra ++ typeRows)
-      .toDF("key", "value")
+    DriverPath.local(spark, StatsSchema,
+      (Seq(("nodes", n), ("edges", e), ("density", density)) ++ extra ++ typeRows).map {
+        case (k, v) => InternalRow(UTF8String.fromString(k), v)
+      })
   }
+
+  private val StatsSchema = DriverPath.schema("key" -> StringType, "value" -> DoubleType)
 
   /** Average local clustering coefficient over the undirected simple graph
     * (nx.average_clustering semantics, reference graph.py:503-505):
@@ -245,63 +250,32 @@ object GraphBuilder {
 
     // ---- driver fast path (round-7): the distributed form is 2 eager
     // localCheckpoints + head + count — ~8 driver-blocking jobs on tiny
-    // graphs. The mirror replicates the estimator literally: same
-    // undirected simple view, same (xxhash64, id)-ordered neighborhood
-    // sample at maxDegree, same wedge membership test, same k(v)(k−1)
-    // denominator; the cap counter lands in the same Observed registry.
-    graft.query.GraphQueryOps.driverNodeIds(g).foreach { nodeIds =>
-      graft.runtime.DriverPath.probe(
-          g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId").foreach { raw =>
-        val und = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2)
-          .flatMap(p => Seq(p, p.swap)).distinct
-        val undSet = und.toSet
-        // sampled adjacency: per center, neighbors ordered by
-        // (xxhash64(x), x) — the exact window order of the distributed
-        // form (XXH64 seed 42, ties by UTF-8 binary id order)
-        def xxh(sv: String): Long =
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-            org.apache.spark.unsafe.types.UTF8String.fromString(sv), 42L)
-        var dropped = 0L
-        val adj = und.groupBy(_._1).map { case (v, ps) =>
-          // hash order, ties in UTF-8 binary id order (NOT String.<,
-          // which is UTF-16 — same rule as the distributed window)
-          val ordered = ps.map(_._2).sortWith { (x, y) =>
-            val hx = xxh(x); val hy = xxh(y)
-            if (hx != hy) hx < hy else graft.runtime.Utf8Order.lt(x, y)
-          }
-          if (ordered.length > maxDegree) dropped += ordered.length - maxDegree
-          v -> ordered.take(maxDegree)
+    // graphs. The mirror replicates the estimator literally on the index:
+    // same undirected simple view, same (xxhash64, id)-ordered
+    // neighbourhood sample at maxDegree, same wedge membership test, same
+    // k(v)(k−1) denominator; the cap counter lands in the same Observed
+    // registry. The wedge test is a binary search of the sorted neighbour
+    // list of the FULL undirected edge set (the distributed semi join
+    // probes und, not the capped adjacency).
+    LocalGraph.keyed(g.nodes, g.edges).foreach { lg =>
+      var dropped = 0L
+      // coefficient sum in ascending-center order (distributed partial-sum
+      // order is arbitrary; ≡ to fp ulp, GraphQuerySpec-pinned)
+      var coef = 0.0
+      for (v <- 0 until lg.vertices) {
+        val ns = lg.nbr(v).filter(_ != v).sortBy(x => (lg.xxh(x), x))
+        if (ns.length > maxDegree) dropped += ns.length - maxDegree
+        val k = math.min(ns.length, maxDegree)
+        if (k >= 2) {
+          var tri = 0L
+          for (i <- 0 until k; j <- i + 1 until k)
+            if (java.util.Arrays.binarySearch(lg.nbr(ns(i) min ns(j)), ns(i) max ns(j)) >= 0) tri += 1
+          coef += tri * 2.0 / (k.toDouble * (k - 1))
         }
-        // recorded even at 0, as the distributed observe reports it
-        graft.runtime.Observed.record("clustering_deg_cap",
-          Map("dropped" -> dropped))
-        if (nodeIds.isEmpty) return 0.0
-        // coefficient sum in sorted-center order (distributed partial-sum
-        // order is arbitrary; ≡ to fp ulp, GraphQuerySpec-pinned)
-        var coef = 0.0
-        adj.toSeq.sortBy(_._1).foreach { case (_, ns) =>
-          val k = ns.length
-          if (k >= 2) {
-            var tri = 0L
-            var i = 0
-            while (i < k) {
-              var j = i + 1
-              while (j < k) {
-                // wedge (x, y) with x < y in UTF-8 order; membership in
-                // the FULL undirected edge set (the distributed semi join
-                // probes und, not the capped adjacency)
-                val (x, y) = if (graft.runtime.Utf8Order.lt(ns(i), ns(j)))
-                  (ns(i), ns(j)) else (ns(j), ns(i))
-                if (undSet((x, y))) tri += 1
-                j += 1
-              }
-              i += 1
-            }
-            coef += tri * 2.0 / (k.toDouble * (k - 1))
-          }
-        }
-        return coef / nodeIds.length
       }
+      // recorded even at 0, as the distributed observe reports it
+      graft.runtime.Observed.record("clustering_deg_cap", Map("dropped" -> dropped))
+      return if (lg.nodeCount == 0) 0.0 else coef / lg.nodeCount
     }
 
     val dir = g.edges.toDF().select($"srcId".as("a"), $"dstId".as("b"))

@@ -1,10 +1,10 @@
 package graft.graphout
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.graphout.GraphBuilder.Graph
 import graft.model.{Issue, Severity}
-import graft.runtime.{DriverPath, Utf8Order}
+import graft.runtime.{DriverPath, LocalGraph}
 
 /**
  * Rule-based graph verification V1-V4 (SURVEY.md §2.6; reference
@@ -15,8 +15,8 @@ import graft.runtime.{DriverPath, Utf8Order}
  * A graph is valid iff no critical issue (knowledge_verifier.py:78-82).
  *
  * Graphs under [[DriverPath.limit]] edges run the V1/V4 walks
- * (and, in [[verify]], all four checks) in memory on the driver, from one
- * DriverPath.probe (round-7 measurement: the distributed loops are 20-34
+ * (and, in [[verify]], all four checks) in memory on the driver, over the
+ * graph's `LocalGraph` (round-7 measurement: the distributed loops are 20-34
  * driver-blocking jobs of ~50 ms fixed latency each for <0.3 s of actual
  * task time on the planted catalog graphs). The driver mirrors replicate
  * the distributed pair-set iteration literally (same extension, same
@@ -94,9 +94,10 @@ object Verifier {
   def cyclicDependencies(g: Graph, maxDepth: Int = CycleDepth): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    // ---- driver fast path: one probe job, then the identical pair-set
-    // iteration in memory (the type filter runs on the driver too)
-    walkEdges(g).flatMap(driverCycles(_, maxDepth)).fold(distributedCycles(g, maxDepth))(_.toDS())
+    // ---- driver fast path: the identical pair-set iteration on the
+    // graph's index (the type filter runs on the driver too)
+    walkGraph(g, readNodes = false).flatMap { case (lg, rts) => driverCycles(lg, rts, maxDepth) }
+      .fold(distributedCycles(g, maxDepth))(_.toDS())
   }
 
   private def distributedCycles(g: Graph, maxDepth: Int): Dataset[Issue] = {
@@ -123,17 +124,18 @@ object Verifier {
     cycles.select($"origin").distinct().map(r => cycleIssue(r.getString(0)))
   }
 
-  /** V1 on the driver from the [[walkEdges]], of which it keeps the
-    * hierarchical ones: the distributed pair-set iteration with Set ≡
-    * distinct, same closure and prune order. None when the walk outgrows
-    * [[DriverPath.PairBound]].
+  /** V1 on the driver from the index's edges with folded types `rts`,
+    * of which it keeps the hierarchical ones: the distributed pair-set
+    * iteration with Set ≡ distinct, same closure and prune order. None when
+    * the walk outgrows [[DriverPath.PairBound]].
     */
-  private def driverCycles(edges: Seq[(String, String, String)],
-                           maxDepth: Int): Option[Seq[Issue]] = {
-    val dedup = edges.collect { case (s, d, rt) if HierarchicalTypes.contains(rt) => (s, d) }.distinct
+  private def driverCycles(lg: LocalGraph, rts: Array[String], maxDepth: Int): Option[Seq[Issue]] = {
+    val dedup = (0 until lg.edgeCount).collect {
+      case e if HierarchicalTypes.contains(rts(e)) => (lg.src(e), lg.dst(e))
+    }.distinct
     val adj = dedup.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
     var reach = dedup.toSet
-    val cycles = scala.collection.mutable.HashSet.empty[String]
+    val cycles = scala.collection.mutable.HashSet.empty[Int]
     cycles ++= reach.collect { case (o, l) if o == l => o }
     var depth = 1
     while (depth < maxDepth && reach.nonEmpty) {
@@ -143,7 +145,7 @@ object Verifier {
       reach = reach.filterNot(p => p._1 == p._2)
       depth += 1
     }
-    Some(cycles.toSeq.sorted.map(cycleIssue))
+    Some(cycles.toSeq.sorted.map(v => cycleIssue(lg.ids(v).toString)))
   }
 
   /** V2 dangling references: edges whose src/dst id is not a node —
@@ -180,23 +182,32 @@ object Verifier {
   }
 
   /** The driver form of the same-endpoint self-join behind V3 and
-    * `Reasoning.detectContradictory`: the index pairs (i, j) of `edges`
-    * (id, srcId, dstId, lowered relType) that share (srcId, dstId), with
-    * id_i < id_j in Spark's string order and (rt_i, rt_j) in `opposites`,
+    * `Reasoning.detectContradictory`: the pairs (i, j) of the index's edge
+    * rows `rows` that share (srcId, dstId), with id_i < id_j in Spark's
+    * string order and their folded types (rts_i, rts_j) in `opposites`,
     * each as often as the join emits it. As in SQL, a null id or type
-    * never passes a filter (the endpoints are probe keys, never null).
-    * None when the join would enumerate more than [[DriverPath.PairBound]]
-    * pairs.
+    * never passes a filter (the endpoints are keys, never null). None when
+    * the join would enumerate more than [[DriverPath.PairBound]] pairs.
     */
-  private[graft] def driverOppositePairs(edges: IndexedSeq[(String, String, String, String)],
+  private[graft] def driverOppositePairs(lg: LocalGraph, rows: IndexedSeq[Int], rts: Array[String],
                                          opposites: Set[(String, String)])
       : Option[Seq[(Int, Int)]] = {
-    val groups = edges.indices.groupBy(i => (edges(i)._2, edges(i)._3)).values.toSeq
-    if (groups.map(grp => grp.size.toLong * grp.size).sum > DriverPath.PairBound) None
-    else Some(for {
+    def pair(e: Int) = lg.src(e).toLong << 32 | lg.dst(e)
+    // the self-join's size, Σ (rows per endpoint pair)², from the sorted pairs
+    val keys = rows.iterator.map(pair).toArray.sorted
+    var (from, joined) = (0, 0L)
+    for (k <- 1 to keys.length if k == keys.length || keys(k) != keys(k - 1)) {
+      joined += (k - from).toLong * (k - from)
+      from = k
+    }
+    if (joined > DriverPath.PairBound) return None
+    // only edges of a type with an opposite can pair
+    val typed = opposites.flatMap(p => Seq(p._1, p._2))
+    val groups = rows.filter(e => typed(rts(e))).groupBy(pair).values.toSeq
+    Some(for {
       grp <- groups; i <- grp; j <- grp
-      if edges(i)._1 != null && edges(j)._1 != null &&
-        Utf8Order.compare(edges(i)._1, edges(j)._1) < 0 && opposites((edges(i)._4, edges(j)._4))
+      if lg.edgeId(i) != null && lg.edgeId(j) != null &&
+        lg.edgeId(i).compareTo(lg.edgeId(j)) < 0 && opposites((rts(i), rts(j)))
     } yield (i, j))
   }
 
@@ -207,10 +218,10 @@ object Verifier {
   def semanticContradictions(g: Graph, maxHops: Int = ContradictionHops): Dataset[Issue] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    // ---- driver fast path (round-7): one probe job replaces the
-    // 30-odd driver-blocking jobs of the seeded distributed walk on small
-    // graphs; driverContradictions picks both edge classes out itself
-    walkEdges(g).flatMap(driverContradictions(_, maxHops))
+    // ---- driver fast path (round-7): the index replaces the 30-odd
+    // driver-blocking jobs of the seeded distributed walk on small graphs;
+    // driverContradictions picks both edge classes out itself
+    walkGraph(g, readNodes = false).flatMap { case (lg, rts) => driverContradictions(lg, rts, maxHops) }
       .fold(distributedContradictions(g, maxHops))(_.toDS())
   }
 
@@ -258,21 +269,23 @@ object Verifier {
         r.getAs[String]("last")))
   }
 
-  /** V4 on the driver from the [[walkEdges]] of any type: the distributed
-    * (tt, origin, last) set iteration literally — same seed pruning, same
-    * per-hop distinct, same 2..maxHops accumulation, same final negation
-    * semi-join. None when the walk outgrows [[DriverPath.PairBound]].
+  /** V4 on the driver from the index's edges of any type (folded types
+    * `rts`): the distributed (tt, origin, last) set iteration literally —
+    * same seed pruning, same per-hop distinct, same 2..maxHops
+    * accumulation, same final negation semi-join. None when the walk
+    * outgrows [[DriverPath.PairBound]].
     */
-  private def driverContradictions(edges: Seq[(String, String, String)],
+  private def driverContradictions(lg: LocalGraph, rts: Array[String],
                                    maxHops: Int): Option[Seq[Issue]] = {
-    val negSet = edges.collect { case (s2, d2, rt) if NegationTypes.contains(rt) => (s2, d2) }.toSet
+    val edges = 0 until lg.edgeCount
+    val negSet = edges.collect { case e if NegationTypes.contains(rts(e)) => (lg.src(e), lg.dst(e)) }.toSet
     if (negSet.isEmpty) return Some(Nil)
-    val hRows = edges.collect { case (s2, d2, rt) if TransitiveTypes.contains(rt) => (rt, s2, d2) }
+    val hRows = edges.collect { case e if TransitiveTypes.contains(rts(e)) => (rts(e), lg.src(e), lg.dst(e)) }
       .distinct
     val negOrigins = negSet.map(_._1)
     val adj = hRows.groupBy(t => (t._1, t._2)).map { case (k, ts) => k -> ts.map(_._3) }
     var paths = hRows.filter(t => negOrigins(t._2)).toSet
-    val acc = scala.collection.mutable.HashSet.empty[(String, String, String)]
+    val acc = scala.collection.mutable.HashSet.empty[(String, Int, Int)]
     var hop = 1
     while (hop < maxHops && paths.nonEmpty) {
       paths = paths.flatMap { case (tt, o, l) => adj.getOrElse((tt, l), Nil).map(d2 => (tt, o, d2)) }
@@ -281,7 +294,7 @@ object Verifier {
       hop += 1
     }
     Some(acc.toSeq.filter { case (_, o, l) => negSet((o, l)) }.sorted.map {
-      case (tt, o, l) => transitiveIssue(tt, o, l)
+      case (tt, o, l) => transitiveIssue(tt, lg.ids(o).toString, lg.ids(l).toString)
     })
   }
 
@@ -290,15 +303,15 @@ object Verifier {
   /** Runs V1–V4.
     *
     * Under [[DriverPath.limit]] edges and nodes, all four checks run on the
-    * driver from one snapshot: one probe of the edge columns they read
-    * (id, srcId, dstId, relType, case-folded by [[DriverPath.lowerAscii]])
-    * and one of the node ids for V2, so each check runs once, `issues` is
+    * driver from one snapshot, the graph's `LocalGraph` (relation types
+    * case-folded by [[DriverPath.lowerAscii]]; one edge probe and one node
+    * probe on a graph not read whole), so each check runs once, `issues` is
     * a local relation and `isValid` is read from that same issue set. A
     * check the driver cannot run takes its distributed form: V2 and V3 when
-    * the node ids are refused or V3's pairs outgrow [[DriverPath.PairBound]],
-    * V1 or V4 when its walk does, all four on a non-ASCII relation type or
-    * an edge table over the limit. V1 and V4 walk the rows the edge probe
-    * fetched, so they never probe again. Then validity reads only the two
+    * the node ids are refused or null or V3's pairs outgrow
+    * [[DriverPath.PairBound]], V1 or V4 when its walk does, all four on a
+    * non-ASCII relation type, a null endpoint or an edge table over the
+    * limit, which is probed once. Then validity reads only the two
     * checks that emit critical issues (V1, V2): they run eagerly for
     * `isValid` and again when the caller reads `issues`, while the V3
     * self-join runs once, with `issues`.
@@ -306,14 +319,10 @@ object Verifier {
   def verify(g: Graph): Verification = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val es = foldedEdges(g.edges.toDF().select("id", "srcId", "dstId", "relType")).map {
-      case (raw, rts) =>
-        raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
-    }
-    val walks = es.map(_.map { case (_, s, d, rt) => (s, d, rt) })
-    val v1 = walks.flatMap(driverCycles(_, CycleDepth))
-    val v4 = walks.flatMap(driverContradictions(_, ContradictionHops))
-    (v1, es.flatMap(driverV2V3(g, _)), v4) match {
+    val walk = walkGraph(g, readNodes = true)
+    val v1 = walk.flatMap { case (lg, rts) => driverCycles(lg, rts, CycleDepth) }
+    val v4 = walk.flatMap { case (lg, rts) => driverContradictions(lg, rts, ContradictionHops) }
+    (v1, walk.flatMap { case (lg, rts) => driverV2V3(lg, rts) }, v4) match {
       case (Some(cycles), Some(v2v3), Some(transitive)) =>
         val issues = cycles ++ v2v3 ++ transitive
         Verification(issues.toDS(), !issues.exists(_.severity == Severity.Critical))
@@ -327,36 +336,30 @@ object Verifier {
     }
   }
 
-  /** The rows of `edges`, an edge projection whose last column is
-    * relType, and that column case-folded by [[DriverPath.lowerAscii]]:
-    * one probe with no Spark `lower` in its plan, keyed on the endpoints.
-    * None over `DriverPath.limit` rows, on a null endpoint or on a non-ASCII
-    * type, which take the distributed forms.
+  /** The graph's `LocalGraph` and its relation types case-folded by
+    * [[DriverPath.lowerAscii]], the input of the driver checks; None over
+    * the limit, on a null endpoint or on a non-ASCII type, which take the
+    * distributed forms. With `readNodes` the node table is read too, for V2.
     */
-  private def foldedEdges(edges: DataFrame): Option[(Array[Row], Array[String])] =
-    DriverPath.probe(edges, "srcId", "dstId").flatMap { raw =>
-      DriverPath.lowerAscii(raw.map(_.getString(edges.columns.length - 1))).map(raw -> _)
-    }
+  private def walkGraph(g: Graph, readNodes: Boolean): Option[(LocalGraph, Array[String])] =
+    LocalGraph.of(g.nodes, g.edges, readNodes).filter(!_.endNull)
+      .flatMap(lg => lg.foldedTypes.map(lg -> _))
 
-  /** (srcId, dstId, case-folded relType) of every edge, the input of the
-    * standalone V1 and V4 driver walks, or None (their distributed forms).
+  /** V2 then V3 of [[verify]] on the driver, in the distributed union's
+    * order (V2 by source then by destination), or None when the node ids
+    * are refused or null, or V3's pairs refuse.
     */
-  private def walkEdges(g: Graph): Option[IndexedSeq[(String, String, String)]] =
-    foldedEdges(g.edges.toDF().select("srcId", "dstId", "relType")).map { case (raw, rts) =>
-      raw.indices.map(i => (raw(i).getString(0), raw(i).getString(1), rts(i)))
-    }
-
-  /** V2 then V3 of [[verify]] on the driver from its (id, srcId, dstId,
-    * folded relType) edges, in the distributed union's order (V2 by source
-    * then by destination), or None when the node ids or V3's pairs refuse.
-    */
-  private def driverV2V3(g: Graph, es: IndexedSeq[(String, String, String, String)])
-      : Option[Seq[Issue]] = {
-    val ids = graft.query.GraphQueryOps.driverNodeIds(g).getOrElse(return None).toSet
+  private def driverV2V3(lg: LocalGraph, rts: Array[String]): Option[Seq[Issue]] = {
+    if (!lg.nodesFit || lg.nodeNull) return None
+    val isNode = new Array[Boolean](lg.vertices)
+    lg.node.foreach(isNode(_) = true)
+    def str(u: org.apache.spark.unsafe.types.UTF8String) = if (u == null) null else u.toString
     // V2 is two anti-joins: an endpoint missing from the node ids is reported
-    def dangling(end: ((String, String, String, String)) => String) =
-      es.collect { case e if !ids(end(e)) => danglingIssue(e._1, end(e)) }
-    driverOppositePairs(es, OppositeSet).map(v3 => dangling(_._2) ++ dangling(_._3) ++
-      v3.map { case (i, j) => contradictionIssue(es(i)._1, es(j)._1) })
+    def dangling(end: Array[Int]) = (0 until lg.edgeCount).collect {
+      case e if !isNode(end(e)) => danglingIssue(str(lg.edgeId(e)), lg.ids(end(e)).toString)
+    }
+    driverOppositePairs(lg, 0 until lg.edgeCount, rts, OppositeSet).map(v3 =>
+      dangling(lg.src) ++ dangling(lg.dst) ++
+        v3.map { case (i, j) => contradictionIssue(lg.edgeId(i).toString, lg.edgeId(j).toString) })
   }
 }

@@ -123,7 +123,7 @@ object ConnectedComponents {
     // semantics (recordLast), since a prefix-sum across several CC runs
     // in one process would attribute the total to no graph. The
     // input-signature seed above is pinned by a 1-round assertion on a
-    // pre-starred graph (Round5Spec).
+    // pre-starred graph (CcDistributedSpec).
     graft.runtime.Observed.recordLast("cc_iterations", Map("rounds" -> iter.toLong))
     // stars: every src points at its component min; minima map to themselves
     val members = e.select(col("src").as("id"), col("dst").as("comp"))
@@ -140,14 +140,6 @@ object ConnectedComponents {
   private[link] def unionFindLocal(spark: org.apache.spark.sql.SparkSession,
                              pairs: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    unionFindRows(pairs).toDF("id", "comp")
-  }
-
-  /** The union-find core of [[unionFindLocal]], returning rows so callers
-    * composing further local rows (withIsolated's fast path) can build
-    * ONE local relation instead of unioning DataFrames.
-    */
-  private def unionFindRows(pairs: Array[(String, String)]): Seq[(String, String)] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -166,32 +158,14 @@ object ConnectedComponents {
       }
     }
     // min-id labeling: find-root with a<b union keeps the min as root
-    parent.keys.toSeq.map(k => (k, find(k)))
+    parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "comp")
   }
 
-  /** run() plus passthrough for isolated ids not present in any edge. */
+  /** run() plus passthrough for isolated ids not present in any edge.
+    * `GraphQueryOps.connectedComponents` answers a small graph on its
+    * `LocalGraph` before it gets here.
+    */
   def withIsolated(edges: DataFrame, allIds: DataFrame): DataFrame = {
-    // ---- driver fast path (round-7): when BOTH the pair set and the id
-    // universe fit the driver limit, the union-find (already the
-    // small-graph CC path) AND the isolated-id passthrough run in memory
-    // as one local relation — the anti-join + union otherwise costs ~6
-    // distributed jobs to append ids the driver has already seen.
-    // Normalization mirrors run(): cast-to-string, self-loops dropped,
-    // Set ≡ distinct.
-    locally {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      DriverPath.probe(edges.select(col("src").cast("string"), col("dst").cast("string")),
-        "src", "dst").foreach { raw =>
-        DriverPath.probe(allIds.select(col("id").cast("string")), "id").foreach { idRows =>
-          val pairs = raw.map(r => (r.getString(0), r.getString(1))).filter(p => p._1 != p._2).distinct
-          val ccRows = unionFindRows(pairs)
-          val ccIds = ccRows.map(_._1).toSet
-          val isolated = idRows.map(_.getString(0)).toSeq.filterNot(ccIds).map(id => (id, id))
-          return (ccRows ++ isolated).toDF("id", "comp")
-        }
-      }
-    }
     val cc = run(edges)
     // string ids like run()'s: an integer id column would widen the union to bigint
     val isolated = allIds.select(col("id").cast("string"))

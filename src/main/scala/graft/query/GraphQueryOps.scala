@@ -1,12 +1,16 @@
 package graft.query
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.graphout.GraphBuilder.Graph
 import graft.link.ConnectedComponents
 import graft.model.{Entity, Triple}
-import graft.runtime.DriverPath
+import graft.runtime.{DriverPath, LocalGraph}
 
 /**
  * Graph query operators Q1-Q10 (SURVEY.md §2.8) — each a lazy plan over
@@ -80,6 +84,7 @@ object GraphQueryOps {
       relTypes: Option[Seq[String]] = None,
       entityTypes: Option[Seq[String]] = None
   ): DataFrame = {
+    driverTraverse(g, startId, maxDepth, direction, relTypes, entityTypes).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
 
@@ -100,67 +105,6 @@ object GraphQueryOps {
         g.nodes.toDF().select($"id".as("toId"), $"entityType"), Seq("toId"))
         .where($"entityType".isin(ts: _*)).drop("entityType")
     }
-
-    // ---- driver fast path (round-7, the findPath pattern): one probe
-    // job of the (already filtered) adjacency, then the identical
-    // visited-once BFS in memory — the distributed loop is 3+ driver-
-    // blocking jobs PER DEPTH (join+agg checkpoint, visited distinct
-    // checkpoint, emptiness probe) for kilobytes of frontier on small
-    // graphs. The winner rule is the same min(struct(fromId, relId,
-    // relType, direction)) in Spark's binary string order (Utf8Order);
-    // GraphQuerySpec pins driver ≡ distributed.
-    // explicit column order: the entityTypes join reorders adj's columns
-    DriverPath.probe(adj.select("fromId", "toId", "relId", "relType", "direction"),
-      "fromId", "toId").foreach { rows =>
-      val byFrom = rows.map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4))).groupBy(_._1)
-      val visited = scala.collection.mutable.HashSet(startId)
-      var frontier = Array(startId)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, String, String, String, Int)]
-      var depth = 1
-      while (depth <= maxDepth && frontier.nonEmpty) {
-        // winner per child: min over (fromId, relId, relType, direction)
-        // in UTF-8 binary order — field by field, like min(struct(...))
-        val best = scala.collection.mutable.HashMap
-          .empty[String, (String, String, String, String)]
-        frontier.foreach { f =>
-          byFrom.getOrElse(f, Array.empty).foreach {
-            case (fromId, toId, relId, relType, dir2) =>
-              if (!visited.contains(toId)) {
-                val cand = (fromId, relId, relType, dir2)
-                val cur = best.get(toId)
-                // a null field sorts first, as in min(struct(...))
-                def cmp(x: String, y: String): Int =
-                  if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
-                  else graft.runtime.Utf8Order.compare(x, y)
-                def lt(a: (String, String, String, String),
-                       b: (String, String, String, String)): Boolean = {
-                  val c1 = cmp(a._1, b._1)
-                  if (c1 != 0) return c1 < 0
-                  val c2 = cmp(a._2, b._2)
-                  if (c2 != 0) return c2 < 0
-                  val c3 = cmp(a._3, b._3)
-                  if (c3 != 0) return c3 < 0
-                  cmp(a._4, b._4) < 0
-                }
-                if (cur.isEmpty || lt(cand, cur.get)) best(toId) = cand
-              }
-          }
-        }
-        val children = best.keys.toArray.sorted
-        children.foreach { c =>
-          val (p, rid, rt, dir2) = best(c)
-          out += ((p, rid, rt, dir2, c, depth))
-        }
-        visited ++= children
-        frontier = children
-        depth += 1
-      }
-      return out.toSeq
-        .toDF("parentId", "relId", "relType", "direction", "childId", "depth")
-    }
-
     var visited = Seq(startId).toDF("id")
     var frontier = Seq(startId).toDF("fromId")
     var acc = spark.emptyDataFrame
@@ -184,16 +128,86 @@ object GraphQueryOps {
       frontier = step.select($"childId".as("fromId")).distinct()
       depth += 1
     }
-    if (!accInit)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("parentId", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("relId", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("relType", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("direction", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("childId", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.IntegerType))))
+    if (!accInit) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], TraverseSchema)
     else acc
+  }
+
+  private val TraverseSchema = DriverPath.schema("parentId" -> StringType, "relId" -> StringType,
+    "relType" -> StringType, "direction" -> StringType, "childId" -> StringType,
+    "depth" -> IntegerType)
+
+  private val Outgoing = UTF8String.fromString("outgoing")
+  private val Incoming = UTF8String.fromString("incoming")
+
+  /** [[traverse]] on the driver (round-7, the findPath pattern): the
+    * distributed loop is 3+ driver-blocking jobs PER DEPTH (join+agg
+    * checkpoint, visited distinct checkpoint, emptiness probe) for
+    * kilobytes of frontier on small graphs. The same visited-once BFS over
+    * the index's edge rows, with the same filters: `relTypes` on the
+    * relation type, `entityTypes` as the join does it (one row per node
+    * row of a kept type, none for a null target). The size gate and the
+    * null rule read only the rows the distributed form probes: the kept
+    * (from, to) rows, both directions for "both". The winner per child is
+    * min(struct(fromId, relId, relType, direction)) in Spark's order, a
+    * null field first; GraphQuerySpec pins driver ≡ distributed.
+    */
+  private def driverTraverse(g: Graph, startId: String, maxDepth: Int, direction: String,
+                             relTypes: Option[Seq[String]],
+                             entityTypes: Option[Seq[String]]): Option[DataFrame] = {
+    val lg = LocalGraph.of(g.nodes, g.edges, readNodes = entityTypes.isDefined).getOrElse(return None)
+    if (entityTypes.isDefined && !lg.nodesFit) return None
+    val dirs = direction match {
+      case "outgoing" => Seq(true)
+      case "incoming" => Seq(false)
+      case _ => Seq(true, false)
+    }
+    def utf8(ts: Seq[String]) = ts.filter(_ != null).map(UTF8String.fromString).toSet
+    val types = relTypes.map(utf8)
+    def keep(e: Int) = types.forall(ts => lg.relType(e) != null && ts(lg.relType(e)))
+    // the rows the join keeps per target vertex: one, or its node rows of a kept type
+    val rowsTo: Int => Int = entityTypes.map(utf8).fold((_: Int) => 1) { ts =>
+      val m = new Array[Int](lg.vertices)
+      lg.node.indices.foreach { i =>
+        if (lg.node(i) >= 0 && lg.nodeType(i) != null && ts(lg.nodeType(i))) m(lg.node(i)) += 1
+      }
+      v => if (v < 0) 0 else m(v)
+    }
+    def from(e: Int, out: Boolean) = if (out) lg.src(e) else lg.dst(e)
+    def to(e: Int, out: Boolean) = if (out) lg.dst(e) else lg.src(e)
+    var rows = 0L
+    for (e <- 0 until lg.edgeCount if keep(e); out <- dirs) {
+      val n = rowsTo(to(e, out))
+      if (n > 0 && (from(e, out) < 0 || to(e, out) < 0)) return None
+      rows += n
+    }
+    if (!lg.fits(rows)) return None
+
+    // min(struct(fromId, relId, relType, direction)) over an arc (edge,
+    // outgoing?): a null field first, "incoming" < "outgoing"
+    val nullsFirst: Ordering[UTF8String] = (x, y) =>
+      if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null) else x.compareTo(y)
+    val arcOrder = Ordering.by[(Int, Boolean), (Int, UTF8String, UTF8String, Boolean)] {
+      case (e, out) => (from(e, out), lg.edgeId(e), lg.relType(e), out)
+    }(Ordering.Tuple4(Ordering.Int, nullsFirst, nullsFirst, Ordering.Boolean))
+    val start = lg.vertex(startId)
+    val visited = new Array[Boolean](lg.vertices)
+    val result = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var frontier = if (start < 0) Array.empty[Int] else { visited(start) = true; Array(start) }
+    for (depth <- 1 to maxDepth if frontier.nonEmpty) {
+      val best = scala.collection.mutable.HashMap.empty[Int, (Int, Boolean)]
+      for (f <- frontier; out <- dirs; e <- (if (out) lg.outEdges else lg.inEdges)(f)) {
+        val c = to(e, out)
+        if (keep(e) && rowsTo(c) > 0 && !visited(c) && best.get(c).forall(arcOrder.lt((e, out), _)))
+          best(c) = (e, out)
+      }
+      frontier = best.keys.toArray.sorted
+      for (c <- frontier; (e, out) = best(c)) {
+        visited(c) = true
+        result += InternalRow(lg.ids(from(e, out)), lg.edgeId(e), lg.relType(e),
+          if (out) Outgoing else Incoming, lg.ids(c), depth)
+      }
+    }
+    Some(DriverPath.local(lg.spark, TraverseSchema, result.toSeq))
   }
 
   /** Q4 find_path — BFS paths src→dst, outgoing edges only, per-path cycle
@@ -213,85 +227,11 @@ object GraphQueryOps {
     */
   def findPath(g: Graph, srcId: String, dstId: String, maxDepth: Int = 5,
                maxPaths: Int = 10): DataFrame = {
+    driverFindPath(g, srcId, dstId, maxDepth, maxPaths).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val adjDf = g.edges.toDF().select($"srcId".as("last"), $"dstId".as("next"))
       .distinct()
-
-    // ---- driver fast path: one probe job, then pure in-memory BFS. The
-    // probe reads the PRE-distinct projection — the in-memory dedup below
-    // is free, and skipping distinct keeps the probe an exchange-free scan.
-    locally {
-      val esOpt = DriverPath.probe(
-        g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId")
-      esOpt.foreach { raw =>
-        val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
-        // sorted neighbor lists: enumeration order is deterministic (the
-        // final (depth, path) sort makes the RESULT order-proof; sorting
-        // keeps intermediate traversal reproducible for debugging)
-        val adj = es.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).sorted }
-        var live = Vector(Vector(srcId))
-        val found = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
-        var depth = 0
-        var blown = false
-        while (depth < maxDepth && live.nonEmpty && found.size < maxPaths && !blown) {
-          // incremental expansion with an IN-FLIGHT bound check: a strict
-          // flatMap would materialize the entire next depth before any
-          // size test — on a dense graph that overshoots the cap by up to
-          // the max out-degree and can exhaust the driver heap before the
-          // distributed fallback ever engages; here the builder bails the
-          // moment the cap is crossed
-          val stepped = Vector.newBuilder[Vector[String]]
-          var n = 0
-          val it = live.iterator
-          while (it.hasNext && !blown) {
-            val p = it.next()
-            val ns = adj.getOrElse(p.last, Array.empty[String])
-            var j = 0
-            while (j < ns.length && !blown) {
-              val nx = ns(j)
-              if (!p.contains(nx)) {
-                stepped += (p :+ nx)
-                n += 1
-                if (n > DriverPath.PairBound) blown = true
-              }
-              j += 1
-            }
-          }
-          if (!blown) {
-            // same early-exit boundary as the distributed loop: hits are
-            // banked AFTER a full depth completes, then the loop stops
-            val sv = stepped.result()
-            found ++= sv.filter(_.last == dstId)
-            live = sv.filterNot(_.last == dstId)
-          }
-          depth += 1
-        }
-        if (!blown) {
-          // Spark array<string> ordering: element-wise UTF-8 BINARY order
-          // (graft.runtime.Utf8Order — String.compareTo is UTF-16 code-unit
-          // order, which diverges for supplementary characters), then by
-          // length; the distributed twin sorts with Spark's own comparator
-          implicit val pathOrd: Ordering[Vector[String]] =
-            new Ordering[Vector[String]] {
-              def compare(a: Vector[String], b: Vector[String]): Int = {
-                val it = a.iterator.zip(b.iterator)
-                while (it.hasNext) {
-                  val (x, y) = it.next()
-                  val c = graft.runtime.Utf8Order.compare(x, y)
-                  if (c != 0) return c
-                }
-                a.length.compareTo(b.length)
-              }
-            }
-          val rows = found.toVector
-            .map(p => (p, p.length - 1))
-            .sortBy { case (p, d) => (d, p) }
-            .take(maxPaths)
-          return rows.toDF("path", "depth")
-        }
-      }
-    }
 
     // ---- distributed loop: one job per depth (persist + observed counts),
     // plus one BOUNDED collect job per hit depth. Hit paths are harvested
@@ -350,6 +290,53 @@ object GraphQueryOps {
       if (inFlight ne null) inFlight.unpersist(blocking = false)
     }
     collected.toSeq.toDF("path", "depth")
+  }
+
+  private val PathSchema = StructType(Seq(StructField("path", ArrayType(StringType)),
+    StructField("depth", IntegerType, nullable = false)))
+
+  /** [[findPath]] on the driver: the same depth-by-depth expansion over the
+    * index's distinct successors (ascending, so the traversal is
+    * reproducible), paths compared element-wise in vertex order, which is
+    * Spark's array<string> order (Utf8Order). None (the distributed form)
+    * over the limit, on a null endpoint, or when a depth outgrows
+    * [[DriverPath.PairBound]] partial paths.
+    */
+  private def driverFindPath(g: Graph, srcId: String, dstId: String, maxDepth: Int,
+                             maxPaths: Int): Option[DataFrame] = {
+    val lg = LocalGraph.edgeKeyed(g.nodes, g.edges).getOrElse(return None)
+    val (s, d) = (lg.vertex(srcId), lg.vertex(dstId))
+    var live = if (s < 0) Vector.empty[Vector[Int]] else Vector(Vector(s))
+    val found = scala.collection.mutable.ArrayBuffer.empty[Vector[Int]]
+    var depth = 0
+    while (depth < maxDepth && live.nonEmpty && found.size < maxPaths) {
+      // incremental expansion with an IN-FLIGHT bound check: a strict
+      // flatMap would materialize the entire next depth before any size
+      // test — on a dense graph that can exhaust the driver heap before
+      // the distributed fallback ever engages
+      val stepped = Vector.newBuilder[Vector[Int]]
+      var n = 0
+      for (p <- live) lg.succ(p.last).foreach { nx =>
+        if (!p.contains(nx)) {
+          stepped += (p :+ nx)
+          n += 1
+          if (n > DriverPath.PairBound) return None
+        }
+      }
+      // same early-exit boundary as the distributed loop: hits are banked
+      // AFTER a full depth completes, then the loop stops
+      val (hit, rest) = stepped.result().partition(_.last == d)
+      found ++= hit
+      live = rest
+      depth += 1
+    }
+    def before(a: Vector[Int], b: Vector[Int]): Boolean =
+      if (a.length != b.length) a.length < b.length
+      else a.indices.find(i => a(i) != b(i)).exists(i => a(i) < b(i))
+    val rows = found.sortWith(before).take(maxPaths).map { p =>
+      InternalRow(new GenericArrayData(p.map(lg.ids(_)).toArray[Any]), p.length - 1)
+    }
+    Some(DriverPath.local(lg.spark, PathSchema, rows.toSeq))
   }
 
   /** Q5 search_text — regex over name/context/attribute values, optional
@@ -445,67 +432,81 @@ object GraphQueryOps {
     Graph(nodes, edges)
   }
 
-  /** Q8 connected components (undirected view): (id, comp). */
-  def connectedComponents(g: Graph): DataFrame =
+  /** Q8 connected components (undirected view): (id, comp). On a small
+    * graph with no null id or endpoint, `ConnectedComponents.withIsolated`'s
+    * driver path on the index: union-find over the non-self-loop edges,
+    * each component labelled by its least vertex (its least id in Spark's
+    * order, as `min` labels it), then every node row on no such edge as its
+    * own component.
+    */
+  def connectedComponents(g: Graph): DataFrame = {
+    LocalGraph.keyed(g.nodes, g.edges).foreach { lg =>
+      val parent = Array.tabulate(lg.vertices)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      val paired = new Array[Boolean](lg.vertices)
+      for (e <- 0 until lg.edgeCount if lg.src(e) != lg.dst(e)) {
+        paired(lg.src(e)) = true
+        paired(lg.dst(e)) = true
+        val (ra, rb) = (find(lg.src(e)), find(lg.dst(e)))
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+      val rows = (0 until lg.vertices).filter(paired).map(v => InternalRow(lg.ids(v), lg.ids(find(v)))) ++
+        lg.node.filterNot(paired).map(v => InternalRow(lg.ids(v), lg.ids(v)))
+      return DriverPath.local(lg.spark, CcSchema, rows)
+    }
     ConnectedComponents.withIsolated(
       g.edges.toDF().select(col("srcId").as("src"), col("dstId").as("dst")),
       g.nodes.toDF().select(col("id")))
+  }
+
+  private val CcSchema = DriverPath.schema("id" -> StringType, "comp" -> StringType)
+
+  private val DegreeSchema = DriverPath.schema("id" -> StringType, "degree" -> LongType,
+    "name" -> StringType)
 
   /** Q9 degree centrality top-k: explode endpoints → count →
     * TakeOrderedAndProject (sort+limit).
     *
-    * Under the driver limit the degrees are tallied from one probe of the
-    * endpoints and one of the node ids and names: each endpoint adds one,
-    * so a self-loop counts twice (as the explode does), and the join keeps
-    * one row per node row. Ties in degree go to the smaller id in UTF-8
-    * order, as the sort does.
+    * Under the driver limit the degrees are tallied on the index: each
+    * endpoint adds one, so a self-loop counts twice (as the explode does),
+    * and the join keeps one row per node row. Ties in degree go to the
+    * smaller id in UTF-8 order, as the sort does.
     */
   def topKByDegree(g: Graph, k: Int = 10): DataFrame = {
+    LocalGraph.keyed(g.nodes, g.edges).foreach { lg =>
+      val degree = new Array[Long](lg.vertices)
+      lg.src.foreach(degree(_) += 1)
+      lg.dst.foreach(degree(_) += 1)
+      val top = lg.node.indices.filter(i => degree(lg.node(i)) > 0).sortWith { (a, b) =>
+        val (va, vb) = (lg.node(a), lg.node(b))
+        degree(va) > degree(vb) || degree(va) == degree(vb) && va < vb
+      }.take(k)
+      return DriverPath.local(lg.spark, DegreeSchema, top.map(i =>
+        InternalRow(lg.ids(lg.node(i)), degree(lg.node(i)), lg.nodeName(i))))
+    }
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val dist = g.edges.toDF()
+    g.edges.toDF()
       .select(explode(array($"srcId", $"dstId")).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree"))
       .join(g.nodes.toDF().select($"id", $"name"), Seq("id"))
       .orderBy(desc("degree"), asc("id"))
       .limit(k)
-    for (es <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId");
-         ns <- DriverPath.probe(g.nodes.toDF().select($"id", $"name"), "id")) {
-      val degree = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-      es.foreach { r => degree(r.getString(0)) += 1; degree(r.getString(1)) += 1 }
-      val top = ns.filter(r => degree.contains(r.getString(0)))
-        .map(r => Row(r.getString(0), degree(r.getString(0)), r.getString(1)))
-        .sortWith { (a, b) =>
-          a.getLong(1) > b.getLong(1) ||
-            a.getLong(1) == b.getLong(1) && graft.runtime.Utf8Order.lt(a.getString(0), b.getString(0))
-        }
-        .take(k)
-      return spark.createDataFrame(top.toSeq.asJava, dist.schema)
-    }
-    dist
   }
-
-  /** The sorted node ids (duplicates kept, so the length is the node
-    * count `n`) when the node table fits the driver limit: one probe job
-    * serves both the size gate and the ids of the driver mirrors.
-    */
-  private[graft] def driverNodeIds(g: Graph): Option[Array[String]] =
-    DriverPath.probe(g.nodes.toDF().select(col("id")), "id")
-      .map(_.map(_.getString(0)).sorted)
 
   /** Q9 pagerank — iterative join-aggregate loop with damping 0.85.
     * Dangling mass is redistributed uniformly each iteration.
     */
   def pagerank(g: Graph, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
+    LocalGraph.keyed(g.nodes, g.edges).foreach(lg => return pagerankDriver(lg, iterations, damping))
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    // driver probes BEFORE the distinct+localCheckpoint: the checkpoint is
-    // only the distributed loop's lineage anchor, and paying its job (plus
-    // a count) just to decide the path wasted two jobs per call (round-7)
-    for (ids <- driverNodeIds(g);
-         raw <- DriverPath.probe(g.edges.toDF().select($"srcId", $"dstId"), "srcId", "dstId"))
-      return pagerankDriver(spark, ids,
-        raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations, damping)
     val n = g.nodes.count().toDouble
     val edges = g.edges.toDF().select($"srcId", $"dstId").distinct()
       .localCheckpoint(true)
@@ -538,59 +539,52 @@ object GraphQueryOps {
     ranks
   }
 
+  private val RankSchema = DriverPath.schema("id" -> StringType, "rank" -> DoubleType)
+
   /** In-memory pagerank replicating the distributed loop's arithmetic:
     * r'(v) = (1−d)/n + d·(Σ_{u→v} r(u)/outdeg(u) + D/n), contributions
-    * and the dangling mass D summed in sorted-id order from 0.0 — the
-    * same IEEE operations the distributed path performs for in-degree ≤ 2
-    * and deterministic regardless. Ranks are per node ROW, as the
+    * and the dangling mass D summed in ascending-source order from 0.0 —
+    * the same IEEE operations the distributed path performs for in-degree
+    * ≤ 2 and deterministic regardless. Ranks are per node ROW, as the
     * distributed joins hold them: each copy of a repeated id has its own
-    * rank and contributes it.
+    * rank and contributes it. Out-degree counts ALL of a node's distinct
+    * edges (even to ids that are no node), exactly like the distributed
+    * groupBy(srcId).
     */
-  private def pagerankDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
-                             es: Array[(String, String)],
-                             iterations: Int, damping: Double): DataFrame = {
-    import spark.implicits._
-    val n = ids.length.toDouble
-    // out-degree counts ALL of a node's edges (even to dangling targets),
-    // exactly like the distributed groupBy(srcId) — a node whose edges
-    // all point at unknown ids is NOT a dangling node
-    val outCount = es.groupBy(_._1).map { case (s, ps) => s -> ps.length }
-    val outDeg = ids.map(outCount.getOrElse(_, 0))
-    val inEdges = inRows(ids, es)
+  private def pagerankDriver(lg: LocalGraph, iterations: Int, damping: Double): DataFrame = {
+    val n = lg.nodeCount.toDouble
+    val outDeg = lg.node.map(lg.succ(_).length)
+    val inEdges = rowsFrom(lg, lg.pred)
     val c = (1.0 - damping) / n
-    var r = Array.fill(ids.length)(1.0 / n)
-    var it = 0
-    while (it < iterations) {
+    var r = Array.fill(lg.nodeCount)(1.0 / n)
+    for (_ <- 0 until iterations) {
       var dangling = 0.0
-      var v = 0
-      while (v < ids.length) {
-        if (outDeg(v) == 0) dangling += r(v)
-        v += 1
-      }
-      val nr = new Array[Double](ids.length)
-      v = 0
-      while (v < ids.length) {
+      for (v <- r.indices if outDeg(v) == 0) dangling += r(v)
+      val nr = new Array[Double](r.length)
+      for (v <- r.indices) {
         var inSum = 0.0
-        inEdges(v).foreach(u => inSum += r(u) / outDeg(u))
+        for (u <- inEdges(v)) inSum += r(u) / outDeg(u)
         nr(v) = c + damping * (inSum + dangling / n)
-        v += 1
       }
       r = nr
-      it += 1
     }
-    spark.createDataset(ids.indices.map(v => (ids(v), r(v)))).toDF("id", "rank")
+    perNodeRow(lg, RankSchema, r)
   }
 
-  /** Per node row of `ids`, the rows of the sources of its `(src, dst)`
-    * edges from node ids, sorted by source id for a fixed sum order.
+  /** Per node row, the node rows of its `adj` neighbours in ascending
+    * vertex order, for a fixed sum order.
     */
-  private def inRows(ids: Array[String], es: Array[(String, String)]): Array[IndexedSeq[Int]] = {
-    val rows = ids.indices.groupBy(ids(_))
-    val in = es.filter(p => rows.contains(p._1) && rows.contains(p._2))
-      .sortBy(_._1).groupBy(_._2)
-      .map { case (d, ps) => d -> ps.toIndexedSeq.flatMap(p => rows(p._1)) }
-    ids.map(in.getOrElse(_, IndexedSeq.empty))
-  }
+  private def rowsFrom(lg: LocalGraph, adj: Array[Array[Int]]): Array[Array[Int]] =
+    lg.node.map { v =>
+      val rows = Array.newBuilder[Int]
+      for (u <- adj(v)) rows ++= lg.rowsOf(u)
+      rows.result()
+    }
+
+  /** A mirror's (id, value) result, one row per node row. */
+  private def perNodeRow(lg: LocalGraph, schema: StructType, values: Array[Double]): DataFrame =
+    DriverPath.local(lg.spark, schema,
+      lg.node.indices.map(i => InternalRow(lg.ids(lg.node(i)), values(i))))
 
   /** Q9 eigenvector centrality — power iteration on the undirected
     * adjacency (reference sort_entities_by_metric supports eigenvector via
@@ -599,18 +593,14 @@ object GraphQueryOps {
     * one scalar aggregate.
     */
   def eigenvectorCentrality(g: Graph, iterations: Int = 20): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
     // undirected view (networkx eigenvector_centrality on DiGraph uses
     // in-edges; the reference builds from an undirected metric sort — we
     // symmetrize so isolated direction quirks don't zero the vector)
+    LocalGraph.keyed(g.nodes, g.edges, undirected = true)
+      .foreach(lg => return eigenvectorDriver(lg, iterations))
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
     val dir = g.edges.toDF().select($"srcId".as("src"), $"dstId".as("dst"))
-    // driver probes before the distinct+localCheckpoint (see pagerank)
-    for (ids <- driverNodeIds(g);
-         raw <- DriverPath.probe(dir.union(dir.select($"dst".as("src"), $"src".as("dst"))),
-           "src", "dst"))
-      return eigenvectorDriver(spark, ids,
-        raw.map(r => (r.getString(0), r.getString(1))).distinct, iterations)
     val n = g.nodes.count().toDouble
     val edges = dir.union(dir.select($"dst".as("src"), $"src".as("dst")))
       .distinct().localCheckpoint(true)
@@ -648,40 +638,33 @@ object GraphQueryOps {
     x.select($"id", ($"score" / fnorm).as("score"))
   }
 
+  private val ScoreSchema = DriverPath.schema("id" -> StringType, "score" -> DoubleType)
+
   /** In-memory power iteration replicating the distributed loop: raw(v) =
-    * x(v) + Σ_{u~v} x(u) (neighbor sums in sorted-id order from 0.0), L2
+    * x(v) + Σ_{u~v} x(u) (neighbour sums in ascending order from 0.0), L2
     * normalization every 8th iteration and at the end — the same shift,
     * cadence, and floor as the join-aggregate path; per node row, as in
     * [[pagerankDriver]].
     */
-  private def eigenvectorDriver(spark: org.apache.spark.sql.SparkSession, ids: Array[String],
-                                und: Array[(String, String)], iterations: Int): DataFrame = {
-    import spark.implicits._
-    val n = ids.length.toDouble
-    val nbrs = inRows(ids, und)
-    var x = Array.fill(ids.length)(1.0 / math.sqrt(n))
-    var i = 0
-    while (i < iterations) {
-      val raw = new Array[Double](ids.length)
-      var v = 0
-      while (v < ids.length) {
-        var s = 0.0
-        nbrs(v).foreach(u => s += x(u))
-        raw(v) = x(v) + s
-        v += 1
-      }
-      if (i % 8 == 7) {
-        var sq = 0.0
-        raw.foreach(r => sq += r * r)
-        val norm = math.sqrt(sq.max(1e-300))
-        x = raw.map(_ / norm)
-      } else x = raw
-      i += 1
+  private def eigenvectorDriver(lg: LocalGraph, iterations: Int): DataFrame = {
+    val nbrs = rowsFrom(lg, lg.nbr)
+    var x = Array.fill(lg.nodeCount)(1.0 / math.sqrt(lg.nodeCount.toDouble))
+    def normed(v: Array[Double]) = {
+      var sq = 0.0
+      for (r <- v) sq += r * r
+      val norm = math.sqrt(sq.max(1e-300))
+      v.map(_ / norm)
     }
-    var sq = 0.0
-    x.foreach(r => sq += r * r)
-    val fnorm = math.sqrt(sq.max(1e-300))
-    spark.createDataset(ids.indices.map(v => (ids(v), x(v) / fnorm))).toDF("id", "score")
+    for (i <- 0 until iterations) {
+      val raw = new Array[Double](x.length)
+      for (v <- x.indices) {
+        var s = 0.0
+        for (u <- nbrs(v)) s += x(u)
+        raw(v) = x(v) + s
+      }
+      x = if (i % 8 == 7) normed(raw) else raw
+    }
+    perNodeRow(lg, ScoreSchema, normed(x))
   }
 
   /** Deterministic source sample for the sampled centralities: the s node
@@ -744,14 +727,12 @@ object GraphQueryOps {
     (settled.localCheckpoint(true), levels.toSeq)
   }
 
-  /** Per-source BFS tree from the driver fast path: node→(dist, σ) plus
-    * the per-depth levels (sorted) the Brandes backward pass consumes.
+  /** Per-source BFS tree from the driver fast path: per vertex its
+    * distance (-1 unreached) and σ, plus the per-depth levels (ascending)
+    * the Brandes backward pass consumes.
     */
-  private final case class BfsTree(
-      src: Int,
-      dist: scala.collection.mutable.HashMap[Int, Int],
-      sigma: scala.collection.mutable.HashMap[Int, Long],
-      levels: IndexedSeq[Array[Int]])
+  private final case class BfsTree(src: Int, dist: Array[Int], sigma: Array[Long],
+                                   levels: IndexedSeq[Array[Int]])
 
   /** In-memory mirror of [[multiSourceBfs]] for small graphs (mirrors the
     * pagerank/eigenvector driver fast path, round-3 pattern): identical
@@ -761,76 +742,56 @@ object GraphQueryOps {
     * when the horizon cuts a live frontier. Distances/σ are integers, so
     * the downstream closeness arithmetic is bit-identical to the
     * distributed path by construction; the Brandes δ sums are fp and
-    * accumulated in sorted order (deterministic; ≡ distributed to 1e-9,
+    * accumulated in ascending order (deterministic; ≡ distributed to 1e-9,
     * GraphQuerySpec-pinned).
     */
-  private def driverBfs(adj: Map[Int, Array[Int]], sources: Seq[Int],
+  private def driverBfs(lg: LocalGraph, adj: Array[Array[Int]], sources: Seq[Int],
                         maxDepth: Int): Seq[BfsTree] = {
     var cut = 0L
     val trees = sources.map { s =>
-      val dist = scala.collection.mutable.HashMap(s -> 0)
-      val sigma = scala.collection.mutable.HashMap(s -> 1L)
-      val levels = scala.collection.mutable.ArrayBuffer[Array[Int]](Array(s))
+      val dist = Array.fill(lg.vertices)(-1)
+      val sigma = new Array[Long](lg.vertices)
+      dist(s) = 0
+      sigma(s) = 1L
+      val levels = scala.collection.mutable.ArrayBuffer(Array(s))
       var frontier = Array(s)
       var d = 0
       while (d < maxDepth && frontier.nonEmpty) {
-        val next = scala.collection.mutable.HashMap.empty[Int, Long]
-        frontier.foreach { u =>
-          val su = sigma(u)
-          adj.getOrElse(u, Array.empty[Int]).foreach { v =>
-            if (!dist.contains(v)) next(v) = next.getOrElse(v, 0L) + su
-          }
+        val next = Array.newBuilder[Int]
+        for (u <- frontier; v <- adj(u)) {
+          if (dist(v) < 0) { dist(v) = d + 1; next += v }
+          if (dist(v) == d + 1) sigma(v) += sigma(u)
         }
-        frontier = next.keys.toArray.sorted
-        frontier.foreach { v => dist(v) = d + 1; sigma(v) = next(v) }
+        frontier = next.result().sorted
         if (frontier.nonEmpty) levels += frontier
         d += 1
       }
       if (d == maxDepth) cut += frontier.length
       BfsTree(s, dist, sigma, levels.toIndexedSeq)
     }
-    if (cut > 0)
-      graft.runtime.Observed.record("bfs_depth_cutoff",
-        Map("liveFrontierRows" -> cut))
+    if (cut > 0) graft.runtime.Observed.record("bfs_depth_cutoff", Map("liveFrontierRows" -> cut))
     trees
   }
 
-  /** Driver-side replica of [[sampleSources]]' rule: the s ids with the
-    * smallest (xxhash64, id) — same hash (XXH64, seed 42), same order.
+  /** The driver prologue of the BFS centralities: the index (node ids
+    * and edge endpoints keyed, the edges read twice when `undirected`), the
+    * adjacency walked, the sample size and one [[driverBfs]] tree per
+    * sampled source; None (the distributed form) when the index refuses.
+    * Sources follow [[sampleSources]]' rule on the driver: the node rows
+    * with the smallest (xxhash64, id); a repeated id is sampled once per
+    * copy (the estimators' s) but, as the distributed frontier groups by
+    * source, walked once.
     */
-  private def driverSampleSources(nodeIds: Array[String], samples: Int): Array[String] =
-    nodeIds.sortBy(id => (
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-        org.apache.spark.unsafe.types.UTF8String.fromString(id), 42L), id))
-      .take(samples)
-
-  /** The driver prologue of the BFS centralities: the probed node ids, the
-    * id index and adjacency of the `(srcId, dstId)` edges `edgeDf`, and one
-    * [[driverBfs]] tree per sampled source; None (the distributed form)
-    * when either probe refuses. The index covers node ids AND all edge
-    * endpoints — the distributed frontier join traverses THROUGH ids
-    * absent from the node table, and the fast path must too.
-    */
-  private final case class DriverBfsRun(nodeIds: Array[String], idx: Map[String, Int],
-                                        adj: Map[Int, Array[Int]], sampled: Int,
+  private final case class DriverBfsRun(lg: LocalGraph, adj: Array[Array[Int]], sampled: Int,
                                         trees: Seq[BfsTree])
 
-  private def driverBfsRun(g: Graph, edgeDf: DataFrame, samples: Int,
-                           maxDepth: Int): Option[DriverBfsRun] = {
-    val nodeIds = driverNodeIds(g).getOrElse(return None)
-    val raw = DriverPath.probe(edgeDf, "srcId", "dstId").getOrElse(return None)
-    // in-memory dedup: callers pass the pre-distinct pair projection, so
-    // the probe stays an exchange-free scan
-    val es = raw.map(r => (r.getString(0), r.getString(1))).distinct
-    val idx = (nodeIds ++ es.map(_._1) ++ es.map(_._2)).distinct.sorted.zipWithIndex.toMap
-    val adj = es.map { case (a, b) => (idx(a), idx(b)) }
-      .groupBy(_._1).map { case (u, ps) => u -> ps.map(_._2).sorted }
-    // a repeated id is sampled once per copy (the estimators' s) but, as
-    // the distributed frontier groups by source, walked once
-    val srcs = driverSampleSources(nodeIds, samples)
-    Some(DriverBfsRun(nodeIds, idx, adj, srcs.length,
-      driverBfs(adj, srcs.distinct.map(idx).toSeq, maxDepth)))
-  }
+  private def driverBfsRun(g: Graph, undirected: Boolean, samples: Int,
+                           maxDepth: Int): Option[DriverBfsRun] =
+    LocalGraph.keyed(g.nodes, g.edges, undirected).map { lg =>
+      val adj = if (undirected) lg.nbr else lg.succ
+      val srcs = lg.node.sortBy(v => (lg.xxh(v), v)).take(samples)
+      DriverBfsRun(lg, adj, srcs.length, driverBfs(lg, adj, srcs.distinct.toSeq, maxDepth))
+    }
 
   /** Q9 closeness centrality (incoming distances, networkx semantics) via
     * the Eppstein–Wang sampled estimator: s sampled sources, one BFS
@@ -845,28 +806,23 @@ object GraphQueryOps {
     * integers, so the estimate is bit-identical across the two paths.
     */
   def closenessCentrality(g: Graph, samples: Int = 64, maxDepth: Int = 10): DataFrame = {
+    driverBfsRun(g, undirected = false, samples, maxDepth).foreach { run =>
+      val n = run.lg.nodeCount.toDouble
+      val f = n / run.sampled
+      val sumDist = new Array[Long](run.lg.vertices)
+      val reached = new Array[Long](run.lg.vertices)
+      for (t <- run.trees; v <- t.dist.indices if t.dist(v) > 0) {
+        sumDist(v) += t.dist(v)
+        reached(v) += 1L
+      }
+      return perNodeRow(run.lg, ClosenessSchema, run.lg.node.map { v =>
+        val (sd, r) = (sumDist(v), reached(v))
+        // the distributed expression verbatim: (r·r·f) / ((n−1)·Σd)
+        if (sd > 0) (r * r * f) / ((n - 1) * sd) else 0.0
+      })
+    }
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth)
-      .foreach { run =>
-        val n = run.nodeIds.length.toDouble
-        val f = n / run.sampled
-        val sumDist = scala.collection.mutable.HashMap.empty[Int, Long]
-        val reached = scala.collection.mutable.HashMap.empty[Int, Long]
-        run.trees.foreach(_.dist.foreach { case (v, d) =>
-          if (d > 0) {
-            sumDist(v) = sumDist.getOrElse(v, 0L) + d
-            reached(v) = reached.getOrElse(v, 0L) + 1L
-          }
-        })
-        return spark.createDataset(run.nodeIds.toIndexedSeq.map { id =>
-          val v = run.idx(id)
-          val sd = sumDist.getOrElse(v, 0L)
-          val r = reached.getOrElse(v, 0L)
-          // the distributed expression verbatim: (r·r·f) / ((n−1)·Σd)
-          (id, if (sd > 0) (r * r * f) / ((n - 1) * sd) else 0.0)
-        }).toDF("id", "closeness")
-      }
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
@@ -894,18 +850,16 @@ object GraphQueryOps {
     * sources; EXACT (= nx) when samples ≥ |V| and the graph is connected.
     */
   def avgShortestPathSampled(g: Graph, samples: Int = 32, maxDepth: Int = 15): Double = {
+    driverBfsRun(g, undirected = true, samples, maxDepth).foreach { run =>
+      var s = 0L
+      var c = 0L
+      for (t <- run.trees; d <- t.dist if d > 0) { s += d; c += 1 }
+      return if (c == 0) 0.0 else s.toDouble / c
+    }
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val dir = g.edges.toDF().select($"srcId", $"dstId")
     val und = dir.union(dir.select($"dstId".as("srcId"), $"srcId".as("dstId")))
-    driverBfsRun(g, und, samples, maxDepth).foreach { run =>
-      var s = 0L
-      var c = 0L
-      run.trees.foreach(_.dist.foreach { case (_, d) =>
-        if (d > 0) { s += d; c += 1 }
-      })
-      return if (c == 0) 0.0 else s.toDouble / c
-    }
     val (settled, _) = multiSourceBfs(bfsEdges(und), sampleSources(g, samples), maxDepth)
     val row = settled.where($"dist" > 0)
       .agg(coalesce(sum($"dist"), lit(0L)).as("s"), count(lit(1)).as("c")).head()
@@ -921,43 +875,32 @@ object GraphQueryOps {
     */
   def betweennessCentrality(g: Graph, samples: Int = 32, maxDepth: Int = 10,
                             normalized: Boolean = true): DataFrame = {
+    driverBfsRun(g, undirected = false, samples, maxDepth).foreach { run =>
+      val n = run.lg.nodeCount.toDouble
+      val sCnt = run.sampled.toDouble
+      val raw = new Array[Double](run.lg.vertices)
+      // Brandes backward pass per tree, deepest level first; successor
+      // and source sums in ascending order (the distributed groupBy order
+      // is arbitrary — fp-identical on unique-path graphs, ≡ to 1e-9
+      // otherwise, GraphQuerySpec-pinned)
+      run.trees.foreach { t =>
+        val delta = new Array[Double](run.lg.vertices)
+        for (d <- t.levels.size - 2 to 0 by -1; v <- t.levels(d)) {
+          var c = 0.0
+          for (w <- run.adj(v) if t.dist(w) == t.dist(v) + 1)
+            c += (t.sigma(v).toDouble / t.sigma(w)) * (1.0 + delta(w))
+          delta(v) = c
+          if (v != t.src) raw(v) += c
+        }
+      }
+      val scale =
+        if (!normalized) n / sCnt
+        else if (n > 2) (n / sCnt) / ((n - 1) * (n - 2))
+        else 1.0
+      return perNodeRow(run.lg, BetweennessSchema, run.lg.node.map(raw(_) * scale))
+    }
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    driverBfsRun(g, g.edges.toDF().select($"srcId", $"dstId"), samples, maxDepth)
-      .foreach { run =>
-        val n = run.nodeIds.length.toDouble
-        val sCnt = run.sampled.toDouble
-        val raw = scala.collection.mutable.HashMap.empty[Int, Double]
-        // Brandes backward pass per tree, deepest level first; successor
-        // and source sums in sorted order (the distributed groupBy order
-        // is arbitrary — fp-identical on unique-path graphs, ≡ to 1e-9
-        // otherwise, GraphQuerySpec-pinned)
-        run.trees.foreach { t =>
-          val delta = scala.collection.mutable.HashMap.empty[Int, Double]
-          var d = t.levels.size - 2
-          while (d >= 0) {
-            t.levels(d).foreach { v =>
-              var c = 0.0
-              run.adj.getOrElse(v, Array.empty[Int]).foreach { w =>
-                if (t.dist.get(w).contains(t.dist(v) + 1))
-                  c += (t.sigma(v).toDouble / t.sigma(w)) * (1.0 + delta.getOrElse(w, 0.0))
-              }
-              delta(v) = c
-            }
-            d -= 1
-          }
-          delta.toSeq.sortBy(_._1).foreach { case (v, dv) =>
-            if (v != t.src) raw(v) = raw.getOrElse(v, 0.0) + dv
-          }
-        }
-        val scale =
-          if (!normalized) n / sCnt
-          else if (n > 2) (n / sCnt) / ((n - 1) * (n - 2))
-          else 1.0
-        return spark.createDataset(run.nodeIds.toIndexedSeq.map { id =>
-          (id, raw.getOrElse(run.idx(id), 0.0) * scale)
-        }).toDF("id", "betweenness")
-      }
     val n = g.nodes.count().toDouble
     val sources = sampleSources(g, samples)
     val sCount = sources.count().toDouble
@@ -998,6 +941,9 @@ object GraphQueryOps {
       .join(raw, Seq("id"), "left")
       .select($"id", (coalesce($"rawDelta", lit(0.0)) * scale).as("betweenness"))
   }
+
+  private val ClosenessSchema = DriverPath.schema("id" -> StringType, "closeness" -> DoubleType)
+  private val BetweennessSchema = DriverPath.schema("id" -> StringType, "betweenness" -> DoubleType)
 
   /** Q9 top-k by a named centrality metric (graph_query.py:436-489):
     * degree | pagerank | eigenvector | closeness | betweenness.

@@ -1,14 +1,15 @@
 package graft.reason
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.graphout.GraphBuilder.Graph
 import graft.graphout.Verifier
 import graft.model.Triple
-import graft.runtime.DriverPath
+import graft.runtime.{DriverPath, LocalGraph}
 
 /**
  * Inference & conflict operators X2-X13 (SURVEY.md §2.9; reference
@@ -78,9 +79,9 @@ object Reasoning {
     * conf = Π(edge conf) × 0.9^(hops-1), max over paths, skip existing
     * direct edges (graph_reasoning.py:641-812, cutoff 3 at :763).
     *
-    * Under `DriverPath.limit` edges the chains are walked on the driver from
-    * one probe of the four edge columns read ([[driverTransitive]]); the
-    * self-joins below are the distributed form.
+    * Under `DriverPath.limit` edges the chains are walked on the driver over
+    * the graph's `LocalGraph` ([[driverTransitive]]); the self-joins below
+    * are the distributed form.
     */
   def inferTransitive(g: Graph, minConfidence: Double = 0.7): DataFrame = {
     driverTransitive(g, minConfidence).foreach(df => return df)
@@ -114,40 +115,39 @@ object Reasoning {
     StructField("confidence", DoubleType)))
 
   /** [[inferTransitive]] on the driver, the distributed form step for
-    * step: the same 2-hop (a ≠ c) and 3-hop (a ≠ d) chains within one
-    * type, the same products in the same order, `max` over paths and
-    * `>= minConfidence` in Spark's double order, and the anti-join against
-    * every direct edge of the type. A path through a null confidence has
-    * a null product, which `max` skips. None (the distributed form) over
-    * the limit, on a null endpoint or a non-ASCII relation type, or past
-    * [[DriverPath.PairBound]] paths.
+    * step on the graph's `LocalGraph`: the same 2-hop (a ≠ c) and 3-hop
+    * (a ≠ d) chains within one type, the same products in the same order,
+    * `max` over paths and `>= minConfidence` in Spark's double order, and
+    * the anti-join against every direct edge of the type. A path through a
+    * null confidence has a null product, which `max` skips. None (the
+    * distributed form) over the limit, on a null endpoint or a non-ASCII
+    * relation type, or past [[DriverPath.PairBound]] paths.
     */
   private def driverTransitive(g: Graph, minConfidence: Double): Option[DataFrame] = {
-    val raw = DriverPath.probe(g.edges.toDF().select("srcId", "dstId", "relType", "confidence"),
-      "srcId", "dstId").getOrElse(return None)
-    val rts = DriverPath.lowerAscii(raw.map(_.getString(2))).getOrElse(return None)
-    val es = raw.indices.collect { case i if TransitiveTypes.contains(rts(i)) =>
-      (raw(i).getString(0), raw(i).getString(1), rts(i), raw(i).get(3))
-    }
-    val existing = es.map(e => (e._1, e._2, e._3)).toSet
-    val weighted = es.collect { case (s, d, rt, c: java.lang.Double) => (s, d, rt, c.doubleValue) }
-    val out = weighted.groupBy(e => (e._3, e._1)).withDefaultValue(Nil)
-    val best = scala.collection.mutable.HashMap.empty[(String, String, String), Double]
+    val lg = LocalGraph.edgeKeyed(g.nodes, g.edges).getOrElse(return None)
+    val rts = lg.foldedTypes.getOrElse(return None)
+    val es = (0 until lg.edgeCount).filter(e => TransitiveTypes.contains(rts(e)))
+    val existing = es.map(e => (lg.src(e), lg.dst(e), rts(e))).toSet
+    val weighted = es.filterNot(lg.confNull)
+    val out = weighted.groupBy(e => (rts(e), lg.src(e))).withDefaultValue(Nil)
+    val best = scala.collection.mutable.HashMap.empty[(Int, Int, String), Double]
     var paths = 0L
-    def offer(a: String, c: String, rt: String, p: Double): Unit = {
+    def offer(a: Int, c: Int, rt: String, p: Double): Unit = {
       paths += 1
       if (best.get((a, c, rt)).forall(DriverPath.compareDoubles(p, _) > 0)) best((a, c, rt)) = p
     }
-    for ((a, b, rt, cab) <- weighted; (_, c, _, cbc) <- out((rt, b)) if a != c) {
-      val p2 = cab * cbc * 0.9
-      offer(a, c, rt, p2)
-      for ((_, d, _, ccd) <- out((rt, c)) if a != d) offer(a, d, rt, p2 * ccd * 0.9)
+    for (ab <- weighted; bc <- out((rts(ab), lg.dst(ab))) if lg.src(ab) != lg.dst(bc)) {
+      val (a, rt) = (lg.src(ab), rts(ab))
+      val p2 = lg.conf(ab) * lg.conf(bc) * 0.9
+      offer(a, lg.dst(bc), rt, p2)
+      for (cd <- out((rt, lg.dst(bc))) if a != lg.dst(cd)) offer(a, lg.dst(cd), rt, p2 * lg.conf(cd) * 0.9)
       if (paths > DriverPath.PairBound) return None
     }
     val rows = best.toSeq.collect { case ((a, c, rt), p)
-      if DriverPath.compareDoubles(p, minConfidence) >= 0 && !existing((a, c, rt)) => Row(a, c, rt, p)
+      if DriverPath.compareDoubles(p, minConfidence) >= 0 && !existing((a, c, rt)) =>
+      InternalRow(lg.ids(a), lg.ids(c), UTF8String.fromString(rt), p)
     }
-    Some(g.nodes.sparkSession.createDataFrame(rows.asJava, TransitiveSchema))
+    Some(DriverPath.local(lg.spark, TransitiveSchema, rows))
   }
 
   /** X12 symmetric inference: symmetric-type edge with no reverse ⇒
@@ -243,21 +243,25 @@ object Reasoning {
   /** X4 contradictory relationships: same (src,dst) pair with opposite
     * types (graph_reasoning.py:196-268). severity high, conf = min.
     *
-    * Under `DriverPath.limit` edges the pairs are found on the driver from one
-    * probe of the five edge columns read; the self-join is the
-    * distributed form.
+    * Under `DriverPath.limit` edges the pairs are found on the driver over
+    * the graph's `LocalGraph`; the self-join is the distributed form, whose
+    * plan is built only when the driver path refuses.
     */
   def detectContradictory(g: Graph, confidenceThreshold: Double = 0.5): DataFrame = {
+    driverContradictory(g, confidenceThreshold).foreach(df => return df)
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val distributed = oppositePairs(g, confidenceThreshold)
+    oppositePairs(g, confidenceThreshold)
       .select($"srcId", $"dstId", $"idA", $"idB", $"rtA", $"rtB",
         least($"confA", $"confB").as("confidence"),
         lit("contradictory_relationships").as("conflictType"),
         lit("high").as("severity"))
-    driverContradictory(g, confidenceThreshold, distributed.schema)
-      .getOrElse(distributed)
   }
+
+  private val ContradictorySchema = StructType(Seq("srcId", "dstId", "idA", "idB", "rtA", "rtB")
+    .map(StructField(_, StringType)) ++ Seq(StructField("confidence", DoubleType),
+    StructField("conflictType", StringType, nullable = false),
+    StructField("severity", StringType, nullable = false)))
 
   /** The same-endpoint self-join behind X4 and X8: edge pairs A, B with
     * lowered types rtA, rtB opposite, both confidences at least
@@ -279,27 +283,26 @@ object Reasoning {
     * `confidence >= confidenceThreshold` in Spark's double order (a null
     * confidence fails it), paired by `Verifier.driverOppositePairs`, with
     * `least` keeping the first side on a tie as Spark's does. None (the
-    * distributed form) over the limit, on a non-ASCII relation type, or
-    * past [[DriverPath.PairBound]] pairs.
+    * distributed form) over the limit, on a null endpoint or a non-ASCII
+    * relation type, or past [[DriverPath.PairBound]] pairs.
     */
-  private def driverContradictory(g: Graph, confidenceThreshold: Double,
-                                  schema: StructType): Option[DataFrame] = {
-    val raw = DriverPath.probe(
-      g.edges.toDF().select("id", "srcId", "dstId", "relType", "confidence"),
-      "srcId", "dstId").getOrElse(return None)
-    val rts = DriverPath.lowerAscii(raw.map(_.getString(3))).getOrElse(return None)
-    val kept = raw.indices.filter(i => !raw(i).isNullAt(4) &&
-      DriverPath.compareDoubles(raw(i).getDouble(4), confidenceThreshold) >= 0)
-    val es = kept.map(i => (raw(i).getString(0), raw(i).getString(1), raw(i).getString(2), rts(i)))
-    val pairs = Verifier.driverOppositePairs(es, OppositeSet).getOrElse(return None)
+  private def driverContradictory(g: Graph, confidenceThreshold: Double): Option[DataFrame] = {
+    val lg = LocalGraph.edgeKeyed(g.nodes, g.edges).getOrElse(return None)
+    val rts = lg.foldedTypes.getOrElse(return None)
+    val kept = (0 until lg.edgeCount).filter(e => !lg.confNull(e) &&
+      DriverPath.compareDoubles(lg.conf(e), confidenceThreshold) >= 0)
+    val pairs = Verifier.driverOppositePairs(lg, kept, rts, OppositeSet).getOrElse(return None)
     val rows = pairs.map { case (x, y) =>
-      val (ca, cb) = (raw(kept(x)).getDouble(4), raw(kept(y)).getDouble(4))
-      Row(es(x)._2, es(x)._3, es(x)._1, es(y)._1, es(x)._4, es(y)._4,
-        if (DriverPath.compareDoubles(cb, ca) < 0) cb else ca,
-        "contradictory_relationships", "high")
+      val (ca, cb) = (lg.conf(x), lg.conf(y))
+      InternalRow(lg.ids(lg.src(x)), lg.ids(lg.dst(x)), lg.edgeId(x), lg.edgeId(y),
+        UTF8String.fromString(rts(x)), UTF8String.fromString(rts(y)),
+        if (DriverPath.compareDoubles(cb, ca) < 0) cb else ca, Contradictory, High)
     }
-    Some(g.nodes.sparkSession.createDataFrame(rows.asJava, schema))
+    Some(DriverPath.local(lg.spark, ContradictorySchema, rows))
   }
+
+  private val Contradictory = UTF8String.fromString("contradictory_relationships")
+  private val High = UTF8String.fromString("high")
 
   /** X5 property conflicts: same-(name,type) entity pairs disagreeing on a
     * shared attribute key (graph_reasoning.py:270-334). severity medium.

@@ -1,10 +1,13 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftshim.GraftSql
+import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
 
 /**
  * The size gate of every driver fast path (traverse, findPath, the
@@ -21,6 +24,14 @@ import org.apache.spark.sql.execution.SQLExecution
  * jobs, each re-running the lineage): both read every row of an input
  * far over the limit, while this probe reads at most `lim + 1` rows per
  * partition.
+ *
+ * The graph mirrors read their input through [[LocalGraph]], one index
+ * per graph: it caches what the rows ARE (interned ids, node rows, edge
+ * columns, adjacency lists, the case-folded types, the null facts), built once
+ * for a graph read whole into local relations; what each call DECIDES
+ * stays per call: [[limit]] (read on every call), the null rule on the
+ * halves the mirror reads, the non-ASCII fallback of [[lowerAscii]] and
+ * [[PairBound]]. A mirror's result is built by [[local]].
  *
  * The null rule of every mirror: a null in a key column — a node or
  * entity id, an edge endpoint — sends the call to its distributed form.
@@ -90,9 +101,8 @@ object DriverPath {
     *
     * A plan that optimizes to a local relation (a driver mirror's result,
     * a filter or projection of one, an empty relation, a small committed
-    * stage [[Checkpoint.readBucketed]] read whole) or to a union of them
-    * (the undirected view of a local edge table) is answered from its rows
-    * with no job and no SQL execution, under the same limit: so one mirror
+    * stage [[Checkpoint.readBucketed]] read whole) is answered from its
+    * rows with no job and no SQL execution, under the same limit: so one mirror
     * reads another's result, or a small checkpointed graph, for free.
     *
     * None also when a fetched row has a null in one of the `keys` columns
@@ -100,17 +110,21 @@ object DriverPath {
     */
   def probe(df: DataFrame, keys: String*): Option[Array[Row]] = {
     val ks = keys.map(df.schema.fieldIndex)
-    fetch(df, limit).filterNot(_.exists(r => ks.exists(r.isNullAt)))
+    rows(df).filterNot(_.exists(r => ks.exists(r.isNullAt))).map { rs =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      rs.map(toRow(_).asInstanceOf[Row])
+    }
   }
 
-  private def fetch(df: DataFrame, lim: Long): Option[Array[Row]] = {
-    val cap = math.min(lim, Int.MaxValue - 2L)
+  /** [[probe]]'s rows as Catalyst rows, with no key: [[LocalGraph]] reads
+    * them without converting each to a `Row`.
+    */
+  private[runtime] def rows(df: DataFrame): Option[Array[InternalRow]] = {
+    val cap = math.min(limit, Int.MaxValue - 2L)
     if (cap < 0) return None
     val qe = df.queryExecution
-    localRows(qe.optimizedPlan).foreach { data =>
-      if (data.length > cap) return None
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-      return Some(data.map(toRow(_).asInstanceOf[Row]).toArray)
+    localRelation(df).foreach { l =>
+      return if (l.data.length > cap) None else Some(l.data.toArray)
     }
     val parts = SQLExecution.withNewExecutionId(qe, Some("probe")) {
       val rdd = qe.toRdd
@@ -127,32 +141,41 @@ object DriverPath {
       })
     }
     if (parts.iterator.map(_._1).sum > cap) None
-    else if (parts.forall(_._2 != null)) {
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-      Some(parts.flatMap(_._2).map(toRow(_).asInstanceOf[Row]))
-    } else Some(df.collect()).filter(_.length <= cap)
+    else if (parts.forall(_._2 != null)) Some(parts.flatMap(_._2))
+    else Some(SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()))
+      .filter(_.length <= cap)
   }
 
-  /** The rows of a plan the driver already holds: a local relation, or a
-    * union of local relations (Spark folds a projection or filter of a
-    * local relation into one, but not a union), concatenated in order.
+  /** The local relation `ds`'s plan optimizes to, rows the driver already
+    * holds (Spark folds a projection or filter of a local relation into one).
     */
-  private def localRows(plan: LogicalPlan): Option[Seq[InternalRow]] = plan match {
-    case l: LocalRelation => Some(l.data)
-    case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-      Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
-    case _ => None
-  }
+  private[runtime] def localRelation(ds: Dataset[_]): Option[LocalRelation] =
+    ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
 
-  /** Whether `df`'s plan optimizes to a local relation or a union of them,
-    * as a driver mirror's result does: [[probe]] reads it with no job, and
+  /** Whether `df`'s plan optimizes to a local relation, as a driver
+    * mirror's result does: [[probe]] reads it with no job, and
     * caching it would only copy rows the driver already holds.
     */
   def isLocal(df: DataFrame): Boolean = localCount(df).isDefined
 
   /** The row count of a plan [[isLocal]] holds, counted with no job. */
-  def localCount(df: DataFrame): Option[Int] =
-    localRows(df.queryExecution.optimizedPlan).map(_.length)
+  def localCount(df: DataFrame): Option[Int] = localRelation(df).map(_.data.length)
+
+  /** A driver mirror's result: `rows` (Catalyst rows of `schema`) as a
+    * local relation, with no encoder and no conversion of each value.
+    * [[probe]] reads it back with no job.
+    */
+  def local(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftSql.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A mirror's declared result schema: strings and arrays nullable,
+    * numbers not, as Spark's tuple encoders type them.
+    */
+  def schema(fields: (String, DataType)*): StructType = StructType(fields.map { case (n, t) =>
+    StructField(n, t, nullable = !t.isInstanceOf[NumericType]) })
 
   /** In-flight bound of a driver mirror's working set (walk pairs, chain
     * paths, same-endpoint edge pairs, findPath's partial paths): past it

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.DataType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.GraphGen._
@@ -108,9 +109,16 @@ class QueryDriverSpec extends SparkSpec {
     * form runs some.
     */
   private def call(m: Mirror, g: Graph, limit: Long): (Either[Seq[Seq[Any]], Double], Boolean) = {
-    val (r, jobs) = jobsOf(withLimit(limit)(m.run(g).left.map(rows)))
+    val (r, jobs) = jobsOf(withLimit(limit)(m.run(g).left.map { df =>
+      fields(m.name) = fields(m.name) :+ df.schema.map(f => (f.name, f.dataType))
+      rows(df)
+    }))
     (r, jobs == 0)
   }
+
+  /** The field names and types of each mirror's results, in call order. */
+  private val fields = scala.collection.mutable.Map.empty[String, Seq[Seq[(String, DataType)]]]
+    .withDefaultValue(Nil)
 
   test("every query mirror ≡ its distributed form; the null rule picks the path") {
     val driven = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
@@ -119,7 +127,10 @@ class QueryDriverSpec extends SparkSpec {
       mirrors.foreach { m =>
         val (fast, onDriver) = call(m, g, graft.runtime.DriverPath.DriverIterationLimit)
         // off the driver, `fast` already is the distributed form
+        fields(m.name) = Nil
         val (dist, offDriver) = if (onDriver) call(m, g, 0L) else (fast, false)
+        // a constant driver schema must not drift from the distributed plan's
+        assert(fields(m.name).distinct.size <= 1, s"${m.name}: ${fields(m.name)}")
         // Spark folds a plan that inner-joins an empty node table into an
         // empty local relation: that distributed form runs no job either,
         // and only there is a job-free limit-0 call not the driver path

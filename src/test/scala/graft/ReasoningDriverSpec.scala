@@ -35,6 +35,11 @@ class ReasoningDriverSpec extends SparkSpec {
 
   // ------------------------------------------------------------- parity
 
+  /** Field names and types: a constant driver schema must not drift from
+    * the distributed plan's.
+    */
+  private def fields(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
   test("the generator reaches every adversarial case") {
     val edges = graphs.flatMap(_._2)
     val driven = graphs.filter(onDriver)
@@ -69,8 +74,11 @@ class ReasoningDriverSpec extends SparkSpec {
     graphs.foreach { case (ns, es) =>
       val g = graphOf(ns, es)
       for (mc <- Seq(0.7, 0.0)) {
-        val fast = rows(Reasoning.inferTransitive(g, mc))
-        assert(fast == rows(withLimit(0)(Reasoning.inferTransitive(g, mc))),
+        val fastDf = Reasoning.inferTransitive(g, mc)
+        val distDf = withLimit(0)(Reasoning.inferTransitive(g, mc))
+        assert(fields(fastDf) == fields(distDf), s"minConfidence=$mc edges=$es")
+        val fast = rows(fastDf)
+        assert(fast == rows(distDf),
           s"minConfidence=$mc edges=$es")
         if (fast.nonEmpty && !es.exists(_.rt == NonAscii)) nonEmpty += 1
       }
@@ -83,8 +91,11 @@ class ReasoningDriverSpec extends SparkSpec {
     graphs.foreach { case (ns, es) =>
       val g = graphOf(ns, es)
       for (t <- Seq(0.5, 0.0)) {
-        val fast = sortedRows(Reasoning.detectContradictory(g, t))
-        assert(fast == sortedRows(withLimit(0)(Reasoning.detectContradictory(g, t))),
+        val fastDf = Reasoning.detectContradictory(g, t)
+        val distDf = withLimit(0)(Reasoning.detectContradictory(g, t))
+        assert(fields(fastDf) == fields(distDf), s"threshold=$t edges=$es")
+        val fast = sortedRows(fastDf)
+        assert(fast == sortedRows(distDf),
           s"threshold=$t edges=$es")
         if (fast.nonEmpty && !es.exists(_.rt == NonAscii)) nonEmpty += 1
       }
